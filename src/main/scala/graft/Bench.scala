@@ -128,17 +128,24 @@ object Bench {
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (name, fn) =>
-      val runs = (0 until medianOf).map { _ =>
+      // A face that throws is not timed: its remaining runs are skipped,
+      // and it is left out of the total and listed under "failed".
+      val runs = scala.collection.mutable.ArrayBuffer.empty[Double]
+      var failed = false
+      while (runs.size < medianOf && !failed) {
         val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e") }
-        val secs = (System.nanoTime() - t0) / 1e9
+        try {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          runs += (System.nanoTime() - t0) / 1e9
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: $e"); failed = true }
         sweep()
-        secs
-      }.sorted
-      val secs = runs(runs.size / 2) // median (upper middle for even N)
-      System.err.println(f"[bench] $name%-16s $secs%8.2f s" +
-        (if (medianOf > 1) runs.map(r => f"$r%.2f").mkString("  [", " ", "]") else ""))
+      }
+      val sorted = runs.sorted
+      val secs = if (failed) None
+        else Some(sorted(sorted.size / 2)) // median (upper middle for even N)
+      secs.foreach(s => System.err.println(f"[bench] $name%-16s $s%8.2f s" +
+        (if (medianOf > 1) sorted.map(r => f"$r%.2f").mkString("  [", " ", "]") else "")))
       // Spark's ContextCleaner frees broadcasts / shuffle state / generated
       // classes only when a driver GC processes their weak references, and
       // its own periodic GC defaults to 30 min — longer than the whole
@@ -155,8 +162,10 @@ object Bench {
       }
       name -> secs
     }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val total = results.map(_._2).sum
+    val timed = results.collect { case (k, Some(v)) => k -> v }
+    val failedNames = results.collect { case (k, None) => k }
+    val qs = timed.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val total = timed.map(_._2).sum
     val anchorClose = if (anchorRetries > 0) anchorOnce() else -1.0
     def num(d: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
@@ -172,7 +181,9 @@ object Bench {
       else -1.0
     val rollingJson = rolling.map { case (i, a) => s"[$i,${num(a)}]" }
       .mkString("[", ",", "]")
-    val marker = (if (stagingFailed) ""","bucket_staging_failed":true""" else "") +
+    val failedJson = failedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val marker = s""","failed":$failedJson""" +
+      (if (stagingFailed) ""","bucket_staging_failed":true""" else "") +
       (if (anchorRetries > 0)
         s""","anchor_sec":${num(anchorSec)},"anchor_close_sec":${num(anchorClose)}""" +
           s""","anchor_baseline_sec":$anchorBaseline,"anchor_attempts":$anchorAttempts""" +
@@ -203,13 +214,13 @@ object Bench {
     // harnesses that keep only an output TAIL truncate its head — which
     // holds the total. Repeat the headline numbers LAST in a compact
     // line (slowest 10 queries only) so any tail window preserves them.
-    val top = results.sortBy(-_._2).take(10)
+    val top = timed.sortBy(-_._2).take(10)
       // Locale.ROOT: the f-interpolator uses the JVM default locale, and a
       // comma-decimal locale (de_DE) would emit invalid JSON here
       .map { case (k, v) => "\"" + k + "\":" +
         String.format(java.util.Locale.ROOT, "%.3f", Double.box(v)) }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total_compact","value":$total,"unit":"sec","n_queries":${results.size},"slowest":$top,"sf":"$sfDir","runs":$medianOf$marker}""")
+    println(s"""{"metric":"total_compact","value":$total,"unit":"sec","n_queries":${timed.size},"slowest":$top,"sf":"$sfDir","runs":$medianOf$marker}""")
     spark.stop()
   }
 }

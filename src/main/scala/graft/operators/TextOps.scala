@@ -662,9 +662,13 @@ object TextOps {
       Seq("the", "a").contains)
   private def tokenStats(text: Column): Column =
     graft.expr.TextExpressions.tokenMarkerStats(text, tokenStatMarkers)
-  private def markerCount(text: Column, m: String): Column =
+  private[graft] def markerCount(text: Column, m: String): Column = {
+    require(tokenStatMarkers.contains(m),
+      s"markerCount: '$m' is not in the token-scan marker vocabulary " +
+        tokenStatMarkers.mkString("[", ", ", "]"))
     element_at(tokenStats(text).getField("marker_counts"),
       tokenStatMarkers.indexOf(m) + 1)
+  }
 
   /** BPE-ish sub-word count estimate: each word contributes ceil(len/6)
     * pieces — a deterministic proxy for a real tokenizer's piece count. */
@@ -983,12 +987,12 @@ object TextOps {
 
   def langScore(text: Column, markers: Seq[(String, Int)]): Column =
     // marker occurrence counts come from the shared one-pass token scan;
-    // the weighted sum is plain codegen'd arithmetic (long instead of the
-    // HOF form's int — the score only feeds comparisons, never output).
-    // Markers outside the fixed scan vocabulary keep the HOF form.
+    // the weighted sum is plain codegen'd arithmetic. Markers outside the
+    // fixed scan vocabulary keep the HOF form, cast so the score is
+    // LongType either way.
     if (markers.forall(m => tokenStatMarkers.contains(m._1)))
       markers.map { case (m, w) => lit(w.toLong) * markerCount(text, m) }.reduce(_ + _)
-    else langScoreHof(text, markers)
+    else langScoreHof(text, markers).cast(LongType)
 
   private[graft] def langScoreHof(text: Column, markers: Seq[(String, Int)]): Column = {
     val toks = tokens(text)

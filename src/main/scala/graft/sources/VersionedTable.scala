@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options,
@@ -851,11 +852,6 @@ object VersionedTable {
     }.toDF("version", "action", "committed_at", "n_files", "n_dv_shards")
   }
 
-  /** Read an exact version — the manifest's files, nothing else.
-    * `mergeSchema` unions the file schemas (SCHEMA EVOLUTION: a commit
-    * may add columns; old files then read the new column as null —
-    * parquet's standard widening). Off by default: the single-schema
-    * read skips the footer-merge pass. */
   /** The `basePath` option to pass for a read of `files` — this table's
     * data root when it is an ancestor of EVERY file; None when the
     * manifest borrows foreign files ([[cloneTable]]), where a wrong
@@ -869,12 +865,115 @@ object VersionedTable {
   }
 
   private def readParquet(spark: SparkSession, path: String,
-      files: Seq[String], mergeSchema: Boolean = false): DataFrame = {
-    val rd0 = spark.read.option("mergeSchema", mergeSchema.toString)
-    val rd = basePathOpt(path, files).fold(rd0)(bp => rd0.option("basePath", bp))
-    rd.parquet(files: _*)
+      files: Seq[String], mergeSchema: Boolean = false): DataFrame =
+    scanParquet(spark, files, basePathOpt(path, files), Some(mergeSchema))
+
+  // ---- the one parquet scan ----
+
+  /** The fixed schema of every deletion-vector shard. */
+  private val DvSchema = new StructType().add("file", "string").add("pos", "long")
+
+  /** A scan of version DV shards (sorted: a stable plan per shard set). */
+  private def scanDv(spark: SparkSession, dvFiles: Seq[String]): DataFrame =
+    scanParquet(spark, dvFiles.sorted, schema = Some(DvSchema))
+
+  /** A scan of table-relative entries (`data/...`) under the data root. */
+  private def scanRels(spark: SparkSession, path: String, rels: Seq[String]): DataFrame =
+    scanParquet(spark, rels.map(f => new HPath(rootPath(path), f).toString),
+      Some(dataDir(path).toString))
+
+  /** Every parquet read in this object goes through here, with a schema
+    * whenever one is known without a Spark job: Spark's own inference
+    * launches a job even for the single footer it reads. The schema
+    * rule reproduces that inference exactly:
+    *
+    *  - `schema` given (the DV shards' fixed `(file, pos)`): used as is.
+    *  - `mergeSchema` off (the option, else `spark.sql.parquet.mergeSchema`):
+    *    Spark reads only the footer of the data path that sorts first
+    *    as a qualified path string; this reads that same footer on the
+    *    driver, converted under the same session confs
+    *    ([[footerSchema]]). Partition columns still come from
+    *    `basePath` inference, typed as before.
+    *  - `mergeSchema` on: no schema; Spark's all-footer inference runs.
+    *
+    * If the footer cannot be read (a missing, corrupt or unconvertible
+    * file), no schema is passed and Spark's inference reports the
+    * failure exactly as it did before. */
+  private[graft] def scanParquet(spark: SparkSession, files: Seq[String],
+      basePath: Option[String] = None, mergeSchema: Option[Boolean] = None,
+      schema: Option[StructType] = None): DataFrame = {
+    val rd0 = mergeSchema.fold(spark.read)(m => spark.read.option("mergeSchema", m.toString))
+    val rd = basePath.fold(rd0)(bp => rd0.option("basePath", bp))
+    val merge = mergeSchema.getOrElse(spark.sessionState.conf.isParquetSchemaMergingEnabled)
+    schema.orElse(if (merge) None else firstFooterSchema(spark, files))
+      .fold(rd)(rd.schema).parquet(files: _*)
   }
 
+  private def firstFooterSchema(spark: SparkSession,
+      files: Seq[String]): Option[StructType] =
+    try {
+      val hc = hconf()
+      val first = files.map { f =>
+        val p = new HPath(f); p.getFileSystem(hc).makeQualified(p) }.minBy(_.toString)
+      val st = first.getFileSystem(hc).getFileStatus(first)
+      val c = spark.sessionState.conf
+      val confs = FooterConfs(c.isParquetBinaryAsString, c.isParquetINT96AsTimestamp,
+        c.parquetInferTimestampNTZEnabled, c.legacyParquetNanosAsLong,
+        c.parquetReaderRespectUnknownTypeAnnotation)
+      // data files are immutable; length and mtime still ride in the key
+      // so a file replaced in place can never be served a stale schema
+      val key = (st.getPath.toString, st.getLen, st.getModificationTime, confs)
+      Some(footerSchemaCache.computeIfAbsent(key, _ => footerSchema(spark, st, confs)))
+    } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** The session confs under which Spark's parquet schema inference
+    * converts a footer: `ParquetFileFormat.mergeSchemasInParallel` reads
+    * these five from the session and leaves the converter's other
+    * parameters at their defaults. */
+  private case class FooterConfs(binaryAsString: Boolean,
+      int96AsTimestamp: Boolean, inferTimestampNTZ: Boolean,
+      nanosAsLong: Boolean, respectUnknownTypeAnnotation: Boolean)
+
+  /** The data schema Spark's parquet inference derives from one file's
+    * footer — the per-file reader of `mergeSchemasInParallel` (footer
+    * read without row groups; Spark's row metadata, else the converted
+    * parquet schema), run on the driver instead of in a Spark job.
+    * Throws when the footer cannot be read or converted. */
+  private def footerSchema(spark: SparkSession, file: FileStatus,
+      confs: FooterConfs): StructType = {
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+      ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val converter = new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = confs.binaryAsString,
+      assumeInt96IsTimestamp = confs.int96AsTimestamp,
+      inferTimestampNTZ = confs.inferTimestampNTZ,
+      nanosAsLong = confs.nanosAsLong,
+      respectUnknownTypeAnnotation = confs.respectUnknownTypeAnnotation)
+    val meta = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, spark.sessionState.newHadoopConf()),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, meta), converter)
+  }
+
+  /** Footer schemas by (qualified path, length, mtime, converter confs);
+    * bounded LRU like [[manifestCache]]. */
+  private val footerSchemaCache: java.util.Map[AnyRef, StructType] =
+    java.util.Collections.synchronizedMap(
+      new java.util.LinkedHashMap[AnyRef, StructType](64, 0.75f, true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[AnyRef, StructType]): Boolean = size() > 256
+      })
+
+  /** Read an exact version — the manifest's files, nothing else.
+    * `mergeSchema` unions the file schemas (SCHEMA EVOLUTION: a commit
+    * may add columns; old files then read the new column as null —
+    * parquet's standard widening). Off by default: the version's schema
+    * is then the footer of its first data file in qualified-path order,
+    * read on the driver without a Spark job ([[scanParquet]]); with it
+    * on, Spark's inference job reads and merges every footer. */
   def readVersion(spark: SparkSession, path: String, v: Long,
       mergeSchema: Boolean = false): DataFrame = {
     val files = filesAt(path, v)
@@ -944,7 +1043,7 @@ object VersionedTable {
   private def antiDv(spark: SparkSession, path: String, dvFiles: Seq[String],
       withLin: DataFrame, rels: Option[Seq[String]]): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col}
-    val dv0 = spark.read.parquet(dvFiles.sorted: _*)
+    val dv0 = scanDv(spark, dvFiles)
       .select(col("file").as("__dv_file"), col("pos").as("__dv_pos"))
     val dv1 = rels.filter(_.nonEmpty)
       .map(r => restrictToRels(spark, dv0, "__dv_file", r)).getOrElse(dv0)
@@ -1337,7 +1436,7 @@ object VersionedTable {
   private[graft] def fileStats(spark: SparkSession, path: String,
       files: Seq[String], col: String): Map[String, (Long, Long)] = {
     import org.apache.spark.sql.functions.{col => c, input_file_name, max, min}
-    spark.read.parquet(files: _*)
+    scanParquet(spark, files)
       .groupBy(input_file_name().as("__f"))
       .agg(min(c(col)).cast("long").as("__lo"), max(c(col)).cast("long").as("__hi"))
       .collect()
@@ -1562,7 +1661,7 @@ object VersionedTable {
     if (files.isEmpty) {
       // all files pruned: empty frame with the table's schema
       readVersion(spark, path, v).where(org.apache.spark.sql.functions.lit(false))
-    } else applyDv(spark, path, v, spark.read.parquet(files: _*),
+    } else applyDv(spark, path, v, scanParquet(spark, files),
       Some(files))
       .where(c(col) >= lo && c(col) <= hi)
   }
@@ -1610,7 +1709,7 @@ object VersionedTable {
     val oldSubset =
       if (touchedAbs.isEmpty)
         readVersion(spark, path, cur).where(lit(false)) // pure insert
-      else applyDv(spark, path, cur, spark.read.parquet(touchedAbs: _*),
+      else applyDv(spark, path, cur, scanParquet(spark, touchedAbs),
         Some(touchedAbs))
     val rewritten = graft.operators.Diff.applyChanges(
       oldSubset, changes, Seq(idCol), valueCols)
@@ -1800,7 +1899,7 @@ object VersionedTable {
           if (fs.isEmpty) {
             import spark.implicits._
             Seq.empty[(String, Long)].toDF("file", "pos")
-          } else spark.read.parquet(fs.sorted: _*).select(c("file"), c("pos"))
+          } else scanDv(spark, fs)
         val f = rdDv(dvFrom); val t = rdDv(dvTo)
         t.except(f).unionByName(f.except(t))
           .select(c("file")).distinct()
@@ -1846,8 +1945,7 @@ object VersionedTable {
     val parts = math.max(values.length,
       math.ceil(bytes.toDouble / targetBytes).toInt)
     val arranged = applyDv(spark, path, cur,
-        spark.read.option("basePath", dataDir(path).toString)
-          .parquet(sel.sorted: _*),
+        scanParquet(spark, sel.sorted, Some(dataDir(path).toString)),
         Some(sel))
       .repartitionByRange(parts, c(partCol), c(sortCol))
       .sortWithinPartitions(c(partCol), c(sortCol))
@@ -1874,7 +1972,7 @@ object VersionedTable {
     val residual = preds.map { case (cl, lo, hi) => c(cl) >= lo && c(cl) <= hi }
       .reduce(_ && _)
     if (files.isEmpty) readVersion(spark, path, v).where(lit(false))
-    else applyDv(spark, path, v, spark.read.parquet(files.toSeq.sorted: _*),
+    else applyDv(spark, path, v, scanParquet(spark, files.toSeq.sorted),
       Some(files.toSeq)).where(residual)
   }
 
@@ -2057,8 +2155,7 @@ object VersionedTable {
       if (fresh.isEmpty) Map.empty
       else {
         import org.apache.spark.sql.functions.{count, input_file_name, lit}
-        spark.read.option("basePath", dataDir(path).toString)
-          .parquet(fresh.map(f => new HPath(rootPath(path), f).toString): _*)
+        scanRels(spark, path, fresh)
           .groupBy(input_file_name().as("__f")).agg(count(lit(1)).as("__n"))
           .collect()
           .map(r => relPathOf(path, r.getString(0)) -> r.getLong(1)).toMap
@@ -2104,8 +2201,7 @@ object VersionedTable {
     if (dvs.isEmpty) Some(physical)
     else {
       val liveRels = filesAt(path, v).map(lineageRel)
-      val deleted = restrictToRels(spark,
-        spark.read.parquet(dvs.sorted: _*), "file", liveRels).count()
+      val deleted = restrictToRels(spark, scanDv(spark, dvs), "file", liveRels).count()
       Some(physical - deleted)
     }
   }
@@ -2153,8 +2249,7 @@ object VersionedTable {
       else {
         import org.apache.spark.sql.functions.col
         val liveRels = filesAt(path, v).map(lineageRel)
-        restrictToRels(spark,
-          spark.read.parquet(dvs.sorted: _*), "file", liveRels)
+        restrictToRels(spark, scanDv(spark, dvs), "file", liveRels)
           .groupBy(col("file")).count()
           .collect() // O(files) rows: per-FILE mark totals, not marks
           .groupBy(r => partOf(r.getString(0)))
@@ -2213,8 +2308,7 @@ object VersionedTable {
       if (fresh.isEmpty) Map.empty
       else {
         import org.apache.spark.sql.functions.{input_file_name, sum, col => c}
-        spark.read.option("basePath", dataDir(path).toString)
-          .parquet(fresh.map(f => new HPath(rootPath(path), f).toString): _*)
+        scanRels(spark, path, fresh)
           .groupBy(input_file_name().as("__f"))
           .agg(sum(c(col).cast("long")).as("__s"))
           .collect()
@@ -2255,8 +2349,7 @@ object VersionedTable {
     if (dvs.isEmpty) return None
     val files = filesAt(path, v)
     val liveRels = files.map(lineageRel)
-    val dv0 = restrictToRels(spark,
-      spark.read.parquet(dvs.sorted: _*), "file", liveRels)
+    val dv0 = restrictToRels(spark, scanDv(spark, dvs), "file", liveRels)
     val markedRels = dv0.select("file").distinct()
       .collect().map(_.getString(0)) // O(marked files)
     if (markedRels.isEmpty) return None
@@ -2267,8 +2360,7 @@ object VersionedTable {
     // second shard scan restricted to the rels we just COLLECTED (not
     // the manifest's full list): the pushdown narrows to exactly the
     // marked files the value scan reads
-    val dvKeys = restrictToRels(spark,
-        spark.read.parquet(dvs.sorted: _*), "file", markedRels.toSeq)
+    val dvKeys = restrictToRels(spark, scanDv(spark, dvs), "file", markedRels.toSeq)
       .select(c("file").as("__dv_file"), c("pos").as("__dv_pos"))
     val dv = if (dvBytes <= limit) broadcast(dvKeys) else dvKeys
     Some(lineage(readParquet(spark, path, markedRels.toSeq.sorted.map(absByRel)))
@@ -2427,8 +2519,7 @@ object VersionedTable {
       else {
         import org.apache.spark.sql.functions.input_file_name
         graft.operators.Sketch.momentsSketch(
-            spark.read.option("basePath", dataDir(path).toString)
-              .parquet(fresh.map(f => new HPath(rootPath(path), f).toString): _*)
+            scanRels(spark, path, fresh)
               .select(input_file_name().as("__f"),
                 org.apache.spark.sql.functions.col(col)),
             Seq("__f"), org.apache.spark.sql.functions.col(col))
@@ -2707,8 +2798,7 @@ object VersionedTable {
         val y = shiftright(h, p).bitwiseAND(lit((1L << W) - 1L))
         val rho = when(y === 0L, lit(W + 1))
           .otherwise(lit(W + 1) - length(bin(y)))
-        spark.read.option("basePath", dataDir(path).toString)
-          .parquet(fresh.map(f => new HPath(rootPath(path), f).toString): _*)
+        scanRels(spark, path, fresh)
           .filter(c(col).isNotNull)
           .select(input_file_name().as("__f"), c(col).cast("string").as("__s"))
           .select(c("__f"), pmod(h, lit((1 << p).toLong)).cast("int").as("__idx"),
@@ -2974,8 +3064,7 @@ object VersionedTable {
     val freshEntries: Map[String, (Long, Int, Map[Long, Long])] =
       if (fresh.isEmpty) Map.empty
       else {
-        val rows = spark.read.option("basePath", dataDir(path).toString)
-          .parquet(fresh.map(f => new HPath(rootPath(path), f).toString): _*)
+        val rows = scanRels(spark, path, fresh)
           .filter(c(col).isNotNull)
           .select(input_file_name().as("__f"), c(col).cast("string").as("__s"))
         val sizes = rows.groupBy("__f").agg(count(lit(1)).as("__n"))
@@ -3180,9 +3269,7 @@ object VersionedTable {
     val dvs = dvsAt(path, cur)
     if (dvs.size < minShards) return cur
     val liveRels = filesAt(path, cur).map(lineageRel)
-    val dv = restrictToRels(spark,
-      spark.read.parquet(dvs.sorted: _*), "file", liveRels)
-      .select(c("file"), c("pos"))
+    val dv = restrictToRels(spark, scanDv(spark, dvs), "file", liveRels)
     val n = dv.count()
     val v = cur + 1
     val rels =

@@ -328,11 +328,16 @@ class PipelineSpec extends SparkSpec {
     assert(viaNative.filter(col("id") === 9L).collect().head.toSeq.tail
       .forall(_ == null))
     // langScore falls back to the HOF form for markers outside the fixed
-    // scan vocabulary (public-API safety)
-    val custom = df.filter(col("id") === 1L)
+    // scan vocabulary (public-API safety), with the same LongType result
+    val customDf = df.filter(col("id") === 1L)
       .select(TextOps.langScore(t, Seq("cat" -> 2, "hat" -> 1)).as("s"))
-      .collect().head.getInt(0)
-    assert(custom === 3)
+    import org.apache.spark.sql.types.LongType
+    assert(customDf.schema("s").dataType === LongType)
+    assert(customDf.collect().head.getLong(0) === 3L)
+    assert(df.select(TextOps.langScore(t, Seq("the" -> 1)).as("s"))
+      .schema("s").dataType === LongType)
+    // a marker outside the scan vocabulary fails at plan-build time
+    intercept[IllegalArgumentException](TextOps.markerCount(t, "cat"))
   }
 
   test("native minhash kernel equals the k HOF array_min passes (stream shape)") {

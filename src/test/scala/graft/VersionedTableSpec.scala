@@ -866,6 +866,127 @@ class VersionedTableSpec extends SparkSpec {
       mergeSchema = true).columns.toSeq === Seq("id"))
   }
 
+  test("reads build with no Spark job; the scan schema equals Spark's inference") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    // jobs launched from this thread while `body` runs, counted by job
+    // group; a marker job in its own group flushes the listener queue
+    def jobsDuring(body: => Unit): Int = {
+      val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          groups.add(String.valueOf(
+            Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup("vt-build", "building read frames")
+        try body finally sc.clearJobGroup()
+        sc.setJobGroup("vt-marker", "listener flush")
+        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+        val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+        while (!groups.contains("vt-marker") && System.nanoTime() < deadline)
+          Thread.sleep(10)
+        assert(groups.contains("vt-marker"), "listener never saw the marker job")
+        groups.asScala.count(_ == "vt-build")
+      } finally sc.removeSparkListener(listener)
+    }
+
+    // ---- job count: read, readVersion of a DV version, changesSince ----
+    val path = fresh()
+    VersionedTable.create(spark.range(20).select($"id", ($"id" * 2).as("x")), path)
+    VersionedTable.commit(
+      spark.range(20, 30).select($"id", ($"id" * 2).as("x")), path, "append")
+    val vDv = VersionedTable.deleteWhere(spark, path, $"id" < 5)
+    assert(VersionedTable.hasDeletes(path, vDv))
+    VersionedTable.commit(
+      spark.range(30, 35).select($"id", ($"id" * 2).as("x")), path, "append")
+    var built = Seq.empty[org.apache.spark.sql.DataFrame]
+    val n = jobsDuring {
+      built = Seq(VersionedTable.read(spark, path),
+        VersionedTable.readVersion(spark, path, vDv),
+        VersionedTable.changesSince(spark, path, vDv, Seq("id"), Seq("x")).get._1)
+    }
+    assert(n === 0, s"$n Spark job(s) launched while building the read frames")
+    // and the frames read what they did before
+    assert(ids(built(0)) === (5L until 35L))
+    assert(ids(built(1)) === (5L until 30L))
+    assert(ids(built(2)) === (30L until 35L))
+
+    // ---- schema: the scan's schema is exactly Spark's inferred one ----
+    def sameAsSpark(files: Seq[String], basePath: Option[String] = None): Unit = {
+      val rd = basePath.fold(spark.read)(bp => spark.read.option("basePath", bp))
+      val want = rd.parquet(files: _*).schema
+      assert(VersionedTable.scanParquet(spark, files, basePath).schema === want)
+      assert(VersionedTable.scanParquet(spark, files.reverse, basePath).schema === want)
+    }
+    // DV shards carry exactly the fixed (file, pos) schema the scan passes
+    assert(spark.read.parquet(VersionedTable.dvsAt(path, vDv): _*).schema ===
+      new org.apache.spark.sql.types.StructType().add("file", "string").add("pos", "long"))
+    // flat, and the same files under a DV version
+    sameAsSpark(VersionedTable.filesAt(path, 0L))
+    sameAsSpark(VersionedTable.filesAt(path, vDv))
+    assert(VersionedTable.readVersion(spark, path, vDv).schema ===
+      spark.read.parquet(VersionedTable.filesAt(path, vDv): _*).schema)
+    // mixed-schema append read with mergeSchema off: the first footer decides
+    val mixed = fresh()
+    VersionedTable.create(spark.range(3).select($"id"), mixed)
+    VersionedTable.commit(
+      spark.range(3, 6).select($"id", lit("en").as("lang")), mixed, "append")
+    VersionedTable.commit(
+      spark.range(6, 9).select($"id", lit(1.5).as("w")), mixed, "append")
+    val mixedFiles = VersionedTable.filesAt(mixed, 2L)
+    sameAsSpark(mixedFiles)
+    mixedFiles.combinations(2).foreach(sameAsSpark(_))
+    assert(VersionedTable.readVersion(spark, mixed, 2L, mergeSchema = true).schema ===
+      spark.read.option("mergeSchema", "true").parquet(mixedFiles: _*).schema)
+    // basePath-partitioned: partition columns still come from the paths
+    val part = fresh()
+    VersionedTable.createPartitioned(
+      spark.range(12).select($"id", ($"id" % 3).as("k"), ($"id" * 1.5).as("v")),
+      part, "k")
+    val partFiles = VersionedTable.filesAt(part, 0L)
+    sameAsSpark(partFiles, Some(part + "/data"))
+    sameAsSpark(partFiles)
+    assert(VersionedTable.read(spark, part).columns.toSeq === Seq("id", "v", "k"))
+    // cloned: borrowed files outside the clone's root, no basePath
+    val clone = fresh()
+    VersionedTable.cloneTable(path, clone)
+    sameAsSpark(VersionedTable.filesAt(clone, 0L))
+    assert(ids(VersionedTable.read(spark, clone)) === (5L until 35L))
+    // timestamps: Spark-written columns, and a footer without Spark's row
+    // metadata, where nanosAsLong and inferTimestampNTZ decide the types
+    val ts = fresh()
+    VersionedTable.create(spark.range(3).select($"id",
+      timestamp_seconds($"id").as("t"),
+      timestamp_seconds($"id").cast("timestamp_ntz").as("tn")), ts)
+    sameAsSpark(VersionedTable.filesAt(ts, 0L))
+    val raw = new org.apache.hadoop.fs.Path(
+      java.nio.file.Files.createTempDirectory("graft_vt_raw").toString, "raw.parquet")
+    val msg = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message m { required int64 id; " +
+        "required int64 tn (TIMESTAMP(NANOS,true)); " +
+        "required int64 tl (TIMESTAMP(MICROS,false)); }")
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter.builder(raw)
+      .withType(msg).build()
+    try {
+      val g = new org.apache.parquet.example.data.simple.SimpleGroupFactory(msg)
+      w.write(g.newGroup().append("id", 1L).append("tn", 1500L).append("tl", 7L))
+    } finally w.close()
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+    sameAsSpark(Seq(raw.toString))
+    val ntzKey = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    val ntzBefore = spark.conf.getOption(ntzKey)
+    try {
+      // a conf change must not be served a memoized schema
+      spark.conf.set(ntzKey, "false")
+      sameAsSpark(Seq(raw.toString))
+      assert(VersionedTable.scanParquet(spark, Seq(raw.toString))
+        .schema("tl").dataType === org.apache.spark.sql.types.TimestampType)
+    } finally ntzBefore.fold(spark.conf.unset(ntzKey))(spark.conf.set(ntzKey, _))
+  }
+
   test("optimize: z-order + stats in one commit tightens skip pruning") {
     val path = fresh()
     // a scattered layout: ids round-robin across partitions, so every
