@@ -438,9 +438,20 @@ object PipelineQueries {
         "noDataMicroBatches enabled.")
   }
 
+  /** The finished memory sink's rows, its temp view dropped: the frame is
+    * analyzed, so it keeps the sink while the session forgets the name
+    * (left registered, each replay would pin its rows for the session). */
+  private def sinkRows(s: SparkSession, sink: String): DataFrame = {
+    val rows = s.table(sink)
+    s.catalog.dropTempView(sink)
+    rows
+  }
+
   private[graft] def runAvailableNow(s: SparkSession, tableFile: String,
       prefix: String, outputMode: String)(mkAgg: DataFrame => DataFrame): DataFrame = {
-    val schema = s.read.parquet(tableFile).schema
+    // a file's footer, read on the driver without Spark's inference job
+    // (a directory still goes through the inference)
+    val schema = graft.sources.VersionedTable.scanParquet(s, Seq(tableFile)).schema
     val stageDir = java.nio.file.Files.createTempDirectory(prefix)
     val staged = stageParquet(tableFile, stageDir)
     val sink = prefix + java.util.UUID.randomUUID().toString.replace("-", "")
@@ -489,7 +500,7 @@ object PipelineQueries {
       staged.foreach(java.nio.file.Files.deleteIfExists)
       java.nio.file.Files.deleteIfExists(stageDir)
     }
-    s.table(sink)
+    sinkRows(s, sink)
   }
 
   /** Two-stream variant of [[runAvailableNow]]: stages the SAME parquet
@@ -498,7 +509,7 @@ object PipelineQueries {
   private[graft] def runAvailableNow2(s: SparkSession, tableFile: String,
       prefix: String, outputMode: String)
       (mkJoin: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    val schema = s.read.parquet(tableFile).schema
+    val schema = graft.sources.VersionedTable.scanParquet(s, Seq(tableFile)).schema
     val dirs = Seq("l", "r").map { side =>
       val d = java.nio.file.Files.createTempDirectory(prefix + side)
       (d, stageParquet(tableFile, d))
@@ -539,7 +550,7 @@ object PipelineQueries {
         java.nio.file.Files.deleteIfExists(d)
       }
     }
-    s.table(sink)
+    sinkRows(s, sink)
   }
 
   /** Watermarks demand TimestampType (not NTZ); session tz is UTC so the

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
+import graft.expr.{DvExpressions, DvMarks}
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options,
   Path => HPath}
@@ -52,8 +54,12 @@ import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options,
   * through MERGE-ON-READ deletion vectors: [[deleteWhere]]/[[upsert]]
   * publish the same data files plus O(deleted)-row `.dv` parquet
   * shards under `dv/`, referenced from the manifest itself (as atomic as
-  * the publish); every read face anti-joins the version's DVs
-  * (broadcast while small), and [[optimize]]/[[compact]] purge them
+  * the publish). Every read face drops the marked rows inside its scan:
+  * the version's shards are decoded once on the driver into per-file
+  * row-index bitmaps (cached), and one codegen'd predicate over
+  * `_metadata.file_path`/`row_index` tests each row against them — no
+  * join, no job. A backlog past `graft.dv.broadcastBytes` degrades to a
+  * shuffled anti-join, and [[optimize]]/[[compact]] purge the marks
   * physically. Skipping sidecars (range stats, bloom) remain sound
   * under DVs; exact metadata faces (counts/sums/moments/NDV) refuse
   * loudly until the purge.
@@ -269,10 +275,7 @@ object VersionedTable {
     * manifest and resurrect deleted rows on a rebase. publish() writes
     * one JSON object whose only closing brace is terminal, so
     * completeness is exactly "ends with '}'". */
-  private def readManifestUtf8(p: HPath): String = {
-    val key = p.toString
-    val hit = manifestCache.get(key)
-    if (hit != null) return hit
+  private def readManifestUtf8(p: HPath): String = manifestCache(p.toString) {
     val txt = readUtf8(p)
     if (!txt.trim.endsWith("}")) throw new IllegalStateException(
       s"VersionedTable: torn manifest read at $p (truncated body)")
@@ -286,16 +289,55 @@ object VersionedTable {
     // text. Torn reads are never cached (they throw first), so fail-loud
     // semantics are untouched. Bounded LRU: a long-lived session over
     // many tables/versions stays flat.
-    manifestCache.put(key, txt)
     txt
   }
 
-  private val manifestCache: java.util.Map[String, String] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, String](64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, String]): Boolean = size() > 256
-      })
+  private val manifestCache = new Lru[String, String]("manifest", 256)
+
+  /** Hit/miss counters of one of this object's driver-side caches. */
+  case class CacheStats(cache: String, hits: Long, misses: Long, entries: Int)
+
+  /** A bounded LRU with hit/miss counters. A value is loaded outside the
+    * lock (a slow read never blocks other tables' hits); a load that
+    * throws caches nothing; a value heavier than `maxWeight` alone is
+    * served but not kept. */
+  private final class Lru[K, V <: AnyRef](name: String, maxEntries: Int,
+      maxWeight: Long = Long.MaxValue, weigh: V => Long = (_: V) => 1L) {
+    private val map = new java.util.LinkedHashMap[K, V](64, 0.75f, true)
+    private var weight, hits, misses = 0L
+
+    def apply(k: K)(load: => V): V = {
+      val hit = synchronized {
+        val v = map.get(k)
+        if (v != null) hits += 1 else misses += 1
+        v
+      }
+      if (hit != null) hit
+      else {
+        val v = load
+        if (weigh(v) <= maxWeight) synchronized {
+          Option(map.put(k, v)).foreach(old => weight -= weigh(old))
+          weight += weigh(v)
+          val it = map.values.iterator
+          while (map.size > maxEntries || weight > maxWeight) {
+            weight -= weigh(it.next()); it.remove()
+          }
+        }
+        v
+      }
+    }
+
+    def clear(): Unit = synchronized { map.clear(); weight = 0L }
+
+    def stats: CacheStats = synchronized { CacheStats(name, hits, misses, map.size) }
+  }
+
+  /** The driver-side caches' counters, as data: `manifest` (complete
+    * manifest texts), `footerSchema` (data-file footer schemas) and
+    * `dvMarks` (decoded deletion-vector shards). A hit is a read that
+    * skipped the file; counters run from JVM start. */
+  def cacheStats(): Seq[CacheStats] =
+    Seq(manifestCache.stats, footerSchemaCache.stats, dvShardCache.stats)
 
   /** Drop the manifest cache — ONLY for specs that tamper a published
     * manifest in place (simulating mid-write visibility), which violates
@@ -357,7 +399,7 @@ object VersionedTable {
     * register max cannot be subtracted) and moments stay refuse-only
     * (lo/hi are not subtractable). Range/bloom SKIPPING sidecars stay
     * sound under DVs (over-approximation only: a kept file's deleted
-    * rows are removed by the read path's anti-join).
+    * rows are removed by the read path's mark filter).
     * [[optimize]]/[[compact]] purge deletes physically and re-enable
     * every physical face. */
   private def requireNoDv(path: String, v: Long, face: String): Unit =
@@ -868,6 +910,13 @@ object VersionedTable {
       files: Seq[String], mergeSchema: Boolean = false): DataFrame =
     scanParquet(spark, files, basePathOpt(path, files), Some(mergeSchema))
 
+  /** A scan of some of this table's data files (absolute, as [[filesAt]]
+    * gives them), deletion vectors NOT applied, under [[scanParquet]]'s
+    * schema rule and the session's mergeSchema: the streaming source's
+    * read of the files a version added. */
+  def scanFiles(spark: SparkSession, path: String, files: Seq[String]): DataFrame =
+    scanParquet(spark, files, basePathOpt(path, files))
+
   // ---- the one parquet scan ----
 
   /** The fixed schema of every deletion-vector shard. */
@@ -923,7 +972,7 @@ object VersionedTable {
       // data files are immutable; length and mtime still ride in the key
       // so a file replaced in place can never be served a stale schema
       val key = (st.getPath.toString, st.getLen, st.getModificationTime, confs)
-      Some(footerSchemaCache.computeIfAbsent(key, _ => footerSchema(spark, st, confs)))
+      Some(footerSchemaCache(key)(footerSchema(spark, st, confs)))
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** The session confs under which Spark's parquet schema inference
@@ -960,12 +1009,7 @@ object VersionedTable {
 
   /** Footer schemas by (qualified path, length, mtime, converter confs);
     * bounded LRU like [[manifestCache]]. */
-  private val footerSchemaCache: java.util.Map[AnyRef, StructType] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[AnyRef, StructType](64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[AnyRef, StructType]): Boolean = size() > 256
-      })
+  private val footerSchemaCache = new Lru[AnyRef, StructType]("footerSchema", 256)
 
   /** Read an exact version — the manifest's files, nothing else.
     * `mergeSchema` unions the file schemas (SCHEMA EVOLUTION: a commit
@@ -993,23 +1037,15 @@ object VersionedTable {
     * segment (partition directories are `k=v` single segments and file
     * names are commit-uuid hex, so the final `data` segment is always
     * the table's own data root — even when the table path itself
-    * contains a `/data/` segment). */
+    * contains a `/data/` segment). The byte-scan kernel
+    * [[graft.expr.DvExpressions.lineageRel]] derives it, byte-identical
+    * to the regex that wrote the DV keys already on disk. */
   private def lineage(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{col, regexp_extract}
-    df.withColumn("__vt_file",
-        regexp_extract(col("_metadata.file_path"), ".*/(data/.*)$", 1))
+    import org.apache.spark.sql.functions.col
+    df.withColumn("__vt_file", DvExpressions.lineageRelOf(col("_metadata.file_path")))
       .withColumn("__vt_pos", col("_metadata.row_index"))
   }
 
-  /** Restrict `df` to rows whose `fileCol` is one of `rels` — the
-    * dangling-mark / pruned-read guard every DV consumer needs. Small
-    * lists stay `isin` (an InSet that PUSHES DOWN into the DV parquet
-    * scan — the file-pruned read path's win); past the threshold
-    * (`graft.dv.isinMaxRels`, default 10k) it switches to a broadcast
-    * LEFT SEMI join: a 100 TB manifest carries 10^5–10^6 files, and an
-    * expression tree with one literal per file is driver analysis cost
-    * and plan bloat, while a broadcast of the same strings is one
-    * compact relation. */
   /** Session-conf integer with a descriptive failure: a malformed
     * value surfaces as a config error naming the key, not a
     * NumberFormatException deep inside a DV read path. */
@@ -1021,6 +1057,15 @@ object VersionedTable {
       }
     }.getOrElse(dflt)
 
+  /** Restrict `df` to rows whose `fileCol` is one of `rels` — the
+    * dangling-mark / pruned-read guard of the DV-table consumers. Small
+    * lists stay `isin` (an InSet that PUSHES DOWN into the DV parquet
+    * scan — the file-pruned read path's win); past the threshold
+    * (`graft.dv.isinMaxRels`, default 10k) it switches to a broadcast
+    * LEFT SEMI join: a 100 TB manifest carries 10^5–10^6 files, and an
+    * expression tree with one literal per file is driver analysis cost
+    * and plan bloat, while a broadcast of the same strings is one
+    * compact relation. */
   private[graft] def restrictToRels(spark: SparkSession, df: DataFrame,
       fileCol: String, rels: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col}
@@ -1033,32 +1078,107 @@ object VersionedTable {
     }
   }
 
-  /** Anti-join `withLin` (a [[lineage]]-tagged scan) against version
-    * `v`'s deletion vectors, restricted to `rels` when the caller
-    * already pruned the file list (the DV parquet filter pushes down).
-    * DV bytes are O(deleted rows): when the shards are small the join
-    * side is broadcast explicitly (deterministic plan); a massive
-    * backlog of deletes degrades to a shuffled anti-join rather than an
-    * OOM — and [[optimize]]/[[compact]] purge it physically. */
-  private def antiDv(spark: SparkSession, path: String, dvFiles: Seq[String],
-      withLin: DataFrame, rels: Option[Seq[String]]): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    val dv0 = scanDv(spark, dvFiles)
-      .select(col("file").as("__dv_file"), col("pos").as("__dv_pos"))
-    val dv1 = rels.filter(_.nonEmpty)
-      .map(r => restrictToRels(spark, dv0, "__dv_file", r)).getOrElse(dv0)
-    val dvBytes = dvFiles.map { f =>
-      val p = new HPath(f); fsOf(p).getFileStatus(p).getLen }.sum
-    // broadcast threshold (bytes) — `graft.dv.broadcastBytes` session
-    // conf; a backlog past it degrades to a shuffled anti-join rather
-    // than an executor OOM (and the spec pins the degraded path's
-    // correctness by setting it to 0)
-    val limit = confLong(spark, "graft.dv.broadcastBytes", 64L * 1024 * 1024)
-    val dv = if (dvBytes <= limit) broadcast(dv1) else dv1
-    withLin.join(dv,
-      col("__vt_file") === col("__dv_file") &&
-        col("__vt_pos") === col("__dv_pos"), "left_anti")
+  /** `scan` — a fresh parquet scan of (some of) a version's data files —
+    * without the rows the shards `dvFiles` mark, plus the [[lineage]]
+    * columns when `withLineage`. Up to `graft.dv.broadcastBytes` of
+    * shards, the marks are decoded on the driver ([[marksOf]], no job)
+    * and one codegen'd predicate ([[graft.expr.DvKeep]]) drops the
+    * marked rows in the scan's own stage, the bitmaps shipped as one
+    * broadcast. A larger backlog degrades to a shuffled anti-join on
+    * the lineage keys rather than an OOM, its DV side restricted to
+    * `rels` (the scanned files' lineage rels; the filter pushes into the
+    * shard scan), and [[optimize]]/[[compact]] purge it physically. */
+  private def liveRows(spark: SparkSession, dvFiles: Seq[String], scan: DataFrame,
+      rels: Option[Seq[String]], withLineage: Boolean): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    def lin(df: DataFrame) = if (withLineage) lineage(df) else df
+    if (dvFiles.isEmpty) lin(scan)
+    else marksOf(spark, dvFiles) match {
+      case Some(m) =>
+        lin(scan.where(DvExpressions.keep(col("_metadata.file_path"),
+          col("_metadata.row_index"), spark.sparkContext.broadcast(m))))
+      case None =>
+        val dv0 = scanDv(spark, dvFiles)
+          .select(col("file").as("__dv_file"), col("pos").as("__dv_pos"))
+        val dv = rels.filter(_.nonEmpty)
+          .fold(dv0)(restrictToRels(spark, dv0, "__dv_file", _))
+        val live = lineage(scan).join(dv,
+          col("__vt_file") === col("__dv_file") &&
+            col("__vt_pos") === col("__dv_pos"), "left_anti")
+        if (withLineage) live else live.drop("__vt_file", "__vt_pos")
+    }
   }
+
+  /** The marks of the shards `dvFiles`, decoded: None past
+    * `graft.dv.broadcastBytes` (the shuffled anti-join's regime), or when
+    * a shard cannot be decoded — a position beyond an unsigned 32-bit row
+    * index, or an unreadable shard, whose error the shard scan then
+    * reports as before. Each shard decodes once per (path, length,
+    * mtime); the driver holds what a broadcast join collected anyway. */
+  private def marksOf(spark: SparkSession, dvFiles: Seq[String]): Option[DvMarks] = {
+    val sts = dvFiles.map { f => val p = new HPath(f); fsOf(p).getFileStatus(p) }
+    if (sts.map(_.getLen).sum > confLong(spark, "graft.dv.broadcastBytes", 64L * 1024 * 1024))
+      None
+    else try {
+      val shards = sts.map(st => dvShardCache(
+        (st.getPath.toString, st.getLen, st.getModificationTime))(decodeDvShard(spark, st)))
+      if (shards.forall(_.isDefined)) Some(DvMarks.union(shards.flatten)) else None
+    } catch { case scala.util.control.NonFatal(_) => None }
+  }
+
+  /** One DV shard's marks, read with parquet-hadoop on the driver (no
+    * Spark job). A null file or position marks nothing, as in the join;
+    * None when a position does not fit an unsigned 32-bit row index. */
+  private def decodeDvShard(spark: SparkSession, st: FileStatus): Option[DvMarks] = {
+    import org.apache.parquet.column.impl.ColumnReadStoreImpl
+    import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.io.api.Binary
+    import org.roaringbitmap.RoaringBitmap
+    val bits = new java.util.HashMap[String, RoaringBitmap]()
+    val rd = ParquetFileReader.open(
+      HadoopInputFile.fromStatus(st, spark.sessionState.newHadoopConf()))
+    try {
+      val meta = rd.getFooter.getFileMetaData
+      val schema = meta.getSchema
+      val fileCol = schema.getColumnDescription(Array("file"))
+      val posCol = schema.getColumnDescription(Array("pos"))
+      var prev: Binary = null
+      var cur: RoaringBitmap = null
+      var pages = rd.readNextRowGroup()
+      while (pages != null) {
+        val store = new ColumnReadStoreImpl(pages,
+          new GroupRecordConverter(schema).getRootConverter, schema, meta.getCreatedBy)
+        val fr = store.getColumnReader(fileCol)
+        val pr = store.getColumnReader(posCol)
+        var n = pages.getRowCount
+        while (n > 0) {
+          if (fr.getCurrentDefinitionLevel == fileCol.getMaxDefinitionLevel &&
+              pr.getCurrentDefinitionLevel == posCol.getMaxDefinitionLevel) {
+            val f = fr.getBinary
+            val pos = pr.getLong
+            if ((pos >>> 32) != 0) return None
+            if (prev == null || f != prev) {
+              prev = f.copy()
+              cur = bits.computeIfAbsent(f.toStringUsingUTF8, _ => new RoaringBitmap)
+            }
+            cur.add(pos.toInt)
+          }
+          fr.consume(); pr.consume(); n -= 1
+        }
+        pages = rd.readNextRowGroup()
+      }
+    } finally rd.close()
+    bits.values.forEach { b => b.runOptimize(); () }
+    Some(new DvMarks(bits))
+  }
+
+  /** Decoded DV shards by (qualified path, length, mtime); a bounded
+    * LRU like [[manifestCache]], also bounded by the bitmaps' bytes. */
+  private val dvShardCache = new Lru[(String, Long, Long), Option[DvMarks]](
+    "dvMarks", 256, maxWeight = 128L * 1024 * 1024,
+    weigh = _.fold(1L)(_.sizeInBytes))
 
   /** The `/data/`-anchored rel of an absolute data-file path — the SAME
     * derivation [[lineage]] performs on `_metadata.file_path`, so DV
@@ -1072,16 +1192,14 @@ object VersionedTable {
   }
 
   /** Apply version `v`'s deletion vectors to a scan of (a subset of)
-    * its files (`files`: the ABSOLUTE paths the caller pruned to, used
-    * to push the restriction into the DV parquet). No DVs → the input
-    * plan, untouched. */
+    * its files (`files`: the ABSOLUTE paths the caller pruned to, the
+    * restriction of the shuffled path). No DVs → the input plan,
+    * untouched. */
   private def applyDv(spark: SparkSession, path: String, v: Long,
-      df: DataFrame, files: Option[Seq[String]] = None): DataFrame = {
-    val dvFiles = dvsAt(path, v) // ONE manifest read decides and serves
-    if (dvFiles.isEmpty) df
-    else antiDv(spark, path, dvFiles, lineage(df),
-      files.map(_.map(lineageRel))).drop("__vt_file", "__vt_pos")
-  }
+      df: DataFrame, files: Option[Seq[String]] = None): DataFrame =
+    // ONE manifest read decides and serves
+    liveRows(spark, dvsAt(path, v), df, files.map(_.map(lineageRel)),
+      withLineage = false)
 
   /** Stage a (file, pos) frame as immutable DV shards under `dv/`;
     * returns relative paths. Distributed write — deleted-row positions
@@ -1126,15 +1244,6 @@ object VersionedTable {
     } finally m.unpersist()
   }
 
-  /** MERGE-ON-READ DELETE: mark the LIVE rows matching `pred` in a
-    * deletion-vector sidecar and publish a new version that carries the
-    * SAME data files — zero data bytes rewritten, which at 100 TB is
-    * the difference between a GDPR delete finishing in minutes and
-    * rewriting petabytes (copy-on-write). Readers anti-join the O(
-    * deleted) DV rows (broadcast when small); [[optimize]]/[[compact]]
-    * purge physically, after which metadata sidecar faces work again.
-    * DVs accumulate across delete commits; time travel to a pre-delete
-    * version still sees every row. */
   /** The files a delete must scan: intersect each hinted range's
     * [[filesForRange]] survivors. Package-visible for the pruning spec. */
   private[graft] def deleteCandidates(path: String, v: Long,
@@ -1144,6 +1253,15 @@ object VersionedTable {
       acc.filter(keep)
     }
 
+  /** MERGE-ON-READ DELETE: mark the LIVE rows matching `pred` in a
+    * deletion-vector sidecar and publish a new version that carries the
+    * SAME data files — zero data bytes rewritten, which at 100 TB is
+    * the difference between a GDPR delete finishing in minutes and
+    * rewriting petabytes (copy-on-write). Readers drop the O(deleted)
+    * marked rows in their scan ([[liveRows]]); [[optimize]]/[[compact]]
+    * purge physically, after which metadata sidecar faces work again.
+    * DVs accumulate across delete commits; time travel to a pre-delete
+    * version still sees every row. */
   def deleteWhere(spark: SparkSession, path: String,
       pred: org.apache.spark.sql.Column): Long =
     deleteWhere(spark, path, pred, Nil)
@@ -1180,11 +1298,9 @@ object VersionedTable {
     if (verifyPrune && pruneRanges.nonEmpty) {
       val prunedAway = filesAt(path, cur).filterNot(candidates.toSet)
       if (prunedAway.nonEmpty) {
-        val outside = lineage(readParquet(spark, path, prunedAway))
-        val dv0 = dvsAt(path, cur)
-        val liveOutside = if (dv0.isEmpty) outside
-          else antiDv(spark, path, dv0, outside,
-            Some(prunedAway.map(lineageRel)))
+        val liveOutside = liveRows(spark, dvsAt(path, cur),
+          readParquet(spark, path, prunedAway), Some(prunedAway.map(lineageRel)),
+          withLineage = false)
         require(liveOutside.where(pred).isEmpty,
           s"VersionedTable.deleteWhere: prune hint is WRONG — live rows " +
             s"matching the predicate exist in pruned-away files of $path; " +
@@ -1195,12 +1311,10 @@ object VersionedTable {
     val newShards =
       if (candidates.isEmpty) Nil // no file can hold a matching row
       else {
-        val base = lineage(readParquet(spark, path, candidates))
         // restriction keys are the DV shards' own lineage rels — the
         // absolute candidate paths would match nothing
-        val live = if (oldDv.isEmpty) base
-          else antiDv(spark, path, oldDv, base,
-            Some(candidates.map(lineageRel)))
+        val live = liveRows(spark, oldDv, readParquet(spark, path, candidates),
+          Some(candidates.map(lineageRel)), withLineage = true)
         val marked = live.where(pred)
           .select(col("__vt_file").as("file"), col("__vt_pos").as("pos"))
         stageDvRows(marked, path)
@@ -1251,15 +1365,14 @@ object VersionedTable {
           "staging would mix layouts and break partition inference on " +
           "all reads; use deleteWhere + commitPartitioned instead"))
     val oldDv = dvsAt(path, cur)
-    val base = lineage(readParquet(spark, path, files))
-    val live = if (oldDv.isEmpty) base
-      else antiDv(spark, path, oldDv, base, None)
+    val live = liveRows(spark, oldDv, readParquet(spark, path, files), None,
+      withLineage = true)
     // normalize the source to the table's schema — names, ORDER, and
     // TYPES: an int-typed source key appended as-is would both write a
     // mixed-type parquet layout AND silently miss the bloom prefilter
     // (XxHash64 is type-sensitive: hash(int 5) != hash(long 5))
     val tableSchema = org.apache.spark.sql.types.StructType(
-      base.schema.filterNot(f => f.name == "__vt_file" || f.name == "__vt_pos"))
+      live.schema.filterNot(f => f.name == "__vt_file" || f.name == "__vt_pos"))
     val normalized = source.select(tableSchema.map(f =>
       col(f.name).cast(f.dataType).as(f.name)): _*)
     // the semi-join build side need not be distinct (left_semi is
@@ -1502,7 +1615,7 @@ object VersionedTable {
     * DV backlog (shards, bytes, ratio vs data), and the three
     * recommendations they imply: [[optimize]] when small files
     * dominate; purge (also optimize) when the DV backlog makes every
-    * read pay a material anti-join; [[coalesceDv]] when the backlog is
+    * read pay a material mark filter; [[coalesceDv]] when the backlog is
     * FRAGMENTED (> `maxDvShards` shards) but not yet worth a data
     * rewrite — the trickle-delete shape, where one O(deleted-rows)
     * coalesce commit removes the per-read shard-open tax. */
@@ -1886,24 +1999,28 @@ object VersionedTable {
     val after = filesAt(path, toV).toSet
     // Deletion vectors extend the change extent: a delete-dv commit
     // keeps the file SETS identical, so the churn hides in files whose
-    // DV membership differs between the versions. Finding them reads
-    // the two DV row sets — O(deleted rows), never O(table) — and only
-    // files carried by BOTH manifests matter (one-sided files are in
-    // the symmetric difference already).
+    // DV membership differs between the versions. Finding them compares
+    // the two versions' decoded marks per rel on the driver — O(deleted
+    // rows), never O(table), no job; past the decode threshold the two
+    // DV row sets are diffed by Spark. Only files carried by BOTH
+    // manifests matter (one-sided files are in the symmetric difference
+    // already).
     val dvFrom = dvsAt(path, fromV)
     val dvTo = dvsAt(path, toV)
     val dvChangedRels: Set[String] =
       if (dvFrom == dvTo) Set.empty
-      else {
-        def rdDv(fs: Seq[String]): DataFrame =
-          if (fs.isEmpty) {
-            import spark.implicits._
-            Seq.empty[(String, Long)].toDF("file", "pos")
-          } else scanDv(spark, fs)
-        val f = rdDv(dvFrom); val t = rdDv(dvTo)
-        t.except(f).unionByName(f.except(t))
-          .select(c("file")).distinct()
-          .collect().map(_.getString(0)).toSet
+      else (marksOf(spark, dvFrom), marksOf(spark, dvTo)) match {
+        case (Some(f), Some(t)) => DvMarks.changedRels(f, t)
+        case _ =>
+          def rdDv(fs: Seq[String]): DataFrame =
+            if (fs.isEmpty) {
+              import spark.implicits._
+              Seq.empty[(String, Long)].toDF("file", "pos")
+            } else scanDv(spark, fs)
+          val f = rdDv(dvFrom); val t = rdDv(dvTo)
+          t.except(f).unionByName(f.except(t))
+            .select(c("file")).distinct()
+            .collect().map(_.getString(0)).toSet
       }
     // DV 'file' keys are lineage rels (the /data/-anchored form), which
     // for clone-borrowed files differs from relOf's absolute passthrough
@@ -2037,7 +2154,7 @@ object VersionedTable {
     def dirOf(rel: String) = new HPath(rel).getParent.getName
     // any mode that carries old files forward carries the DV list too
     // (entries for dropped files dangle harmlessly: they reference rels
-    // no manifest lists, so no anti-join row ever matches them)
+    // no manifest lists, so no scanned row ever matches them)
     val (files, dvs) = mode match {
       case "append" => (old ++ newFiles, dvRelsAt(path, cur))
       case "overwrite" => (newFiles, Nil)
@@ -3249,8 +3366,8 @@ object VersionedTable {
     * deletion-vector BACKLOG into few large (file,pos)-sorted shards
     * without touching a single data byte. A long-lived merge-on-read
     * table accretes shards — every delete/upsert commit appends its
-    * own — so reads pay O(shards) file opens and the anti-join side
-    * fragments; [[optimize]] purges the backlog but rewrites the DATA
+    * own — so reads pay O(shards) file opens (a decode per new shard,
+    * a shard scan past the decode threshold); [[optimize]] purges the backlog but rewrites the DATA
     * (petabytes at scale), while this pass rewrites only the O(deleted
     * rows) marks. Dangling marks (files a later rewrite dropped from
     * the manifest) are garbage-collected in the same pass — they were

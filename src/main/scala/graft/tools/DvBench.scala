@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
   * vectors vs the physical purge — the number `maintenanceReport`'s
   * purge recommendation is pricing. Builds a documents-shaped table at
   * ×`mult` of sf0.1, DV-deletes `delPct`% of rows, and times a full
-  * column aggregate (a) pre-delete, (b) through the DV anti-join, and
-  * (c) after optimize(). Usage:
+  * column aggregate (a) pre-delete, (b) through the DV marks, and
+  * (c) after optimize(), at local[SPARK_GRAFT_CPUS] (default 32). Usage:
   *   sbt "runMain graft.tools.DvBench /root/testdata/sf0.1 10 10"
   */
 object DvBench {
@@ -16,8 +16,9 @@ object DvBench {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val mult = args.lift(1).map(_.toInt).getOrElse(10)
     val delPct = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()

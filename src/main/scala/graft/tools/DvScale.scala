@@ -8,9 +8,10 @@ import org.apache.spark.sql.functions._
   * are proven, not spec-forced:
   *
   *  1. A deletion-vector backlog whose shard bytes actually exceed the
-  *     64 MB `graft.dv.broadcastBytes` default, proving the anti-join
-  *     degrades to the SHUFFLED path (no driver/executor broadcast of
-  *     a runaway backlog) with correct results, and that
+  *     64 MB `graft.dv.broadcastBytes` default, proving the read
+  *     degrades from the in-scan mark filter to a SHUFFLED anti-join (no
+  *     driver decode or broadcast of a runaway backlog) with correct
+  *     results, and that
   *     [[graft.sources.VersionedTable.coalesceDv]] then collapses the
   *     accreted shards without changing a single live row.
   *  2. A 10^5-rel manifest restriction ([[graft.sources.VersionedTable
@@ -71,24 +72,25 @@ object DvScale {
       .agg(count(lit(1)).as("n"), sum(col("x")).as("s"))
     val (live1, tBig) = time("read+agg through >64MB backlog")(
       finalPlan(agg1))
-    val shuffled = !live1.contains("BroadcastHashJoin")
+    val shuffled = !live1.contains("BroadcastHashJoin") && !live1.contains("graft_dv_keep")
     println(s"[dvscale] big-backlog plan: shuffled_anti_join=$shuffled " +
-      s"(BroadcastHashJoin absent=$shuffled)")
+      s"(BroadcastHashJoin and graft_dv_keep absent=$shuffled)")
     require(shuffled, "witness invalid: >64MB backlog was still broadcast")
     val wantRow = agg1.collect()(0)
     println(s"[dvscale] live n=${wantRow.getLong(0)} sum=${wantRow.getLong(1)}")
 
-    // control at the SAME code path, small backlog: broadcast IS taken
-    // (proves the plan detector detects, and the threshold gates)
+    // control at the SAME code path, small backlog: the in-scan mark
+    // filter IS taken (proves the plan detector detects, and the
+    // threshold gates)
     val small = java.nio.file.Files.createTempDirectory("graft_dvsmall")
       .toString + "/t"
     VersionedTable.create(spark.range(100000).toDF("id").repartition(4), small)
     VersionedTable.deleteWhere(spark, small, col("id") % 5 === 0)
     val aggS = VersionedTable.read(spark, small).agg(count(lit(1)).as("n"))
     val planS = finalPlan(aggS)
-    require(planS.contains("BroadcastHashJoin"),
-      "control invalid: small backlog did not broadcast")
-    println("[dvscale] small-backlog control: BroadcastHashJoin present=true")
+    require(planS.contains("graft_dv_keep"),
+      "control invalid: small backlog did not filter in the scan")
+    println("[dvscale] small-backlog control: graft_dv_keep present=true")
 
     // ---- witness 1b: coalesceDv collapses a TRICKLE backlog ----
     // the coalesce use-case is not one bulk delete (that backlog is

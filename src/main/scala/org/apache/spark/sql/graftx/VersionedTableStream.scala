@@ -160,10 +160,7 @@ private[graftx] class VersionedTableSource(sqlContext: SQLContext,
             .where(org.apache.spark.sql.functions.lit(false))
             .select(sel: _*)
         else
-          spark.read
-            .option("basePath", new org.apache.hadoop.fs.Path(path, "data").toString)
-            .parquet(newFiles.sorted: _*)
-            .select(sel: _*)
+          VersionedTable.scanFiles(spark, path, newFiles.sorted).select(sel: _*)
     }
     // FileStreamSource's mechanism: re-tag the batch plan as streaming so
     // MicroBatchExecution accepts it in place of the streaming relation

@@ -21,6 +21,18 @@ class PipelineSpec extends SparkSpec {
     (base ++ dups).toDF("doc_id", "text", "source")
   }
 
+  test("streaming replay faces leave no temp view behind; their frames stay readable") {
+    def views() = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    val before = views()
+    // q_stream_dedup replays through runAvailableNow, q_stream_stream through runAvailableNow2
+    for (q <- Seq("q_stream_dedup", "q_stream_stream")) {
+      val df = graft.SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
+      val first = df.collect().map(_.toString).sorted.toSeq
+      assert(views() === before, s"$q left a temp view")
+      assert(first.nonEmpty && df.collect().map(_.toString).sorted.toSeq === first, q)
+    }
+  }
+
   test("exact dedup groups identical texts") {
     import spark.implicits._
     val df = Seq((1L, "x y"), (2L, "x y"), (3L, "z")).toDF("doc_id", "text")

@@ -364,11 +364,11 @@ class PlanShapeSpec extends SparkSpec {
       v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
-  test("DV reads plan a BROADCAST left-anti join (small shards never shuffle the table)") {
+  test("DV reads drop marked rows inside the scan stage (no join, no DV shard scan)") {
     val plan = planText("q_table_delete_dv")
-    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
-      s"DV anti-join is not broadcast:\n${plan.take(1500)}")
-    // and the data side never exchanges for the anti-join itself
+    assert(plan.contains("graft_dv_keep") && !plan.contains("Join") &&
+      !plan.contains("/dv/"), s"DV marks are not applied in the scan:\n${plan.take(1500)}")
+    // and the data side never exchanges for the marks
     // (the ceilings test pins the full count at 2: agg + orderBy)
   }
 

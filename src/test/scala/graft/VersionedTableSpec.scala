@@ -913,6 +913,14 @@ class VersionedTableSpec extends SparkSpec {
     assert(ids(built(0)) === (5L until 35L))
     assert(ids(built(1)) === (5L until 30L))
     assert(ids(built(2)) === (30L until 35L))
+    // executing a DV read: one job, and no job scans a .dv shard (the
+    // marks were decoded on the driver and filter inside the scan)
+    val dvRead = VersionedTable.readVersion(spark, path, vDv)
+    val nExec = jobsDuring(dvRead.collect())
+    val executed = dvRead.queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode)
+    assert(!executed.contains("/dv/"), s"the DV read scans a shard:\n${executed.take(1500)}")
+    assert(nExec === 1, s"$nExec jobs to collect the DV read")
 
     // ---- schema: the scan's schema is exactly Spark's inferred one ----
     def sameAsSpark(files: Seq[String], basePath: Option[String] = None): Unit = {
