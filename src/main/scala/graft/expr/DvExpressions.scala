@@ -4,6 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
@@ -23,12 +24,17 @@ final class DvMarks(bits: java.util.Map[String, RoaringBitmap]) extends Serializ
   def rels: Set[String] = bits.keySet.asScala.toSet
   def of(rel: String): Option[RoaringBitmap] = Option(bits.get(rel))
   def sizeInBytes: Long = bits.asScala.map { case (r, b) =>
-    2L * r.length + b.getLongSizeInBytes }.sum
+    DvMarks.weigh(r, b) }.sum
+  /** The number of marked rows. */
+  def cardinality: Long = bits.values.asScala.map(_.getLongCardinality).sum
   /** A per-task membership probe (it keeps the last file's bitmap). */
   def probe(): DvProbe = new DvProbe(bits)
 }
 
 object DvMarks {
+  private[expr] def weigh(rel: String, b: RoaringBitmap): Long =
+    2L * rel.length + b.getLongSizeInBytes
+
   /** The marks of several shards of one version: bitmaps of the same
     * rel are OR'ed into new ones, the inputs are left untouched. */
   def union(ms: Seq[DvMarks]): DvMarks =
@@ -40,9 +46,69 @@ object DvMarks {
       new DvMarks(out)
     }
 
+  /** The marks one write's tasks built ([[DvMarksPart.build]], all
+    * `Built`), merged: None when two parts mark the same row. */
+  def merge(parts: Seq[DvMarksPart]): Option[DvMarks] = {
+    val out = new java.util.HashMap[String, RoaringBitmap]()
+    for (p <- parts; (r, b) <- p.marks) {
+      val seen = out.get(r)
+      if (seen == null) out.put(r, b)
+      else if (RoaringBitmap.intersects(seen, b)) return None
+      else {
+        val both = RoaringBitmap.or(seen, b)
+        both.runOptimize()
+        out.put(r, both)
+      }
+    }
+    Some(new DvMarks(out))
+  }
+
   /** The rels whose mark sets differ between two versions. */
   def changedRels(a: DvMarks, b: DvMarks): Set[String] =
     (a.rels ++ b.rels).filter(r => a.of(r) != b.of(r))
+}
+
+/** What one task of a keyed write's mark job reports: the bitmaps of
+  * the `(rel, pos)` rows it saw, one per rel in first-seen order (the
+  * order a scan delivers them), or why it built none. */
+final class DvMarksPart(val marks: Seq[(String, RoaringBitmap)], val status: Int)
+    extends Serializable
+
+object DvMarksPart {
+  val Built = 0
+  /** Past the position or byte budget, a null key, or a position that
+    * needs more than 32 bits. */
+  val Overflow = 1
+  /** The same row came twice. */
+  val Twice = 2
+
+  /** Bitmaps of `rows` — `(file string, pos long)` rows — as long as
+    * they hold at most `maxPositions` positions in `maxBytes`. */
+  def build(rows: Iterator[InternalRow], maxPositions: Long, maxBytes: Long): DvMarksPart = {
+    val byRel = new java.util.LinkedHashMap[String, RoaringBitmap]()
+    def bytes = byRel.asScala.map { case (r, b) => DvMarks.weigh(r, b) }.sum
+    def failed(status: Int) = new DvMarksPart(Nil, status)
+    var prev: UTF8String = null
+    var cur: RoaringBitmap = null
+    var n = 0L
+    while (rows.hasNext) {
+      val row = rows.next()
+      if (row.isNullAt(0) || row.isNullAt(1)) return failed(Overflow)
+      val pos = row.getLong(1)
+      if ((pos >>> 32) != 0) return failed(Overflow)
+      val f = row.getUTF8String(0)
+      if (prev == null || !prev.equals(f)) {
+        prev = f.clone() // the input may live in a reused buffer
+        cur = byRel.computeIfAbsent(prev.toString, _ => new RoaringBitmap)
+      }
+      if (!cur.checkedAdd(pos.toInt)) return failed(Twice)
+      n += 1
+      if (n > maxPositions || ((n & 0xfff) == 0 && bytes > maxBytes)) return failed(Overflow)
+    }
+    byRel.values.forEach { b => b.runOptimize(); () }
+    if (bytes > maxBytes) failed(Overflow)
+    else new DvMarksPart(byRel.asScala.toSeq, Built)
+  }
 }
 
 /** Row-membership test against [[DvMarks]]. The rel is derived only

@@ -3,9 +3,12 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-import graft.expr.{DvExpressions, DvMarks}
+import graft.expr.{DvExpressions, DvMarks, DvMarksPart}
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.spark.internal.Logging
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options,
   Path => HPath}
 
@@ -44,10 +47,11 @@ import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options,
   *
   * Scale shape: manifests are O(files) JSON lines — KBs for thousands
   * of files; ALL data movement is distributed Spark writes/reads; the
-  * driver only lists/renames. [[compact]] rewrites the CURRENT file set
-  * into size-targeted files and commits the result as a new version
-  * with identical content — history stays readable, small files stop
-  * compounding. [[vacuum]] drops data and DV files unreferenced by the
+  * driver lists/renames, and holds deletion-vector marks as bitmaps
+  * only below `graft.dv.broadcastBytes`. [[compact]] rewrites the
+  * CURRENT file set into size-targeted files and commits the result as
+  * a new version with identical content — history stays readable,
+  * small files stop compounding. [[vacuum]] drops data and DV files unreferenced by the
   * retained manifests. Append granularity is file-level; updates ride
   * a CDC merge ([[graft.operators.Diff.applyChanges]]) into an
   * `overwrite` commit — copy-on-write semantics — or, zero-rewrite,
@@ -58,13 +62,15 @@ import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options,
   * the version's shards are decoded once on the driver into per-file
   * row-index bitmaps (cached), and one codegen'd predicate over
   * `_metadata.file_path`/`row_index` tests each row against them — no
-  * join, no job. A backlog past `graft.dv.broadcastBytes` degrades to a
-  * shuffled anti-join, and [[optimize]]/[[compact]] purge the marks
-  * physically. Skipping sidecars (range stats, bloom) remain sound
-  * under DVs; exact metadata faces (counts/sums/moments/NDV) refuse
-  * loudly until the purge.
+  * join, no job. The writes build the same bitmaps in one mark job,
+  * stage the shard from them and leave them in that cache. A backlog
+  * past `graft.dv.broadcastBytes` degrades to a shuffled anti-join (and
+  * a write past it to distributed staging), and [[optimize]]/[[compact]]
+  * purge the marks physically. Skipping sidecars (range stats, bloom)
+  * remain sound under DVs; exact metadata faces
+  * (counts/sums/moments/NDV) refuse loudly until the purge.
   */
-object VersionedTable {
+object VersionedTable extends Logging {
 
   // ---- Hadoop FS plumbing (driver-side, O(metadata) only) ----
 
@@ -315,17 +321,25 @@ object VersionedTable {
       if (hit != null) hit
       else {
         val v = load
-        if (weigh(v) <= maxWeight) synchronized {
-          Option(map.put(k, v)).foreach(old => weight -= weigh(old))
-          weight += weigh(v)
-          val it = map.values.iterator
-          while (map.size > maxEntries || weight > maxWeight) {
-            weight -= weigh(it.next()); it.remove()
-          }
-        }
+        put(k, v)
         v
       }
     }
+
+    /** Keep `v` as the value of `k`, counting neither a hit nor a miss:
+      * a writer that already holds what a load would give. */
+    def put(k: K, v: V): Unit =
+      if (weigh(v) <= maxWeight) synchronized {
+        Option(map.put(k, v)).foreach(old => weight -= weigh(old))
+        weight += weigh(v)
+        val it = map.values.iterator
+        while (map.size > maxEntries || weight > maxWeight) {
+          weight -= weigh(it.next()); it.remove()
+        }
+      }
+
+    /** The kept value of `k`, counting neither a hit nor a miss. */
+    def peek(k: K): Option[V] = synchronized { Option(map.get(k)) }
 
     def clear(): Unit = synchronized { map.clear(); weight = 0L }
 
@@ -1117,7 +1131,7 @@ object VersionedTable {
     * mtime); the driver holds what a broadcast join collected anyway. */
   private def marksOf(spark: SparkSession, dvFiles: Seq[String]): Option[DvMarks] = {
     val sts = dvFiles.map { f => val p = new HPath(f); fsOf(p).getFileStatus(p) }
-    if (sts.map(_.getLen).sum > confLong(spark, "graft.dv.broadcastBytes", 64L * 1024 * 1024))
+    if (sts.map(_.getLen).sum > dvBudget(spark))
       None
     else try {
       val shards = sts.map(st => dvShardCache(
@@ -1180,16 +1194,30 @@ object VersionedTable {
     "dvMarks", 256, maxWeight = 128L * 1024 * 1024,
     weigh = _.fold(1L)(_.sizeInBytes))
 
-  /** The `/data/`-anchored rel of an absolute data-file path — the SAME
-    * derivation [[lineage]] performs on `_metadata.file_path`, so DV
-    * `file` keys and restriction lists agree even for [[cloneTable]]
+  /** A DV shard's marks as the decode cache holds them (None when it
+    * holds none), and as a fresh decode of the file reads them. */
+  private[graft] def dvShardMarks(spark: SparkSession,
+      dvFile: String): (Option[DvMarks], Option[DvMarks]) = {
+    val p = new HPath(dvFile)
+    val st = fsOf(p).getFileStatus(p)
+    (dvShardCache.peek((st.getPath.toString, st.getLen, st.getModificationTime)).flatten,
+      decodeDvShard(spark, st))
+  }
+
+  /** The lineage rel of a data-file path as [[filesAt]] gives it — the
+    * DV `file` key form: the SAME byte rule [[lineage]] applies to the
+    * scan's `_metadata.file_path`, over the same percent-encoded URI
+    * string (a partition value "a b" is `p=a%20b` in both), so DV keys
+    * and restriction lists agree on any path, and for [[cloneTable]]
     * borrows (whose [[relOf]] form is absolute, but whose lineage rel
     * is still `data/...` under the SOURCE's root). */
-  private def lineageRel(abs: String): String = {
-    val p = new HPath(abs).toUri.getPath
-    val i = p.lastIndexOf("/data/")
-    if (i >= 0) p.substring(i + 1) else p
-  }
+  private def lineageRel(abs: String): String =
+    DvExpressions.lineageRel(UTF8String.fromString(new HPath(abs).toUri.toString)).toString
+
+  /** Version `v`'s data files by lineage rel, as manifest rels
+    * ([[relOf]], the sidecar key form). */
+  private def relsByLineage(path: String, v: Long): Map[String, String] =
+    filesAt(path, v).map(a => lineageRel(a) -> relOf(path, a)).toMap
 
   /** Apply version `v`'s deletion vectors to a scan of (a subset of)
     * its files (`files`: the ABSOLUTE paths the caller pruned to, the
@@ -1202,8 +1230,7 @@ object VersionedTable {
       withLineage = false)
 
   /** Stage a (file, pos) frame as immutable DV shards under `dv/`;
-    * returns relative paths. Distributed write — deleted-row positions
-    * never collect to the driver. */
+    * returns relative paths. */
   private def stageDv(dvDf: DataFrame, path: String): Seq[String] = {
     val commitId = java.util.UUID.randomUUID().toString.take(8)
     val tmp = new HPath(rootPath(path), s".staging-dv-$commitId")
@@ -1223,8 +1250,80 @@ object VersionedTable {
     rel
   }
 
+  /** Positions per DV shard a write stages. */
+  private val ShardPositions = 4000000L
+
+  /** The DV bytes the driver handles as decoded bitmaps: shards a read
+    * decodes ([[marksOf]]), and the marks a write collects
+    * ([[collectMarks]]); past it, both take the distributed path. */
+  private def dvBudget(spark: SparkSession): Long =
+    confLong(spark, "graft.dv.broadcastBytes", 64L * 1024 * 1024)
+
+  /** What a keyed write's mark job ([[collectMarks]]) found. */
+  private sealed trait MarkJob
+  /** The marks, and the task parts that built them in task order. */
+  private final case class Collected(parts: Seq[DvMarksPart], marks: DvMarks)
+    extends MarkJob
+  /** Past the byte budget or one shard's positions, or a position that
+    * needs more than 32 bits: the distributed path's regime. */
+  private case object TooLarge extends MarkJob
+  /** A row came twice (an upsert's matched key has several source rows). */
+  private case object MarkedTwice extends MarkJob
+
+  /** The `(file, pos)` rows of `marked` as per-rel bitmaps, in ONE job:
+    * each task builds the bitmaps of its own rows and ships them, or
+    * reports going past the budget ([[dvBudget]] bytes, one shard's
+    * positions) or a row it saw twice; the driver ORs the parts and
+    * checks that no two parts mark the same row. With the budget at 0
+    * no job runs. */
+  private def collectMarks(spark: SparkSession, marked: DataFrame): MarkJob = {
+    val maxBytes = dvBudget(spark)
+    if (maxBytes <= 0) return TooLarge
+    val maxPositions = ShardPositions
+    val qe = marked.queryExecution
+    val parts = org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(
+        qe, Some("collect DV marks")) {
+      qe.toRdd.mapPartitions(rows =>
+        Iterator(DvMarksPart.build(rows, maxPositions, maxBytes))).collect()
+    }.toSeq
+    if (parts.exists(_.status == DvMarksPart.Twice)) MarkedTwice
+    else if (parts.exists(_.status == DvMarksPart.Overflow)) TooLarge
+    else DvMarks.merge(parts) match {
+      case None => MarkedTwice
+      case Some(m) if m.sizeInBytes > maxBytes || m.cardinality > maxPositions => TooLarge
+      case Some(m) => Collected(parts, m)
+    }
+  }
+
+  /** Stage collected marks as one DV shard, written by Spark's parquet
+    * writer with the rows in the order the distributed path's
+    * `coalesce(1)` writes them (task order, then scan order) — the same
+    * bytes — and seed the decode cache with the marks under the new
+    * shard's (path, length, mtime), so the next read decodes nothing.
+    * The rows are expanded from the bitmaps inside the write's one task.
+    * Nil when nothing is marked. */
+  private def stageMarks(spark: SparkSession, path: String, schema: StructType,
+      c: Collected): Seq[String] =
+    if (c.marks.cardinality == 0) Nil
+    else {
+      import scala.jdk.CollectionConverters._
+      val ordered = c.parts.flatMap(_.marks)
+      val rows = spark.sparkContext.parallelize(Seq(ordered), 1).flatMap(_.iterator.flatMap {
+        case (rel, b) => b.iterator.asScala.map(p => Row(rel, Integer.toUnsignedLong(p)))
+      })
+      val rels = stageDv(spark.createDataFrame(rows, schema), path)
+      rels.foreach { rel =>
+        val p = new HPath(rootPath(path), rel)
+        val st = fsOf(p).getFileStatus(p)
+        dvShardCache.put((st.getPath.toString, st.getLen, st.getModificationTime), Some(c.marks))
+      }
+      rels
+    }
+
   /** Stage the marked (file, pos) rows as DV shards sized ~4M positions
-    * each; Nil when nothing matched (a no-op delete publishes no shard). */
+    * each, distributed: the regime past [[collectMarks]]' budget, where
+    * the positions never collect to the driver. Nil when nothing
+    * matched (a no-op delete publishes no shard). */
   private def stageDvRows(marked: DataFrame, path: String): Seq[String] = {
     import org.apache.spark.sql.functions.col
     val m = marked.persist()
@@ -1232,7 +1331,7 @@ object VersionedTable {
       val n = m.count()
       if (n == 0) Nil
       else {
-        val parts = math.max(1, math.min(200, ((n - 1) / 4000000L).toInt + 1))
+        val parts = math.max(1, math.min(200, ((n - 1) / ShardPositions).toInt + 1))
         // single-shard staging (the overwhelmingly common delete size)
         // needs no range partitioning: coalesce is a narrow read of the
         // persisted marks — repartitionByRange here cost one extra
@@ -1261,7 +1360,9 @@ object VersionedTable {
     * marked rows in their scan ([[liveRows]]); [[optimize]]/[[compact]]
     * purge physically, after which metadata sidecar faces work again.
     * DVs accumulate across delete commits; time travel to a pre-delete
-    * version still sees every row. */
+    * version still sees every row. The marks are collected as bitmaps
+    * in one job ([[collectMarks]]) and staged from them, or past the
+    * budget staged distributed ([[stageDvRows]]). */
   def deleteWhere(spark: SparkSession, path: String,
       pred: org.apache.spark.sql.Column): Long =
     deleteWhere(spark, path, pred, Nil)
@@ -1317,7 +1418,10 @@ object VersionedTable {
           Some(candidates.map(lineageRel)), withLineage = true)
         val marked = live.where(pred)
           .select(col("__vt_file").as("file"), col("__vt_pos").as("pos"))
-        stageDvRows(marked, path)
+        collectMarks(spark, marked) match {
+          case c: Collected => stageMarks(spark, path, marked.schema, c)
+          case _ => stageDvRows(marked, path)
+        }
       }
     // nothing matched: publishing a 'delete-dv' version would carry no
     // change yet poison append-only streaming consumers — skip it
@@ -1375,57 +1479,85 @@ object VersionedTable {
       live.schema.filterNot(f => f.name == "__vt_file" || f.name == "__vt_pos"))
     val normalized = source.select(tableSchema.map(f =>
       col(f.name).cast(f.dataType).as(f.name)): _*)
-    // the semi-join build side need not be distinct (left_semi is
-    // duplicate-insensitive, and the bloom sketch is a set) — the
-    // distinct only added an exchange in front of both. (An empty-target
-    // fast path was prototyped and dropped: a table always carries >= 1
-    // data file — readVersion derives the schema from parquet footers —
-    // so `files.isEmpty` can never fire.)
+    // (An empty-target fast path was prototyped and dropped: a table
+    // always carries >= 1 data file — readVersion derives the schema
+    // from parquet footers — so `files.isEmpty` can never fire.)
     val srcKeys = normalized.select(keyCols.map(col): _*)
-    // ONE source-sized job both prices the bloom sketch (distinct-key
-    // count) and detects duplicate source keys for the MERGE
-    // multi-match rule below.
-    val (nSrc, nDupKeys) = {
-      import org.apache.spark.sql.functions.{count, lit, when}
-      val r = normalized.groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("__vt_cnt"))
-        .agg(count(lit(1)), count(when(col("__vt_cnt") > 1, 1))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-    // bloom-prefilter the (table-sized) mark scan with a sketch of the
-    // (churn-sized) source keys, then verify with the semi join — the
-    // [[graft.operators.Joins.bloomJoin]] operator, degrading to the
-    // plain semi join when the source is too large to sketch.
-    val liveMatched =
-      if (nSrc == 0 || nSrc > 100000000L)
-        live.join(srcKeys, keyCols, "left_semi")
-      else graft.operators.Joins.bloomJoin(live, srcKeys, keyCols, nSrc,
-        how = "left_semi")
     // The reference MERGE multi-match rule, faithfully: duplicate
     // NOT-matched keys all INSERT (Delta inserts both); a key with
     // multiple source rows that MATCHES a live target row would replace
-    // one row with several — Delta errors there, and so do we. The
-    // check runs only in the rare duplicate-key case and costs one
-    // broadcast semi-join of the churn-sized dup-key set against the
-    // matched rows.
-    if (nDupKeys > 0) {
-      import org.apache.spark.sql.functions.{broadcast, count, lit}
-      val dupKeys = normalized.groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("__vt_cnt"))
-        .where(col("__vt_cnt") > 1).select(keyCols.map(col): _*)
-      require(
-        liveMatched.join(broadcast(dupKeys), keyCols, "left_semi").isEmpty,
-        s"VersionedTable.upsert: a target row is matched by multiple " +
-          s"source rows (keys ${keyCols.mkString(",")}, $nDupKeys " +
-          "duplicated key(s)) — MERGE requires one source row per " +
-          "matched key; aggregate or dedupe the source first")
-    }
-    val marked = liveMatched
-      .select(col("__vt_file").as("file"), col("__vt_pos").as("pos"))
-    val newShards = stageDvRows(marked, path)
+    // one row with several — Delta errors there, and so do we, before
+    // anything is staged.
+    //
+    // A source whose keys the planner broadcasts needs no pre-pass: an
+    // INNER join of the live rows with the keys emits a target row once
+    // per matching source row, so the mark job ([[collectMarks]]) sees a
+    // row twice exactly when the rule is broken, and the duplicate keys
+    // are counted only then, for the message. A bloom prefilter could
+    // not save a shuffle the broadcast already avoids. Past the mark
+    // budget, and for a source above the broadcast size, the marks are
+    // staged distributed ([[upsertMarksDistributed]]).
+    val newShards =
+      if (!broadcastSized(spark, srcKeys)) upsertMarksDistributed(live, normalized, keyCols, path)
+      else {
+        val marked = live.join(srcKeys, keyCols)
+          .select(col("__vt_file").as("file"), col("__vt_pos").as("pos"))
+        collectMarks(spark, marked) match {
+          case c: Collected => stageMarks(spark, path, marked.schema, c)
+          case MarkedTwice => throw multiMatch(keyCols, dupKeys(normalized, keyCols).count())
+          case TooLarge => upsertMarksDistributed(live, normalized, keyCols, path)
+        }
+      }
     val newFiles = stage(normalized, path)
     (files.map(relOf(path, _)) ++ newFiles,
       oldDv.map(relOf(path, _)) ++ newShards)
+  }
+
+  /** Whether the planner broadcasts `df` as a join's build side: its
+    * plan statistics within `spark.sql.autoBroadcastJoinThreshold`. */
+  private def broadcastSized(spark: SparkSession, df: DataFrame): Boolean = {
+    val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
+    limit > 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= limit
+  }
+
+  /** The source's keys that occur in more than one row. */
+  private def dupKeys(source: DataFrame, keyCols: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.functions.{col, count, lit}
+    source.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("__vt_cnt"))
+      .where(col("__vt_cnt") > 1).select(keyCols.map(col): _*)
+  }
+
+  private def multiMatch(keyCols: Seq[String], nDupKeys: Long) =
+    new IllegalArgumentException(
+      s"VersionedTable.upsert: a target row is matched by multiple " +
+        s"source rows (keys ${keyCols.mkString(",")}, $nDupKeys " +
+        "duplicated key(s)) — MERGE requires one source row per " +
+        "matched key; aggregate or dedupe the source first")
+
+  /** An upsert's marks, staged distributed ([[stageDvRows]]): the live
+    * rows whose key is in `source`, found by a semi join (duplicate
+    * source keys do not repeat a row) behind a bloom prefilter of the
+    * (table-sized) mark scan with a sketch of the (churn-sized) source
+    * keys — the [[graft.operators.Joins.bloomJoin]] operator, degrading
+    * to the plain semi join when the source is too large to sketch. One
+    * source-sized job prices the sketch and counts duplicate keys; only
+    * when some exist does a broadcast semi join of them against the
+    * matched rows check the multi-match rule. */
+  private def upsertMarksDistributed(live: DataFrame, source: DataFrame,
+      keyCols: Seq[String], path: String): Seq[String] = {
+    import org.apache.spark.sql.functions.{broadcast, col, count, lit, when}
+    val srcKeys = source.select(keyCols.map(col): _*)
+    val r = source.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("__vt_cnt"))
+      .agg(count(lit(1)), count(when(col("__vt_cnt") > 1, 1))).head()
+    val (nSrc, nDupKeys) = (r.getLong(0), r.getLong(1))
+    val liveMatched =
+      if (nSrc == 0 || nSrc > 100000000L) live.join(srcKeys, keyCols, "left_semi")
+      else graft.operators.Joins.bloomJoin(live, srcKeys, keyCols, nSrc, how = "left_semi")
+    if (nDupKeys > 0 &&
+        !liveMatched.join(broadcast(dupKeys(source, keyCols)), keyCols, "left_semi").isEmpty)
+      throw multiMatch(keyCols, nDupKeys)
+    stageDvRows(liveMatched.select(col("__vt_file").as("file"), col("__vt_pos").as("pos")),
+      path)
   }
 
   /** EXACTLY-ONCE streaming MERGE sink — the foreachBatch CDC-apply
@@ -1478,10 +1610,11 @@ object VersionedTable {
     * ([[commitStreamBatch]] / [[upsertStreamBatch]]): run
     * [[autoMaintain]] after every `maintainEvery`-th successful batch,
     * or immediately once the table's DV-shard count passes
-    * `maxDvShards` (one extra manifest read per batch). Failures are
-    * logged and swallowed — the data commit already landed, and the
-    * next trigger retries — so a transient maintenance hiccup can't
-    * kill the stream. */
+    * `maxDvShards` (one extra manifest read per batch). Non-fatal
+    * failures are logged and swallowed — the data commit already
+    * landed, and the next trigger retries — so a transient maintenance
+    * hiccup can't kill the stream; fatal errors and interrupts
+    * propagate. */
   private def streamMaintain(spark: SparkSession, path: String,
       streamId: String, batchId: Long, v: Long, maintainEvery: Int,
       maxDvShards: Int, targetBytes: Long): Unit = {
@@ -1491,14 +1624,12 @@ object VersionedTable {
     if (due) try {
       val acts = autoMaintain(spark, path,
         targetBytes = targetBytes, maxDvShards = maxDvShards)
-      if (acts.nonEmpty) System.err.println(
-        s"[VersionedTable] stream $streamId self-maintained $path " +
-          s"after batch $batchId: ${acts.mkString(", ")}")
-    } catch { case e: Throwable =>
-      System.err.println(
-        s"[VersionedTable] stream $streamId: maintenance after batch " +
-          s"$batchId failed (data commit is safe; will retry next " +
-          s"trigger): $e")
+      if (acts.nonEmpty) logInfo(
+        s"stream $streamId self-maintained $path after batch $batchId: " +
+          acts.mkString(", "))
+    } catch { case scala.util.control.NonFatal(e) =>
+      logWarning(s"stream $streamId: maintenance after batch $batchId " +
+        "failed (data commit is safe; will retry next trigger)", e)
     }
   }
 
@@ -1711,7 +1842,7 @@ object VersionedTable {
           val values =
             if (purge) partitionsAt(path, v, pc)
             else filesAt(path, v).filter(a => len(a) < targetBytes / 2)
-              .map(a => new HPath(a).getParent.getName.stripPrefix(pre))
+              .map(a => partitionValue(new HPath(a).getParent.getName, pre))
               .distinct.sorted
           val v1 = optimizePartitioned(spark, path, pc, values, targetBytes,
             sortCol = statsCol.getOrElse(pc))
@@ -2172,21 +2303,26 @@ object VersionedTable {
   }
 
   /** Partition values present in a version — decoded from the manifest
-    * paths alone, no directory listing or file open. (Values appear as
-    * Spark's partition-path encoding; keep partition values simple.) */
+    * paths alone, no directory listing or file open. Values are as
+    * written (Spark's partition-path escaping undone). */
   def partitionsAt(path: String, v: Long, partCol: String): Seq[String] = {
     val pre = partCol + "="
     filesAt(path, v).flatMap { abs =>
       val parent = new HPath(abs).getParent.getName
-      if (parent.startsWith(pre)) Some(parent.stripPrefix(pre)) else None
+      if (parent.startsWith(pre)) Some(partitionValue(parent, pre)) else None
     }.distinct.sorted
   }
+
+  /** The value of a `k=v` partition directory name that starts with
+    * `pre` (`k=`), with Spark's partition-path escaping undone. */
+  private def partitionValue(dirName: String, pre: String): String =
+    ExternalCatalogUtils.unescapePathName(dirName.stripPrefix(pre))
 
   /** The version's files in the named partitions — exact pruning by
     * path arithmetic on the manifest. */
   def filesForPartitions(path: String, v: Long, partCol: String,
       values: Seq[String]): Seq[String] = {
-    val want = values.map(x => s"$partCol=$x").toSet
+    val want = values.map(x => s"$partCol=${ExternalCatalogUtils.escapePathName(x)}").toSet
     filesAt(path, v).filter(abs =>
       want.contains(new HPath(abs).getParent.getName))
   }
@@ -2323,16 +2459,18 @@ object VersionedTable {
     }
   }
 
-    /** The partition VALUE of a manifest rel (`data/<partCol>=v/...`) —
-    * the one `k=v` path-segment parser every per-partition metadata
-    * face shares; `face` names the caller in the refusal. */
+  /** The partition VALUE of a manifest rel (`data/<partCol>=v/...`),
+    * Spark's path escaping undone — the one `k=v` path-segment parser
+    * every per-partition metadata face shares (a DV key, a lineage rel,
+    * maps to its manifest rel first: [[relsByLineage]]); `face` names
+    * the caller in the refusal. */
   private def partitionKeyOf(rel: String, partCol: String,
       face: String): String = {
     val pre = partCol + "="
     val parent = new HPath(rel).getParent.getName
     require(parent.startsWith(pre),
       s"VersionedTable.$face: $rel is not under $pre<value>/")
-    parent.stripPrefix(pre)
+    partitionValue(parent, pre)
   }
 
 /** Per-partition exact LIVE row counts under deletion vectors — the
@@ -2365,11 +2503,11 @@ object VersionedTable {
       if (dvs.isEmpty) Map.empty
       else {
         import org.apache.spark.sql.functions.col
-        val liveRels = filesAt(path, v).map(lineageRel)
-        restrictToRels(spark, scanDv(spark, dvs), "file", liveRels)
+        val byLineage = relsByLineage(path, v)
+        restrictToRels(spark, scanDv(spark, dvs), "file", byLineage.keys.toSeq)
           .groupBy(col("file")).count()
           .collect() // O(files) rows: per-FILE mark totals, not marks
-          .groupBy(r => partOf(r.getString(0)))
+          .groupBy(r => partOf(byLineage(r.getString(0))))
           .map { case (k, rs) => k -> rs.map(_.getLong(1)).sum }
       }
     val liveByPart = physical
@@ -2473,7 +2611,7 @@ object VersionedTable {
     val absByRel = files.map(a => lineageRel(a) -> a).toMap
     val dvBytes = dvs.map { f =>
       val p = new HPath(f); fsOf(p).getFileStatus(p).getLen }.sum
-    val limit = confLong(spark, "graft.dv.broadcastBytes", 64L * 1024 * 1024)
+    val limit = dvBudget(spark)
     // second shard scan restricted to the rels we just COLLECTED (not
     // the manifest's full list): the pushdown narrows to exactly the
     // marked files the value scan reads
@@ -2558,8 +2696,9 @@ object VersionedTable {
       partitionKeyOf(rel, partCol, "partitionSumsLive")
     val physical = rels.groupBy(partOf)
       .map { case (k, fs) => k -> fs.map(sums).sum }
+    val byLineage = relsByLineage(path, v)
     val deleted = deletedValueSums(spark, path, v, col)
-      .groupBy { case (rel, _) => partOf(rel) }
+      .groupBy { case (rel, _) => partOf(byLineage(rel)) }
       .map { case (k, xs) => k -> xs.map(_._2).sum }
     val liveByPart = physical
       .map { case (k, s) => k -> (s - deleted.getOrElse(k, 0L)) }
@@ -2805,8 +2944,9 @@ object VersionedTable {
       partitionKeyOf(rel, partCol, "partitionMomentsLive")
     val physical = rels.groupBy(partOf)
       .map { case (k, fs) => k -> mergeMoments(fs.map(m)) }
+    val byLineage = relsByLineage(path, v)
     val del = deletedValueMoments(spark, path, v, col)
-      .groupBy { case (rel, _) => partOf(rel) }
+      .groupBy { case (rel, _) => partOf(byLineage(rel)) }
     val liveByPart = physical.map { case (k, (n, _, _, ss)) =>
       val dels = del.getOrElse(k, Nil).map(_._2)
       val dn = dels.map(_._1).sum

@@ -196,4 +196,160 @@ class DvScanSpec extends SparkSpec {
     val manifest = VersionedTable.cacheStats().head
     assert(manifest.hits > 0 && manifest.misses > 0)
   }
+  /** What a keyed write leaves behind, path-independently: each new
+    * shard's rows as (manifest file index, pos), in file order (with
+    * the same footer, equal rows in equal order are equal bytes, up to
+    * the commit ids in the file names). */
+  private def newShards(path: String, v: Long): Seq[Seq[(Int, Long)]] = {
+    val files = VersionedTable.filesAt(path, v)
+    (VersionedTable.dvsAt(path, v).toSet -- VersionedTable.dvsAt(path, v - 1)).toSeq.sorted
+      .map { shard =>
+        val marks = spark.read.parquet(shard).as[(String, Long)].collect().map {
+          case (rel, pos) =>
+            val i = files.indexWhere(_.endsWith("/" + rel))
+            assert(i >= 0, s"mark on $rel, which version $v does not list")
+            (i, pos)
+        }.toSeq
+        assert(marks.size === marks.distinct.size, s"$shard marks a row twice")
+        marks
+      }
+  }
+
+  /** Six rounds of delete, upsert and autoMaintain on a flat table;
+    * per round, the writes' new shards, the live rows and count, and
+    * the maintenance actions. */
+  private def keyedRounds(path: String) = {
+    VersionedTable.create(spark.range(0, 600, 1, 4)
+      .select($"id", ($"id" % 10).as("k"), ($"id" * 3).as("x")), path)
+    (0 until 6).map { r =>
+      val vd = VersionedTable.deleteWhere(spark, path,
+        $"id".between(r * 90, r * 90 + 40) || $"k" === r)
+      val vu = VersionedTable.upsert(spark, path, spark.range(r * 90 + 30, r * 90 + 60)
+        .select($"id", ($"id" % 10).as("k"), (-$"id" - r).as("x")), Seq("id"))
+      val acts = VersionedTable.autoMaintain(spark, path, targetBytes = 4096, maxDvShards = 3)
+      val v = VersionedTable.latestVersion(path).get
+      VersionedTable.writeCounts(spark, path, v)
+      (newShards(path, vd), newShards(path, vu), rows(VersionedTable.read(spark, path)),
+        VersionedTable.countAtLive(spark, path, v), acts)
+    }
+  }
+
+  test("the mark job writes the distributed path's shards; rows, counts and maintenance agree") {
+    val fast = fresh()
+    val shuffled = fresh()
+    val a = keyedRounds(fast)
+    val b = withConfs("graft.dv.broadcastBytes" -> "0")(keyedRounds(shuffled))
+    a.zip(b).zipWithIndex.foreach { case ((x, y), r) =>
+      assert(x._1 === y._1, s"round $r: delete shard rows")
+      assert(x._2 === y._2, s"round $r: upsert shard rows")
+      assert(x._3 === y._3, s"round $r: live rows")
+      assert(x._4 === y._4, s"round $r: countAtLive")
+      assert(x._4 === Some(x._3.size.toLong), s"round $r: countAtLive vs the read")
+      assert(x._5 === y._5, s"round $r: autoMaintain actions")
+    }
+    assert(a.forall(r => r._1.size == 1 && r._2.size == 1), "one shard per write")
+    assert(a.map(_._5).exists(_.nonEmpty), "maintenance never ran")
+  }
+
+  test("a keyed write seeds the decode cache with its shard's marks; the next read decodes nothing") {
+    val path = fresh()
+    VersionedTable.create(table(300).repartition(3), path)
+    def dv() = VersionedTable.cacheStats().find(_.cache == "dvMarks").get
+    def checkSeeded(v: Long): Unit = {
+      val shard = (VersionedTable.dvsAt(path, v).toSet -- VersionedTable.dvsAt(path, v - 1)).head
+      val (cached, decoded) = VersionedTable.dvShardMarks(spark, shard)
+      assert(cached.isDefined && decoded.isDefined, s"v$v: cached $cached decoded $decoded")
+      assert(cached.get.rels === decoded.get.rels)
+      cached.get.rels.foreach(r => assert(cached.get.of(r) === decoded.get.of(r), r))
+      val before = dv()
+      assert(VersionedTable.read(spark, path).count() > 0)
+      val after = dv()
+      assert(after.misses === before.misses, s"v$v: the read after the write decoded a shard")
+      assert(after.hits === before.hits + VersionedTable.dvsAt(path, v).size)
+    }
+    checkSeeded(VersionedTable.deleteWhere(spark, path, $"id" % 4 === 1))
+    checkSeeded(VersionedTable.upsert(spark, path,
+      spark.range(0, 40).select($"id", lit(1L).as("k"), lit(2L).as("x")), Seq("id")))
+    checkSeeded(VersionedTable.deleteWhere(spark, path, $"id".between(100, 180)))
+  }
+
+  test("a mark-job shard has the parquet schema and Spark row metadata of a coalesce(1) write") {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    def footer(f: String) = {
+      val rd = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f), spark.sessionState.newHadoopConf()))
+      try {
+        val m = rd.getFooter.getFileMetaData
+        (m.getSchema, m.getKeyValueMetaData)
+      } finally rd.close()
+    }
+    def shardOf(p: String, conf: String) = withConfs("graft.dv.broadcastBytes" -> conf) {
+      VersionedTable.create(table(200).repartition(2), p)
+      VersionedTable.dvsAt(p, VersionedTable.deleteWhere(spark, p, $"id" % 3 === 0)).head
+    }
+    val fast = shardOf(fresh(), (64L << 20).toString)
+    val distributed = shardOf(fresh(), "0")
+    assert(footer(fast) === footer(distributed))
+    assert(footer(fast)._2.containsKey("org.apache.spark.sql.parquet.row.metadata"))
+    assert(spark.read.parquet(fast).count() === spark.read.parquet(distributed).count())
+  }
+
+  test("upsert MERGE multi-match rule: same error on both paths, nothing published") {
+    val msgs = Seq((64L << 20).toString, "0").map { conf =>
+      withConfs("graft.dv.broadcastBytes" -> conf) {
+        val path = fresh()
+        VersionedTable.create(spark.range(10).select($"id", ($"id" * 2).as("x")), path)
+        val e = intercept[IllegalArgumentException](VersionedTable.upsert(spark, path,
+          spark.range(3).select(($"id" % 2).as("id"), $"id".as("x")), Seq("id")))
+        assert(VersionedTable.versions(path) === Seq(0L), conf)
+        // a matched key whose source rows sit in different tasks: the
+        // two-row target is the broadcast side, the source streams
+        val wide = fresh()
+        VersionedTable.create(Seq((0L, 0L), (1L, 1L)).toDF("id", "x"), wide)
+        val e2 = intercept[IllegalArgumentException](VersionedTable.upsert(spark, wide,
+          spark.range(0, 1000, 1, 4).select(($"id" % 500).as("id"), $"id".as("x")), Seq("id")))
+        assert(e2.getMessage.contains("500 duplicated key(s)"), e2.getMessage)
+        assert(VersionedTable.versions(wide) === Seq(0L), conf)
+        assert(new java.io.File(path, "dv").listFiles() == null ||
+          new java.io.File(path, "dv").listFiles().isEmpty, s"$conf: a shard was staged")
+        // duplicate NOT-matched keys both insert
+        val v = VersionedTable.upsert(spark, path,
+          Seq((100L, 1L), (100L, 2L), (3L, 7L)).toDF("id", "x"), Seq("id"))
+        val after = VersionedTable.readVersion(spark, path, v)
+        assert(after.where($"id" === 100L).count() === 2, conf)
+        assert(after.where($"id" === 3L).select("x").as[Long].collect().toSeq === Seq(7L), conf)
+        assert(after.count() === 12, conf)
+        e.getMessage
+      }
+    }
+    assert(msgs.head.contains("multiple source rows") && msgs.head.contains("1 duplicated key"),
+      msgs.head)
+    assert(msgs.head === msgs.last)
+  }
+
+  test("DV keys agree with the manifest on partition values that need escaping") {
+    val path = fresh()
+    val parts = Seq("a b", "c%d", "é/ü", "plain")
+    VersionedTable.createPartitioned(spark.range(40)
+      .select($"id", element_at(typedLit(parts), ($"id" % 4 + 1).cast("int")).as("p")),
+      path, "p")
+    assert(VersionedTable.partitionsAt(path, 0L, "p") === parts.sorted)
+    val v1 = VersionedTable.deleteWhere(spark, path, $"id" < 10)
+    val v2 = VersionedTable.deleteWhere(spark, path, $"id" < 20)
+    VersionedTable.writeCounts(spark, path, v2)
+    assert(VersionedTable.read(spark, path).count() === 20)
+    assert(VersionedTable.countAtLive(spark, path, v2) === Some(20L))
+    assert(VersionedTable.partitionRowCountsLive(spark, path, v2, "p") ===
+      Some(parts.sorted.map(_ -> 5L)))
+    assert(VersionedTable.changeFeed(spark, path, v1, v2, Seq("id"), Seq("p")).count() === 10)
+    assert(rows(VersionedTable.readWherePartitions(spark, path, v2, "p", Seq("c%d"))) ===
+      rows(VersionedTable.read(spark, path).where($"p" === "c%d")))
+    // coalesceDv keeps the marks: their keys match the manifest's rels
+    val v3 = VersionedTable.coalesceDv(spark, path)
+    assert(v3 === v2 + 1 && VersionedTable.dvsAt(path, v3).nonEmpty)
+    assert(VersionedTable.readVersion(spark, path, v3).count() === 20)
+    VersionedTable.writeSums(spark, path, v3, "id")
+    assert(VersionedTable.sumAtLive(spark, path, v3, "id") === Some((20L until 40L).sum))
+  }
 }

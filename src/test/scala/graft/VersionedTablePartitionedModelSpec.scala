@@ -18,7 +18,11 @@ import org.apache.spark.sql.functions._
 class VersionedTablePartitionedModelSpec extends SparkSpec {
   import spark.implicits._
 
-  private val parts = Vector("a", "b", "c")
+  private val plainParts = Vector("a", "b", "c")
+  /** Values whose partition directories need escaping: a space (URI
+    * escaped, `%20`), a `%` (escaped by Spark's partition writer and
+    * again in the URI), and non-ASCII. */
+  private val escapingParts = Vector("a b", "c%d", "é")
 
   private def fresh() =
     java.nio.file.Files.createTempDirectory("graft_vt_pmodel").toString + "/t"
@@ -36,7 +40,7 @@ class VersionedTablePartitionedModelSpec extends SparkSpec {
   private def expect(rows: Map[Long, (String, Long)]): Seq[(Long, String, Long)] =
     rows.toSeq.map { case (id, (p, v)) => (id, p, v) }.sorted
 
-  private def run(seed: Long, steps: Int): Unit = {
+  private def run(seed: Long, steps: Int, parts: Vector[String] = plainParts): Unit = {
     val rng = new scala.util.Random(seed)
     val path = fresh()
     var nextId = 0L
@@ -188,6 +192,13 @@ class VersionedTablePartitionedModelSpec extends SparkSpec {
   (1 to 6).foreach { s =>
     test(s"randomized partitioned lifecycle vs model (seed $s)") {
       run(seed = s.toLong, steps = 20)
+    }
+  }
+
+  // the same lifecycle on partition values that need escaping
+  (1 to 3).foreach { s =>
+    test(s"randomized partitioned lifecycle vs model, escaping values (seed $s)") {
+      run(seed = 100L + s, steps = 20, parts = escapingParts)
     }
   }
 
