@@ -1,10 +1,12 @@
 package graft
 
-import graft.expr.{CosineSimilarity, DotProduct, PolynomialFingerprint, TokenShingles}
+import graft.expr.{KernelDecl, Mix63}
 import graft.functions.InterpolatedQuantile
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.graftx.Bridge
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** SQL-surface registration of the graft native expressions, so
   * `spark.sql("SELECT graft_cosine(a, b) ...")` works alongside the
@@ -17,80 +19,58 @@ import org.apache.spark.sql.graftx.Bridge
   */
 object GraftFunctions {
 
-  val all: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "graft_dot" -> { args =>
-      require(args.length == 2, "graft_dot(arrayA, arrayB)")
-      DotProduct(args(0), args(1))
-    },
-    "graft_cosine" -> { args =>
-      require(args.length == 2, "graft_cosine(arrayA, arrayB)")
-      CosineSimilarity(args(0), args(1))
-    },
-    "graft_sqdist" -> { args =>
-      require(args.length == 2, "graft_sqdist(arrayA, arrayB)")
-      graft.expr.SquaredDistance(args(0), args(1))
-    },
-    "graft_fingerprint" -> { args =>
-      require(args.length == 1, "graft_fingerprint(text)")
-      PolynomialFingerprint(args(0))
-    },
-    "graft_mix63" -> { args =>
-      require(args.length == 1, "graft_mix63(bigint)")
-      graft.expr.Mix63(args(0))
-    },
-    "graft_nfc" -> { args =>
-      require(args.length == 1, "graft_nfc(text)")
-      graft.expr.NfcNormalize(args(0))
-    },
-    "graft_image_meta" -> { args =>
-      require(args.length == 1, "graft_image_meta(binary)")
-      graft.expr.ImageMeta(args(0))
-    },
-    "graft_audio_meta" -> { args =>
-      require(args.length == 1, "graft_audio_meta(binary)")
-      graft.expr.AudioMeta(args(0))
-    },
-    "graft_video_meta" -> { args =>
-      require(args.length == 1, "graft_video_meta(binary)")
-      graft.expr.VideoMeta(args(0))
-    },
-    "graft_video_frame_ranges" -> { args =>
-      require(args.length == 3, "graft_video_frame_ranges(binary, k, snap)")
-      val k = args(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v, _) =>
-          v.toString.toInt
-        case other => throw new IllegalArgumentException(
-          s"graft_video_frame_ranges: k must be a literal, got $other")
-      }
-      val snap = args(2) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v, _) =>
-          v.toString.toBoolean
-        case other => throw new IllegalArgumentException(
-          s"graft_video_frame_ranges: snap must be a literal, got $other")
-      }
-      graft.expr.VideoFrameRanges(args(0), k, snap)
-    },
-    "graft_shingles" -> { args =>
-      require(args.length == 2, "graft_shingles(tokens, n)")
-      val n = args(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v, _) =>
-          v.toString.toInt
-        case other => throw new IllegalArgumentException(
-          s"graft_shingles: n must be a literal, got $other")
-      }
-      TokenShingles(args(0), n)
-    },
+  /** The kernels SQL sees, by their declared names. */
+  private val kernels: Seq[KernelDecl] = {
+    import graft.expr.BinaryExpressions._
+    import graft.expr.TextExpressions._
+    import graft.expr.VectorExpressions._
+    Seq(DotProduct, CosineSimilarity, SquaredDistance, PolynomialFingerprint, Mix63.Decl,
+      NfcNormalize, ImageMeta, AudioMeta, VideoMeta, VideoFrameRanges, TokenShingles,
+      HttpResponse, HttpGate, RobotsRules, RobotsAllowed, RobotsDirectives)
+  }
+
+  /** A kernel's SQL form: its inputs, then one literal per constant
+    * without a default. */
+  private def fromSql(k: KernelDecl)(args: Seq[Expression]): Expression = {
+    val n = k.inputs.size
+    require(args.length == n + k.sqlConsts.size, k.usage)
+    k.expr(args.take(n),
+      args.drop(n).zip(k.sqlConsts).map { case (e, c) => literalArg(e, c.kind, k.usage) })
+  }
+
+  /** The value of the SQL literal argument `e` as a `kind` (integer,
+    * double, boolean or string); `usage` names the function when `e` is
+    * null, not a literal, or not of that kind — an integer must be
+    * integral and in range. */
+  def literalArg(e: Expression, kind: DataType, usage: String): Any = {
+    def bad = throw new IllegalArgumentException(
+      s"$usage: expected a ${kind.simpleString} literal, got ${e.sql}")
+    val v = e match {
+      case Literal(v, _) if v != null => v
+      case _ => bad
+    }
+    (kind, v) match {
+      case (IntegerType, n @ (_: Int | _: Long | _: Short | _: Byte)) =>
+        val l = n.asInstanceOf[Number].longValue
+        if (l.isValidInt) l.toInt else bad
+      case (DoubleType, n: Number) => n.doubleValue
+      case (DoubleType, d: Decimal) => d.toDouble
+      case (BooleanType, b: Boolean) => b
+      case (StringType, s: UTF8String) => s.toString
+      case _ => bad
+    }
+  }
+
+  val all: Seq[(String, Seq[Expression] => Expression)] =
+    kernels.map(k => k.name -> fromSql(k) _) ++ Seq(
     // (catalyst trees built directly: a Column round-trip through the
     // Bridge leaves Unevaluable column-node wrappers inside a registered
     // function)
     "graft_zvalue" -> { args =>
       import org.apache.spark.sql.catalyst.expressions._
-      require(args.length >= 3, "graft_zvalue(colA, colB, ..., bits)")
-      val bits = args.last match {
-        case Literal(v, _) => v.toString.toInt
-        case other => throw new IllegalArgumentException(
-          s"graft_zvalue: bits must be a literal, got $other")
-      }
+      val usage = "graft_zvalue(colA, colB, ..., bits)"
+      require(args.length >= 3, usage)
+      val bits = literalArg(args.last, IntegerType, usage).asInstanceOf[Int]
       val cols = args.init
       val m = cols.size
       require(bits > 0 && m * bits <= 63, s"$m cols x $bits bits exceeds a long")
@@ -99,7 +79,7 @@ object GraftFunctions {
         b <- 0 until bits
       } yield ShiftLeft(
         BitwiseAnd(
-          ShiftRightUnsigned(Cast(c, org.apache.spark.sql.types.LongType), Literal(b)),
+          ShiftRightUnsigned(Cast(c, LongType), Literal(b)),
           Literal(1L)),
         Literal(b * m + ci))
       terms.reduce[Expression](BitwiseOr(_, _))
@@ -113,45 +93,10 @@ object GraftFunctions {
           RegExpReplace(e, Literal(re), Literal(tok))
         }
     },
-    "graft_http_response" -> { args =>
-      require(args.length == 1, "graft_http_response(binary)")
-      graft.expr.HttpResponse(args(0))
-    },
-    "graft_http_gate" -> { args =>
-      import org.apache.spark.sql.catalyst.expressions.Literal
-      require(args.length == 3, "graft_http_gate(binary, status, ctPrefix)")
-      val status = args(1) match {
-        case Literal(v, _) => v.toString.toInt
-        case other => throw new IllegalArgumentException(
-          s"graft_http_gate: status must be a literal, got $other")
-      }
-      val prefix = args(2) match {
-        case Literal(v, _) => v.toString
-        case other => throw new IllegalArgumentException(
-          s"graft_http_gate: ctPrefix must be a literal, got $other")
-      }
-      graft.expr.HttpGate(args(0), status, prefix)
-    },
-    "graft_robots_rules" -> { args =>
-      require(args.length == 1, "graft_robots_rules(text)")
-      graft.expr.RobotsRules(args(0))
-    },
-    "graft_robots_allowed" -> { args =>
-      require(args.length == 2, "graft_robots_allowed(rules, path)")
-      graft.expr.RobotsAllowed(args(0), args(1))
-    },
-    "graft_robots_directives" -> { args =>
-      require(args.length == 1, "graft_robots_directives(text)")
-      graft.expr.RobotsDirectives(args(0))
-    },
     "graft_quantile" -> { args =>
-      require(args.length == 2, "graft_quantile(col, q)")
-      val q = args(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v, _) =>
-          v.toString.toDouble
-        case other => throw new IllegalArgumentException(
-          s"graft_quantile: q must be a literal, got $other")
-      }
+      val usage = "graft_quantile(col, q)"
+      require(args.length == 2, usage)
+      val q = literalArg(args(1), DoubleType, usage).asInstanceOf[Double]
       InterpolatedQuantile(args(0), q).toAggregateExpression()
     })
 

@@ -2,537 +2,110 @@ package graft.expr
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.graftx.Bridge
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native binary-payload expressions for the multimodal pipeline.
-  *
-  * Image METADATA (container format + pixel dimensions) lives in the first
-  * few hundred bytes of the payload — extracting it must not require a
-  * decode (the container ships no codecs, and at 100 TB a resolution
-  * filter that decodes every image is the wrong plan). `ImageMeta` parses
-  * the four dominant container headers (PNG, JPEG, GIF, BMP) in a tight
-  * byte loop inside whole-stage codegen, so `width >= 256 AND height >=
-  * 256` is a narrow scan-side predicate that prunes payloads BEFORE any
-  * decode stage — the same pushdown story as Multimodal.centerCrop /
-  * sampleFrames.
-  *
-  * Reference scope note: the reference engine has no binary/image surface
-  * at all; this is part of the beyond-reference training-data layer. */
-case class ImageMeta(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("format", StringType, nullable = false),
-    StructField("width", IntegerType, nullable = true),
-    StructField("height", IntegerType, nullable = true)))
-  override def prettyName: String = "graft_image_meta"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects binary, got ${other.simpleString}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    BinaryExpressions.imageMeta(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.expr.BinaryExpressions.imageMeta($s);")
-
-  override protected def withNewChildInternal(newChild: Expression): ImageMeta =
-    copy(child = newChild)
-}
-
-/** Single-parse resolution predicate: `width >= minW AND height >= minH`
-  * with ONE header scan. A composed `meta.width >= w AND meta.height >= h`
-  * predicate re-instantiates the parse per field reference once the
-  * optimizer pushes it into a Filter (FilterExec has no subexpression
-  * elimination — plan-audited in ImageMetaUrlSpec); this keeps the gate a
-  * single byte-loop per row. Null / unparseable payloads are false. */
-case class ImageMinResolution(child: Expression, minW: Int, minH: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_image_min_resolution"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects binary, got ${other.simpleString}")
-    }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    v != null && BinaryExpressions.imageAtLeast(
-      v.asInstanceOf[Array[Byte]], minW, minH)
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val code = childGen.code.toString +
-      s"""
-         |boolean ${ev.value} = !${childGen.isNull} &&
-         |  graft.expr.BinaryExpressions.imageAtLeast(${childGen.value}, $minW, $minH);
-       """.stripMargin
-    ev.copy(
-      code = org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper(
-        new StringContext(code)).code(),
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): ImageMinResolution =
-    copy(child = newChild)
-}
-
-/** Video-container metadata (ISO-BMFF / MP4) from the payload's HEADER
-  * boxes — the video face of [[ImageMeta]]/[[AudioMeta]]: brand, movie
-  * timescale/duration, first video track's pixel dimensions, and the
-  * sample tables that drive frame extraction (stts frame count + delta,
-  * stsz fixed sample size, stco/co64 first chunk offset, mdat payload
-  * size) without touching a single coded frame. At 100 TB the "drop
-  * sub-5s clips, gate on resolution, pick k frames per clip" pipeline
-  * head becomes narrow scan-side arithmetic: the sampler turns these
-  * fields into (pts, byte-range) pairs, so only the sampled frames are
-  * ever ranged-read and decoded. Corrupt box layouts keep the ftyp brand
-  * with null fields (the ingest audit signal); non-BMFF payloads are
-  * ("unknown", null…). */
-case class VideoMeta(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryExpressions.videoMetaType
-  override def prettyName: String = "graft_video_meta"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects binary, got ${other.simpleString}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    BinaryExpressions.videoMeta(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.expr.BinaryExpressions.videoMeta($s);")
-
-  override protected def withNewChildInternal(newChild: Expression): VideoMeta =
-    copy(child = newChild)
-}
-
-/** Sync-sample (keyframe) table from the ISO-BMFF `stss` box, as 0-based
-  * frame indices. A decoder can only START at a sync sample, so a frame
-  * sampler that ignores stss schedules reads it cannot decode; snapping
-  * each sampled index to the greatest keyframe at or before it is the
-  * standard seek semantics. NULL when the payload is not BMFF, the box
-  * layout is corrupt, or stss is absent — absence means every sample is
-  * a sync point (ISO 14496-12 §8.6.2: no stss ⇒ all sync), so callers
-  * treat null as "no snapping needed". */
-case class VideoSyncSamples(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_video_sync_samples"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects binary, got ${other.simpleString}")
-    }
-
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    BinaryExpressions.videoSyncSamples(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"""${ev.value} = graft.expr.BinaryExpressions.videoSyncSamples($s);
-         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): VideoSyncSamples =
-    copy(child = newChild)
-}
-
-/** Single-parse "frame sampler can address this clip" predicate: the
-  * container carries positive stts frame count + delta, a fixed stsz
-  * sample size, a chunk offset and a timescale. [[VideoMeta]] field
-  * predicates would re-instantiate the box walk — and anything feeding
-  * the payload column — once per field when the optimizer pushes the
-  * filter down (FilterExec has no subexpression elimination; measured
-  * 6x synth+walk per row on q_keyframe_sample). Null / unparseable
-  * payloads are false. */
-case class VideoSampleable(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_video_sampleable"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects binary, got ${other.simpleString}")
-    }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    v != null && BinaryExpressions.videoSampleable(v.asInstanceOf[Array[Byte]])
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val code = childGen.code.toString +
-      s"""
-         |boolean ${ev.value} = !${childGen.isNull} &&
-         |  graft.expr.BinaryExpressions.videoSampleable(${childGen.value});
-       """.stripMargin
-    ev.copy(
-      code = org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper(
-        new StringContext(code)).code(),
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): VideoSampleable =
-    copy(child = newChild)
-}
-
-/** FULL sample-table frame addressing as ONE native call: `k` uniformly
-  * sampled frames of an ISO-BMFF payload as (frame_idx, pts_us,
-  * byte_offset, byte_len) structs, honoring the container semantics the
-  * simple column sampler cannot express —
-  *  - stts with MULTIPLE entries: pts is the cumulative delta sum up to
-  *    the sample, in mdhd MEDIA ticks (mvhd fallback);
-  *  - stsc chunk mapping + multi-entry stco/co64: interleaved-A/V files
-  *    address correctly instead of being rejected;
-  *  - stsz with PER-SAMPLE sizes: offsets accumulate real sizes within
-  *    the chunk, lengths are per-frame;
-  *  - optional stss snapping (greatest sync sample ≤ the uniform index).
-  * NULL when the payload's tables can't address a frame (non-BMFF,
-  * corrupt, missing tables) — a sampler must not schedule reads it
-  * can't prove. Row-local, zero shuffle, coded bytes never touched. */
-case class VideoFrameRanges(child: Expression, k: Int, snap: Boolean)
-    extends UnaryExpression {
-  require(k >= 1, s"VideoFrameRanges: k must be >= 1, got $k")
-  override def dataType: DataType = ArrayType(BinaryExpressions.frameRangeType,
-    containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_video_frame_ranges"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects binary, got ${other.simpleString}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    BinaryExpressions.videoFrameRanges(input.asInstanceOf[Array[Byte]], k, snap)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"""${ev.value} = graft.expr.BinaryExpressions.videoFrameRanges($s, $k, $snap);
-         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): VideoFrameRanges =
-    copy(child = newChild)
-}
-
-/** Single-parse video gate: `duration_us >= minUs AND width >= minW AND
-  * height >= minH` with ONE box walk (same rationale as
-  * [[ImageMinResolution]] — FilterExec has no subexpression elimination,
-  * so composed meta-field predicates re-parse per field). Null /
-  * unparseable payloads are false. */
-case class VideoGate(child: Expression, minUs: Long, minW: Int, minH: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_video_gate"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects binary, got ${other.simpleString}")
-    }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    v != null && BinaryExpressions.videoAtLeast(
-      v.asInstanceOf[Array[Byte]], minUs, minW, minH)
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val code = childGen.code.toString +
-      s"""
-         |boolean ${ev.value} = !${childGen.isNull} &&
-         |  graft.expr.BinaryExpressions.videoAtLeast(${childGen.value}, ${minUs}L, $minW, $minH);
-       """.stripMargin
-    ev.copy(
-      code = org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper(
-        new StringContext(code)).code(),
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): VideoGate =
-    copy(child = newChild)
-}
-
-/** Audio-container metadata (RIFF/WAVE) from the payload's HEADER bytes —
-  * the audio face of [[ImageMeta]]: channels / sample rate / bit depth /
-  * frame count / duration without decoding a single sample, so the
-  * "drop clips shorter than N ms, resample-rate gate" every audio
-  * pipeline starts with is a narrow codegen'd scan-side predicate.
-  * Corrupt chunk layouts keep format "wav" with null fields (the ingest
-  * audit signal); non-RIFF payloads are ("unknown", null…). */
-case class AudioMeta(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("format", StringType, nullable = false),
-    StructField("channels", IntegerType, nullable = true),
-    StructField("sample_rate", IntegerType, nullable = true),
-    StructField("bits", IntegerType, nullable = true),
-    StructField("n_frames", LongType, nullable = true),
-    StructField("duration_us", LongType, nullable = true)))
-  override def prettyName: String = "graft_audio_meta"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects binary, got ${other.simpleString}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    BinaryExpressions.audioMeta(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.expr.BinaryExpressions.audioMeta($s);")
-
-  override protected def withNewChildInternal(newChild: Expression): AudioMeta =
-    copy(child = newChild)
-}
-
-/** REAL PCM DECODE — 16-bit WAV sample statistics in exact integer
-  * arithmetic: one codegen'd pass over the data chunk's samples yields
-  * `(n_samples, peak_abs, sum_abs, sum_sq)` — the inputs every audio
-  * quality gate derives from (RMS = sqrt(sum_sq/n), clipping =
-  * peak_abs at full scale, silence = sum_abs ≈ 0). All-integer output
-  * keeps the decode oracle-replayable (no IEEE accumulation to drift).
-  * Null — never a fabricated number — when the payload is not integer
-  * PCM16 WAV or the declared data chunk is truncated/odd-sized.
-  * sum_sq is exact in a long up to ~8.6e9 samples (2^63 / 32768²) —
-  * a 24-hour stereo 48 kHz file is 3.5e8. */
-case class AudioPcmStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryExpressions.audioPcmType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_audio_pcm_stats"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects binary, got ${other.simpleString}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    BinaryExpressions.audioPcmStats(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"""${ev.value} = graft.expr.BinaryExpressions.audioPcmStats($s);
-         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): AudioPcmStats =
-    copy(child = newChild)
-}
-
-/** Single-DECODE signal gate: "not silent, not clipped" in ONE pass
-  * over the samples — mean |s| ≥ minMeanAbsMilli/1000 (silence floor,
-  * exact integer cross-multiply: sum_abs·1000 ≥ n·minMeanAbsMilli) AND
-  * peak_abs ≤ maxPeak (clipping ceiling). The FilterExec rationale of
-  * [[AudioMinDuration]] applies doubly here: a composed filter on two
-  * [[AudioPcmStats]] struct fields would run the full sample pass per
-  * field. Undecodable payloads are false — gates drop what they cannot
-  * prove. */
-case class AudioPcmGate(child: Expression, minMeanAbsMilli: Long, maxPeak: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_audio_pcm_gate"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects binary, got ${other.simpleString}")
-    }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    v != null && BinaryExpressions.audioPcmGate(
-      v.asInstanceOf[Array[Byte]], minMeanAbsMilli, maxPeak)
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val code = childGen.code.toString +
-      s"""
-         |boolean ${ev.value} = !${childGen.isNull} &&
-         |  graft.expr.BinaryExpressions.audioPcmGate(${childGen.value},
-         |    ${minMeanAbsMilli}L, $maxPeak);
-       """.stripMargin
-    ev.copy(
-      code = org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper(
-        new StringContext(code)).code(),
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): AudioPcmGate =
-    copy(child = newChild)
-}
-
-/** Single-parse duration predicate: `duration_us >= minUs` with ONE
-  * header scan (same rationale as [[ImageMinResolution]] — FilterExec has
-  * no subexpression elimination, so a composed meta.duration_us >= x
-  * would re-parse per field). Null / unparseable payloads are false. */
-case class AudioMinDuration(child: Expression, minUs: Long)
-    extends UnaryExpression {
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_audio_min_duration"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects binary, got ${other.simpleString}")
-    }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    v != null && BinaryExpressions.audioAtLeast(v.asInstanceOf[Array[Byte]], minUs)
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val code = childGen.code.toString +
-      s"""
-         |boolean ${ev.value} = !${childGen.isNull} &&
-         |  graft.expr.BinaryExpressions.audioAtLeast(${childGen.value}, ${minUs}L);
-       """.stripMargin
-    ev.copy(
-      code = org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper(
-        new StringContext(code)).code(),
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): AudioMinDuration =
-    copy(child = newChild)
-}
-
-/** HTTP response splitter for WARC `application/http` payloads: status
-  * code, Content-Type header, and the body bytes from ONE byte scan —
-  * the first gate of a Common-Crawl-shaped ingest (`status = 200 AND
-  * content_type LIKE 'text/html%'`) as narrow scan-side arithmetic.
-  * One expression, one parse: a composed three-field predicate would
-  * re-split the payload per field once pushed into a Filter
-  * (FilterExec has no subexpression elimination — the
-  * [[ImageMinResolution]] lesson). Null for payloads that do not start
-  * with an HTTP status line; a response with no body is an empty body,
-  * not null. Headers larger than 64 KiB are rejected as null (RFC 9112
-  * recommends a bound; an unbounded scan is a parser DoS). */
-case class HttpResponse(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("status", IntegerType, nullable = false),
-    StructField("content_type", StringType, nullable = true),
-    StructField("body", BinaryType, nullable = false)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_http_response"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects binary, got ${other.simpleString}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    BinaryExpressions.httpResponse(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"""${ev.value} = graft.expr.BinaryExpressions.httpResponse($s);
-         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): HttpResponse =
-    copy(child = newChild)
-}
-
-/** Single-parse HTTP ingest gate: `status == wantStatus AND
-  * content_type startsWith ctPrefix` with ONE payload scan — the
-  * Common-Crawl pipeline head (`200 AND text/html`) as a narrow
-  * scan-side predicate. A composed `h.status === 200 && h.content_type
-  * .startsWith(...)` re-parses the payload per field once pushed into
-  * a Filter (no subexpression elimination there — the
-  * [[ImageMinResolution]] lesson). Null / non-HTTP payloads are false. */
-case class HttpGate(child: Expression, wantStatus: Int, ctPrefix: String)
-    extends UnaryExpression {
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_http_gate"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects binary, got ${other.simpleString}")
-    }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    v != null && BinaryExpressions.httpGateEval(
-      v.asInstanceOf[Array[Byte]], wantStatus, ctPrefix)
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val prefixRef = ctx.addReferenceObj("ctPrefix", ctPrefix, "java.lang.String")
-    val code = childGen.code.toString +
-      s"""
-         |boolean ${ev.value} = !${childGen.isNull} &&
-         |  graft.expr.BinaryExpressions.httpGateEval(${childGen.value}, $wantStatus, $prefixRef);
-       """.stripMargin
-    ev.copy(
-      code = org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper(
-        new StringContext(code)).code(),
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): HttpGate =
-    copy(child = newChild)
-}
-
+import Kernel._
+
+/** The binary-payload kernels of the multimodal pipeline: each a
+  * [[KernelDecl]] beside its Column constructor and the static method it
+  * calls. */
 object BinaryExpressions {
 
-  def imageMeta(c: Column): Column = Bridge.column(ImageMeta(Bridge.expression(c)))
+  private[graft] val ImageMeta = new KernelDecl("graft_image_meta", Seq(BinaryIn),
+    StructType(Seq(StructField("format", StringType, nullable = false),
+      StructField("width", IntegerType, nullable = true),
+      StructField("height", IntegerType, nullable = true))), this, "imageMeta")
 
-  def audioMeta(c: Column): Column = Bridge.column(AudioMeta(Bridge.expression(c)))
+  /** Native binary-payload expressions for the multimodal pipeline.
+    *
+    * Image METADATA (container format + pixel dimensions) lives in the first
+    * few hundred bytes of the payload — extracting it must not require a
+    * decode (the container ships no codecs, and at 100 TB a resolution
+    * filter that decodes every image is the wrong plan). `ImageMeta` parses
+    * the four dominant container headers (PNG, JPEG, GIF, BMP) in a tight
+    * byte loop inside whole-stage codegen, so `width >= 256 AND height >=
+    * 256` is a narrow scan-side predicate that prunes payloads BEFORE any
+    * decode stage — the same pushdown story as Multimodal.centerCrop /
+    * sampleFrames.
+    *
+    * Reference scope note: the reference engine has no binary/image surface
+    * at all; this is part of the beyond-reference training-data layer. */
+  def imageMeta(c: Column): Column = ImageMeta(c)
 
-  def audioMinDuration(c: Column, minUs: Long): Column =
-    Bridge.column(AudioMinDuration(Bridge.expression(c), minUs))
+  private[graft] val AudioMeta = new KernelDecl("graft_audio_meta", Seq(BinaryIn),
+    StructType(Seq(StructField("format", StringType, nullable = false),
+      StructField("channels", IntegerType, nullable = true),
+      StructField("sample_rate", IntegerType, nullable = true),
+      StructField("bits", IntegerType, nullable = true),
+      StructField("n_frames", LongType, nullable = true),
+      StructField("duration_us", LongType, nullable = true))), this, "audioMeta")
 
+  /** Audio-container metadata (RIFF/WAVE) from the payload's HEADER bytes —
+    * the audio face of [[ImageMeta]]: channels / sample rate / bit depth /
+    * frame count / duration without decoding a single sample, so the
+    * "drop clips shorter than N ms, resample-rate gate" every audio
+    * pipeline starts with is a narrow codegen'd scan-side predicate.
+    * Corrupt chunk layouts keep format "wav" with null fields (the ingest
+    * audit signal); non-RIFF payloads are ("unknown", null…). */
+  def audioMeta(c: Column): Column = AudioMeta(c)
+
+  private[graft] val AudioMinDuration = new KernelDecl("graft_audio_min_duration", Seq(BinaryIn),
+    BooleanType, this, "audioAtLeast", Seq(KernelConst("minUs", LongType)), whenNull = false)
+
+  /** Single-parse duration predicate: `duration_us >= minUs` with ONE
+    * header scan (same rationale as [[ImageMinResolution]] — FilterExec has
+    * no subexpression elimination, so a composed meta.duration_us >= x
+    * would re-parse per field). Null / unparseable payloads are false. */
+  def audioMinDuration(c: Column, minUs: Long): Column = AudioMinDuration.of(Seq(c), minUs)
+
+  private[graft] val ImageMinResolution = new KernelDecl("graft_image_min_resolution",
+    Seq(BinaryIn), BooleanType, this, "imageAtLeast",
+    Seq(KernelConst("minW", IntegerType), KernelConst("minH", IntegerType)), whenNull = false)
+
+  /** Single-parse resolution predicate: `width >= minW AND height >= minH`
+    * with ONE header scan. A composed `meta.width >= w AND meta.height >= h`
+    * predicate re-instantiates the parse per field reference once the
+    * optimizer pushes it into a Filter (FilterExec has no subexpression
+    * elimination — plan-audited in ImageMetaUrlSpec); this keeps the gate a
+    * single byte-loop per row. Null / unparseable payloads are false. */
   def imageMinResolution(c: Column, minW: Int, minH: Int): Column =
-    Bridge.column(ImageMinResolution(Bridge.expression(c), minW, minH))
+    ImageMinResolution.of(Seq(c), minW, minH)
 
-  def httpResponse(c: Column): Column =
-    Bridge.column(HttpResponse(Bridge.expression(c)))
+  private[graft] val HttpResponse = new KernelDecl("graft_http_response", Seq(BinaryIn),
+    StructType(Seq(StructField("status", IntegerType, nullable = false),
+      StructField("content_type", StringType, nullable = true),
+      StructField("body", BinaryType, nullable = false))),
+    this, "httpResponse", nullableResult = true)
 
+  /** HTTP response splitter for WARC `application/http` payloads: status
+    * code, Content-Type header, and the body bytes from ONE byte scan —
+    * the first gate of a Common-Crawl-shaped ingest (`status = 200 AND
+    * content_type LIKE 'text/html%'`) as narrow scan-side arithmetic.
+    * One expression, one parse: a composed three-field predicate would
+    * re-split the payload per field once pushed into a Filter
+    * (FilterExec has no subexpression elimination — the
+    * [[ImageMinResolution]] lesson). Null for payloads that do not start
+    * with an HTTP status line; a response with no body is an empty body,
+    * not null. Headers larger than 64 KiB are rejected as null (RFC 9112
+    * recommends a bound; an unbounded scan is a parser DoS). */
+  def httpResponse(c: Column): Column = HttpResponse(c)
+
+  private[graft] val HttpGate = new KernelDecl("graft_http_gate", Seq(BinaryIn), BooleanType,
+    this, "httpGateEval",
+    Seq(KernelConst("status", IntegerType), KernelConst("ctPrefix", StringType)), whenNull = false)
+
+  /** Single-parse HTTP ingest gate: `status == wantStatus AND
+    * content_type startsWith ctPrefix` with ONE payload scan — the
+    * Common-Crawl pipeline head (`200 AND text/html`) as a narrow
+    * scan-side predicate. A composed `h.status === 200 && h.content_type
+    * .startsWith(...)` re-parses the payload per field once pushed into
+    * a Filter (no subexpression elimination there — the
+    * [[ImageMinResolution]] lesson). Null / non-HTTP payloads are false. */
   def httpGate(c: Column, status: Int, ctPrefix: String): Column =
-    Bridge.column(HttpGate(Bridge.expression(c), status, ctPrefix))
+    HttpGate.of(Seq(c), status, ctPrefix)
 
   /** Static helper shared by eval and generated code. */
   def httpGateEval(b: Array[Byte], wantStatus: Int, ctPrefix: String): Boolean = {
@@ -764,11 +337,36 @@ object BinaryExpressions {
     StructField("sum_abs", LongType, nullable = false),
     StructField("sum_sq", LongType, nullable = false)))
 
-  def audioPcmStats(c: Column): Column =
-    Bridge.column(AudioPcmStats(Bridge.expression(c)))
+  private[graft] val AudioPcmStats = new KernelDecl("graft_audio_pcm_stats", Seq(BinaryIn),
+    audioPcmType, this, "audioPcmStats", nullableResult = true)
 
+  /** REAL PCM DECODE — 16-bit WAV sample statistics in exact integer
+    * arithmetic: one codegen'd pass over the data chunk's samples yields
+    * `(n_samples, peak_abs, sum_abs, sum_sq)` — the inputs every audio
+    * quality gate derives from (RMS = sqrt(sum_sq/n), clipping =
+    * peak_abs at full scale, silence = sum_abs ≈ 0). All-integer output
+    * keeps the decode oracle-replayable (no IEEE accumulation to drift).
+    * Null — never a fabricated number — when the payload is not integer
+    * PCM16 WAV or the declared data chunk is truncated/odd-sized.
+    * sum_sq is exact in a long up to ~8.6e9 samples (2^63 / 32768²) —
+    * a 24-hour stereo 48 kHz file is 3.5e8. */
+  def audioPcmStats(c: Column): Column = AudioPcmStats(c)
+
+  private[graft] val AudioPcmGate = new KernelDecl("graft_audio_pcm_gate", Seq(BinaryIn),
+    BooleanType, this, "audioPcmGate",
+    Seq(KernelConst("minMeanAbsMilli", LongType), KernelConst("maxPeak", IntegerType)),
+    whenNull = false)
+
+  /** Single-DECODE signal gate: "not silent, not clipped" in ONE pass
+    * over the samples — mean |s| ≥ minMeanAbsMilli/1000 (silence floor,
+    * exact integer cross-multiply: sum_abs·1000 ≥ n·minMeanAbsMilli) AND
+    * peak_abs ≤ maxPeak (clipping ceiling). The FilterExec rationale of
+    * [[AudioMinDuration]] applies doubly here: a composed filter on two
+    * [[AudioPcmStats]] struct fields would run the full sample pass per
+    * field. Undecodable payloads are false — gates drop what they cannot
+    * prove. */
   def audioPcmGate(c: Column, minMeanAbsMilli: Long, maxPeak: Int): Column =
-    Bridge.column(AudioPcmGate(Bridge.expression(c), minMeanAbsMilli, maxPeak))
+    AudioPcmGate.of(Seq(c), minMeanAbsMilli, maxPeak)
 
   /** Shared by eval and generated code — see [[AudioPcmGate]]: one
     * sample pass, exact integer cross-multiply for the mean floor. */
@@ -817,7 +415,7 @@ object BinaryExpressions {
       sumSq += s.toLong * s
       j += 1; p += 2
     }
-    val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(4)
+    val row = new GenericInternalRow(4)
     row.update(0, count.toLong)
     row.update(1, peak)
     row.update(2, sumAbs)
@@ -846,10 +444,34 @@ object BinaryExpressions {
     StructField("n_chunks", IntegerType, nullable = true),
     StructField("mdat_size", LongType, nullable = true)))
 
-  def videoMeta(c: Column): Column = Bridge.column(VideoMeta(Bridge.expression(c)))
+  private[graft] val VideoMeta =
+    new KernelDecl("graft_video_meta", Seq(BinaryIn), videoMetaType, this, "videoMeta")
 
+  /** Video-container metadata (ISO-BMFF / MP4) from the payload's HEADER
+    * boxes — the video face of [[ImageMeta]]/[[AudioMeta]]: brand, movie
+    * timescale/duration, first video track's pixel dimensions, and the
+    * sample tables that drive frame extraction (stts frame count + delta,
+    * stsz fixed sample size, stco/co64 first chunk offset, mdat payload
+    * size) without touching a single coded frame. At 100 TB the "drop
+    * sub-5s clips, gate on resolution, pick k frames per clip" pipeline
+    * head becomes narrow scan-side arithmetic: the sampler turns these
+    * fields into (pts, byte-range) pairs, so only the sampled frames are
+    * ever ranged-read and decoded. Corrupt box layouts keep the ftyp brand
+    * with null fields (the ingest audit signal); non-BMFF payloads are
+    * ("unknown", null…). */
+  def videoMeta(c: Column): Column = VideoMeta(c)
+
+  private[graft] val VideoGate = new KernelDecl("graft_video_gate", Seq(BinaryIn), BooleanType,
+    this, "videoAtLeast", Seq(KernelConst("minUs", LongType), KernelConst("minW", IntegerType),
+      KernelConst("minH", IntegerType)), whenNull = false)
+
+  /** Single-parse video gate: `duration_us >= minUs AND width >= minW AND
+    * height >= minH` with ONE box walk (same rationale as
+    * [[ImageMinResolution]] — FilterExec has no subexpression elimination,
+    * so composed meta-field predicates re-parse per field). Null /
+    * unparseable payloads are false. */
   def videoGate(c: Column, minUs: Long, minW: Int, minH: Int): Column =
-    Bridge.column(VideoGate(Bridge.expression(c), minUs, minW, minH))
+    VideoGate.of(Seq(c), minUs, minW, minH)
 
   private def be64(b: Array[Byte], i: Int): Long =
     ((be32(b, i).toLong & 0xFFFFFFFFL) << 32) | (be32(b, i + 4).toLong & 0xFFFFFFFFL)
@@ -868,11 +490,32 @@ object BinaryExpressions {
       !m.isNullAt(5) && m.getInt(5) >= minH
   }
 
-  def videoSyncSamples(c: Column): Column =
-    Bridge.column(VideoSyncSamples(Bridge.expression(c)))
+  private[graft] val VideoSyncSamples = new KernelDecl("graft_video_sync_samples",
+    Seq(BinaryIn), ArrayType(LongType, containsNull = false), this, "videoSyncSamples",
+    nullableResult = true)
 
-  def videoSampleable(c: Column): Column =
-    Bridge.column(VideoSampleable(Bridge.expression(c)))
+  /** Sync-sample (keyframe) table from the ISO-BMFF `stss` box, as 0-based
+    * frame indices. A decoder can only START at a sync sample, so a frame
+    * sampler that ignores stss schedules reads it cannot decode; snapping
+    * each sampled index to the greatest keyframe at or before it is the
+    * standard seek semantics. NULL when the payload is not BMFF, the box
+    * layout is corrupt, or stss is absent — absence means every sample is
+    * a sync point (ISO 14496-12 §8.6.2: no stss ⇒ all sync), so callers
+    * treat null as "no snapping needed". */
+  def videoSyncSamples(c: Column): Column = VideoSyncSamples(c)
+
+  private[graft] val VideoSampleable = new KernelDecl("graft_video_sampleable", Seq(BinaryIn),
+    BooleanType, this, "videoSampleable", whenNull = false)
+
+  /** Single-parse "frame sampler can address this clip" predicate: the
+    * container carries positive stts frame count + delta, a fixed stsz
+    * sample size, a chunk offset and a timescale. [[VideoMeta]] field
+    * predicates would re-instantiate the box walk — and anything feeding
+    * the payload column — once per field when the optimizer pushes the
+    * filter down (FilterExec has no subexpression elimination; measured
+    * 6x synth+walk per row on q_keyframe_sample). Null / unparseable
+    * payloads are false. */
+  def videoSampleable(c: Column): Column = VideoSampleable(c)
 
   /** Shared by eval and generated code: every field the frame sampler
     * needs is present and positive, in ONE box walk. A multi-chunk
@@ -1009,8 +652,27 @@ object BinaryExpressions {
     StructField("byte_offset", LongType, nullable = false),
     StructField("byte_len", LongType, nullable = false)))
 
+  private[graft] val VideoFrameRanges = new KernelDecl("graft_video_frame_ranges",
+    Seq(BinaryIn), ArrayType(frameRangeType, containsNull = false), this, "videoFrameRanges",
+    Seq(KernelConst("k", IntegerType, min = 1), KernelConst("snap", BooleanType)),
+    nullableResult = true)
+
+  /** FULL sample-table frame addressing as ONE native call: `k` uniformly
+    * sampled frames of an ISO-BMFF payload as (frame_idx, pts_us,
+    * byte_offset, byte_len) structs, honoring the container semantics the
+    * simple column sampler cannot express —
+    *  - stts with MULTIPLE entries: pts is the cumulative delta sum up to
+    *    the sample, in mdhd MEDIA ticks (mvhd fallback);
+    *  - stsc chunk mapping + multi-entry stco/co64: interleaved-A/V files
+    *    address correctly instead of being rejected;
+    *  - stsz with PER-SAMPLE sizes: offsets accumulate real sizes within
+    *    the chunk, lengths are per-frame;
+    *  - optional stss snapping (greatest sync sample ≤ the uniform index).
+    * NULL when the payload's tables can't address a frame (non-BMFF,
+    * corrupt, missing tables) — a sampler must not schedule reads it
+    * can't prove. Row-local, zero shuffle, coded bytes never touched. */
   def videoFrameRanges(c: Column, k: Int, snap: Boolean): Column =
-    Bridge.column(VideoFrameRanges(Bridge.expression(c), k, snap))
+    VideoFrameRanges.of(Seq(c), k, snap)
 
   /** Full-addressing sampler — see [[VideoFrameRanges]]. ONE forward
     * pass over the sample tables up to the largest sampled index:
@@ -1021,7 +683,7 @@ object BinaryExpressions {
     * inconsistency (tables missing, counts short, chunk cursor past
     * stco) returns null — never a fabricated byte range. */
   def videoFrameRanges(b: Array[Byte], k: Int,
-      snap: Boolean): org.apache.spark.sql.catalyst.util.ArrayData = {
+      snap: Boolean): ArrayData = {
     val moov = findMoov(b); if (moov == null) return null
     val trak = findVideoTrak(b, moov._1, moov._2); if (trak == null) return null
     val mdia = findBox(b, trak._1, trak._2, "mdia"); if (mdia == null) return null
@@ -1167,7 +829,7 @@ object BinaryExpressions {
       i += 1
     }
     if (want < idxs.length) return null
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 
   /** Targeted stss walk (ftyp → moov → VIDEO trak → mdia → minf → stbl →
@@ -1177,7 +839,7 @@ object BinaryExpressions {
     * audio-first file cannot hide the video keyframe table. Null on
     * non-BMFF / corrupt layout / absent stss — see [[VideoSyncSamples]]
     * for the null contract. */
-  def videoSyncSamples(b: Array[Byte]): org.apache.spark.sql.catalyst.util.ArrayData = {
+  def videoSyncSamples(b: Array[Byte]): ArrayData = {
     val moov = findMoov(b); if (moov == null) return null
     val trak = findVideoTrak(b, moov._1, moov._2); if (trak == null) return null
     val mdia = findBox(b, trak._1, trak._2, "mdia"); if (mdia == null) return null
@@ -1195,7 +857,7 @@ object BinaryExpressions {
       out(k) = (be32(b, ps + 8 + 4 * k).toLong & 0xFFFFFFFFL) - 1L
       k += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 
   /** ISO-BMFF box walk. Boxes are `size(BE32) type(4cc) payload…`;

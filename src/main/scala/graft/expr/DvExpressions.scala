@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.graftx.Bridge
@@ -129,9 +129,12 @@ final class DvProbe(bits: java.util.Map[String, RoaringBitmap]) {
 object DvExpressions {
   private val relRegex = java.util.regex.Pattern.compile(".*/(data/.*)$")
 
-  /** [[LineageRel]] over a file-path column. */
-  def lineageRelOf(path: Column): Column =
-    Bridge.column(LineageRel(Bridge.expression(path)))
+  private[graft] val LineageRel = new KernelDecl("graft_lineage_rel", Seq(Kernel.StringIn),
+    StringType, this, "lineageRel")
+
+  /** The row-lineage key of a scanned row: [[lineageRel]] of its
+    * `_metadata.file_path`. */
+  def lineageRelOf(path: Column): Column = LineageRel(path)
 
   /** [[DvKeep]]: true for the rows of (`path`, `pos`) that `marks` do not mark. */
   def keep(path: Column, pos: Column, marks: Broadcast[DvMarks]): Column =
@@ -181,30 +184,6 @@ object DvExpressions {
     if (m.find() && m.group(1) != null) UTF8String.fromString(m.group(1))
     else UTF8String.EMPTY_UTF8
   }
-}
-
-/** The row-lineage key of a scanned row: [[DvExpressions.lineageRel]]
-  * of its `_metadata.file_path`. */
-case class LineageRel(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_lineage_rel"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects string, got ${other.simpleString}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    DvExpressions.lineageRel(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.expr.DvExpressions.lineageRel($s);")
-
-  override protected def withNewChildInternal(newChild: Expression): LineageRel =
-    copy(child = newChild)
 }
 
 /** True for a row its version's deletion vectors do NOT mark: `path` is

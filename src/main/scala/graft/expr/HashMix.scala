@@ -1,68 +1,34 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftx.Bridge
-import org.apache.spark.sql.types._
-
-/** Murmur3's fmix64 finalizer, masked to 63 bits: full avalanche over a
-  * long whose raw distribution may be structured (polynomial fingerprints
-  * of short sequential keys carry their prefix/magnitude structure in the
-  * HIGH bits — measured: HLL registers fed raw fingerprints under-counted
-  * 'item-N' keys 5–20×). After fmix64 every output bit depends on every
-  * input bit, so sketches may slice index/rank bits anywhere.
-  *
-  * A native expression rather than SQL arithmetic because the mixing
-  * multiplies rely on Java's wrapping long semantics — under Spark's
-  * default ANSI mode a SQL-level overflow would throw. External engines
-  * without wrapping 64-bit ops replay it with 32-bit limb splits over
-  * 128-bit integers (see SketchQueries.mixSql — differentially verified
-  * against this expression). Output is non-negative ([0, 2^63)), so
-  * downstream ratio arithmetic never meets a sign. */
-case class Mix63(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_mix63"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case LongType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects bigint, got ${other.simpleString}")
-    }
-
-  override def nullSafeEval(input: Any): Any = {
-    var x = input.asInstanceOf[Long]
-    x ^= (x >>> 33); x *= Mix63.C1
-    x ^= (x >>> 33); x *= Mix63.C2
-    x ^= (x >>> 33)
-    x & Long.MaxValue
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s => {
-      val x = ctx.freshName("x")
-      s"""
-         |long $x = $s;
-         |$x ^= ($x >>> 33); $x *= ${Mix63.C1}L;
-         |$x ^= ($x >>> 33); $x *= ${Mix63.C2}L;
-         |$x ^= ($x >>> 33);
-         |${ev.value} = $x & Long.MAX_VALUE;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Mix63 =
-    copy(child = newChild)
-}
+import org.apache.spark.sql.types.LongType
 
 object Mix63 {
   /** fmix64 constants (Appleby's MurmurHash3, public domain). */
   val C1: Long = 0xFF51AFD7ED558CCDL
   val C2: Long = 0xC4CEB9FE1A85EC53L
 
-  def mix63(c: Column): Column = Bridge.column(Mix63(Bridge.expression(c)))
+  private[graft] val Decl =
+    new KernelDecl("graft_mix63", Seq(Kernel.BigintIn), LongType, this, "apply")
 
-  /** Reference Scala implementation (for specs and driver-side use). */
+  /** Murmur3's fmix64 finalizer, masked to 63 bits: full avalanche over a
+    * long whose raw distribution may be structured (polynomial fingerprints
+    * of short sequential keys carry their prefix/magnitude structure in the
+    * HIGH bits — measured: HLL registers fed raw fingerprints under-counted
+    * 'item-N' keys 5–20×). After fmix64 every output bit depends on every
+    * input bit, so sketches may slice index/rank bits anywhere.
+    *
+    * A native expression rather than SQL arithmetic because the mixing
+    * multiplies rely on Java's wrapping long semantics — under Spark's
+    * default ANSI mode a SQL-level overflow would throw. External engines
+    * without wrapping 64-bit ops replay it with 32-bit limb splits over
+    * 128-bit integers (see SketchQueries.mixSql — differentially verified
+    * against this expression). Output is non-negative ([0, 2^63)), so
+    * downstream ratio arithmetic never meets a sign. */
+  def mix63(c: Column): Column = Decl(c)
+
+  /** The kernel's static method, also the Scala implementation for specs
+    * and driver-side use. */
   def apply(x0: Long): Long = {
     var x = x0
     x ^= (x >>> 33); x *= C1

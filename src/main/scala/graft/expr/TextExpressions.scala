@@ -1,35 +1,51 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftx.Bridge
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native codegen'd rolling polynomial fingerprint over a string's bytes:
-  * acc = (acc*31 + byte) mod 1e9+7.
-  *
-  * The HOF formulation (transform over sequence + substr + ascii per char)
-  * evaluates ~3 interpreted lambdas per character; this is a tight loop
-  * over the UTF8String's bytes inside whole-stage codegen. Byte-wise ==
-  * the char-wise definition for ASCII text (the oracle's `ascii(text[i])`
-  * equals the byte for ASCII); differential-spec'd against the HOF. */
-case class PolynomialFingerprint(child: Expression, init: Long = 0L,
-    mult: Long = 31L, mod: Long = 1000000007L)
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_fingerprint"
+import Kernel._
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects string, got ${other.simpleString}")
-    }
+/** The text kernels: each a [[KernelDecl]] beside its Column constructor
+  * and the static method it calls. */
+object TextExpressions {
 
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String]
+  private[graft] val PolynomialFingerprint = new KernelDecl("graft_fingerprint", Seq(StringIn),
+    LongType, this, "fingerprint", Seq(KernelConst("init", LongType, 0L),
+      KernelConst("mult", LongType, 31L), KernelConst("mod", LongType, 1000000007L)))
+
+  /** Native codegen'd rolling polynomial fingerprint over a string's bytes:
+    * acc = (acc*31 + byte) mod 1e9+7.
+    *
+    * The HOF formulation (transform over sequence + substr + ascii per char)
+    * evaluates ~3 interpreted lambdas per character; this is a tight loop
+    * over the UTF8String's bytes inside whole-stage codegen. Byte-wise ==
+    * the char-wise definition for ASCII text (the oracle's `ascii(text[i])`
+    * equals the byte for ASCII); differential-spec'd against the HOF. */
+  def fingerprint(c: Column): Column = PolynomialFingerprint(c)
+
+  /** fp(prefix || text) in ONE loop over text: the fold's accumulator
+    * starts at fp(prefix) (polynomial prefix identity). The cheap form of
+    * a seeded hash family — no concat, no branches, codegen stays small
+    * when several seeds appear in one projection. */
+  def seededFingerprint(c: Column, init: Long): Column =
+    PolynomialFingerprint.of(Seq(c), init)
+
+  /** Seeded fingerprint from a DIFFERENT (mult, mod) polynomial family.
+    * Two same-family fingerprints with different seeds are NOT
+    * independent — fp_s1(x) − fp_s2(x) ≡ (s1−s2)·31^len (mod P) depends
+    * only on the length — so any construction needing two independent
+    * hash coordinates (e.g. a wide sketch hash) must vary the FAMILY,
+    * not just the seed. */
+  def seededFingerprint(c: Column, init: Long, mult: Long, mod: Long): Column =
+    PolynomialFingerprint.of(Seq(c), init, mult, mod)
+
+  /** [[PolynomialFingerprint]]'s fold: acc = (acc*mult + byte) mod `mod`
+    * over the string's bytes, from `init`. */
+  def fingerprint(s: UTF8String, init: Long, mult: Long, mod: Long): Long = {
     val n = s.numBytes()
     var acc = init // fp(prefix || text) = fold over text seeded with fp(prefix)
     var i = 0
@@ -37,55 +53,25 @@ case class PolynomialFingerprint(child: Expression, init: Long = 0L,
     acc
   }
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = $s.numBytes();
-         |long $acc = ${init}L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc = ($acc * ${mult}L + ($s.getByte($i) & 0xFF)) % ${mod}L;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+  private[graft] val TokenShingles = new KernelDecl("graft_shingles", Seq(StringArrayIn),
+    ArrayType(StringType, containsNull = false), this, "shingles",
+    Seq(KernelConst("n", IntegerType, min = 1)), whenNull = new GenericArrayData(Array.empty[Any]))
 
-  override protected def withNewChildInternal(newChild: Expression): PolynomialFingerprint =
-    copy(child = newChild)
-}
+  /** Native codegen'd sliding token n-grams: window i is tokens[i..i+n-1]
+    * joined by a single space — one tight loop per row instead of the HOF
+    * formulation's interpreted transform+slice+concat_ws per window
+    * (CodegenFallback subtrees also get no CSE, so every REFERENCE to the
+    * HOF form re-ran the whole traversal; measured 3x on the repetition
+    * ratio). Semantics mirror the HOF exactly (differential spec): fewer
+    * than n tokens — or a null input array — yield an EMPTY array, and null
+    * elements are skipped by the join like concat_ws. */
+  def shingles(toks: Column, n: Int): Column = TokenShingles.of(Seq(toks), n)
 
-/** Native codegen'd sliding token n-grams: window i is tokens[i..i+n-1]
-  * joined by a single space — one tight loop per row instead of the HOF
-  * formulation's interpreted transform+slice+concat_ws per window
-  * (CodegenFallback subtrees also get no CSE, so every REFERENCE to the
-  * HOF form re-ran the whole traversal; measured 3x on the repetition
-  * ratio). Semantics mirror the HOF exactly (differential spec): fewer
-  * than n tokens — or a null input array — yield an EMPTY array, and null
-  * elements are skipped by the join like concat_ws. */
-case class TokenShingles(child: Expression, n: Int) extends UnaryExpression {
-  require(n >= 1, "shingles: n >= 1")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_shingles"
+  private val ShingleSep = UTF8String.fromString(" ")
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects array<string>, got ${other.simpleString}")
-    }
-
-  private val sep = UTF8String.fromString(" ")
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
-    val arr = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val sz = arr.numElements()
-    val m = math.max(0, sz - n + 1)
+  /** [[TokenShingles]]' windows: tokens[i..i+n-1] joined by one space. */
+  def shingles(arr: ArrayData, n: Int): ArrayData = {
+    val m = math.max(0, arr.numElements() - n + 1)
     val out = new Array[Any](m)
     val parts = new Array[UTF8String](n)
     var i = 0
@@ -95,467 +81,401 @@ case class TokenShingles(child: Expression, n: Int) extends UnaryExpression {
         parts(j) = if (arr.isNullAt(i + j)) null else arr.getUTF8String(i + j)
         j += 1
       }
-      out(i) = UTF8String.concatWs(sep, parts: _*)
+      out(i) = UTF8String.concatWs(ShingleSep, parts: _*)
       i += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val gad = classOf[org.apache.spark.sql.catalyst.util.GenericArrayData].getName
-    val utf8 = classOf[UTF8String].getName
-    val sepRef = ctx.addReferenceObj("shingleSep", sep, utf8)
-    val a = ctx.freshName("arr")
-    val m = ctx.freshName("m")
-    val out = ctx.freshName("out")
-    val parts = ctx.freshName("parts")
-    val i = ctx.freshName("i")
-    val j = ctx.freshName("j")
-    val code = childGen.code.toString +
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value};
-         |if (${childGen.isNull}) {
-         |  ${ev.value} = new $gad(new Object[0]);
-         |} else {
-         |  org.apache.spark.sql.catalyst.util.ArrayData $a = ${childGen.value};
-         |  int $m = $a.numElements() - $n + 1;
-         |  if ($m < 0) $m = 0;
-         |  Object[] $out = new Object[$m];
-         |  $utf8[] $parts = new $utf8[$n];
-         |  for (int $i = 0; $i < $m; $i++) {
-         |    for (int $j = 0; $j < $n; $j++) {
-         |      $parts[$j] = $a.isNullAt($i + $j) ? null : $a.getUTF8String($i + $j);
-         |    }
-         |    $out[$i] = $utf8.concatWs($sepRef, $parts);
-         |  }
-         |  ${ev.value} = new $gad($out);
-         |}
-       """.stripMargin
-    ev.copy(
-      code = org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper(
-        new StringContext(code)).code(),
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
+  private[graft] val CharGramCounts = new KernelDecl("graft_char_gram_counts", Seq(StringIn),
+    ArrayType(StructType(Seq(StructField("gram", StringType, nullable = false),
+      StructField("cnt", LongType, nullable = false))), containsNull = false),
+    this, "charGramCounts", Seq(KernelConst("n", IntegerType, min = 1)))
 
-  override protected def withNewChildInternal(newChild: Expression): TokenShingles =
-    copy(child = newChild)
-}
+  /** Per-document character n-gram counts in ONE pass — `array<struct<gram,
+    * cnt>>` sorted by gram (binary order), one entry per DISTINCT gram with
+    * its occurrence count (multiplicity — the Cavnar–Trenkle feature space).
+    * The HOF formulation (`transform(sequence(...), i => substr(i, n))` then
+    * explode + count) evaluates an interpreted Substring lambda per
+    * CHARACTER and materializes one row per occurrence before the aggregate;
+    * this walks the string's bytes once, slices grams as zero-copy views of
+    * one byte array, and counts in a row-local hash map (the GramStats
+    * pattern). Texts shorter than n yield an EMPTY array; null yields null
+    * — exactly `charNgramsAll`'s contract. */
+  def charGramCounts(c: Column, n: Int): Column = CharGramCounts.of(Seq(c), n)
 
-/** Per-document character n-gram counts in ONE pass — `array<struct<gram,
-  * cnt>>` sorted by gram (binary order), one entry per DISTINCT gram with
-  * its occurrence count (multiplicity — the Cavnar–Trenkle feature space).
-  * The HOF formulation (`transform(sequence(...), i => substr(i, n))` then
-  * explode + count) evaluates an interpreted Substring lambda per
-  * CHARACTER and materializes one row per occurrence before the aggregate;
-  * this walks the string's bytes once, slices grams as zero-copy views of
-  * one byte array, and counts in a row-local hash map (the GramStats
-  * pattern). Texts shorter than n yield an EMPTY array; null yields null
-  * — exactly `charNgramsAll`'s contract. */
-case class CharGramCounts(child: Expression, n: Int) extends UnaryExpression {
-  require(n >= 1, "char_gram_counts: n >= 1")
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("gram", StringType, nullable = false),
-    StructField("cnt", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "graft_char_gram_counts"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects string, got ${other.simpleString}")
+  /** One walk over a string's bytes → (distinct gram, count) hash map of
+    * its character n-grams with multiplicity. Grams are zero-copy views
+    * of a single byte array. */
+  private def charGramMap(s: UTF8String,
+      n: Int): java.util.HashMap[UTF8String, Array[Long]] = {
+    val bytes = s.getBytes
+    val nb = bytes.length
+    val offs = new Array[Int](nb + 1)
+    var i = 0
+    var c = 0
+    while (i < nb) {
+      offs(c) = i
+      c += 1
+      i += math.max(1, UTF8String.numBytesForFirstByte(bytes(i)))
     }
-
-  override def nullSafeEval(input: Any): Any =
-    TextExpressions.charGramCounts(input.asInstanceOf[UTF8String], n)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.expr.TextExpressions.charGramCounts($s, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): CharGramCounts =
-    copy(child = newChild)
-}
-
-/** The top `m` character n-grams of a document by (count desc, gram asc),
-  * as `array<struct<gram, rank>>` with rank 1-based — the ROW-LOCAL form
-  * of the per-doc `row_number()` window the CT language-ID apply side ran:
-  * a doc's gram ranking depends only on the doc itself, so partitioning a
-  * corpus-wide window by doc id paid an exchange + sort for what one
-  * in-row sort over the doc's own distinct grams computes exactly. Tie
-  * order is the window's (binary gram comparison, matching Spark's
-  * non-collated string ordering). Shorter-than-n texts yield an EMPTY
-  * array (the explode_outer caller keeps its null-gram row); null yields
-  * null. */
-case class CharGramTopRanks(child: Expression, n: Int, m: Int)
-    extends UnaryExpression {
-  require(n >= 1 && m >= 1, "char_gram_top_ranks: n >= 1 and m >= 1")
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("gram", StringType, nullable = false),
-    StructField("rank", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "graft_char_gram_top_ranks"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects string, got ${other.simpleString}")
+    offs(c) = nb
+    val m = new java.util.HashMap[UTF8String, Array[Long]]()
+    var g = 0
+    while (g + n <= c) {
+      val gram = UTF8String.fromBytes(bytes, offs(g), offs(g + n) - offs(g))
+      val prev = m.get(gram)
+      if (prev == null) m.put(gram, Array(1L)) else prev(0) += 1L
+      g += 1
     }
-
-  override def nullSafeEval(input: Any): Any =
-    TextExpressions.charGramTopRanks(input.asInstanceOf[UTF8String], n, m)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.expr.TextExpressions.charGramTopRanks($s, $n, $m);")
-
-  override protected def withNewChildInternal(newChild: Expression): CharGramTopRanks =
-    copy(child = newChild)
-}
-
-/** Per-document whitespace-token counts in ONE pass — `array<struct<t,
-  * cnt>>` sorted by token (binary order), one entry per DISTINCT token
-  * with its occurrence count. Split semantics are EXACTLY
-  * `split(text, " ")` (TextOps.tokens): segments between single 0x20
-  * bytes, EMPTY segments kept (Spark's split has no-limit = -1: "a  b"
-  * → ["a","","b"], "" → [""]) — the empty token is a countable term and
-  * must stay one, or NB vocab cuts and counts would drift from the
-  * oracle replay. Replaces the explode-per-occurrence → hash-aggregate
-  * pass of the NB counting paths with a row-local walk (the GramStats
-  * pattern). Null yields null (split's contract). */
-case class TokenCounts(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("t", StringType, nullable = false),
-    StructField("cnt", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "graft_token_counts"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects string, got ${other.simpleString}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    TextExpressions.tokenCounts(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.expr.TextExpressions.tokenCounts($s);")
-
-  override protected def withNewChildInternal(newChild: Expression): TokenCounts =
-    copy(child = newChild)
-}
-
-/** Whole-token statistics of a doc in ONE byte walk — the shared scan
-  * behind [[graft.operators.TextOps]]'s per-doc quality signals
-  * (uniqueTokenRatio, stopwordRatio, tokenCountBpeIsh, qualityScore,
-  * langId). Split semantics are bit-equal to `split(text, ' ')` with
-  * empty segments KEPT ('' is one empty token; 'a  b' has an empty middle
-  * token) — the [[TokenCounts]] contract. Returns
-  * `struct(n_tokens, n_distinct, n_bpe, marker_counts: array<long>)`:
-  *  - n_tokens   = number of split segments (what `size(tokens)` sees)
-  *  - n_distinct = distinct segments (what `size(array_distinct)` sees)
-  *  - n_bpe      = Σ ceil(numChars(tok)/6) — integer (nc+5)/6, which
-  *    equals `ceil(length(t)/6.0)` exactly (nc < 2^31, so nc/6.0 is
-  *    never within an ulp of an integer unless it IS one)
-  *  - marker_counts(i) = occurrences of `markers(i)` (multiplicity),
-  *    what `size(filter(toks, t => t === m))` sees
-  * The HOF formulation ran one interpreted split + transform/filter/
-  * aggregate pass PER SIGNAL REFERENCE (CodegenFallback → no CSE):
-  * qualityScore alone re-split the text ~5×, langId ~9×. Null text
-  * yields a null struct, so every derived signal stays null exactly as
-  * the HOF forms were (size(null)=null under non-legacy semantics).
-  * Differential-spec'd against the HOF forms. */
-case class TokenMarkerStats(child: Expression, markers: Seq[String])
-    extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_tokens", LongType, nullable = false),
-    StructField("n_distinct", LongType, nullable = false),
-    StructField("n_bpe", LongType, nullable = false),
-    StructField("marker_counts", ArrayType(LongType, containsNull = false),
-      nullable = false)))
-  override def prettyName: String = "graft_token_marker_stats"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects string, got ${other.simpleString}")
-    }
-
-  // marker → slot index; built once per expression instance, shared by
-  // every row (and by generated code via addReferenceObj)
-  private lazy val markerMap: java.util.HashMap[UTF8String, Integer] = {
-    val m = new java.util.HashMap[UTF8String, Integer]()
-    markers.zipWithIndex.foreach { case (s, i) =>
-      m.put(UTF8String.fromString(s), Integer.valueOf(i)) }
     m
   }
 
-  override def nullSafeEval(input: Any): Any =
-    TextExpressions.tokenMarkerStats(
-      input.asInstanceOf[UTF8String], markerMap, markers.size)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val mm = ctx.addReferenceObj("tmsMarkers", markerMap, "java.util.HashMap")
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.expr.TextExpressions.tokenMarkerStats($s, $mm, ${markers.size});")
+  /** Static [[CharGramCounts]] helper shared by eval and generated code. */
+  def charGramCounts(s: UTF8String, n: Int): ArrayData = {
+    val m = charGramMap(s, n)
+    val keys = m.keySet().toArray(new Array[UTF8String](m.size()))
+    java.util.Arrays.sort(keys,
+      java.util.Comparator.naturalOrder[UTF8String]())
+    val out = new Array[Any](keys.length)
+    var i = 0
+    while (i < keys.length) {
+      out(i) = new GenericInternalRow(Array[Any](keys(i), m.get(keys(i))(0)))
+      i += 1
+    }
+    new GenericArrayData(out)
   }
 
-  override protected def withNewChildInternal(newChild: Expression): TokenMarkerStats =
-    copy(child = newChild)
-}
+  private[graft] val CharGramTopRanks = new KernelDecl("graft_char_gram_top_ranks", Seq(StringIn),
+    ArrayType(StructType(Seq(StructField("gram", StringType, nullable = false),
+      StructField("rank", LongType, nullable = false))), containsNull = false),
+    this, "charGramTopRanks",
+    Seq(KernelConst("n", IntegerType, min = 1), KernelConst("m", IntegerType, min = 1)))
 
-/** All k minhash values of a shingle array in ONE pass — the native form
-  * of the polynomial seeded-hash family h_j(s) = (fp("j:")·31^len(s) +
-  * fp(s)) mod P used by [[graft.operators.Dedup.MinhashFamily.polynomial]]
-  * and the streaming LSH signatures. Per element the byte fold computes
-  * fp(s) and 31^numBytes(s) together; each seed then costs one
-  * multiply-add-mod against the precomputed seed fingerprints. The HOF
-  * formulation (k separate `array_min(transform(...))` passes, all
-  * CodegenFallback) walks the array k times through interpreted lambda
-  * machinery; the explode+min-agg batch formulation materializes one row
-  * per shingle and a hash-aggregate per doc. Values are bit-identical to
-  * both (same long arithmetic, no overflow: operands < P ≈ 2^30, products
-  * < 2^60) — differential-spec'd against the HOF and agg forms.
-  *
-  * An array with no non-null element yields all-NULL values (what
-  * `array_min` over an empty transform returns); callers filter empty
-  * shingle sets before signing, as both previous forms required. */
-case class MinhashSignature(child: Expression, seedFps: Seq[Long])
-    extends UnaryExpression {
-  require(seedFps.nonEmpty, "minhash_sig: at least one seed")
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def nullable: Boolean = child.nullable
-  override def prettyName: String = "graft_minhash_sig"
+  /** The top `m` character n-grams of a document by (count desc, gram asc),
+    * as `array<struct<gram, rank>>` with rank 1-based — the ROW-LOCAL form
+    * of the per-doc `row_number()` window the CT language-ID apply side ran:
+    * a doc's gram ranking depends only on the doc itself, so partitioning a
+    * corpus-wide window by doc id paid an exchange + sort for what one
+    * in-row sort over the doc's own distinct grams computes exactly. Tie
+    * order is the window's (binary gram comparison, matching Spark's
+    * non-collated string ordering). Shorter-than-n texts yield an EMPTY
+    * array (the explode_outer caller keeps its null-gram row); null yields
+    * null. */
+  def charGramTopRanks(c: Column, n: Int, m: Int): Column = CharGramTopRanks.of(Seq(c), n, m)
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects array<string>, got ${other.simpleString}")
+  /** Static [[CharGramTopRanks]] helper shared by eval and generated code:
+    * (count desc, gram asc) total order — the window's exactly. */
+  def charGramTopRanks(s: UTF8String, n: Int, m: Int): ArrayData = {
+    val cnts = charGramMap(s, n)
+    val keys = cnts.keySet().toArray(new Array[UTF8String](cnts.size()))
+    java.util.Arrays.sort(keys, new java.util.Comparator[UTF8String] {
+      override def compare(a: UTF8String, b: UTF8String): Int = {
+        val ca = cnts.get(a)(0); val cb = cnts.get(b)(0)
+        if (ca != cb) java.lang.Long.compare(cb, ca) else a.compareTo(b)
+      }
+    })
+    val take = math.min(m, keys.length)
+    val out = new Array[Any](take)
+    var i = 0
+    while (i < take) {
+      out(i) = new GenericInternalRow(Array[Any](keys(i), (i + 1).toLong))
+      i += 1
     }
-
-  private lazy val seedArr: Array[Long] = seedFps.toArray
-
-  override def nullSafeEval(input: Any): Any =
-    TextExpressions.minhashSig(
-      input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], seedArr)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val seeds = ctx.addReferenceObj("minhashSeeds", seedArr, "long[]")
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.expr.TextExpressions.minhashSig($s, $seeds);")
+    new GenericArrayData(out)
   }
 
-  override protected def withNewChildInternal(newChild: Expression): MinhashSignature =
-    copy(child = newChild)
-}
+  private[graft] val TokenCounts = new KernelDecl("graft_token_counts", Seq(StringIn),
+    ArrayType(StructType(Seq(StructField("t", StringType, nullable = false),
+      StructField("cnt", LongType, nullable = false))), containsNull = false),
+    this, "tokenCounts")
 
-/** NFC unicode normalization (UAX#15 canonical composition) as a native
-  * expression — real corpora mix precomposed and combining-mark forms of
-  * the same visible text, which breaks exact dedup keys and fingerprints.
-  * java.text.Normalizer is the JVM's ICU-conformant implementation;
-  * codegen emits one static call (the work is inherently per-string, so
-  * there is nothing to fuse — the win over a UDF is staying inside
-  * whole-stage codegen with UTF8String in/out and no encoder boundary). */
-case class NfcNormalize(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_nfc"
+  /** Per-document whitespace-token counts in ONE pass — `array<struct<t,
+    * cnt>>` sorted by token (binary order), one entry per DISTINCT token
+    * with its occurrence count. Split semantics are EXACTLY
+    * `split(text, " ")` (TextOps.tokens): segments between single 0x20
+    * bytes, EMPTY segments kept (Spark's split has no-limit = -1: "a  b"
+    * → ["a","","b"], "" → [""]) — the empty token is a countable term and
+    * must stay one, or NB vocab cuts and counts would drift from the
+    * oracle replay. Replaces the explode-per-occurrence → hash-aggregate
+    * pass of the NB counting paths with a row-local walk (the GramStats
+    * pattern). Null yields null (split's contract). */
+  def tokenCounts(c: Column): Column = TokenCounts(c)
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects string, got ${other.simpleString}")
+  /** Static [[TokenCounts]] helper shared by eval and generated code:
+    * one byte walk, segments split at 0x20, empty segments kept (split's
+    * no-limit semantics), counts in a hash map, output sorted by token. */
+  def tokenCounts(s: UTF8String): ArrayData = {
+    val bytes = s.getBytes
+    val nb = bytes.length
+    val m = new java.util.HashMap[UTF8String, Array[Long]]()
+    var start = 0
+    var i = 0
+    while (i <= nb) {
+      if (i == nb || bytes(i) == 0x20) {
+        val tok = UTF8String.fromBytes(bytes, start, i - start)
+        val prev = m.get(tok)
+        if (prev == null) m.put(tok, Array(1L)) else prev(0) += 1L
+        start = i + 1
+      }
+      i += 1
     }
-
-  override def nullSafeEval(input: Any): Any =
-    TextExpressions.nfc(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.expr.TextExpressions.nfc($s);")
-
-  override protected def withNewChildInternal(newChild: Expression): NfcNormalize =
-    copy(child = newChild)
-}
-
-/** One-pass repetition statistics over a string array (token n-grams or
-  * lines): `struct(total_chars, dup_chars, dup_count, top_chars)` where
-  *  - total_chars = Σ over elements of numChars(e)
-  *  - dup_chars   = Σ over distinct values of (cnt−1)·numChars(v) — the
-  *    characters contributed by every occurrence AFTER the first
-  *  - dup_count   = Σ (cnt−1) — the number of repeat occurrences
-  *  - top_chars   = cnt(v*)·numChars(v*) for the most frequent value v*
-  *    (count ties break to the binary-smallest string, matching both
-  *    `array_sort` order and the oracle's `ORDER BY cnt DESC, gram ASC`)
-  * — every Gopher repetition signal's numerator in ONE hash-map pass per
-  * row. The sorted-array HOF formulation (array_sort + interpreted
-  * zip_with/aggregate folds, all CodegenFallback) measured ~4x slower on
-  * the corpus pass; differential-spec'd against it. Null arrays and null
-  * elements: the array yields all-zero stats; null elements are skipped. */
-case class GramStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("total_chars", LongType, nullable = false),
-    StructField("dup_chars", LongType, nullable = false),
-    StructField("dup_count", LongType, nullable = false),
-    StructField("top_chars", LongType, nullable = false)))
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_gram_stats"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects array<string>, got ${other.simpleString}")
+    val keys = m.keySet().toArray(new Array[UTF8String](m.size()))
+    java.util.Arrays.sort(keys,
+      java.util.Comparator.naturalOrder[UTF8String]())
+    val out = new Array[Any](keys.length)
+    var j = 0
+    while (j < keys.length) {
+      out(j) = new GenericInternalRow(Array[Any](keys(j), m.get(keys(j))(0)))
+      j += 1
     }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) TextExpressions.emptyGramStats
-    else TextExpressions.gramStats(
-      v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
+    new GenericArrayData(out)
   }
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val code = childGen.code.toString +
-      s"""
-         |InternalRow ${ev.value} = ${childGen.isNull}
-         |  ? graft.expr.TextExpressions.emptyGramStats()
-         |  : graft.expr.TextExpressions.gramStats(${childGen.value});
-       """.stripMargin
-    ev.copy(
-      code = org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper(
-        new StringContext(code)).code(),
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
+  // markers -> (marker -> slot index, number of slots): built once per
+  // kernel instance, shared by every row and by generated code
+  private[graft] val TokenMarkerStats = new KernelDecl("graft_token_marker_stats", Seq(StringIn),
+    StructType(Seq(StructField("n_tokens", LongType, nullable = false),
+      StructField("n_distinct", LongType, nullable = false),
+      StructField("n_bpe", LongType, nullable = false),
+      StructField("marker_counts", ArrayType(LongType, containsNull = false), nullable = false))),
+    this, "tokenMarkerStats", Seq(KernelConst("markers", ArrayType(StringType))),
+    args = { (_, cs) =>
+      val markers = cs.head.asInstanceOf[Seq[String]]
+      val slots = new java.util.HashMap[UTF8String, Integer]()
+      markers.zipWithIndex.foreach { case (s, i) =>
+        slots.put(UTF8String.fromString(s), Integer.valueOf(i)) }
+      Seq(slots, markers.size)
+    })
+
+  /** Whole-token statistics of a doc in ONE byte walk — the shared scan
+    * behind [[graft.operators.TextOps]]'s per-doc quality signals
+    * (uniqueTokenRatio, stopwordRatio, tokenCountBpeIsh, qualityScore,
+    * langId). Split semantics are bit-equal to `split(text, ' ')` with
+    * empty segments KEPT ('' is one empty token; 'a  b' has an empty middle
+    * token) — the [[TokenCounts]] contract. Returns
+    * `struct(n_tokens, n_distinct, n_bpe, marker_counts: array<long>)`:
+    *  - n_tokens   = number of split segments (what `size(tokens)` sees)
+    *  - n_distinct = distinct segments (what `size(array_distinct)` sees)
+    *  - n_bpe      = Σ ceil(numChars(tok)/6) — integer (nc+5)/6, which
+    *    equals `ceil(length(t)/6.0)` exactly (nc < 2^31, so nc/6.0 is
+    *    never within an ulp of an integer unless it IS one)
+    *  - marker_counts(i) = occurrences of `markers(i)` (multiplicity),
+    *    what `size(filter(toks, t => t === m))` sees
+    * The HOF formulation ran one interpreted split + transform/filter/
+    * aggregate pass PER SIGNAL REFERENCE (CodegenFallback → no CSE):
+    * qualityScore alone re-split the text ~5×, langId ~9×. Null text
+    * yields a null struct, so every derived signal stays null. The HOF
+    * forms agree only while `size(null)` is null, i.e. with
+    * `spark.sql.legacy.sizeOfNull=false` or ANSI mode on; under the
+    * legacy setting with ANSI off they give -1-based signals instead.
+    * Differential-spec'd against the HOF forms. */
+  def tokenMarkerStats(c: Column, markers: Seq[String]): Column =
+    TokenMarkerStats.of(Seq(c), markers)
+
+  /** Static [[TokenMarkerStats]] helper shared by eval and generated code:
+    * one byte walk, segments split at 0x20, empty segments kept. Tokens
+    * are zero-copy views of the input's byte array. */
+  def tokenMarkerStats(s: UTF8String,
+      markerMap: java.util.HashMap[UTF8String, Integer],
+      nMarkers: Int): InternalRow = {
+    val bytes = s.getBytes
+    val nb = bytes.length
+    val distinct = new java.util.HashSet[UTF8String]()
+    val mcounts = new Array[Long](nMarkers)
+    var nTokens = 0L
+    var nBpe = 0L
+    var start = 0
+    var i = 0
+    while (i <= nb) {
+      if (i == nb || bytes(i) == 0x20) {
+        val tok = UTF8String.fromBytes(bytes, start, i - start)
+        nTokens += 1L
+        nBpe += (tok.numChars().toLong + 5L) / 6L
+        distinct.add(tok)
+        val slot = markerMap.get(tok)
+        if (slot != null) mcounts(slot.intValue()) += 1L
+        start = i + 1
+      }
+      i += 1
+    }
+    val arr = new Array[Any](nMarkers)
+    var j = 0
+    while (j < nMarkers) { arr(j) = mcounts(j); j += 1 }
+    new GenericInternalRow(Array[Any](nTokens, distinct.size().toLong, nBpe,
+      new GenericArrayData(arr)))
   }
 
-  override protected def withNewChildInternal(newChild: Expression): GramStats =
-    copy(child = newChild)
-}
+  private[graft] val MinhashSignature = new KernelDecl("graft_minhash_sig", Seq(StringArrayIn),
+    ArrayType(LongType, containsNull = true), this, "minhashSig",
+    Seq(KernelConst("seedFps", ArrayType(LongType))),
+    args = (_, cs) => Seq(cs.head.asInstanceOf[Seq[Long]].toArray))
 
-/** robots.txt rule extraction (RFC 9309 / the original REP) for the `*`
-  * agent: one parse per robots payload → array of (allow, path-prefix)
-  * rules. Group semantics per the RFC: consecutive `User-agent` lines
-  * stack onto one group; the first rule line closes the agent run, and
-  * a later `User-agent` starts a NEW group; rules attach to every agent
-  * of their group; comments (`#`) and empty values are dropped (an
-  * empty `Disallow:` disallows nothing). A corpus pipeline parses each
-  * host's robots ONCE, then joins the rules array onto that host's
-  * URLs — [[RobotsAllowed]] evaluates the array per URL without
-  * re-parsing. Null text → null; a robots with no `*` group yields an
-  * EMPTY array (everything allowed), which is a different fact than
-  * "no robots at all". */
-case class RobotsRules(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("allow", BooleanType, nullable = false),
-    StructField("prefix", StringType, nullable = false))), containsNull = false)
-  override def prettyName: String = "graft_robots_rules"
+  /** All k minhash values of a shingle array in ONE pass — the native form
+    * of the polynomial seeded-hash family h_j(s) = (fp("j:")·31^len(s) +
+    * fp(s)) mod P used by [[graft.operators.Dedup.MinhashFamily.polynomial]]
+    * and the streaming LSH signatures. Per element the byte fold computes
+    * fp(s) and 31^numBytes(s) together; each seed then costs one
+    * multiply-add-mod against the precomputed seed fingerprints. The HOF
+    * formulation (k separate `array_min(transform(...))` passes, all
+    * CodegenFallback) walks the array k times through interpreted lambda
+    * machinery; the explode+min-agg batch formulation materializes one row
+    * per shingle and a hash-aggregate per doc. Values are bit-identical to
+    * both (same long arithmetic, no overflow: operands < P ≈ 2^30, products
+    * < 2^60) — differential-spec'd against the HOF and agg forms.
+    *
+    * An array with no non-null element yields all-NULL values (what
+    * `array_min` over an empty transform returns); callers filter empty
+    * shingle sets before signing, as both previous forms required.
+    *
+    * This Column signs with the polynomial prefix family: seed j
+    * is fp("j:") — matches `prefixedFingerprintFromParts(s"$j:", …)` and
+    * the SQL oracle's `fp(concat(j, ':', shingle))` bit for bit. */
+  def minhashSigs(shingles: Column, k: Int): Column = {
+    require(k >= 1, "minhash_sig: at least one seed")
+    val seeds = (0 until k).map(j => graft.operators.TextOps.fingerprintOf(s"$j:"))
+    MinhashSignature.of(Seq(shingles), seeds)
+  }
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects string, got ${other.simpleString}")
+  /** Static [[MinhashSignature]] helper shared by eval and generated
+    * code: one byte fold per element yields fp(s) and 31^numBytes(s)
+    * together; each seed is one multiply-add-mod. */
+  def minhashSig(arr: ArrayData, seeds: Array[Long]): ArrayData = {
+    val k = seeds.length
+    val mins = new Array[Long](k)
+    java.util.Arrays.fill(mins, Long.MaxValue)
+    val sz = arr.numElements()
+    var any = false
+    var i = 0
+    while (i < sz) {
+      if (!arr.isNullAt(i)) {
+        any = true
+        val s = arr.getUTF8String(i)
+        val nb = s.numBytes()
+        var fp = 0L
+        var pw = 1L
+        var b = 0
+        while (b < nb) {
+          fp = (fp * 31L + (s.getByte(b) & 0xFF)) % 1000000007L
+          pw = pw * 31L % 1000000007L
+          b += 1
+        }
+        var j = 0
+        while (j < k) {
+          val h = (seeds(j) * pw + fp) % 1000000007L
+          if (h < mins(j)) mins(j) = h
+          j += 1
+        }
+      }
+      i += 1
     }
+    if (!any) // no non-null shingle: every seed's min is NULL (array_min
+      // over an empty transform) — callers filter empty sets first
+      new GenericArrayData(new Array[Any](k))
+    else new GenericArrayData(mins)
+  }
 
-  override def nullSafeEval(input: Any): Any =
-    TextExpressions.robotsRules(input.asInstanceOf[UTF8String])
+  private[graft] val NfcNormalize =
+    new KernelDecl("graft_nfc", Seq(StringIn), StringType, this, "nfc")
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.expr.TextExpressions.robotsRules($s);")
+  /** NFC unicode normalization (UAX#15 canonical composition) as a native
+    * expression — real corpora mix precomposed and combining-mark forms of
+    * the same visible text, which breaks exact dedup keys and fingerprints.
+    * java.text.Normalizer is the JVM's ICU-conformant implementation;
+    * codegen emits one static call (the work is inherently per-string, so
+    * there is nothing to fuse — the win over a UDF is staying inside
+    * whole-stage codegen with UTF8String in/out and no encoder boundary). */
+  def nfcNormalize(c: Column): Column = NfcNormalize(c)
 
-  override protected def withNewChildInternal(newChild: Expression): RobotsRules =
-    copy(child = newChild)
-}
+  /** Static NFC helper shared by eval and generated code. */
+  def nfc(s: UTF8String): UTF8String = {
+    val str = s.toString
+    // fast path: Normalizer.isNormalized avoids the rebuild for the
+    // overwhelmingly-common already-NFC string
+    if (java.text.Normalizer.isNormalized(str, java.text.Normalizer.Form.NFC)) s
+    else UTF8String.fromString(
+      java.text.Normalizer.normalize(str, java.text.Normalizer.Form.NFC))
+  }
 
-/** RFC 9309 URL decision against a [[RobotsRules]] array: the matching
-  * rule with the LONGEST prefix wins; an allow/disallow tie at equal
-  * length resolves to allow; no matching rule means allowed. Evaluated
-  * per URL against the host's parsed rules — no re-parse. */
-case class RobotsAllowed(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "graft_robots_allowed"
+  private[graft] val GramStats = new KernelDecl("graft_gram_stats", Seq(StringArrayIn),
+    StructType(Seq(StructField("total_chars", LongType, nullable = false),
+      StructField("dup_chars", LongType, nullable = false),
+      StructField("dup_count", LongType, nullable = false),
+      StructField("top_chars", LongType, nullable = false))),
+    this, "gramStats", whenNull = new GenericInternalRow(Array[Any](0L, 0L, 0L, 0L)))
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(_: StructType, _), StringType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects (array<struct>, string), got (${l.simpleString}, ${r.simpleString})")
+  /** One-pass repetition statistics over a string array (token n-grams or
+    * lines): `struct(total_chars, dup_chars, dup_count, top_chars)` where
+    *  - total_chars = Σ over elements of numChars(e)
+    *  - dup_chars   = Σ over distinct values of (cnt−1)·numChars(v) — the
+    *    characters contributed by every occurrence AFTER the first
+    *  - dup_count   = Σ (cnt−1) — the number of repeat occurrences
+    *  - top_chars   = cnt(v*)·numChars(v*) for the most frequent value v*
+    *    (count ties break to the binary-smallest string, matching both
+    *    `array_sort` order and the oracle's `ORDER BY cnt DESC, gram ASC`)
+    * — every Gopher repetition signal's numerator in ONE hash-map pass per
+    * row. The sorted-array HOF formulation (array_sort + interpreted
+    * zip_with/aggregate folds, all CodegenFallback) measured ~4x slower on
+    * the corpus pass; differential-spec'd against it. Null arrays and null
+    * elements: the array yields all-zero stats; null elements are skipped. */
+  def gramStatsCol(arr: Column): Column = GramStats(arr)
+
+  /** Static GramStats helper shared by eval and generated code: one
+    * hash-map pass, then one pass over the distinct values. */
+  def gramStats(arr: ArrayData): InternalRow = {
+    val sz = arr.numElements()
+    val counts = new java.util.HashMap[UTF8String, Array[Long]]()
+    var totalChars = 0L
+    var i = 0
+    while (i < sz) {
+      if (!arr.isNullAt(i)) {
+        val s = arr.getUTF8String(i)
+        val nc = s.numChars().toLong
+        totalChars += nc
+        val prev = counts.get(s)
+        if (prev == null) counts.put(s, Array(1L, nc)) else prev(0) += 1L
+      }
+      i += 1
     }
-
-  override def nullSafeEval(rules: Any, path: Any): Any =
-    TextExpressions.robotsAllowed(
-      rules.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      path.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (r, p) =>
-      s"${ev.value} = graft.expr.TextExpressions.robotsAllowed($r, $p);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): RobotsAllowed = copy(left = newLeft, right = newRight)
-}
-
-/** Non-rule robots.txt directives, one parse per payload:
-  * `struct(crawl_delay_ms: bigint, sitemaps: array<string>)`.
-  *
-  * `Crawl-delay` (de-facto REP extension honored by Bing/Yandex; the
-  * politeness budget a crawl scheduler multiplies by a host's URL count)
-  * is GROUP-scoped exactly like allow/disallow: only values inside a
-  * `*` group count, the last `*`-group value wins (later directives
-  * override earlier ones, the common parser behavior), and fractional
-  * seconds are honored — the value is emitted in integral MILLISECONDS
-  * (half-up) so downstream arithmetic stays exact. Unparseable or
-  * negative values are ignored. Null when no `*` group sets one.
-  *
-  * `Sitemap` (sitemaps.org protocol) is GROUP-INDEPENDENT: every
-  * sitemap URL anywhere in the file is collected, in file order,
-  * duplicates preserved (dedup is the caller's policy decision).
-  *
-  * Group-formation semantics are byte-identical to [[RobotsRules]]:
-  * both directives are rule-type lines that close an agent run
-  * (`crawl-delay` per the sibling parser's documented behavior;
-  * `sitemap` conservatively matches [[RobotsRules]]'s treatment of
-  * unknown lines so the two expressions always agree on where the
-  * `*` group's rules start and stop on the same payload). */
-case class RobotsDirectives(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("crawl_delay_ms", LongType, nullable = true),
-    StructField("sitemaps", ArrayType(StringType, containsNull = false),
-      nullable = false)))
-  override def prettyName: String = "graft_robots_directives"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects string, got ${other.simpleString}")
+    var dupChars = 0L
+    var dupCount = 0L
+    var topCnt = 0L
+    var topChars = 0L
+    var topKey: UTF8String = null
+    val it = counts.entrySet().iterator()
+    while (it.hasNext) {
+      val e = it.next()
+      val cnt = e.getValue()(0); val nc = e.getValue()(1)
+      if (cnt > 1L) { dupChars += (cnt - 1L) * nc; dupCount += cnt - 1L }
+      if (cnt > topCnt ||
+          (cnt == topCnt && topKey != null && e.getKey.compareTo(topKey) < 0)) {
+        topCnt = cnt; topChars = cnt * nc; topKey = e.getKey
+      }
     }
+    new GenericInternalRow(Array[Any](totalChars, dupChars, dupCount, topChars))
+  }
 
-  override def nullSafeEval(input: Any): Any =
-    TextExpressions.robotsDirectives(input.asInstanceOf[UTF8String])
+  private[graft] val RobotsRules = new KernelDecl("graft_robots_rules", Seq(StringIn),
+    ArrayType(StructType(Seq(StructField("allow", BooleanType, nullable = false),
+      StructField("prefix", StringType, nullable = false))), containsNull = false),
+    this, "robotsRules")
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.expr.TextExpressions.robotsDirectives($s);")
-
-  override protected def withNewChildInternal(newChild: Expression): RobotsDirectives =
-    copy(child = newChild)
-}
-
-object TextExpressions {
+  /** robots.txt rule extraction (RFC 9309 / the original REP) for the `*`
+    * agent: one parse per robots payload → array of (allow, path-prefix)
+    * rules. Group semantics per the RFC: consecutive `User-agent` lines
+    * stack onto one group; the first rule line closes the agent run, and
+    * a later `User-agent` starts a NEW group; rules attach to every agent
+    * of their group; comments (`#`) and empty values are dropped (an
+    * empty `Disallow:` disallows nothing). A corpus pipeline parses each
+    * host's robots ONCE, then joins the rules array onto that host's
+    * URLs — [[RobotsAllowed]] evaluates the array per URL without
+    * re-parsing. Null text → null; a robots with no `*` group yields an
+    * EMPTY array (everything allowed), which is a different fact than
+    * "no robots at all". */
+  def robotsRules(c: Column): Column = RobotsRules(c)
 
   /** Static [[RobotsRules]] helper shared by eval and generated code. */
-  def robotsRules(text: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
+  def robotsRules(text: UTF8String): ArrayData = {
     val out = scala.collection.mutable.ArrayBuffer.empty[Any]
     var starGroup = false // the current group's agents include *
     var inRules = false   // rule lines seen since the last User-agent
@@ -580,7 +500,7 @@ object TextExpressions {
         }
       }
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray)
+    new GenericArrayData(out.toArray)
   }
 
   /** RFC 9309 path-pattern match: literal octets, `*` matching any
@@ -613,12 +533,20 @@ object TextExpressions {
     else lastSeg.isEmpty || path.indexOf(lastSeg, pos) >= 0
   }
 
+  private[graft] val RobotsAllowed = new KernelDecl("graft_robots_allowed",
+    Seq(StructArrayIn, StringIn), BooleanType, this, "robotsAllowed")
+
+  /** RFC 9309 URL decision against a [[RobotsRules]] array: the matching
+    * rule with the LONGEST prefix wins; an allow/disallow tie at equal
+    * length resolves to allow; no matching rule means allowed. Evaluated
+    * per URL against the host's parsed rules — no re-parse. */
+  def robotsAllowed(rules: Column, path: Column): Column = RobotsAllowed(rules, path)
+
   /** Static [[RobotsAllowed]] helper shared by eval and generated code:
     * most-specific rule wins, specificity = the raw pattern's length in
     * characters (RFC 9309 "longest match" octet rule); an allow/
     * disallow tie at equal length resolves to allow. */
-  def robotsAllowed(rules: org.apache.spark.sql.catalyst.util.ArrayData,
-      path: UTF8String): Boolean = {
+  def robotsAllowed(rules: ArrayData, path: UTF8String): Boolean = {
     val p = path.toString
     var bestLen = -1
     var allow = true
@@ -635,11 +563,40 @@ object TextExpressions {
     allow
   }
 
+  private[graft] val RobotsDirectives = new KernelDecl("graft_robots_directives", Seq(StringIn),
+    StructType(Seq(StructField("crawl_delay_ms", LongType, nullable = true),
+      StructField("sitemaps", ArrayType(StringType, containsNull = false), nullable = false))),
+    this, "robotsDirectives")
+
+  /** Non-rule robots.txt directives, one parse per payload:
+    * `struct(crawl_delay_ms: bigint, sitemaps: array<string>)`.
+    *
+    * `Crawl-delay` (de-facto REP extension honored by Bing/Yandex; the
+    * politeness budget a crawl scheduler multiplies by a host's URL count)
+    * is GROUP-scoped exactly like allow/disallow: only values inside a
+    * `*` group count, the last `*`-group value wins (later directives
+    * override earlier ones, the common parser behavior), and fractional
+    * seconds are honored — the value is emitted in integral MILLISECONDS
+    * (half-up) so downstream arithmetic stays exact. Unparseable or
+    * negative values are ignored. Null when no `*` group sets one.
+    *
+    * `Sitemap` (sitemaps.org protocol) is GROUP-INDEPENDENT: every
+    * sitemap URL anywhere in the file is collected, in file order,
+    * duplicates preserved (dedup is the caller's policy decision).
+    *
+    * Group-formation semantics are byte-identical to [[RobotsRules]]:
+    * both directives are rule-type lines that close an agent run
+    * (`crawl-delay` per the sibling parser's documented behavior;
+    * `sitemap` conservatively matches [[RobotsRules]]'s treatment of
+    * unknown lines so the two expressions always agree on where the
+    * `*` group's rules start and stop on the same payload). */
+  def robotsDirectives(c: Column): Column = RobotsDirectives(c)
+
   /** Static [[RobotsDirectives]] helper shared by eval and generated
     * code. The line walker is kept in lockstep with [[robotsRules]]:
     * same comment strip, same `name: value` split (a sitemap URL's own
     * colons sit right of the FIRST colon), same group formation. */
-  def robotsDirectives(text: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
+  def robotsDirectives(text: UTF8String): InternalRow = {
     val sitemaps = scala.collection.mutable.ArrayBuffer.empty[Any]
     var delayMs: java.lang.Long = null // boxed: null = no *-group value
     var starGroup = false
@@ -674,287 +631,6 @@ object TextExpressions {
     }
     new GenericInternalRow(Array[Any](
       if (delayMs == null) null else delayMs.longValue(),
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(sitemaps.toArray)))
+      new GenericArrayData(sitemaps.toArray)))
   }
-
-  def robotsRules(c: Column): Column =
-    Bridge.column(RobotsRules(Bridge.expression(c)))
-
-  def robotsAllowed(rules: Column, path: Column): Column =
-    Bridge.column(RobotsAllowed(Bridge.expression(rules), Bridge.expression(path)))
-
-  def robotsDirectives(c: Column): Column =
-    Bridge.column(RobotsDirectives(Bridge.expression(c)))
-
-  /** Static GramStats helper shared by eval and generated code: one
-    * hash-map pass, then one pass over the distinct values. */
-  def gramStats(arr: org.apache.spark.sql.catalyst.util.ArrayData)
-      : org.apache.spark.sql.catalyst.InternalRow = {
-    val sz = arr.numElements()
-    val counts = new java.util.HashMap[UTF8String, Array[Long]]()
-    var totalChars = 0L
-    var i = 0
-    while (i < sz) {
-      if (!arr.isNullAt(i)) {
-        val s = arr.getUTF8String(i)
-        val nc = s.numChars().toLong
-        totalChars += nc
-        val prev = counts.get(s)
-        if (prev == null) counts.put(s, Array(1L, nc)) else prev(0) += 1L
-      }
-      i += 1
-    }
-    var dupChars = 0L
-    var dupCount = 0L
-    var topCnt = 0L
-    var topChars = 0L
-    var topKey: UTF8String = null
-    val it = counts.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val cnt = e.getValue()(0); val nc = e.getValue()(1)
-      if (cnt > 1L) { dupChars += (cnt - 1L) * nc; dupCount += cnt - 1L }
-      if (cnt > topCnt ||
-          (cnt == topCnt && topKey != null && e.getKey.compareTo(topKey) < 0)) {
-        topCnt = cnt; topChars = cnt * nc; topKey = e.getKey
-      }
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](totalChars, dupChars, dupCount, topChars))
-  }
-
-  def emptyGramStats(): org.apache.spark.sql.catalyst.InternalRow =
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](0L, 0L, 0L, 0L))
-
-  /** GramStats Column. */
-  def gramStatsCol(arr: Column): Column =
-    Bridge.column(GramStats(Bridge.expression(arr)))
-
-  /** Static NFC helper shared by eval and generated code. */
-  def nfc(s: UTF8String): UTF8String = {
-    val str = s.toString
-    // fast path: Normalizer.isNormalized avoids the rebuild for the
-    // overwhelmingly-common already-NFC string
-    if (java.text.Normalizer.isNormalized(str, java.text.Normalizer.Form.NFC)) s
-    else UTF8String.fromString(
-      java.text.Normalizer.normalize(str, java.text.Normalizer.Form.NFC))
-  }
-  /** NFC normalization Column. */
-  def nfcNormalize(c: Column): Column =
-    Bridge.column(NfcNormalize(Bridge.expression(c)))
-
-  /** One walk over a string's bytes → (distinct gram, count) hash map of
-    * its character n-grams with multiplicity. Grams are zero-copy views
-    * of a single byte array. */
-  private def charGramMap(s: UTF8String,
-      n: Int): java.util.HashMap[UTF8String, Array[Long]] = {
-    val bytes = s.getBytes
-    val nb = bytes.length
-    val offs = new Array[Int](nb + 1)
-    var i = 0
-    var c = 0
-    while (i < nb) {
-      offs(c) = i
-      c += 1
-      i += math.max(1, UTF8String.numBytesForFirstByte(bytes(i)))
-    }
-    offs(c) = nb
-    val m = new java.util.HashMap[UTF8String, Array[Long]]()
-    var g = 0
-    while (g + n <= c) {
-      val gram = UTF8String.fromBytes(bytes, offs(g), offs(g + n) - offs(g))
-      val prev = m.get(gram)
-      if (prev == null) m.put(gram, Array(1L)) else prev(0) += 1L
-      g += 1
-    }
-    m
-  }
-
-  /** Static [[CharGramCounts]] helper shared by eval and generated code. */
-  def charGramCounts(s: UTF8String, n: Int)
-      : org.apache.spark.sql.catalyst.util.ArrayData = {
-    val m = charGramMap(s, n)
-    val keys = m.keySet().toArray(new Array[UTF8String](m.size()))
-    java.util.Arrays.sort(keys,
-      java.util.Comparator.naturalOrder[UTF8String]())
-    val out = new Array[Any](keys.length)
-    var i = 0
-    while (i < keys.length) {
-      out(i) = new GenericInternalRow(Array[Any](keys(i), m.get(keys(i))(0)))
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  /** Static [[CharGramTopRanks]] helper shared by eval and generated code:
-    * (count desc, gram asc) total order — the window's exactly. */
-  def charGramTopRanks(s: UTF8String, n: Int, m: Int)
-      : org.apache.spark.sql.catalyst.util.ArrayData = {
-    val cnts = charGramMap(s, n)
-    val keys = cnts.keySet().toArray(new Array[UTF8String](cnts.size()))
-    java.util.Arrays.sort(keys, new java.util.Comparator[UTF8String] {
-      override def compare(a: UTF8String, b: UTF8String): Int = {
-        val ca = cnts.get(a)(0); val cb = cnts.get(b)(0)
-        if (ca != cb) java.lang.Long.compare(cb, ca) else a.compareTo(b)
-      }
-    })
-    val take = math.min(m, keys.length)
-    val out = new Array[Any](take)
-    var i = 0
-    while (i < take) {
-      out(i) = new GenericInternalRow(Array[Any](keys(i), (i + 1).toLong))
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  /** Static [[TokenCounts]] helper shared by eval and generated code:
-    * one byte walk, segments split at 0x20, empty segments kept (split's
-    * no-limit semantics), counts in a hash map, output sorted by token. */
-  def tokenCounts(s: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val bytes = s.getBytes
-    val nb = bytes.length
-    val m = new java.util.HashMap[UTF8String, Array[Long]]()
-    var start = 0
-    var i = 0
-    while (i <= nb) {
-      if (i == nb || bytes(i) == 0x20) {
-        val tok = UTF8String.fromBytes(bytes, start, i - start)
-        val prev = m.get(tok)
-        if (prev == null) m.put(tok, Array(1L)) else prev(0) += 1L
-        start = i + 1
-      }
-      i += 1
-    }
-    val keys = m.keySet().toArray(new Array[UTF8String](m.size()))
-    java.util.Arrays.sort(keys,
-      java.util.Comparator.naturalOrder[UTF8String]())
-    val out = new Array[Any](keys.length)
-    var j = 0
-    while (j < keys.length) {
-      out(j) = new GenericInternalRow(Array[Any](keys(j), m.get(keys(j))(0)))
-      j += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  /** [[TokenCounts]] Column. */
-  def tokenCounts(c: Column): Column =
-    Bridge.column(TokenCounts(Bridge.expression(c)))
-
-  /** Static [[TokenMarkerStats]] helper shared by eval and generated code:
-    * one byte walk, segments split at 0x20, empty segments kept. Tokens
-    * are zero-copy views of the input's byte array. */
-  def tokenMarkerStats(s: UTF8String,
-      markerMap: java.util.HashMap[UTF8String, Integer],
-      nMarkers: Int): org.apache.spark.sql.catalyst.InternalRow = {
-    val bytes = s.getBytes
-    val nb = bytes.length
-    val distinct = new java.util.HashSet[UTF8String]()
-    val mcounts = new Array[Long](nMarkers)
-    var nTokens = 0L
-    var nBpe = 0L
-    var start = 0
-    var i = 0
-    while (i <= nb) {
-      if (i == nb || bytes(i) == 0x20) {
-        val tok = UTF8String.fromBytes(bytes, start, i - start)
-        nTokens += 1L
-        nBpe += (tok.numChars().toLong + 5L) / 6L
-        distinct.add(tok)
-        val slot = markerMap.get(tok)
-        if (slot != null) mcounts(slot.intValue()) += 1L
-        start = i + 1
-      }
-      i += 1
-    }
-    val arr = new Array[Any](nMarkers)
-    var j = 0
-    while (j < nMarkers) { arr(j) = mcounts(j); j += 1 }
-    new GenericInternalRow(Array[Any](nTokens, distinct.size().toLong, nBpe,
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(arr)))
-  }
-
-  /** [[TokenMarkerStats]] Column. */
-  def tokenMarkerStats(c: Column, markers: Seq[String]): Column =
-    Bridge.column(TokenMarkerStats(Bridge.expression(c), markers))
-
-  /** [[CharGramCounts]] Column. */
-  def charGramCounts(c: Column, n: Int): Column =
-    Bridge.column(CharGramCounts(Bridge.expression(c), n))
-
-  /** [[CharGramTopRanks]] Column. */
-  def charGramTopRanks(c: Column, n: Int, m: Int): Column =
-    Bridge.column(CharGramTopRanks(Bridge.expression(c), n, m))
-
-  /** Static [[MinhashSignature]] helper shared by eval and generated
-    * code: one byte fold per element yields fp(s) and 31^numBytes(s)
-    * together; each seed is one multiply-add-mod. */
-  def minhashSig(arr: org.apache.spark.sql.catalyst.util.ArrayData,
-      seeds: Array[Long]): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val k = seeds.length
-    val mins = new Array[Long](k)
-    java.util.Arrays.fill(mins, Long.MaxValue)
-    val sz = arr.numElements()
-    var any = false
-    var i = 0
-    while (i < sz) {
-      if (!arr.isNullAt(i)) {
-        any = true
-        val s = arr.getUTF8String(i)
-        val nb = s.numBytes()
-        var fp = 0L
-        var pw = 1L
-        var b = 0
-        while (b < nb) {
-          fp = (fp * 31L + (s.getByte(b) & 0xFF)) % 1000000007L
-          pw = pw * 31L % 1000000007L
-          b += 1
-        }
-        var j = 0
-        while (j < k) {
-          val h = (seeds(j) * pw + fp) % 1000000007L
-          if (h < mins(j)) mins(j) = h
-          j += 1
-        }
-      }
-      i += 1
-    }
-    if (!any) // no non-null shingle: every seed's min is NULL (array_min
-      // over an empty transform) — callers filter empty sets first
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(new Array[Any](k))
-    else new org.apache.spark.sql.catalyst.util.GenericArrayData(mins)
-  }
-
-  /** [[MinhashSignature]] Column for the polynomial prefix family: seed j
-    * is fp("j:") — matches `prefixedFingerprintFromParts(s"$j:", …)` and
-    * the SQL oracle's `fp(concat(j, ':', shingle))` bit for bit. */
-  def minhashSigs(shingles: Column, k: Int): Column = {
-    val seeds = (0 until k).map(j => graft.operators.TextOps.fingerprintOf(s"$j:"))
-    Bridge.column(MinhashSignature(Bridge.expression(shingles), seeds))
-  }
-
-  def fingerprint(c: Column): Column =
-    Bridge.column(PolynomialFingerprint(Bridge.expression(c)))
-
-  /** Codegen'd sliding token n-grams Column. */
-  def shingles(toks: Column, n: Int): Column =
-    Bridge.column(TokenShingles(Bridge.expression(toks), n))
-
-  /** fp(prefix || text) in ONE loop over text: the fold's accumulator
-    * starts at fp(prefix) (polynomial prefix identity). The cheap form of
-    * a seeded hash family — no concat, no branches, codegen stays small
-    * when several seeds appear in one projection. */
-  def seededFingerprint(c: Column, init: Long): Column =
-    Bridge.column(PolynomialFingerprint(Bridge.expression(c), init))
-
-  /** Seeded fingerprint from a DIFFERENT (mult, mod) polynomial family.
-    * Two same-family fingerprints with different seeds are NOT
-    * independent — fp_s1(x) − fp_s2(x) ≡ (s1−s2)·31^len (mod P) depends
-    * only on the length — so any construction needing two independent
-    * hash coordinates (e.g. a wide sketch hash) must vary the FAMILY,
-    * not just the seed. */
-  def seededFingerprint(c: Column, init: Long, mult: Long, mod: Long): Column =
-    Bridge.column(PolynomialFingerprint(Bridge.expression(c), init, mult, mod))
 }

@@ -1,11 +1,10 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftx.Bridge
 import org.apache.spark.sql.types._
+
+import Kernel._
 
 /** Native codegen'd vector math over `array<float>` / `array<double>`.
   *
@@ -13,94 +12,55 @@ import org.apache.spark.sql.types._
   * lambda per element through the interpreter — they are NOT whole-stage
   * codegen'd, which makes them the bottleneck of dense similarity search
   * (measured: the HOF dot product dominates brute-force cosine top-k).
-  * These expressions compile to a tight primitive loop inside WSCG — the
+  * These kernels compile to one static call per row inside WSCG — the
   * preference order from the design brief: native Expression > UDF.
   *
   * Both inputs must be equal-length arrays with non-null elements
   * (embedding columns). Element type may be float or double per side;
   * accumulation is always double, elementwise in array order — bit-exact
-  * with the HOF formulation and the DuckDB oracle.
+  * with the HOF formulation and the DuckDB oracle. The static methods
+  * take each side's element type as a flag and return null on a length
+  * mismatch.
   */
-abstract class VectorBinaryExpression extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
+object VectorExpressions {
 
-  protected def elemType(e: Expression): DataType = e.dataType match {
-    case ArrayType(et @ (FloatType | DoubleType), _) => et
-    case other => throw new IllegalArgumentException(
-      s"$prettyName expects array<float|double>, got $other")
-  }
+  private def decl(name: String, method: String) = new KernelDecl(name,
+    Seq(VectorIn, VectorIn), DoubleType, this, method, nullableResult = true,
+    args = (types, _) => types.map {
+      case ArrayType(FloatType, _) => true
+      case _ => false
+    })
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType | DoubleType, _), ArrayType(FloatType | DoubleType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case _ => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects two array<float|double> arguments, " +
-          s"got ${left.dataType.simpleString} and ${right.dataType.simpleString}")
-    }
-  }
+  private[graft] val DotProduct = decl("graft_dot", "dot")
+  private[graft] val CosineSimilarity = decl("graft_cosine", "cosine")
+  private[graft] val SquaredDistance = decl("graft_sqdist", "sqDist")
 
-  @inline protected final def get(a: ArrayData, i: Int, et: DataType): Double =
-    if (et == FloatType) a.getFloat(i).toDouble else a.getDouble(i)
+  @inline private def at(a: ArrayData, i: Int, float: Boolean): Double =
+    if (float) a.getFloat(i).toDouble else a.getDouble(i)
 
-  protected def getterJava(arr: String, i: String, et: DataType): String =
-    if (et == FloatType) s"(double)$arr.getFloat($i)" else s"$arr.getDouble($i)"
-}
+  /** Codegen'd dot product Column: elementwise dot product; null if lengths differ. */
+  def dot(a: Column, b: Column): Column = DotProduct(a, b)
 
-/** Elementwise dot product; null if lengths differ. */
-case class DotProduct(left: Expression, right: Expression) extends VectorBinaryExpression {
-  override def prettyName: String = "graft_dot"
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val (a, b) = (l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-    val (ta, tb) = (elemType(left), elemType(right))
+  def dot(a: ArrayData, b: ArrayData, fa: Boolean, fb: Boolean): java.lang.Double = {
     val n = a.numElements()
     if (b.numElements() != n) return null
     var dot = 0.0
     var i = 0
-    while (i < n) { dot += get(a, i, ta) * get(b, i, tb); i += 1 }
+    while (i < n) { dot += at(a, i, fa) * at(b, i, fb); i += 1 }
     dot
   }
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val (ta, tb) = (elemType(left), elemType(right))
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      s"""
-         |int $n = $a.numElements();
-         |if ($b.numElements() != $n) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $dot = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $dot += ${getterJava(a, i, ta)} * ${getterJava(b, i, tb)};
-         |  }
-         |  ${ev.value} = $dot;
-         |}
-       """.stripMargin
-    })
+  /** Codegen'd fused cosine similarity Column: dot, both norms, and the
+    * divide in ONE pass. Null on length mismatch or zero norm. */
+  def cosine(a: Column, b: Column): Column = CosineSimilarity(a, b)
 
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): DotProduct =
-    copy(left = l, right = r)
-}
-
-/** Fused cosine similarity: dot, both norms, and the divide in ONE pass.
-  * Null on length mismatch or zero norm. */
-case class CosineSimilarity(left: Expression, right: Expression) extends VectorBinaryExpression {
-  override def prettyName: String = "graft_cosine"
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val (a, b) = (l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-    val (ta, tb) = (elemType(left), elemType(right))
+  def cosine(a: ArrayData, b: ArrayData, fa: Boolean, fb: Boolean): java.lang.Double = {
     val n = a.numElements()
     if (b.numElements() != n) return null
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
     while (i < n) {
-      val x = get(a, i, ta); val y = get(b, i, tb)
+      val x = at(a, i, fa); val y = at(b, i, fb)
       dot += x * y; na += x * x; nb += y * y
       i += 1
     }
@@ -108,98 +68,23 @@ case class CosineSimilarity(left: Expression, right: Expression) extends VectorB
     else dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val (ta, tb) = (elemType(left), elemType(right))
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      s"""
-         |int $n = $a.numElements();
-         |if ($b.numElements() != $n) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $dot = 0.0, $na = 0.0, $nb = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    double $x = ${getterJava(a, i, ta)};
-         |    double $y = ${getterJava(b, i, tb)};
-         |    $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-         |  }
-         |  if ($na == 0.0 || $nb == 0.0) {
-         |    ${ev.isNull} = true;
-         |  } else {
-         |    ${ev.value} = $dot / (Math.sqrt($na) * Math.sqrt($nb));
-         |  }
-         |}
-       """.stripMargin
-    })
+  /** Codegen'd fused squared L2 distance Column: Σ(aᵢ−bᵢ)² in ONE fused
+    * pass; null if lengths differ. Arithmetic is exactly `(a-b)*(a-b)`
+    * accumulated left-to-right — bit-identical to DuckDB's
+    * `list_dot_product(diff, diff)` over an elementwise diff, which is
+    * what the PQ oracle replays. */
+  def sqDist(a: Column, b: Column): Column = SquaredDistance(a, b)
 
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSimilarity =
-    copy(left = l, right = r)
-}
-
-/** Squared L2 distance Σ(aᵢ−bᵢ)² in ONE fused pass; null if lengths
-  * differ. Arithmetic is exactly `(a-b)*(a-b)` accumulated left-to-right
-  * — bit-identical to DuckDB's `list_dot_product(diff, diff)` over an
-  * elementwise diff, which is what the PQ oracle replays. */
-case class SquaredDistance(left: Expression, right: Expression) extends VectorBinaryExpression {
-  override def prettyName: String = "graft_sqdist"
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val (a, b) = (l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-    val (ta, tb) = (elemType(left), elemType(right))
+  def sqDist(a: ArrayData, b: ArrayData, fa: Boolean, fb: Boolean): java.lang.Double = {
     val n = a.numElements()
     if (b.numElements() != n) return null
     var s = 0.0
     var i = 0
     while (i < n) {
-      val d = get(a, i, ta) - get(b, i, tb)
+      val d = at(a, i, fa) - at(b, i, fb)
       s += d * d
       i += 1
     }
     s
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val (ta, tb) = (elemType(left), elemType(right))
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val d = ctx.freshName("d")
-      s"""
-         |int $n = $a.numElements();
-         |if ($b.numElements() != $n) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $s = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    double $d = ${getterJava(a, i, ta)} - ${getterJava(b, i, tb)};
-         |    $s += $d * $d;
-         |  }
-         |  ${ev.value} = $s;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): SquaredDistance =
-    copy(left = l, right = r)
-}
-
-object VectorExpressions {
-  /** Codegen'd dot product Column. */
-  def dot(a: Column, b: Column): Column =
-    Bridge.column(DotProduct(Bridge.expression(a), Bridge.expression(b)))
-
-  /** Codegen'd fused squared L2 distance Column. */
-  def sqDist(a: Column, b: Column): Column =
-    Bridge.column(SquaredDistance(Bridge.expression(a), Bridge.expression(b)))
-
-  /** Codegen'd fused cosine similarity Column. */
-  def cosine(a: Column, b: Column): Column =
-    Bridge.column(CosineSimilarity(Bridge.expression(a), Bridge.expression(b)))
 }

@@ -104,6 +104,37 @@ class GraftFunctionsSpec extends SparkSpec {
     assert(r.getBoolean(1) === false)
   }
 
+  test("literal arguments reject null, non-literal and non-integral values with the usage") {
+    GraftFunctions.register(spark)
+    val bad = Seq(
+      "graft_shingles(array('a', 'b'), NULL)" -> "graft_shingles(",
+      "graft_shingles(array('a', 'b'), 2.5)" -> "graft_shingles(",
+      "graft_shingles(array('a', 'b'), id)" -> "graft_shingles(",
+      "graft_shingles(array('a', 'b'), 'two')" -> "graft_shingles(",
+      "graft_shingles(array('a', 'b'), 3000000000)" -> "graft_shingles(",
+      "graft_video_frame_ranges(CAST('x' AS BINARY), NULL, true)" -> "graft_video_frame_ranges(",
+      "graft_video_frame_ranges(CAST('x' AS BINARY), 2, NULL)" -> "graft_video_frame_ranges(",
+      "graft_video_frame_ranges(CAST('x' AS BINARY), 1.5, true)" -> "graft_video_frame_ranges(",
+      "graft_http_gate(CAST('x' AS BINARY), NULL, 'text/')" -> "graft_http_gate(",
+      "graft_http_gate(CAST('x' AS BINARY), 200, NULL)" -> "graft_http_gate(",
+      "graft_http_gate(CAST('x' AS BINARY), 200.5, 'text/')" -> "graft_http_gate(",
+      "graft_zvalue(id, id, NULL)" -> "graft_zvalue(",
+      "graft_zvalue(id, id, 2.5)" -> "graft_zvalue(",
+      "graft_quantile(id, NULL)" -> "graft_quantile(",
+      "graft_quantile(id, 'half')" -> "graft_quantile(")
+    for ((call, usage) <- bad) {
+      val e = intercept[Exception](spark.sql(s"SELECT $call FROM range(3)").collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).toSeq
+      assert(msgs.exists(_.contains(usage)), s"$call: ${e.getClass.getName}: ${msgs.mkString(" | ")}")
+    }
+    // well-formed literals of other integral or decimal spellings still work
+    val r = spark.sql("""SELECT graft_shingles(array('a', 'b', 'c'), 2L) AS sh,
+      |  graft_quantile(id, 0.5D) AS q FROM range(4)""".stripMargin).collect()(0)
+    assert(r.getSeq[String](0) === Seq("a b", "b c"))
+    assert(r.getDouble(1) === 1.5)
+  }
+
   test("GraftExtensions constructs and exposes the full function set") {
     val ext = new GraftExtensions
     assert(GraftFunctions.all.map(_._1).toSet ==

@@ -29,6 +29,23 @@ class SketchDistinctSpec extends SparkSpec {
     assert(got.forall(_ >= 0L), "mix63 output must be non-negative")
   }
 
+  test("Mix63 known answers: fmix64 masked to 63 bits") {
+    // fixed outputs, so the expression and Mix63.apply cannot drift together
+    val known = Seq(
+      0L -> 0L,
+      1L -> 3771409529372330796L,
+      -1L -> 7256831767414464289L,
+      Long.MinValue -> 1114649775525962899L,
+      Long.MaxValue -> 3150617518162374122L,
+      25214903917L -> 2636245432631000862L,
+      -7046029254386353131L -> 2062761817371520746L,
+      2862933555777941757L -> 2674262444990293968L)
+    val got = known.map(_._1).toDF("x").repartition(2)
+      .select(col("x"), Mix63.mix63(col("x"))).as[(Long, Long)].collect().toMap
+    assert(got === known.toMap)
+    assert(known.forall { case (x, want) => Mix63(x) == want })
+  }
+
   test("pinnedHash avalanches short sequential keys (rho is geometric)") {
     // the regression that motivated mix63: 20k 'item-N' keys must fill
     // HLL rank buckets geometrically, not cluster by string structure
