@@ -1,21 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Benchmark main — runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
-  * prints one JSON line. Results are forced through the `noop` sink so the
-  * FULL plan executes (a bare count() would let Spark prune projections). */
+/** Benchmark main — runs every SparkEntry query on SPARK_GRAFT_SF_DIR
+  * through the `noop` sink ([[Harness.noop]]), writes the full result
+  * line to `bench_last.json` and prints a compact headline as its last
+  * stdout line. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cores(32))
     // warm up parquet readers / codegen so the first query isn't charged
     // for one-time JVM+session costs
     Seq("lineitem", "orders", "events", "documents", "embeddings").foreach { t =>
@@ -44,25 +36,6 @@ object Bench {
     }.orElse(sys.env.get("SPARK_GRAFT_MEDIAN_OF").map(parseN("SPARK_GRAFT_MEDIAN_OF", _)))
       .getOrElse(3))
 
-    def sweep(): Unit = {
-      // Between runs (OUTSIDE the timed region): drop every cached /
-      // localCheckpoint'ed block the query pinned. Queries are independent
-      // jobs; without the sweep 150+ queries' storage accumulates in the
-      // shared JVM and GC-thrashes the late-alphabet queries (measured:
-      // 2s medians spiking to 20-90s once storage piles up).
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.valuesIterator
-        .foreach(_.unpersist(blocking = false))
-      // Terminated StreamingQueries leave their state-store providers
-      // (with every retained version's state map) loaded until the
-      // maintenance thread gets to them, and each memory sink pins its
-      // results behind a temp view forever. Both are dead weight once the
-      // query's result has been consumed.
-      org.apache.spark.sql.graftx.Bridge.unloadStreamState()
-      spark.catalog.listTables().collect()
-        .withFilter(_.isTemporary).foreach(t => spark.catalog.dropTempView(t.name))
-    }
-
     // ---- machine anchor: make the recorded artifact self-describing ----
     // Raw totals drift 1.5-2x with fleet co-tenancy (r10 recorded 209.9s
     // where a quiet-window rerun of identical code measured 180.8s). Run
@@ -76,7 +49,7 @@ object Bench {
     val anchorBaseline = 20.2 // r6/r7 clean-window micro_total, local[32]
     def anchorOnce(): Double = {
       val a = graft.tools.MicroBench.run(spark).map(_._2).sum
-      sweep(); System.gc()
+      Harness.sweep(spark); System.gc()
       a
     }
     val anchorRetries = sys.env.get("SPARK_GRAFT_ANCHOR_RETRIES")
@@ -110,15 +83,12 @@ object Bench {
     // per-query regression can be checked against the machine speed AT
     // THAT POINT of the run instead of only at the endpoints.
     import org.apache.spark.sql.functions.{col, lit, min => fmin, max => fmax, avg, stddev_pop, pmod, xxhash64}
-    def rollingAnchor(): Double = {
-      val t0 = System.nanoTime()
+    def rollingAnchor(): Double = Harness.noop {
       val base = spark.range(10000000L).select(
         (pmod(xxhash64(col("id")), lit(10000L)).cast("double") / 100.0).as("d1"))
       base.agg(fmin(col("d1")), fmax(col("d1")), avg(col("d1")),
         stddev_pop(col("d1"))).collect()
       base.filter(col("d1") > 50.0)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
     }
     val rollingEvery = sys.env.get("SPARK_GRAFT_ROLLING_EVERY")
       .flatMap(_.toIntOption).getOrElse(50)
@@ -133,13 +103,10 @@ object Bench {
       val runs = scala.collection.mutable.ArrayBuffer.empty[Double]
       var failed = false
       while (runs.size < medianOf && !failed) {
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          runs += (System.nanoTime() - t0) / 1e9
-        } catch { case e: Throwable =>
+        try runs += Harness.noop(fn(spark, sfDir))
+        catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: $e"); failed = true }
-        sweep()
+        Harness.sweep(spark)
       }
       val sorted = runs.sorted
       val secs = if (failed) None
@@ -156,7 +123,7 @@ object Bench {
       if (qIdx % 8 == 0) System.gc()
       if (rollingEvery > 0 && qIdx % rollingEvery == 0) {
         val a = rollingAnchor()
-        sweep()
+        Harness.sweep(spark)
         rolling += qIdx -> a
         System.err.println(f"[bench] rolling anchor @$qIdx: $a%.2f s")
       }
@@ -167,6 +134,7 @@ object Bench {
     val qs = timed.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val total = timed.map(_._2).sum
     val anchorClose = if (anchorRetries > 0) anchorOnce() else -1.0
+    // Locale.ROOT: a comma-decimal default locale would emit invalid JSON
     def num(d: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
     // Machine-independent headline: total × baseline/anchor, embedded so
@@ -181,46 +149,27 @@ object Bench {
       else -1.0
     val rollingJson = rolling.map { case (i, a) => s"[$i,${num(a)}]" }
       .mkString("[", ",", "]")
-    val failedJson = failedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val marker = s""","failed":$failedJson""" +
-      (if (stagingFailed) ""","bucket_staging_failed":true""" else "") +
+    def names(ns: Seq[String]): String = ns.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val marker = (if (stagingFailed) ""","bucket_staging_failed":true""" else "") +
       (if (anchorRetries > 0)
         s""","anchor_sec":${num(anchorSec)},"anchor_close_sec":${num(anchorClose)}""" +
           s""","anchor_baseline_sec":$anchorBaseline,"anchor_attempts":$anchorAttempts""" +
           s""","value_anchor_norm":${num(anchorNorm)}"""
        else "") +
       (if (rolling.nonEmpty) s""","rolling_anchors":$rollingJson""" else "")
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","runs":$medianOf$marker}"""
-    println(fullLine)
-    // The driver's bench parse has returned null since round 9: under sbt
-    // every stdout line arrives wrapped in "[info] " and the >4 KB full
-    // line's HEAD (holding the total) falls out of tail-window recorders.
-    // Two driver-parseable channels, additions only:
-    //  1. the full line lands in a FILE at a fixed path (bench_last.json)
-    //  2. the full line is written BARE to the process's real stdout fd,
-    //     bypassing sbt's logger wrap (sbt swaps System.out, not fd 1)
+    // The full line carries every face (over 4 KB) and goes to a file;
+    // stdout ends with a compact headline (the 10 slowest and at most 10
+    // failed faces, under 1.5 KB) so a reader that keeps only the tail of
+    // the output still parses the total.
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","runs":$medianOf,"failed":${names(failedNames)}$marker}"""
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_last.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (fullLine + "\n").getBytes("UTF-8"))
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $outPath: $e") }
-    try {
-      val raw = new java.io.PrintStream(
-        new java.io.FileOutputStream(java.io.FileDescriptor.out), true, "UTF-8")
-      raw.println(fullLine) // do NOT close: fd 1 belongs to the process
-      raw.flush()
-    } catch { case _: Throwable => }
-    // The full line above is now >4 KB (220+ queries) and recording
-    // harnesses that keep only an output TAIL truncate its head — which
-    // holds the total. Repeat the headline numbers LAST in a compact
-    // line (slowest 10 queries only) so any tail window preserves them.
     val top = timed.sortBy(-_._2).take(10)
-      // Locale.ROOT: the f-interpolator uses the JVM default locale, and a
-      // comma-decimal locale (de_DE) would emit invalid JSON here
-      .map { case (k, v) => "\"" + k + "\":" +
-        String.format(java.util.Locale.ROOT, "%.3f", Double.box(v)) }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"total_compact","value":$total,"unit":"sec","n_queries":${timed.size},"slowest":$top,"sf":"$sfDir","runs":$medianOf$marker}""")
+      .map { case (k, v) => "\"" + k + "\":" + num(v) }.mkString("{", ",", "}")
     spark.stop()
+    println(s"""{"metric":"total_compact","value":$total,"unit":"sec","n_queries":${timed.size},"slowest":$top,"sf":"$sfDir","runs":$medianOf,"n_failed":${failedNames.size},"failed":${names(failedNames.take(10))}$marker}""")
   }
 }

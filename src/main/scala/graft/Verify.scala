@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,21 +7,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd+ args: restrict to the named queries (dev iteration)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // streaming queries grade through a MEMORY sink (driver-side by
-      // definition); at sf10 q_stream_session's Complete-mode result is
-      // ~1 GiB and trips the 1 GiB default. The sink is harness, not
-      // operator: production session streams write to real sinks.
-      .config("spark.driver.maxResultSize", "4g")
-      // driver testdata events.ts is TIMESTAMP(NANOS); read as long nanos
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cores(4))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only.contains(name) }
@@ -32,15 +17,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // per-query storage sweep (same rationale as Bench): caches and
-      // localCheckpoints are query-private; don't let 147 of them pile up
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.valuesIterator
-        .foreach(_.unpersist(blocking = false))
-      // ... nor finished streams' state-store providers / memory sinks
-      org.apache.spark.sql.graftx.Bridge.unloadStreamState()
-      spark.catalog.listTables().collect()
-        .withFilter(_.isTemporary).foreach(t => spark.catalog.dropTempView(t.name))
+      Harness.sweep(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -265,10 +265,8 @@ object TextExpressions {
     * The HOF formulation ran one interpreted split + transform/filter/
     * aggregate pass PER SIGNAL REFERENCE (CodegenFallback → no CSE):
     * qualityScore alone re-split the text ~5×, langId ~9×. Null text
-    * yields a null struct, so every derived signal stays null. The HOF
-    * forms agree only while `size(null)` is null, i.e. with
-    * `spark.sql.legacy.sizeOfNull=false` or ANSI mode on; under the
-    * legacy setting with ANSI off they give -1-based signals instead.
+    * yields a null struct, so every derived signal stays null (the HOF
+    * forms agree under the session confs of [[graft.Harness]]).
     * Differential-spec'd against the HOF forms. */
   def tokenMarkerStats(c: Column, markers: Seq[String]): Column =
     TokenMarkerStats.of(Seq(c), markers)

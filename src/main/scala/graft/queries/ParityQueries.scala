@@ -42,8 +42,10 @@ object ParityQueries {
       val li = t(s, dir, "lineitem")
         .withColumn("qty_n", when(col("l_partkey") % 11 =!= 0, col("l_quantity")))
         .withColumn("delta", col("l_quantity") - lit(25.0))
+      // qty_n breaks ties on (l_orderkey, l_linenumber), as in the oracle:
+      // first takes the smallest tied value, last the largest
       val out = A.aggregateByOrdered(li, "l_returnflag",
-        Seq(col("l_orderkey"), col("l_linenumber")), Seq(
+        Seq(col("l_orderkey"), col("l_linenumber"), col("qty_n")), Seq(
         "qty_n" -> Seq(A.Minimum, A.Maximum, A.Mean, A.Length, A.Median, A.Sum,
           A.Variance, A.StdDev, A.First, A.Last),
         "delta" -> Seq(A.Rsi)))
@@ -1263,8 +1265,8 @@ object ParityQueries {
         |  round(coalesce(sum(qty_n), 0), 4) AS qty_n_sum,
         |  round(var_pop(qty_n), 4) AS qty_n_variance,
         |  round(stddev_pop(qty_n), 4) AS qty_n_std_dev,
-        |  (first(qty_n ORDER BY ord) FILTER (WHERE qty_n IS NOT NULL))::DOUBLE AS qty_n_first,
-        |  (last(qty_n ORDER BY ord) FILTER (WHERE qty_n IS NOT NULL))::DOUBLE AS qty_n_last,
+        |  (first(qty_n ORDER BY ord, qty_n) FILTER (WHERE qty_n IS NOT NULL))::DOUBLE AS qty_n_first,
+        |  (last(qty_n ORDER BY ord, qty_n) FILTER (WHERE qty_n IS NOT NULL))::DOUBLE AS qty_n_last,
         |  round(100*avg(greatest(delta,0)) / (avg(greatest(delta,0)) - avg(least(delta,0))), 4) AS delta_rsi
         |FROM li GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
 

@@ -192,10 +192,6 @@ object PipelineQueries {
     * the entry-list length, all computed per row and parsed back out.
     * Keyframe grid uniform by construction ⇒ the snap `⌊idx/gop⌋·gop` is
     * exactly replayable in SQL. */
-  // dev-probe hook (tools/KfProbe): expose the keyframe synth
-  private[graft] def kfProbeSynth(docs: DataFrame): DataFrame =
-    synthVideoKeyframePayloads(docs)
-
   private def synthVideoKeyframePayloads(docs: DataFrame): DataFrame = {
     val d = docs.select(col("doc_id"),
       (when(col("doc_id") % 3 === 0, 24).when(col("doc_id") % 3 === 1, 25)

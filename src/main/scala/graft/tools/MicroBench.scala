@@ -1,9 +1,10 @@
 package graft.tools
 
+import graft.Harness
 import graft.core.Table
 import graft.functions.InterpolatedQuantile
 import graft.operators.{Aggregates, Stats}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -22,14 +23,7 @@ import org.apache.spark.sql.types._
 object MicroBench {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 10000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cores(32))
     val results = run(spark, n)
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     println(s"""{"metric":"micro_total","value":${results.map(_._2).sum},"unit":"sec","rows":$n,"workloads":$qs}""")
@@ -57,7 +51,6 @@ object MicroBench {
         .otherwise(col("d1"))) // ~30% nulls, like Benchmarks.cpp:258-271
     val tmp = java.nio.file.Files.createTempDirectory("graft_micro").toString
 
-    def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
     def time(name: String)(body: => Unit): (String, Double) = {
       val t0 = System.nanoTime()
       body
@@ -66,35 +59,35 @@ object MicroBench {
       name -> secs
     }
 
-    noop(withNulls) // warm up source generation path
+    Harness.noop(withNulls) // warm up source generation path
     val results = Seq(
       time("parquet_write")(base.write.mode("overwrite").parquet(s"$tmp/t.parquet")),
-      time("parquet_read")(noop(spark.read.parquet(s"$tmp/t.parquet"))),
+      time("parquet_read")(Harness.noop(spark.read.parquet(s"$tmp/t.parquet"))),
       time("csv_write")(base.write.mode("overwrite").option("header", true).csv(s"$tmp/t.csv")),
-      time("csv_read")(noop(spark.read.option("header", true)
+      time("csv_read")(Harness.noop(spark.read.option("header", true)
         .option("inferSchema", true).csv(s"$tmp/t.csv"))),
-      time("count_values")(noop(Stats.countValues(base, "i64"))),
-      time("min_max_mean")(noop(base.agg(min("d1"), max("d1"), avg("d1")))),
-      time("median_var_std_sum_q13")(noop(base.agg(
+      time("count_values")(Harness.noop(Stats.countValues(base, "i64"))),
+      time("min_max_mean")(Harness.noop(base.agg(min("d1"), max("d1"), avg("d1")))),
+      time("median_var_std_sum_q13")(Harness.noop(base.agg(
         InterpolatedQuantile.medianCol(col("d1")).as("median"),
         var_pop(col("d1")).as("var"), stddev_pop(col("d1")).as("std"),
         sum(col("d1")).as("sum"),
         InterpolatedQuantile.quantileCol(col("d1"), 1.0 / 3).as("q13")))),
       time("correlation_matrix")(
         Stats.correlationMatrix(base.select("i64", "d1", "d2", "d3")).collect()),
-      time("filter_gt")(noop(base.filter(col("d1") > 50.0))),
-      time("map_plus")(noop(base.select((col("d1") + 50.0).as("v")))),
-      time("filter_string_eq")(noop(base.filter(col("s") === "cat_3"))),
-      time("drop_na")(noop(withNulls.na.drop(Seq("dn")))),
-      time("fill_na")(noop(withNulls.na.fill(0.0, Seq("dn")))),
+      time("filter_gt")(Harness.noop(base.filter(col("d1") > 50.0))),
+      time("map_plus")(Harness.noop(base.select((col("d1") + 50.0).as("v")))),
+      time("filter_string_eq")(Harness.noop(base.filter(col("s") === "cat_3"))),
+      time("drop_na")(Harness.noop(withNulls.na.drop(Seq("dn")))),
+      time("fill_na")(Harness.noop(withNulls.na.fill(0.0, Seq("dn")))),
       // fromIndexed: `id` is already the 0..n-1 row index, like the
       // reference's implicit Arrow ordering — no sort/index-assign pass
-      time("interpolate_30pct_nulls")(noop(
+      time("interpolate_30pct_nulls")(Harness.noop(
         Table.fromIndexed(withNulls.select("id", "dn"), "id").interpolateAt("dn").toDF)),
       time("groupby_multiagg_24cols")({
         val wide = base.select(col("i64") +:
           (0 until 24).map(i => (col("d1") * (i + 1)).as(s"c$i")): _*)
-        noop(Aggregates.aggregateByOrdered(wide, "i64", Seq(col("c0")),
+        Harness.noop(Aggregates.aggregateByOrdered(wide, "i64", Seq(col("c0")),
           (0 until 24).map(i => s"c$i" -> Seq(Aggregates.Minimum, Aggregates.Maximum,
             Aggregates.Mean, Aggregates.Length))))
       }))

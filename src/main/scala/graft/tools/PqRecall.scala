@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.operators.Similarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
@@ -20,11 +19,7 @@ object PqRecall {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val k = args.lift(1).map(_.toInt).getOrElse(10)
     val nQ = args.lift(2).map(_.toInt).getOrElse(50)
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Harness.session(16)
     spark.sparkContext.setLogLevel("ERROR")
 
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")

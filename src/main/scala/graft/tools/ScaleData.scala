@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up generator: replicates an existing testdata SF directory N times
@@ -40,15 +40,8 @@ object ScaleData {
     val Array(src, dst, fStr) = args
     val factor = fStr.toInt
     require(factor >= 1, s"factor must be >= 1: $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.Harness.cores(32)
+    val spark = graft.Harness.session(cpus)
 
     def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
     // Fact tables are written across max(cpus, factor) files: the source
@@ -57,7 +50,7 @@ object ScaleData {
     // ~400 MB each — a scan gets ~7 splits for 32 cores and every heavy
     // query downstream starves (measured 10-20x instead of ~linear).
     // Real warehouse layouts are many ~100 MB files; reproduce that.
-    val outParts = math.max(cpus.toInt, factor)
+    val outParts = math.max(cpus, factor)
     def write(df: DataFrame, t: String, repartition: Boolean = true): Unit = {
       val out = if (repartition) df.repartition(outParts) else df
       out.write.mode("overwrite").parquet(s"$dst/$t.parquet")

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.streaming.StreamOps
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming state-size measurement for the LSH dedup registry — turns
@@ -17,14 +16,9 @@ import org.apache.spark.sql.streaming.Trigger
 object StateSize {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/repo/scratch/sf1")
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(16)
+    // 8 state partitions: the PLANS.md state-size table was measured so
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
 
     val src = s"$sfDir/documents.parquet"
     val schema = spark.read.parquet(src).schema

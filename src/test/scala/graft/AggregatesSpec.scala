@@ -32,6 +32,35 @@ class AggregatesSpec extends SparkSpec {
     assert(got == want)
   }
 
+  test("q_aggregate_by: a tie on (l_orderkey, l_linenumber) resolves alike in the face and its DuckDB oracle, in either input order") {
+    import scala.sys.process._
+    import spark.implicits._
+    assume(scala.util.Try(Seq("python3", "-c", "import duckdb")
+      .!(ProcessLogger(_ => ())) == 0).getOrElse(false),
+      "the oracle engine (python3 with duckdb) is not installed")
+    val oracle = "SELECT l_returnflag, qty_n_first, qty_n_last FROM (" +
+      SparkEntry.oracleSql("q_aggregate_by") + ")"
+    val tied = Seq((0L, 7, 1L, 36.0, "R"), (0L, 7, 2L, 1.0, "R"))
+    for (rows <- Seq(tied, tied.reverse)) {
+      val dir = java.nio.file.Files.createTempDirectory("graft_aggtie").toString
+      rows.toDF("l_orderkey", "l_linenumber", "l_partkey", "l_quantity", "l_returnflag")
+        .coalesce(1).write.parquet(s"$dir/lineitem.parquet")
+      try {
+        val face = SparkEntry.queries("q_aggregate_by")(spark, dir)
+          .select("l_returnflag", "qty_n_first", "qty_n_last").collect()
+          .map(_.toSeq.mkString(",")).toSeq
+        val duck = Seq("python3", "-c",
+          """import sys, duckdb
+            |con = duckdb.connect()
+            |con.execute(f"CREATE VIEW lineitem AS SELECT * FROM '{sys.argv[1]}/lineitem.parquet/*.parquet'")
+            |for r in con.execute(sys.argv[2]).fetchall(): print(",".join(map(str, r)))
+            |""".stripMargin, dir, oracle).!!.linesIterator.toSeq
+        assert(face === Seq("R,1.0,36.0"))
+        assert(duck === face)
+      } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
+  }
+
   test("aggregateBy: naming, double outputs, null gates, first/last, RSI") {
     import spark.implicits._
     val df = Seq[(String, java.lang.Double, Long)](

@@ -244,6 +244,10 @@ class PipelineSpec extends SparkSpec {
         .select(col("doc_id"), array((0 until 8).map(j => col(s"m$j")): _*).as("sig"))
     }
     assert(viaParts.except(viaScalar).isEmpty && viaScalar.except(viaParts).isEmpty)
+    // the family's explode + k-min aggregate form (no native kernel)
+    val viaAgg = Dedup.minhashSignatures(df, "text", "doc_id", k = 8, shingleN = 3,
+      family = Dedup.MinhashFamily.polynomial.copy(sigArray = None))
+    assert(viaParts.except(viaAgg).isEmpty && viaAgg.except(viaParts).isEmpty)
   }
 
   test("native char-gram counts/top-ranks equal the HOF explode+window forms") {
@@ -313,49 +317,45 @@ class PipelineSpec extends SparkSpec {
     // empty middle token, "" is one empty token, edge spaces make empty
     // tokens), multibyte text (BPE counts code points, not bytes), and
     // null text (every derived signal stays null — size(null) semantics)
+    // null signals agree only while size(null) is null: Harness.confs
+    // pins spark.sql.legacy.sizeOfNull=false
     import spark.implicits._
-    // the HOF forms' null signals hold only while size(null) is null
-    val sizeOfNull = spark.conf.getOption("spark.sql.legacy.sizeOfNull")
-    spark.conf.set("spark.sql.legacy.sizeOfNull", "false")
-    try {
-      val texts = Seq((1L, "the cat the hat a table"), (2L, "a  b"), (3L, ""),
-        (4L, " x "), (5L, "héllo wörld héllo längwörd日本語のテキスト here"),
-        (6L, "join group window join"), (7L, "data query stream data data"),
-        (8L, "tail "), (9L, null: String),
-        (10L, "the the the a a table join group window data query stream"))
-      val df = texts.toDF("id", "text")
-      val t = col("text")
-      val viaNative = df.select(col("id"),
-        TextOps.tokenCountBpeIsh(t).as("bpe"),
-        TextOps.uniqueTokenRatio(t).as("uniq"),
-        TextOps.stopwordRatio(t).as("stop"),
-        TextOps.qualityScore(t).as("q"),
-        TextOps.langId(t).as("lang"))
-      val viaHof = df.select(col("id"),
-        TextOps.tokenCountBpeIshHof(t).as("bpe"),
-        TextOps.uniqueTokenRatioHof(t).as("uniq"),
-        TextOps.stopwordRatioHof(t).as("stop"),
-        TextOps.qualityScoreHof(t).as("q"),
-        TextOps.langIdHof(t).as("lang"))
-      val n = viaNative.collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
-      val h = viaHof.collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
-      assert(n === h) // exact — doubles compare bitwise through ===
-      // null text: every signal is null, exactly like the HOF forms
-      assert(viaNative.filter(col("id") === 9L).collect().head.toSeq.tail
-        .forall(_ == null))
-      // langScore falls back to the HOF form for markers outside the fixed
-      // scan vocabulary (public-API safety), with the same LongType result
-      val customDf = df.filter(col("id") === 1L)
-        .select(TextOps.langScore(t, Seq("cat" -> 2, "hat" -> 1)).as("s"))
-      import org.apache.spark.sql.types.LongType
-      assert(customDf.schema("s").dataType === LongType)
-      assert(customDf.collect().head.getLong(0) === 3L)
-      assert(df.select(TextOps.langScore(t, Seq("the" -> 1)).as("s"))
-        .schema("s").dataType === LongType)
-      // a marker outside the scan vocabulary fails at plan-build time
-      intercept[IllegalArgumentException](TextOps.markerCount(t, "cat"))
-    } finally sizeOfNull.fold(spark.conf.unset("spark.sql.legacy.sizeOfNull"))(
-      spark.conf.set("spark.sql.legacy.sizeOfNull", _))
+    val texts = Seq((1L, "the cat the hat a table"), (2L, "a  b"), (3L, ""),
+      (4L, " x "), (5L, "héllo wörld héllo längwörd日本語のテキスト here"),
+      (6L, "join group window join"), (7L, "data query stream data data"),
+      (8L, "tail "), (9L, null: String),
+      (10L, "the the the a a table join group window data query stream"))
+    val df = texts.toDF("id", "text")
+    val t = col("text")
+    val viaNative = df.select(col("id"),
+      TextOps.tokenCountBpeIsh(t).as("bpe"),
+      TextOps.uniqueTokenRatio(t).as("uniq"),
+      TextOps.stopwordRatio(t).as("stop"),
+      TextOps.qualityScore(t).as("q"),
+      TextOps.langId(t).as("lang"))
+    val viaHof = df.select(col("id"),
+      TextOps.tokenCountBpeIshHof(t).as("bpe"),
+      TextOps.uniqueTokenRatioHof(t).as("uniq"),
+      TextOps.stopwordRatioHof(t).as("stop"),
+      TextOps.qualityScoreHof(t).as("q"),
+      TextOps.langIdHof(t).as("lang"))
+    val n = viaNative.collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
+    val h = viaHof.collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
+    assert(n === h) // exact — doubles compare bitwise through ===
+    // null text: every signal is null, exactly like the HOF forms
+    assert(viaNative.filter(col("id") === 9L).collect().head.toSeq.tail
+      .forall(_ == null))
+    // langScore falls back to the HOF form for markers outside the fixed
+    // scan vocabulary (public-API safety), with the same LongType result
+    val customDf = df.filter(col("id") === 1L)
+      .select(TextOps.langScore(t, Seq("cat" -> 2, "hat" -> 1)).as("s"))
+    import org.apache.spark.sql.types.LongType
+    assert(customDf.schema("s").dataType === LongType)
+    assert(customDf.collect().head.getLong(0) === 3L)
+    assert(df.select(TextOps.langScore(t, Seq("the" -> 1)).as("s"))
+      .schema("s").dataType === LongType)
+    // a marker outside the scan vocabulary fails at plan-build time
+    intercept[IllegalArgumentException](TextOps.markerCount(t, "cat"))
   }
 
   test("native minhash kernel equals the k HOF array_min passes (stream shape)") {
