@@ -48,6 +48,35 @@ object Harness {
     n.toIntOption.getOrElse(throw new IllegalArgumentException(
       s"SPARK_GRAFT_CPUS must be an integer, got '$n'")))
 
+  /** Temp directories handed out by [[tempDir]]: swept ones, and ones that
+    * live until the JVM exits. */
+  private val sweptDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+  private val exitDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+  sys.addShutdownHook(deleteAll(exitDirs))
+
+  /** A new directory under `java.io.tmpdir` named `prefix…`, for a face's
+    * scratch files. The next [[sweep]] deletes it with everything under it
+    * (faces are consumed before the sweep); with `untilExit` it lives
+    * until the JVM exits instead, for staged data that later faces reuse. */
+  def tempDir(prefix: String, untilExit: Boolean = false): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    (if (untilExit) exitDirs else sweptDirs).add(d)
+    d
+  }
+
+  /** Delete each directory of `dirs` and everything under it, best effort:
+    * a sweep or a shutdown must not throw. */
+  private def deleteAll(dirs: java.util.Queue[java.nio.file.Path]): Unit =
+    Iterator.continually(dirs.poll()).takeWhile(_ != null).foreach { root =>
+      try {
+        import scala.jdk.CollectionConverters._
+        val walk = java.nio.file.Files.walk(root)
+        try walk.iterator().asScala.toSeq.sortBy(-_.getNameCount) // files before their parents
+          .foreach(java.nio.file.Files.deleteIfExists)
+        finally walk.close()
+      } catch { case scala.util.control.NonFatal(_) => }
+    }
+
   /** Free what a finished face left in the session; faces are independent
     * jobs. Without it 150+ faces' cached and `localCheckpoint`ed blocks
     * pile up in one JVM and GC-thrash the late-alphabet faces (measured:
@@ -55,7 +84,8 @@ object Harness {
     * state-store providers, with every retained version's state map,
     * loaded until the maintenance thread gets to them, and each memory
     * sink pins its result behind a temp view for good; both are dead
-    * weight once the result has been consumed. */
+    * weight once the result has been consumed, and so are the faces'
+    * [[tempDir]]s. */
   def sweep(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.valuesIterator
@@ -63,6 +93,7 @@ object Harness {
     org.apache.spark.sql.graftx.Bridge.unloadStreamState()
     spark.catalog.listTables().collect()
       .withFilter(_.isTemporary).foreach(t => spark.catalog.dropTempView(t.name))
+    deleteAll(sweptDirs)
   }
 
   /** Seconds to build `df` and run it to the `noop` sink, which executes

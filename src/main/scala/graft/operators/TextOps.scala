@@ -1086,8 +1086,11 @@ object TextOps {
         graft.expr.TextExpressions.charGramTopRanks(col(textCol), n, m)).as("gr"))
       .select(col(idCol), col("gr.gram").as("gram"), col("gr.rank").as("__rank"))
     // The lazy profiles feed three consumers (langs distinct + two
-    // broadcasts) but AQE exchange reuse dedupes the twin train subtrees
-    // at runtime and the single job overlaps train with the doc-side
+    // broadcasts). Exchange reuse does NOT dedupe the two training
+    // subtrees: the join side carries an inferred isnotnull(lang) filter
+    // the langs side lacks, so training's scan, explode and partial
+    // aggregate run twice (q_langid_ct plans 13 whole-stage-codegen
+    // stages). The single job still overlaps train with the doc-side
     // pass across cores — measured FASTER than collecting the profiles
     // to a local relation (interleaved A/B: lazy 3.49 s vs collected
     // 5.80 s at sf0.1/local[32]; the materialized form serializes the

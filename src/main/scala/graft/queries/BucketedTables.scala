@@ -20,20 +20,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object BucketedTables {
 
   private val reg = scala.collection.mutable.Map[(String, String), String]()
-  // staged temp dirs die with the JVM (per-UUID paths would otherwise
-  // accumulate a bucketed copy of the fact tables per bench/verify run)
-  private val stagedDirs = scala.collection.mutable.ArrayBuffer[java.nio.file.Path]()
-  sys.addShutdownHook {
-    stagedDirs.foreach { root =>
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(root).iterator().asScala.toSeq
-          .sortBy(-_.getNameCount) // files before their parents
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => } // best-effort: shutdown must not throw
-    }
-  }
-
   private def stage(s: SparkSession, dir: String, logical: String,
       srcTable: String, bucketCols: Seq[String], buckets: Int = 8): DataFrame =
     synchronized {
@@ -43,8 +29,10 @@ object BucketedTables {
         case None =>
           val tbl = s"graft_bkt_${logical}_" +
             java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-          val root = java.nio.file.Files.createTempDirectory(s"graft_bkt_$logical")
-          stagedDirs += root
+          // later faces reuse the staged table, so its dir lives until the
+          // JVM exits (per-UUID paths would otherwise accumulate a bucketed
+          // copy of the fact tables per bench/verify run)
+          val root = graft.Harness.tempDir(s"graft_bkt_$logical", untilExit = true)
           graft.operators.Layout.writeBucketed(
             s.read.parquet(s"$dir/$srcTable.parquet"), tbl, bucketCols, buckets,
             Some(root.resolve("t").toString))

@@ -448,7 +448,7 @@ object PipelineQueries {
     // a file's footer, read on the driver without Spark's inference job
     // (a directory still goes through the inference)
     val schema = graft.sources.VersionedTable.scanParquet(s, Seq(tableFile)).schema
-    val stageDir = java.nio.file.Files.createTempDirectory(prefix)
+    val stageDir = graft.Harness.tempDir(prefix)
     val staged = stageParquet(tableFile, stageDir)
     val sink = prefix + java.util.UUID.randomUUID().toString.replace("-", "")
     // Stateful streaming allocates state stores per shuffle partition;
@@ -507,7 +507,7 @@ object PipelineQueries {
       (mkJoin: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val schema = graft.sources.VersionedTable.scanParquet(s, Seq(tableFile)).schema
     val dirs = Seq("l", "r").map { side =>
-      val d = java.nio.file.Files.createTempDirectory(prefix + side)
+      val d = graft.Harness.tempDir(prefix + side)
       (d, stageParquet(tableFile, d))
     }
     val Seq(l, r) = dirs.map { case (d, _) =>
@@ -1899,7 +1899,7 @@ object PipelineQueries {
     "q_ann_ivf_vt" -> ((s, dir) => {
       import graft.sources.VersionedTable
       val emb = t(s, dir, "embeddings")
-      val base = java.nio.file.Files.createTempDirectory("graft_ivfvt").toString
+      val base = graft.Harness.tempDir("graft_ivfvt").toString
       val path = base + "/emb"
       VersionedTable.create(
         emb.filter(col("vec_id") % 3 =!= 0).repartition(4), path)
@@ -2123,7 +2123,7 @@ object PipelineQueries {
     "q_table_versions" -> ((s, dir) => {
       import graft.sources.VersionedTable
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val path = java.nio.file.Files.createTempDirectory("graft_vt").toString + "/docs"
+      val path = graft.Harness.tempDir("graft_vt").toString + "/docs"
       VersionedTable.create(docs, path)
       val newRel = docs.filter(col("doc_id") % 97 =!= 0)
         .select(col("doc_id"),
@@ -2164,7 +2164,7 @@ object PipelineQueries {
     "q_table_partitions" -> ((s, dir) => {
       import graft.sources.VersionedTable
       val docs = t(s, dir, "documents").select(col("doc_id"), col("lang"), col("text"))
-      val path = java.nio.file.Files.createTempDirectory("graft_vtp").toString + "/docs"
+      val path = graft.Harness.tempDir("graft_vtp").toString + "/docs"
       VersionedTable.createPartitioned(docs, path, "lang")
       val deNew = docs.filter(col("lang") === "de" && col("doc_id") % 3 =!= 0)
         .select(col("doc_id"), col("lang"),
@@ -2197,7 +2197,7 @@ object PipelineQueries {
     "q_table_changefeed" -> ((s, dir) => {
       import graft.sources.VersionedTable
       val docs = t(s, dir, "documents").select(col("doc_id"), col("lang"), col("text"))
-      val path = java.nio.file.Files.createTempDirectory("graft_vtc").toString + "/docs"
+      val path = graft.Harness.tempDir("graft_vtc").toString + "/docs"
       VersionedTable.createPartitioned(docs, path, "lang")
       val deNew = docs.filter(col("lang") === "de" && col("doc_id") % 3 =!= 0)
         .select(col("doc_id"), col("lang"),
@@ -2222,7 +2222,7 @@ object PipelineQueries {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .repartitionByRange(4, col("n_chars"))
-      val path = java.nio.file.Files.createTempDirectory("graft_vtc2").toString +
+      val path = graft.Harness.tempDir("graft_vtc2").toString +
         "/docs"
       val v = VersionedTable.createPartitioned(docs, path, "lang")
       VersionedTable.writeStats(s, path, v, "n_chars")
@@ -2246,7 +2246,7 @@ object PipelineQueries {
       import graft.sources.VersionedTable
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      val path = java.nio.file.Files.createTempDirectory("graft_vts").toString +
+      val path = graft.Harness.tempDir("graft_vts").toString +
         "/docs"
       VersionedTable.create(
         docs.filter(col("doc_id") % 2 === 0).repartition(4), path)
@@ -2275,7 +2275,7 @@ object PipelineQueries {
     "q_table_restore" -> ((s, dir) => {
       import graft.sources.VersionedTable
       val docs = t(s, dir, "documents").select(col("doc_id"), col("lang"), col("text"))
-      val base = java.nio.file.Files.createTempDirectory("graft_vtr").toString
+      val base = graft.Harness.tempDir("graft_vtr").toString
       val path = base + "/docs"
       VersionedTable.create(docs.repartition(4), path)
       val v1 = VersionedTable.deleteWhere(s, path, col("lang") === "es")
@@ -2305,7 +2305,7 @@ object PipelineQueries {
     "q_table_stream_upsert" -> ((s, dir) => {
       import graft.sources.VersionedTable
       val docs = t(s, dir, "documents").select(col("doc_id"), col("lang"), col("text"))
-      val base = java.nio.file.Files.createTempDirectory("graft_vtsu").toString
+      val base = graft.Harness.tempDir("graft_vtsu").toString
       val a = base + "/a"; val b = base + "/b"
       VersionedTable.create(docs.repartition(4), a)
       VersionedTable.create(s.createDataFrame(
@@ -2361,7 +2361,7 @@ object PipelineQueries {
       import graft.sources.VersionedTable
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"), col("text"))
-      val path = java.nio.file.Files.createTempDirectory("graft_vtsc").toString +
+      val path = graft.Harness.tempDir("graft_vtsc").toString +
         "/docs"
       VersionedTable.create(
         docs.filter(col("doc_id") % 2 === 0).repartition(4), path)
@@ -2391,7 +2391,7 @@ object PipelineQueries {
       import graft.sources.VersionedTable
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"), col("text"))
-      val path = java.nio.file.Files.createTempDirectory("graft_vtd").toString +
+      val path = graft.Harness.tempDir("graft_vtd").toString +
         "/docs"
       VersionedTable.create(docs.repartition(4), path)
       val v1 = VersionedTable.deleteWhere(s, path, col("n_chars") % 7 === 3)
@@ -2423,7 +2423,7 @@ object PipelineQueries {
       import graft.sources.VersionedTable
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      val path = java.nio.file.Files.createTempDirectory("graft_vts").toString +
+      val path = graft.Harness.tempDir("graft_vts").toString +
         "/docs"
       VersionedTable.createPartitioned(docs, path, "lang")
       val v1 = VersionedTable.deleteWhere(s, path, col("doc_id") % 7 === 0)
@@ -2454,7 +2454,7 @@ object PipelineQueries {
       import graft.sources.VersionedTable
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      val path = java.nio.file.Files.createTempDirectory("graft_vtm").toString +
+      val path = graft.Harness.tempDir("graft_vtm").toString +
         "/docs"
       VersionedTable.createPartitioned(docs, path, "lang")
       val v1 = VersionedTable.deleteWhere(s, path,
@@ -2488,7 +2488,7 @@ object PipelineQueries {
     "q_table_upsert" -> ((s, dir) => {
       import graft.sources.VersionedTable
       val docs = t(s, dir, "documents").select(col("doc_id"), col("lang"), col("text"))
-      val path = java.nio.file.Files.createTempDirectory("graft_vtu").toString +
+      val path = graft.Harness.tempDir("graft_vtu").toString +
         "/docs"
       VersionedTable.create(docs.repartition(4), path)
       VersionedTable.deleteWhere(s, path, col("lang") === "fr")
@@ -2520,7 +2520,7 @@ object PipelineQueries {
       import graft.sources.VersionedTable
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      val path = java.nio.file.Files.createTempDirectory("graft_vte").toString +
+      val path = graft.Harness.tempDir("graft_vte").toString +
         "/docs"
       VersionedTable.create(
         docs.filter(col("doc_id") % 2 === 0).select(col("doc_id"), col("lang")),
@@ -2542,7 +2542,7 @@ object PipelineQueries {
       import graft.sources.VersionedTable
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("text"), col("n_chars"))
-      val base = java.nio.file.Files.createTempDirectory("graft_vtpipe").toString
+      val base = graft.Harness.tempDir("graft_vtpipe").toString
       val a = base + "/a"; val b = base + "/b"
       VersionedTable.create(docs.filter(col("doc_id") % 2 === 0), a)
       VersionedTable.commit(docs.filter(col("doc_id") % 2 =!= 0), a, "append")
@@ -2585,7 +2585,7 @@ object PipelineQueries {
       import graft.sources.VersionedTable
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("text"), col("n_chars"))
-      val path = java.nio.file.Files.createTempDirectory("graft_vtm").toString + "/docs"
+      val path = graft.Harness.tempDir("graft_vtm").toString + "/docs"
       val v0 = VersionedTable.createPartitioned(docs, path, "lang")
       VersionedTable.writeCounts(s, path, v0)
       VersionedTable.writeSums(s, path, v0, "n_chars")
@@ -2619,7 +2619,7 @@ object PipelineQueries {
       import graft.sources.VersionedTable
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("text"), col("n_chars"))
-      val path = java.nio.file.Files.createTempDirectory("graft_vtq").toString + "/docs"
+      val path = graft.Harness.tempDir("graft_vtq").toString + "/docs"
       val v0 = VersionedTable.createPartitioned(docs, path, "lang")
       VersionedTable.writeMoments(s, path, v0, "n_chars")
       val deNew = docs.filter(col("lang") === "de" && col("doc_id") % 3 =!= 0)
@@ -2654,7 +2654,7 @@ object PipelineQueries {
       import graft.sources.VersionedTable
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("text"), col("n_chars"))
-      val path = java.nio.file.Files.createTempDirectory("graft_vtp").toString + "/docs"
+      val path = graft.Harness.tempDir("graft_vtp").toString + "/docs"
       val v0 = VersionedTable.createPartitioned(docs, path, "lang")
       VersionedTable.writeMoments(s, path, v0, "n_chars")
       val deNew = docs.filter(col("lang") === "de" && col("doc_id") % 3 =!= 0)
@@ -2691,7 +2691,7 @@ object PipelineQueries {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .repartition(8, pmod(col("doc_id") * 2654435761L, lit(1000003L)))
-      val path = java.nio.file.Files.createTempDirectory("graft_vtk").toString + "/docs"
+      val path = graft.Harness.tempDir("graft_vtk").toString + "/docs"
       val v = VersionedTable.create(docs, path)
       VersionedTable.writeBloom(s, path, v, "doc_id")
       VersionedTable.readWhereKeys(s, path, v, "doc_id",
@@ -2837,7 +2837,7 @@ object PipelineQueries {
     "q_warc_outlinks" -> ((s, dir) => {
       import graft.expr.BinaryExpressions
       val src = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val wdir = java.nio.file.Files.createTempDirectory("graft_warcl").toString +
+      val wdir = graft.Harness.tempDir("graft_warcl").toString +
         "/shards"
       val anchors = (0 until 3).map { k =>
         concat(lit("<a href=\"http://h"),
@@ -2878,7 +2878,7 @@ object PipelineQueries {
     "q_warc_request" -> ((s, dir) => {
       import graft.expr.BinaryExpressions
       val src = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val wdir = java.nio.file.Files.createTempDirectory("graft_warcq").toString +
+      val wdir = graft.Harness.tempDir("graft_warcq").toString +
         "/shards"
       val reqs = src.select(col("doc_id"),
         concat(lit("http://corpus.example/doc/"), col("doc_id")).as("target_uri"),
@@ -2930,7 +2930,7 @@ object PipelineQueries {
     "q_warc_revisit" -> ((s, dir) => {
       import graft.expr.BinaryExpressions
       val src = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val wdir = java.nio.file.Files.createTempDirectory("graft_warcr").toString +
+      val wdir = graft.Harness.tempDir("graft_warcr").toString +
         "/shards"
       val isDup = pmod(col("doc_id"), lit(5L)) === 4
       graft.sources.WarcIO.writeSharded(src.select(
@@ -2974,7 +2974,7 @@ object PipelineQueries {
     "q_warc_http_gate" -> ((s, dir) => {
       import graft.expr.BinaryExpressions
       val src = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val wdir = java.nio.file.Files.createTempDirectory("graft_warcg").toString +
+      val wdir = graft.Harness.tempDir("graft_warcg").toString +
         "/shards"
       val statusLine = when(pmod(col("doc_id"), lit(7L)) === 0,
         lit("HTTP/1.1 404 Not Found\r\n")).otherwise(lit("HTTP/1.1 200 OK\r\n"))

@@ -297,7 +297,7 @@ object SketchQueries {
     "q_table_ndv_parts" -> ((s, dir) => {
       import graft.sources.VersionedTable
       val docs = t(s, dir, "documents").select(col("lang"), col("text"))
-      val path = java.nio.file.Files.createTempDirectory("graft_vtnp").toString +
+      val path = graft.Harness.tempDir("graft_vtnp").toString +
         "/docs"
       val v = VersionedTable.createPartitioned(docs.repartition(4), path, "lang")
       VersionedTable.writeNdv(s, path, v, "text", p = TableNdvP)
@@ -310,7 +310,7 @@ object SketchQueries {
     "q_table_ndv" -> ((s, dir) => {
       import graft.sources.VersionedTable
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val path = java.nio.file.Files.createTempDirectory("graft_vtn").toString +
+      val path = graft.Harness.tempDir("graft_vtn").toString +
         "/docs"
       val v0 = VersionedTable.create(docs.repartition(4), path)
       VersionedTable.writeNdv(s, path, v0, "text", p = TableNdvP)

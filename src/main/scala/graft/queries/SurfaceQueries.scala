@@ -83,7 +83,7 @@ object SurfaceQueries {
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           col("o_totalprice"))
         .orderBy(col("o_orderkey")).limit(200)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_csv").toString + "/orders_csv"
+      val tmp = graft.Harness.tempDir("graft_csv").toString + "/orders_csv"
       TableIO.write(src.coalesce(1), tmp + "/data.csv")
       TableIO.read(s, tmp + "/data.csv")
         .select(col("o_orderkey").cast(LongType), col("o_custkey").cast(LongType),
@@ -99,7 +99,7 @@ object SurfaceQueries {
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           col("o_totalprice"))
         .orderBy(col("o_orderkey")).limit(200)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_fea").toString + "/orders.feather"
+      val tmp = graft.Harness.tempDir("graft_fea").toString + "/orders.feather"
       TableIO.write(src, tmp)
       TableIO.read(s, tmp).orderBy(col("o_orderkey"))
     }),
@@ -111,7 +111,7 @@ object SurfaceQueries {
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           col("o_totalprice"))
         .orderBy(col("o_orderkey")).limit(200)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_orc").toString + "/orders.orc"
+      val tmp = graft.Harness.tempDir("graft_orc").toString + "/orders.orc"
       TableIO.write(src, tmp)
       TableIO.read(s, tmp).orderBy(col("o_orderkey"))
     }),
@@ -124,7 +124,7 @@ object SurfaceQueries {
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           col("o_totalprice"))
         .orderBy(col("o_orderkey")).limit(200)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_avro").toString + "/orders.avro"
+      val tmp = graft.Harness.tempDir("graft_avro").toString + "/orders.avro"
       TableIO.write(src, tmp)
       TableIO.read(s, tmp).orderBy(col("o_orderkey"))
     }),
@@ -138,7 +138,7 @@ object SurfaceQueries {
       val src = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("text"), col("n_chars"))
         .orderBy(col("doc_id")).limit(200)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_tfr").toString +
+      val tmp = graft.Harness.tempDir("graft_tfr").toString +
         "/docs.tfrecord"
       graft.sources.TFRecordIO.write(src, tmp)
       graft.sources.TFRecordIO.read(s, tmp, src.schema).orderBy(col("doc_id"))
@@ -154,7 +154,7 @@ object SurfaceQueries {
     // compression, or header-split defect hash-mismatches.
     "q_warc_roundtrip" -> ((s, dir) => {
       val src = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val wdir = java.nio.file.Files.createTempDirectory("graft_warc").toString +
+      val wdir = graft.Harness.tempDir("graft_warc").toString +
         "/shards"
       graft.sources.WarcIO.writeSharded(src.select(
         col("doc_id"),
@@ -177,7 +177,7 @@ object SurfaceQueries {
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           col("o_totalprice"))
         .orderBy(col("o_orderkey")).limit(200)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_json").toString + "/orders.json"
+      val tmp = graft.Harness.tempDir("graft_json").toString + "/orders.json"
       TableIO.write(src, tmp)
       // inference alphabetizes columns; reselect the declared order
       TableIO.read(s, tmp)
@@ -194,7 +194,7 @@ object SurfaceQueries {
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           col("o_totalprice"))
         .orderBy(col("o_orderkey")).limit(200)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_xlsx").toString + "/orders.xlsx"
+      val tmp = graft.Harness.tempDir("graft_xlsx").toString + "/orders.xlsx"
       TableIO.write(src, tmp)
       TableIO.read(s, tmp)
         .select(col("o_orderkey").cast(LongType), col("o_custkey").cast(LongType),

@@ -4,10 +4,13 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 import graft.expr.{DvExpressions, DvMarks, DvMarksPart}
+import org.apache.spark.sql.graftx.DriverParquet
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.internal.Logging
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options,
   Path => HPath}
@@ -23,8 +26,9 @@ import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options,
   *   data/<commit-uuid>-partNNN.parquet   immutable, never rewritten
   * ```
   *
-  * Commit = write new data files (distributed), then publish ONE small
-  * manifest via temp-file + atomic exclusive rename. Readers resolve a
+  * Commit = write new data files (distributed, or in the driver when it
+  * already holds the rows), then publish ONE small manifest via
+  * temp-file + atomic exclusive rename. Readers resolve a
   * manifest and read exactly its files — a reader never sees a
   * half-written commit (files without a manifest are invisible), and a
   * pinned version keeps reading the same bytes forever until [[vacuum]].
@@ -46,9 +50,11 @@ import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options,
   * scheme-agnostic.
   *
   * Scale shape: manifests are O(files) JSON lines — KBs for thousands
-  * of files; ALL data movement is distributed Spark writes/reads; the
-  * driver lists/renames, and holds deletion-vector marks as bitmaps
-  * only below `graft.dv.broadcastBytes`. [[compact]] rewrites the
+  * of files; data movement is distributed Spark writes/reads, except
+  * rows the driver already holds (a broadcast-sized local relation,
+  * collected DV marks), which it writes itself; the driver lists/renames,
+  * and holds deletion-vector marks as bitmaps only below
+  * `graft.dv.broadcastBytes`. [[compact]] rewrites the
   * CURRENT file set into size-targeted files and commits the result as
   * a new version with identical content — history stays readable,
   * small files stop compounding. [[vacuum]] drops data and DV files unreferenced by the
@@ -436,11 +442,30 @@ object VersionedTable extends Logging {
     else abs
   }
 
+  private def newCommitId(): String = java.util.UUID.randomUUID().toString.take(8)
+
   /** Stage `df` as new immutable data files; returns their RELATIVE paths.
-    * Distributed write into a commit-unique subprefix — never touches
-    * existing files. */
-  private def stage(df: DataFrame, path: String): Seq[String] = {
-    val commitId = java.util.UUID.randomUUID().toString.take(8)
+    * Rows the driver already holds ([[localRelation]]) are written there,
+    * one file per slice of the local scan (rolled every
+    * `maxRecordsPerFile` rows, as the job rolls), straight to their final names
+    * ([[DriverParquet]]: the job's bytes, no job); anything else is a
+    * distributed write into a commit-unique subprefix, renamed into
+    * place. Never touches existing files. */
+  private[graft] def stage(df: DataFrame, path: String): Seq[String] = {
+    val spark = df.sparkSession
+    val commitId = newCommitId()
+    localRelation(spark, df) match {
+      case Some(rel) =>
+        fsOf(dataDir(path)).mkdirs(dataDir(path))
+        def name(i: Int) = f"$commitId-part$i%05d.parquet"
+        val n = DriverParquet.write(spark, rel.schema, DriverParquet.slices(spark, rel),
+          i => new HPath(dataDir(path), name(i)))
+        (0 until n).map(i => "data/" + name(i))
+      case None => stageByJob(df, path, commitId)
+    }
+  }
+
+  private def stageByJob(df: DataFrame, path: String, commitId: String): Seq[String] = {
     val tmp = new HPath(rootPath(path), s".staging-$commitId")
     df.write.parquet(tmp.toString)
     val fs = fsOf(tmp)
@@ -1232,7 +1257,7 @@ object VersionedTable extends Logging {
   /** Stage a (file, pos) frame as immutable DV shards under `dv/`;
     * returns relative paths. */
   private def stageDv(dvDf: DataFrame, path: String): Seq[String] = {
-    val commitId = java.util.UUID.randomUUID().toString.take(8)
+    val commitId = newCommitId()
     val tmp = new HPath(rootPath(path), s".staging-dv-$commitId")
     dvDf.write.parquet(tmp.toString)
     val fs = fsOf(tmp)
@@ -1295,25 +1320,30 @@ object VersionedTable extends Logging {
     }
   }
 
-  /** Stage collected marks as one DV shard, written by Spark's parquet
-    * writer with the rows in the order the distributed path's
-    * `coalesce(1)` writes them (task order, then scan order) — the same
-    * bytes — and seed the decode cache with the marks under the new
-    * shard's (path, length, mtime), so the next read decodes nothing.
-    * The rows are expanded from the bitmaps inside the write's one task.
-    * Nil when nothing is marked. */
+  /** Stage collected marks as one DV shard, with the rows in the order the
+    * distributed path's `coalesce(1)` writes them (task order, then scan
+    * order) — the same bytes, and the same split under `maxRecordsPerFile`.
+    * The marks are in driver memory already, so the shard is written there
+    * ([[DriverParquet]]), expanding the rows from the bitmaps as it goes.
+    * A single shard seeds the decode cache with the marks under its (path,
+    * length, mtime), so the next read decodes nothing. Nil when nothing is
+    * marked. */
   private def stageMarks(spark: SparkSession, path: String, schema: StructType,
       c: Collected): Seq[String] =
     if (c.marks.cardinality == 0) Nil
     else {
       import scala.jdk.CollectionConverters._
-      val ordered = c.parts.flatMap(_.marks)
-      val rows = spark.sparkContext.parallelize(Seq(ordered), 1).flatMap(_.iterator.flatMap {
-        case (rel, b) => b.iterator.asScala.map(p => Row(rel, Integer.toUnsignedLong(p)))
-      })
-      val rels = stageDv(spark.createDataFrame(rows, schema), path)
-      rels.foreach { rel =>
-        val p = new HPath(rootPath(path), rel)
+      val rows = c.parts.iterator.flatMap(_.marks).flatMap { case (file, b) =>
+        val f = UTF8String.fromString(file)
+        b.iterator.asScala.map(p => InternalRow(f, Integer.toUnsignedLong(p)): InternalRow)
+      }
+      fsOf(dvDir(path)).mkdirs(dvDir(path))
+      val commitId = newCommitId()
+      def name(i: Int) = f"dv/$commitId-dv$i%05d.dv"
+      val n = DriverParquet.write(spark, schema, Seq(rows), i => new HPath(rootPath(path), name(i)))
+      val rels = (0 until n).map(name)
+      if (n == 1) {
+        val p = new HPath(rootPath(path), rels.head)
         val st = fsOf(p).getFileStatus(p)
         dvShardCache.put((st.getPath.toString, st.getLen, st.getModificationTime), Some(c.marks))
       }
@@ -1493,14 +1523,17 @@ object VersionedTable extends Logging {
     // INNER join of the live rows with the keys emits a target row once
     // per matching source row, so the mark job ([[collectMarks]]) sees a
     // row twice exactly when the rule is broken, and the duplicate keys
-    // are counted only then, for the message. A bloom prefilter could
-    // not save a shuffle the broadcast already avoids. Past the mark
-    // budget, and for a source above the broadcast size, the marks are
-    // staged distributed ([[upsertMarksDistributed]]).
+    // are counted only then, for the message. Keys the driver already
+    // holds without a repeat filter the mark scan as a literal set
+    // instead ([[keySetFilter]]): no row can match twice, and no
+    // broadcast job runs. A bloom prefilter could not save a shuffle the
+    // broadcast already avoids. Past the mark budget, and for a source
+    // above the broadcast size, the marks are staged distributed
+    // ([[upsertMarksDistributed]]).
     val newShards =
       if (!broadcastSized(spark, srcKeys)) upsertMarksDistributed(live, normalized, keyCols, path)
       else {
-        val marked = live.join(srcKeys, keyCols)
+        val marked = keySetFilter(spark, srcKeys).fold(live.join(srcKeys, keyCols))(live.where)
           .select(col("__vt_file").as("file"), col("__vt_pos").as("pos"))
         collectMarks(spark, marked) match {
           case c: Collected => stageMarks(spark, path, marked.schema, c)
@@ -1518,6 +1551,59 @@ object VersionedTable extends Logging {
   private def broadcastSized(spark: SparkSession, df: DataFrame): Boolean = {
     val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
     limit > 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= limit
+  }
+
+  /** `df`'s local relation when the driver already holds its rows: the
+    * optimized plan is a batch `LocalRelation` with rows, within the
+    * broadcast size. A stream's micro-batch is a `LogicalRDD`, never
+    * local. */
+  private def localRelation(spark: SparkSession, df: DataFrame): Option[LocalRelation] =
+    df.queryExecution.optimizedPlan match {
+      case r: LocalRelation if !r.isStreaming && r.data.nonEmpty && broadcastSized(spark, df) =>
+        Some(r)
+      case _ => None
+    }
+
+  /** The most keys [[keySetFilter]] inlines as literals: every analyzer
+    * and optimizer pass walks each one, while the broadcast join costs
+    * one job whatever its size. Counting a 200k-row scan through each at
+    * local[4], the literal set matched the join at 1,000 keys and lost
+    * 13 ms at 4,096 and 100 ms at 16,384. */
+  private val KeySetMax = 1024
+
+  /** The key columns of a local source ([[localRelation]]) as an
+    * `IN (literal, ...)` filter over the same columns, when no key
+    * repeats: then it keeps exactly the rows the inner join with the keys
+    * emits, each once. A key with a null field joins nothing and is left
+    * out. Only key types whose join equality is the set's equality
+    * qualify (not floating point, binary, collated strings or nested
+    * types). None where the join must run. */
+  private def keySetFilter(spark: SparkSession,
+      keys: DataFrame): Option[org.apache.spark.sql.Column] = {
+    import org.apache.spark.sql.catalyst.expressions.{In, Literal}
+    import org.apache.spark.sql.functions.{col, struct}
+    import org.apache.spark.sql.graftx.Bridge
+    import org.apache.spark.sql.types._
+    def setType(dt: DataType): Boolean = dt match {
+      case BooleanType | ByteType | ShortType | IntegerType | LongType | DateType |
+          TimestampType | TimestampNTZType | _: DecimalType => true
+      case st: StringType => st.collationId == StringType.collationId
+      case _ => false
+    }
+    localRelation(spark, keys).filter(rel => rel.data.size <= KeySetMax &&
+        rel.output.forall(a => setType(a.dataType))).flatMap { rel =>
+      val types = rel.output.map(_.dataType)
+      val values = rel.data.filterNot(r => types.indices.exists(r.isNullAt))
+        .map(r => types.zipWithIndex.map { case (dt, i) => r.get(i, dt) })
+      if (values.distinct.size < values.size) None
+      else Some(Bridge.column(rel.output match {
+        case Seq(a) => In(Bridge.expression(col(a.name)), values.map(v => Literal(v.head, a.dataType)))
+        case out =>
+          val t = StructType(out.map(a => StructField(a.name, a.dataType)))
+          In(Bridge.expression(struct(out.map(a => col(a.name)): _*)),
+            values.map(v => Literal(InternalRow.fromSeq(v), t)))
+      }))
+    }
   }
 
   /** The source's keys that occur in more than one row. */

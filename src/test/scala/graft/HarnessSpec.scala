@@ -46,6 +46,23 @@ class HarnessSpec extends SparkSpec {
     assert(!spark.catalog.tableExists("harness_spec_sink"))
   }
 
+  test("Harness.sweep deletes the temp dirs a VersionedTable face made") {
+    import spark.implicits._
+    val data = Harness.tempDir("harness_spec_data")
+    (1L to 200L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
+      .write.parquet(data.resolve("documents.parquet").toString)
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def graftEntries(): Set[String] =
+      Option(tmp.list()).fold(Set.empty[String])(_.filter(_.startsWith("graft_")).toSet)
+    val before = graftEntries()
+    val rows = SparkEntry.queries("q_table_versions")(spark, data.toString).collect()
+    assert(rows.length === 3)
+    val made = graftEntries() -- before
+    assert(made.exists(_.startsWith("graft_vt")), s"the face made no temp dir: $made")
+    Harness.sweep(spark)
+    assert((graftEntries() -- before).isEmpty, s"left after the sweep: ${graftEntries() -- before}")
+  }
+
   test("Harness.noop runs the whole plan and returns its seconds") {
     val acc = spark.sparkContext.longAccumulator("harness_spec_rows")
     val touch = org.apache.spark.sql.functions.udf { (x: Long) => acc.add(1); x }

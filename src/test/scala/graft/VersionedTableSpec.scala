@@ -922,16 +922,21 @@ class VersionedTableSpec extends SparkSpec {
     assert(!executed.contains("/dv/"), s"the DV read scans a shard:\n${executed.take(1500)}")
     assert(nExec === 1, s"$nExec jobs to collect the DV read")
 
-    // ---- job count: keyed writes (a mark job, then the writes) ----
+    // ---- job count: writes of rows the driver holds (no write job), and
+    // the keyed writes' one mark job ----
     val kw = fresh()
     VersionedTable.create(spark.range(0, 60, 1, 3).select($"id", ($"id" * 2).as("x")), kw)
     VersionedTable.deleteWhere(spark, kw, $"id" < 3)
+    val nAppend = jobsDuring(VersionedTable.commit(
+      Seq((200L, 1L), (201L, 1L)).toDF("id", "x"), kw, "append"))
+    assert(nAppend === 0, s"$nAppend jobs to append a local frame")
     val nDelete = jobsDuring(VersionedTable.deleteWhere(spark, kw, $"id".between(10, 14)))
-    assert(nDelete <= 2, s"$nDelete jobs to delete")
+    assert(nDelete <= 1, s"$nDelete jobs to delete")
     val nUpsert = jobsDuring(VersionedTable.upsert(spark, kw,
       Seq((20L, 1L), (21L, 1L), (100L, 1L)).toDF("id", "x"), Seq("id")))
-    assert(nUpsert <= 4, s"$nUpsert jobs to upsert a broadcast-sized source")
-    assert(ids(VersionedTable.read(spark, kw)) === ((3L until 60L).filterNot(i => i >= 10 && i <= 14) :+ 100L))
+    assert(nUpsert <= 1, s"$nUpsert jobs to upsert a local source")
+    assert(ids(VersionedTable.read(spark, kw)) ===
+      ((3L until 60L).filterNot(i => i >= 10 && i <= 14) ++ Seq(100L, 200L, 201L)))
 
     // ---- schema: the scan's schema is exactly Spark's inferred one ----
     def sameAsSpark(files: Seq[String], basePath: Option[String] = None): Unit = {
