@@ -443,6 +443,51 @@ object PipelineQueries {
     rows
   }
 
+  /** Runs `compose` as a one-shot AvailableNow replay into the memory
+    * sink `sink` and waits for it to end, with the session confs such a
+    * replay pins:
+    *  - `spark.sql.shuffle.partitions` at 8: stateful streaming allocates
+    *    state stores per shuffle partition (a stream-stream join 4 of
+    *    them: left/right × keyToNumValues/keyWithIndexToValue), so size
+    *    the count to the state, not the batch default. The state layout
+    *    is fixed per checkpoint at query start, so it is restored right
+    *    after `start()`.
+    *  - `spark.sql.streaming.noDataMicroBatches.enabled` off: after the
+    *    single data batch the engine schedules a NO-DATA batch purely to
+    *    advance the watermark (state eviction / timeout processing) — a
+    *    full state-store load+commit cycle that can't change a one-pass
+    *    result (nothing is late, no TTL is armed, complete mode re-emits
+    *    the same state, append-mode operators and inner stream-stream
+    *    joins here emit within the data batch; [[requireReplaySafe]]
+    *    fences the rest). A continuous production stream keeps the
+    *    default (watermark-driven eviction IS its state bound).
+    *    Hash-equality across all stateful faces probed before pinning.
+    *  - the local-disk checkpoint manager
+    *    ([[graft.streaming.StreamOps.pinLocalCheckpoints]]).
+    * The last two hold until the query has terminated. */
+  private def replay(s: SparkSession, sink: String, outputMode: String,
+      helper: String)(compose: => DataFrame)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    import graft.streaming.StreamOps.{pinConf, pinLocalCheckpoints}
+    val restoreAtStart = pinConf(s, "spark.sql.shuffle.partitions", "8")
+    val restoreAtEnd = Seq(
+      pinConf(s, "spark.sql.streaming.noDataMicroBatches.enabled", "false"),
+      pinLocalCheckpoints(s, None))
+    try {
+      val q = try {
+        val composed = compose
+        requireReplaySafe(composed, outputMode, helper)
+        composed
+          .writeStream.format("memory").queryName(sink)
+          .outputMode(outputMode)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+      } finally restoreAtStart()
+      q.awaitTermination()
+      q
+    } finally restoreAtEnd.foreach(_())
+  }
+
   private[graft] def runAvailableNow(s: SparkSession, tableFile: String,
       prefix: String, outputMode: String)(mkAgg: DataFrame => DataFrame): DataFrame = {
     // a file's footer, read on the driver without Spark's inference job
@@ -451,48 +496,23 @@ object PipelineQueries {
     val stageDir = graft.Harness.tempDir(prefix)
     val staged = stageParquet(tableFile, stageDir)
     val sink = prefix + java.util.UUID.randomUUID().toString.replace("-", "")
-    // Stateful streaming allocates state stores per shuffle partition;
-    // size the partition count to the state, not the batch default
-    // (pinned at query start — state layout is fixed per checkpoint).
-    val batchPartitions = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    // One-shot replay: after the single data batch the engine schedules
-    // a NO-DATA batch purely to advance the watermark (state eviction /
-    // timeout processing) — a full state-store load+commit cycle that
-    // can't change a one-pass result (nothing is late, no TTL is armed,
-    // complete mode re-emits the same state, append-mode operators here
-    // emit within the data batch). Skip it; a continuous production
-    // stream keeps the default (watermark-driven eviction IS its state
-    // bound). Hash-equality across all stateful faces probed before
-    // pinning; restored after termination (read per trigger, so it must
-    // hold for the query's lifetime).
-    val noData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     // staged copies are cleaned in finally: a query failure (or the
     // single-batch require below) must not leak them
     try {
-      val q = try {
-        // pin maxFilesPerTrigger explicitly: stateful owner semantics
-        // (min-of-batch in the LSH registry) are oracle-replayable only
-        // when the whole staged input lands in ONE data micro-batch — a
-        // global maxFilesPerTrigger or >1000 staged parts (AvailableNow's
-        // default chunk) would silently split it
-        val composed = mkAgg(s.readStream.schema(schema)
+      // pin maxFilesPerTrigger explicitly: stateful owner semantics
+      // (min-of-batch in the LSH registry) are oracle-replayable only
+      // when the whole staged input lands in ONE data micro-batch — a
+      // global maxFilesPerTrigger or >1000 staged parts (AvailableNow's
+      // default chunk) would silently split it
+      val q = replay(s, sink, outputMode, "runAvailableNow") {
+        mkAgg(s.readStream.schema(schema)
           .option("maxFilesPerTrigger", 1000000).parquet(stageDir.toString))
-        requireReplaySafe(composed, outputMode, "runAvailableNow")
-        composed
-          .writeStream.format("memory").queryName(sink)
-          .outputMode(outputMode)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", batchPartitions)
-      q.awaitTermination()
+      }
       val dataBatches = q.recentProgress.count(_.numInputRows > 0)
       require(dataBatches <= 1,
         s"runAvailableNow: staged input split across $dataBatches micro-batches " +
           "— single-batch owner determinism violated")
     } finally {
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", noData)
       staged.foreach(java.nio.file.Files.deleteIfExists)
       java.nio.file.Files.deleteIfExists(stageDir)
     }
@@ -515,36 +535,10 @@ object PipelineQueries {
         .option("maxFilesPerTrigger", 1000000).parquet(d.toString)
     }
     val sink = prefix + java.util.UUID.randomUUID().toString.replace("-", "")
-    // Stream-stream joins allocate 4 state stores per shuffle partition
-    // (left/right × keyToNumValues/keyWithIndexToValue); size the
-    // partition count to the STATE, not the batch default — the
-    // production knob, pinned at query start (state-store layout is fixed
-    // for the life of the checkpoint, so it must be set before start()).
-    val batchPartitions = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    // same one-shot-replay rationale as runAvailableNow: an inner
-    // stream-stream join emits its matches within the data batch; the
-    // trailing no-data batch only evicts state a terminating query
-    // discards anyway
-    val noData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try {
-      val q = try {
-        val composed = mkJoin(l, r)
-        requireReplaySafe(composed, outputMode, "runAvailableNow2")
-        composed
-          .writeStream.format("memory").queryName(sink)
-          .outputMode(outputMode)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", batchPartitions)
-      q.awaitTermination()
-    } finally {
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", noData)
-      dirs.foreach { case (d, staged) =>
-        staged.foreach(java.nio.file.Files.deleteIfExists)
-        java.nio.file.Files.deleteIfExists(d)
-      }
+    try replay(s, sink, outputMode, "runAvailableNow2")(mkJoin(l, r))
+    finally dirs.foreach { case (d, staged) =>
+      staged.foreach(java.nio.file.Files.deleteIfExists)
+      java.nio.file.Files.deleteIfExists(d)
     }
     sinkRows(s, sink)
   }
@@ -2252,12 +2246,14 @@ object PipelineQueries {
         docs.filter(col("doc_id") % 2 === 0).repartition(4), path)
       VersionedTable.commit(
         docs.filter(col("doc_id") % 2 =!= 0).repartition(4), path, "append")
-      val q = s.readStream
-        .format("org.apache.spark.sql.graftx.VersionedTableStreamProvider")
-        .option("path", path).load()
-        .writeStream.format("memory").queryName("q_table_stream_sink")
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      graft.streaming.StreamOps.withLocalCheckpoints(s) {
+        val q = s.readStream
+          .format("org.apache.spark.sql.graftx.VersionedTableStreamProvider")
+          .option("path", path).load()
+          .writeStream.format("memory").queryName("q_table_stream_sink")
+          .start()
+        try q.processAllAvailable() finally q.stop()
+      }
       s.table("q_table_stream_sink")
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .orderBy(col("doc_id"))
@@ -2317,29 +2313,31 @@ object PipelineQueries {
             org.apache.spark.sql.types.StringType),
           org.apache.spark.sql.types.StructField("text",
             org.apache.spark.sql.types.StringType)))), b)
-      val q = s.readStream
-        .format("org.apache.spark.sql.graftx.VersionedTableStreamProvider")
-        .option("path", a).load()
-        .writeStream
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          VersionedTable.upsertStreamBatch(
-            batch.select(col("doc_id"), col("lang"), col("text")),
-            b, Seq("doc_id"), "cdc", bid)
-          (): Unit
-        }
-        .option("checkpointLocation", base + "/ck")
-        .start()
-      try {
-        q.processAllAvailable()
-        val churn = docs.filter(col("doc_id") % 3 === 0)
-          .select(col("doc_id"), col("lang"),
-            concat(col("text"), lit(" v2")).as("text"))
-          .unionByName(docs.filter(col("doc_id") % 13 === 0)
-            .select((col("doc_id") + 3000000000000L).as("doc_id"),
-              col("lang"), col("text")))
-        VersionedTable.commit(churn.repartition(2), a, "append")
-        q.processAllAvailable()
-      } finally q.stop()
+      graft.streaming.StreamOps.withLocalCheckpoints(s, Some(base + "/ck")) {
+        val q = s.readStream
+          .format("org.apache.spark.sql.graftx.VersionedTableStreamProvider")
+          .option("path", a).load()
+          .writeStream
+          .foreachBatch { (batch: DataFrame, bid: Long) =>
+            VersionedTable.upsertStreamBatch(
+              batch.select(col("doc_id"), col("lang"), col("text")),
+              b, Seq("doc_id"), "cdc", bid)
+            (): Unit
+          }
+          .option("checkpointLocation", base + "/ck")
+          .start()
+        try {
+          q.processAllAvailable()
+          val churn = docs.filter(col("doc_id") % 3 === 0)
+            .select(col("doc_id"), col("lang"),
+              concat(col("text"), lit(" v2")).as("text"))
+            .unionByName(docs.filter(col("doc_id") % 13 === 0)
+              .select((col("doc_id") + 3000000000000L).as("doc_id"),
+                col("lang"), col("text")))
+          VersionedTable.commit(churn.repartition(2), a, "append")
+          q.processAllAvailable()
+        } finally q.stop()
+      }
       VersionedTable.read(s, b)
         .select(col("lang"), col("doc_id"),
           TextOps.fingerprint(concat(col("doc_id").cast(StringType),
@@ -2368,12 +2366,14 @@ object PipelineQueries {
       VersionedTable.deleteWhere(s, path, col("n_chars") % 5 === 0)
       VersionedTable.commit(
         docs.filter(col("doc_id") % 2 =!= 0).repartition(4), path, "append")
-      val q = s.readStream
-        .format("org.apache.spark.sql.graftx.VersionedTableStreamProvider")
-        .option("path", path).option("columns", "doc_id,n_chars").load()
-        .writeStream.format("memory").queryName("q_table_stream_cols_sink")
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      graft.streaming.StreamOps.withLocalCheckpoints(s) {
+        val q = s.readStream
+          .format("org.apache.spark.sql.graftx.VersionedTableStreamProvider")
+          .option("path", path).option("columns", "doc_id,n_chars").load()
+          .writeStream.format("memory").queryName("q_table_stream_cols_sink")
+          .start()
+        try q.processAllAvailable() finally q.stop()
+      }
       s.table("q_table_stream_cols_sink")
         .select(col("doc_id"), col("n_chars"))
         .orderBy(col("doc_id"))
@@ -2555,20 +2555,22 @@ object PipelineQueries {
             org.apache.spark.sql.types.StringType),
           org.apache.spark.sql.types.StructField("n_tokens",
             org.apache.spark.sql.types.IntegerType)))), b)
-      val q = s.readStream
-        .format("org.apache.spark.sql.graftx.VersionedTableStreamProvider")
-        .option("path", a).load()
-        .writeStream
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          val out = batch.filter(col("lang") =!= "de")
-            .select(col("doc_id"), col("lang"),
-              size(split(col("text"), " ")).as("n_tokens"))
-          VersionedTable.commitStreamBatch(out, b, "pipe", bid)
-          (): Unit
-        }
-        .option("checkpointLocation", base + "/ck")
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      graft.streaming.StreamOps.withLocalCheckpoints(s, Some(base + "/ck")) {
+        val q = s.readStream
+          .format("org.apache.spark.sql.graftx.VersionedTableStreamProvider")
+          .option("path", a).load()
+          .writeStream
+          .foreachBatch { (batch: DataFrame, bid: Long) =>
+            val out = batch.filter(col("lang") =!= "de")
+              .select(col("doc_id"), col("lang"),
+                size(split(col("text"), " ")).as("n_tokens"))
+            VersionedTable.commitStreamBatch(out, b, "pipe", bid)
+            (): Unit
+          }
+          .option("checkpointLocation", base + "/ck")
+          .start()
+        try q.processAllAvailable() finally q.stop()
+      }
       VersionedTable.read(s, b).orderBy(col("doc_id"))
     }),
 

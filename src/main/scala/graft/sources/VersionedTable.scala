@@ -12,8 +12,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options,
-  Path => HPath}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext,
+  FileStatus, FileSystem, Options, Path => HPath}
 
 /** Versioned parquet table — the minimal lakehouse commit protocol over
   * immutable data files, unifying the layout pieces (sized compaction,
@@ -32,22 +32,23 @@ import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options,
   * manifest and read exactly its files — a reader never sees a
   * half-written commit (files without a manifest are invisible), and a
   * pinned version keeps reading the same bytes forever until [[vacuum]].
-  * Concurrent committers race on the `vN.json` name: the publish rename
-  * carries `Options.Rename.NONE`, which fails when the target exists,
-  * so exactly one of two same-version commits wins (optimistic
-  * concurrency, the standard table-format approach).
+  * Concurrent committers race on the `vN.json` name: the publish
+  * refuses a target that exists, so exactly one of two same-version
+  * commits wins (optimistic concurrency, the standard table-format
+  * approach).
   *
-  * ALL metadata I/O goes through the Hadoop `FileSystem`/`FileContext`
-  * API — the table path may be `file:`, `hdfs:`, or any other installed
-  * scheme; nothing here touches `java.nio`/`java.io.File`, so the same
-  * code runs on a laptop and against the 100 TB cluster's store.
-  * Atomicity honesty per scheme: on HDFS, `rename(…, Rename.NONE)` is
-  * arbitrated by the namenode — atomic AND exclusive, the Delta/HDFS
-  * LogStore recipe. On the local filesystem the existence check is
-  * check-then-act (a microscopic TOCTOU window, fine for tests). Object
-  * stores without atomic rename need a conditional-put (`If-None-Match`)
-  * committer: install one via [[committer]] — everything else is
-  * scheme-agnostic.
+  * ALL metadata I/O goes through the Hadoop `FileSystem` API — the
+  * table path may be `file:`, `hdfs:`, or any other installed scheme;
+  * nothing here touches `java.nio`/`java.io.File`, so the same code
+  * runs on a laptop and against the 100 TB cluster's store. Only the
+  * sidecar replace ([[writeReplace]]) goes through `FileContext`, for
+  * its atomic `Rename.OVERWRITE` on HDFS. Atomicity honesty per scheme:
+  * on HDFS, `FileSystem.rename` onto an existing file fails at the
+  * namenode — atomic AND exclusive, the Delta/HDFS LogStore recipe. On
+  * the local filesystem the existence check is check-then-act (a
+  * microscopic TOCTOU window, fine for tests). Object stores without
+  * atomic rename need a conditional-put (`If-None-Match`) committer:
+  * install one via [[committer]] — everything else is scheme-agnostic.
   *
   * Scale shape: manifests are O(files) JSON lines — KBs for thousands
   * of files; data movement is distributed Spark writes/reads, except
@@ -144,19 +145,30 @@ object VersionedTable extends Logging {
     catch { case e: Throwable => fsOf(tmp).delete(tmp, false); throw e }
   }
 
-  /** The exclusive-publish hook. The default temp+rename(Rename.NONE)
-    * is atomic-exclusive on HDFS; swap in a conditional-put
+  /** The exclusive-publish hook. The default temp+rename is
+    * atomic-exclusive on HDFS; swap in a conditional-put
     * implementation for object stores without atomic rename. */
   trait ManifestCommitter {
-    /** Move `tmp` to `target`, failing if `target` exists. Must throw
-      * (any exception) when the target already exists. */
-    def publish(fc: FileContext, tmp: HPath, target: HPath): Unit
+    /** Move `tmp` to `target` on `fs` (the target's file system),
+      * failing if `target` exists. Must throw (any exception) when the
+      * target already exists. */
+    def publish(fs: FileSystem, tmp: HPath, target: HPath): Unit
   }
 
-  /** Default: rename-based (atomic-exclusive on HDFS). */
+  /** Default: rename-based. On HDFS the namenode fails a rename onto an
+    * existing file, so the rename alone is atomic and exclusive; on the
+    * local disk `rename(2)` would replace the target, so the existence
+    * check before it is what refuses the loser (check-then-act, see the
+    * class doc). Unlike `FileContext.rename`, `FileSystem.rename` reads
+    * no link status of either path, which Hadoop's local file system
+    * gets by forking `readlink` when libhadoop is absent. */
   object RenameCommitter extends ManifestCommitter {
-    def publish(fc: FileContext, tmp: HPath, target: HPath): Unit =
-      fc.rename(tmp, target, Options.Rename.NONE)
+    def publish(fs: FileSystem, tmp: HPath, target: HPath): Unit = {
+      if (fs.exists(target))
+        throw new FileAlreadyExistsException(s"$target already exists")
+      if (!fs.rename(tmp, target))
+        throw new java.io.IOException(s"rename of $tmp to $target failed")
+    }
   }
 
   /** Conditional-PUT reference committer for stores whose exclusive
@@ -174,8 +186,7 @@ object VersionedTable extends Logging {
     * minAgeMs). Contract-spec'd side by side with the rename
     * committer: exactly one of two same-target publishes wins. */
   object PutIfAbsentCommitter extends ManifestCommitter {
-    def publish(fc: FileContext, tmp: HPath, target: HPath): Unit = {
-      val fs = fsOf(target)
+    def publish(fs: FileSystem, tmp: HPath, target: HPath): Unit = {
       val in = fs.open(tmp)
       val body =
         try {
@@ -504,11 +515,11 @@ object VersionedTable extends Logging {
     val tmp = new HPath(dir, s".tmp-${java.util.UUID.randomUUID()}")
     writeBytes(tmp, body.getBytes("UTF-8"))
     val target = versionFile(path, v)
-    // Rename.NONE fails when the target exists: the second committer's
-    // rename throws, the winner's manifest is untouched. (HDFS arbitrates
+    // the committer refuses an existing target: the second committer's
+    // publish throws, the winner's manifest is untouched. (HDFS arbitrates
     // this atomically at the namenode; see the class doc for the local /
     // object-store honesty notes and the [[committer]] hook.)
-    try committer.publish(fcOf(target), tmp, target)
+    try committer.publish(fsOf(target), tmp, target)
     catch { case e: Throwable =>
       fsOf(tmp).delete(tmp, false)
       throw new IllegalStateException(

@@ -249,6 +249,54 @@ object StreamOps {
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
   }
 
+  /** Pins session conf `key` to `value`; the returned thunk puts the
+    * caller's value back, or unsets the key when the caller had none. */
+  private[graft] def pinConf(s: SparkSession, key: String,
+      value: String): () => Unit = {
+    val prev = s.conf.getOption(key)
+    s.conf.set(key, value)
+    () => prev.fold(s.conf.unset(key))(s.conf.set(key, _))
+  }
+
+  private val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+  private val FsCheckpointManager = "org.apache.spark.sql.execution.streaming." +
+    "checkpointing.FileSystemBasedCheckpointFileManager"
+
+  /** Pins Spark's `FileSystem`-based checkpoint manager for the streaming
+    * queries started until the returned thunk runs, when their
+    * checkpoint is on the local disk: `checkpointLocation`, else the
+    * session's `spark.sql.streaming.checkpointLocation`, else the temp
+    * dir Spark makes for a memory/noop sink, each resolved against the
+    * default file system. Spark's default `FileContext` manager reads
+    * the link status of both paths on every rename (offset and commit
+    * logs, state-store deltas), which Hadoop's local file system gets by
+    * forking `readlink` when libhadoop is absent; on the local disk the
+    * `FileSystem` manager's `exists` + `rename(2)` gives the same
+    * guarantee as that check-then-act rename. Any other scheme keeps the
+    * default, whose rename is the atomic one there. A file source's
+    * metadata log is made on the query's own thread from the caller's
+    * session conf, after `start()` has returned, so the pin must hold
+    * until the queries end. */
+  private[graft] def pinLocalCheckpoints(s: SparkSession,
+      checkpointLocation: Option[String]): () => Unit = {
+    val loc = checkpointLocation
+      .orElse(s.conf.getOption("spark.sql.streaming.checkpointLocation"))
+      .getOrElse(System.getProperty("java.io.tmpdir"))
+    val scheme = Option(new org.apache.hadoop.fs.Path(loc).toUri.getScheme)
+      .getOrElse(org.apache.hadoop.fs.FileSystem.getDefaultUri(
+        s.sessionState.newHadoopConf()).getScheme)
+    if (scheme == "file") pinConf(s, CheckpointManagerKey, FsCheckpointManager)
+    else () => ()
+  }
+
+  /** Runs `body`, which starts streaming queries and waits for them to
+    * end, under [[pinLocalCheckpoints]]. */
+  private[graft] def withLocalCheckpoints[T](s: SparkSession,
+      checkpointLocation: Option[String] = None)(body: => T): T = {
+    val restore = pinLocalCheckpoints(s, checkpointLocation)
+    try body finally restore()
+  }
+
   case class LshClaim(doc_id: Long, band: Int, bucket: String, owner: Long)
 
   /** Streaming MinHash-LSH near-dup INGEST FILTER — the streaming face of

@@ -51,9 +51,12 @@ object StateSize {
           case _ => StreamOps.streamingLshVerified(stream, "text", "doc_id", 0.5).toDF
         }
         val t0 = System.nanoTime()
-        val q = out.writeStream.format("noop")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+        val q = StreamOps.withLocalCheckpoints(spark) {
+          val q = out.writeStream.format("noop")
+            .trigger(Trigger.AvailableNow()).start()
+          q.awaitTermination()
+          q
+        }
         val secs = (System.nanoTime() - t0) / 1e9
         val so = q.lastProgress.stateOperators
         val rows = so.map(_.numRowsTotal).sum

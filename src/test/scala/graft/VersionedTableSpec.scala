@@ -141,7 +141,7 @@ class VersionedTableSpec extends SparkSpec {
     val real = VersionedTable.committer
     val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
     VersionedTable.committer = new VersionedTable.ManifestCommitter {
-      def publish(fc: org.apache.hadoop.fs.FileContext,
+      def publish(fs: org.apache.hadoop.fs.FileSystem,
           tmp: org.apache.hadoop.fs.Path,
           target: org.apache.hadoop.fs.Path): Unit = {
         if (fired.compareAndSet(false, true))
@@ -149,7 +149,7 @@ class VersionedTableSpec extends SparkSpec {
           VersionedTable.publish(path, 1L, 0L, "append",
             VersionedTable.filesAt(path, 0L).map(f =>
               "data/" + new org.apache.hadoop.fs.Path(f).getName))
-        real.publish(fc, tmp, target)
+        real.publish(fs, tmp, target)
       }
     }
     try {
@@ -167,13 +167,11 @@ class VersionedTableSpec extends SparkSpec {
     VersionedTable.create(spark.range(0).toDF("id"), path2)
     val lock = new Object
     VersionedTable.committer = new VersionedTable.ManifestCommitter {
-      def publish(fc: org.apache.hadoop.fs.FileContext,
+      def publish(fs: org.apache.hadoop.fs.FileSystem,
           tmp: org.apache.hadoop.fs.Path,
           target: org.apache.hadoop.fs.Path): Unit = lock.synchronized {
-        if (target.getFileSystem(new org.apache.hadoop.conf.Configuration())
-            .exists(target))
-          throw new org.apache.hadoop.fs.FileAlreadyExistsException(target.toString)
-        real.publish(fc, tmp, target)
+        // under the lock the rename committer's exists + rename is one step
+        real.publish(fs, tmp, target)
       }
     }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
@@ -1104,10 +1102,10 @@ class VersionedTableSpec extends SparkSpec {
     val real = VersionedTable.committer
     val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
     VersionedTable.committer = new VersionedTable.ManifestCommitter {
-      def publish(fc: org.apache.hadoop.fs.FileContext,
+      def publish(fs: org.apache.hadoop.fs.FileSystem,
           tmp: org.apache.hadoop.fs.Path,
           target: org.apache.hadoop.fs.Path): Unit = {
-        real.publish(fc, tmp, target)
+        real.publish(fs, tmp, target)
         if (fired.compareAndSet(false, true))
           throw new java.io.IOException("simulated lost RPC reply")
       }
@@ -1142,14 +1140,14 @@ class VersionedTableSpec extends SparkSpec {
     val torn =
       """{"version":1,"parent":0,"action":"append","files":["data/zzz.parquet","data/tr"""
     VersionedTable.committer = new VersionedTable.ManifestCommitter {
-      def publish(fc: org.apache.hadoop.fs.FileContext,
+      def publish(fs: org.apache.hadoop.fs.FileSystem,
           tmp: org.apache.hadoop.fs.Path,
           target: org.apache.hadoop.fs.Path): Unit = {
         if (fired.compareAndSet(false, true)) {
           java.nio.file.Files.write(manifest1, torn.getBytes("UTF-8"))
           throw new org.apache.hadoop.fs.FileAlreadyExistsException(target.toString)
         }
-        real.publish(fc, tmp, target)
+        real.publish(fs, tmp, target)
       }
     }
     try {
@@ -1274,16 +1272,16 @@ class VersionedTableSpec extends SparkSpec {
     // FS's create(overwrite=false) is check-then-act, so a lock stands
     // in for the store's server-side atomicity — what's under test is
     // the PROTOCOL's freedom from rename-atomicity assumptions (the
-    // only Rename.NONE in the codebase is inside RenameCommitter,
+    // only exclusive rename in the codebase is RenameCommitter's,
     // which this committer replaces wholesale), not the local
     // primitive. Every lifecycle face runs on the alternate scheme.
     val real = VersionedTable.committer
     val lock = new Object
     VersionedTable.committer = new VersionedTable.ManifestCommitter {
-      def publish(fc: org.apache.hadoop.fs.FileContext,
+      def publish(fs: org.apache.hadoop.fs.FileSystem,
           tmp: org.apache.hadoop.fs.Path,
           target: org.apache.hadoop.fs.Path): Unit = lock.synchronized {
-        VersionedTable.PutIfAbsentCommitter.publish(fc, tmp, target)
+        VersionedTable.PutIfAbsentCommitter.publish(fs, tmp, target)
       }
     }
     try {
