@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, functions}
 import org.apache.spark.sql.types.StructType
 
 import graft.expr.{DvExpressions, DvMarks, DvMarksPart}
@@ -14,6 +14,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext,
   FileStatus, FileSystem, Options, Path => HPath}
+import scala.util.matching.Regex
 
 /** Versioned parquet table — the minimal lakehouse commit protocol over
   * immutable data files, unifying the layout pieces (sized compaction,
@@ -23,6 +24,7 @@ import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext,
   * table/
   *   _versions/v00000042.json   one manifest per version: the EXACT file
   *                              list that IS the table at that version
+  *   _versions/v00000042.<kind>[.<col>].json|.d   per-file statistics
   *   data/<commit-uuid>-partNNN.parquet   immutable, never rewritten
   * ```
   *
@@ -73,9 +75,13 @@ import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext,
   * stage the shard from them and leave them in that cache. A backlog
   * past `graft.dv.broadcastBytes` degrades to a shuffled anti-join (and
   * a write past it to distributed staging), and [[optimize]]/[[compact]]
-  * purge the marks physically. Skipping sidecars (range stats, bloom)
-  * remain sound under DVs; exact metadata faces
-  * (counts/sums/moments/NDV) refuse loudly until the purge.
+  * purge the marks physically.
+  *
+  * Per-file statistics (range stats, bloom, counts, sums, moments, NDV)
+  * live in sidecars beside each manifest behind one codec (`FileStat`):
+  * an immutable file's entry carries forward, only a commit's new files
+  * are measured. Skipping sidecars stay sound under DVs; exact metadata
+  * faces refuse loudly until the purge; live faces subtract the marks.
   */
 object VersionedTable extends Logging {
 
@@ -418,21 +424,16 @@ object VersionedTable extends Logging {
     manifestDvs(readManifestUtf8(f))
   }
 
-  /** The metadata-face matrix under deletion vectors, uniform by rule:
-    * sidecar WRITES are always allowed (they record per-IMMUTABLE-FILE
-    * physical truth, which DVs don't alter); exact-PHYSICAL reads
-    * (countAt/partitionRowCounts/sumAt/partitionSums/momentsAt/
-    * partitionMoments/ndvAt/partitionNdv) refuse via this guard — they
-    * would overcount deleted rows; LIVE reads are exact
-    * ([[countAtLive]]/[[partitionRowCountsLive]] fold the DV
-    * cardinality, [[sumAtLive]]/[[partitionSumsLive]] fold the deleted
-    * VALUES from the marked files). NDV has no live face (an HLL
-    * register max cannot be subtracted) and moments stay refuse-only
-    * (lo/hi are not subtractable). Range/bloom SKIPPING sidecars stay
-    * sound under DVs (over-approximation only: a kept file's deleted
-    * rows are removed by the read path's mark filter).
-    * [[optimize]]/[[compact]] purge deletes physically and re-enable
-    * every physical face. */
+  /** The guard of the exact-PHYSICAL metadata faces (countAt,
+    * partitionRowCounts, sumAt, partitionSums, momentsAt,
+    * partitionMoments, ndvAt, partitionNdv), which would overcount
+    * deleted rows. Sidecar WRITES stay allowed (per-immutable-file
+    * physical truth), the LIVE faces subtract the marked rows
+    * ([[countAtLive]], [[sumAtLive]], [[momentsAtLive]] and their
+    * partition forms), NDV has no live face (an HLL register max cannot
+    * be subtracted), and the SKIPPING sidecars stay sound (a kept file's
+    * deleted rows fall to the read's mark filter). [[optimize]]/
+    * [[compact]] purge deletes physically and re-enable every face. */
   private def requireNoDv(path: String, v: Long, face: String): Unit =
     require(dvsAt(path, v).isEmpty,
       s"VersionedTable.$face: version $v of $path carries deletion vectors; " +
@@ -975,11 +976,6 @@ object VersionedTable extends Logging {
   /** A scan of version DV shards (sorted: a stable plan per shard set). */
   private def scanDv(spark: SparkSession, dvFiles: Seq[String]): DataFrame =
     scanParquet(spark, dvFiles.sorted, schema = Some(DvSchema))
-
-  /** A scan of table-relative entries (`data/...`) under the data root. */
-  private def scanRels(spark: SparkSession, path: String, rels: Seq[String]): DataFrame =
-    scanParquet(spark, rels.map(f => new HPath(rootPath(path), f).toString),
-      Some(dataDir(path).toString))
 
   /** Every parquet read in this object goes through here, with a schema
     * whenever one is known without a Spark job: Spark's own inference
@@ -1769,72 +1765,245 @@ object VersionedTable extends Logging {
     else Some((changeFeed(spark, path, afterV, latest, keyCols, valueCols), latest))
   }
 
+  // ---- per-file statistic sidecars ----
+
+  /** One family of the per-file statistic sidecars beside each manifest:
+    * derivable metadata kept OUTSIDE the atomic manifest (a version
+    * without one still reads; its faces just cannot skip or answer). An
+    * entry describes one immutable data file, keyed by its manifest rel
+    * ([[relOf]]: `data/...`, or a [[cloneTable]] borrow's absolute
+    * path), so it never changes. A family knows its layout
+    * (`read`/`write`), its measurement, and the value of a file the
+    * measurement saw no row of (`empty`; None leaves the file out). */
+  private abstract class FileStat[V] {
+    /** Version `v`'s entries for `col`; None when the sidecar is absent. */
+    def read(path: String, v: Long, col: String): Option[Map[String, V]]
+    /** Replace version `v`'s sidecar for `col` by `entries`, sorted by rel. */
+    def write(path: String, v: Long, col: String, entries: Seq[(String, V)]): Unit
+    /** Per-file values of each of `cols` over `scan`, keyed by its `__f`
+      * column (each row's lineage rel). */
+    def measure(scan: DataFrame, cols: Seq[String]): Seq[Map[String, V]]
+    def empty: Option[V]
+    /** Whether an earlier sidecar's entry carries into a new one. */
+    def carries(x: V): Boolean = true
+  }
+
+  /** A family stored as JSON lines `{"file":"<rel>",<fields>}`, one per
+    * file, in `_versions/vN.<kind>.<col>.json` (`vN.<kind>.json` when
+    * not per column). */
+  private abstract class LineStat[V](kind: String, perColumn: Boolean, fields: Regex)
+      extends FileStat[V] {
+    def encode(x: V): String
+    def decode(groups: List[String]): V
+    def file(path: String, v: Long, col: String): HPath = new HPath(versionsDir(path),
+      if (perColumn) f"v$v%08d.$kind.$col.json" else f"v$v%08d.$kind.json")
+    def read(path: String, v: Long, col: String): Option[Map[String, V]] =
+      Some(file(path, v, col)).filter(exists).map(p => readUtf8(p).split("\n")
+        .collect { case LineEntry(f, fields(g @ _*)) => f -> decode(g.toList) }.toMap)
+    def write(path: String, v: Long, col: String, entries: Seq[(String, V)]): Unit =
+      writeReplace(path, file(path, v, col), entries
+        .map { case (f, x) => s"""{"file":"${esc(f)}",${encode(x)}}""" }
+        .mkString("\n").getBytes("UTF-8"))
+  }
+
+  private val LineEntry = """\{"file":"([^"]+)",(.*)\}""".r
+
+  /** Per-file [min, max] of an integral column: the file-skipping index
+    * of [[filesForRange]]. A file whose column is all null (or absent
+    * after a mergeSchema evolution) has no entry, and a file without an
+    * entry is kept. */
+  private object Stats extends LineStat[(Long, Long)]("stats", true,
+      """"min":(-?\d+),"max":(-?\d+)""".r) {
+    def encode(x: (Long, Long)): String = s""""min":${x._1},"max":${x._2}"""
+    def decode(g: List[String]): (Long, Long) = (g(0).toLong, g(1).toLong)
+    val empty: Option[(Long, Long)] = None
+    def measure(scan: DataFrame, cols: Seq[String]): Seq[Map[String, (Long, Long)]] = {
+      import org.apache.spark.sql.functions.{col => c, max, min}
+      val aggs = cols.flatMap(cl => Seq(min(c(cl)).cast("long"), max(c(cl)).cast("long")))
+      val rows = scan.groupBy("__f").agg(aggs.head, aggs.tail: _*).collect()
+      cols.indices.map(i => rows.iterator
+        .filter(r => !r.isNullAt(1 + 2 * i) && !r.isNullAt(2 + 2 * i))
+        .map(r => r.getString(0) -> ((r.getLong(1 + 2 * i), r.getLong(2 + 2 * i))))
+        .toMap)
+    }
+  }
+
+  /** A family of one integer per file: `agg` of a column over the file's
+    * rows, 0 (the fold identity) for a file of no row or an all-null
+    * column. */
+  private final class LongStat(kind: String, perColumn: Boolean, field: String,
+      number: String, agg: String => Column)
+      extends LineStat[Long](kind, perColumn, s""""$field":$number""".r) {
+    def encode(n: Long): String = s""""$field":$n"""
+    def decode(g: List[String]): Long = g.head.toLong
+    val empty: Option[Long] = Some(0L)
+    def measure(scan: DataFrame, cols: Seq[String]): Seq[Map[String, Long]] =
+      cols.map(cl => scan.groupBy("__f").agg(agg(cl)).collect()
+        .map(r => r.getString(0) -> (if (r.isNullAt(1)) 0L else r.getLong(1))).toMap)
+  }
+
+  /** Per-file row counts (one sidecar per version, not per column). */
+  private val Counts = new LongStat("counts", false, "rows", """(\d+)""",
+    _ => functions.count(functions.lit(1)))
+
+  /** Per-file exact sums of an integral column. */
+  private val Sums = new LongStat("sum", true, "sum", """(-?\d+)""",
+    cl => functions.sum(functions.col(cl).cast("long")))
+
+  /** A moments sketch ([[graft.operators.Sketch.momentsSketch]] state):
+    * (n of non-null values, min, max, Σx..Σx⁴ exact); min and max mean
+    * something only when n > 0. */
+  private type Moment = (Long, Long, Long, Seq[BigInt])
+
+  /** Per-file moments sketches of an integral column, the sums as exact
+    * decimal digit strings (they overflow long long before DECIMAL(38,0)
+    * does); an all-null file stores the fold identity (n=0, sums 0). */
+  private object Moments extends LineStat[Moment]("moments", true,
+      (""""n":(\d+),"lo":(-?\d+),"hi":(-?\d+),""" +
+        """"s1":"(-?\d+)","s2":"(-?\d+)","s3":"(-?\d+)","s4":"(-?\d+)"""").r) {
+    def encode(x: Moment): String = {
+      val (n, lo, hi, ss) = x
+      s""""n":$n,"lo":$lo,"hi":$hi,""" +
+        s""""s1":"${ss(0)}","s2":"${ss(1)}","s3":"${ss(2)}","s4":"${ss(3)}""""
+    }
+    def decode(g: List[String]): Moment =
+      (g(0).toLong, g(1).toLong, g(2).toLong, g.drop(3).map(BigInt(_)))
+    val empty: Option[Moment] = Some((0L, 0L, 0L, Seq.fill(4)(BigInt(0))))
+    def measure(scan: DataFrame, cols: Seq[String]): Seq[Map[String, Moment]] =
+      cols.map { cl =>
+        import org.apache.spark.sql.functions.{col => c}
+        graft.operators.Sketch.momentsSketch(scan.select(c("__f"), c(cl)), Seq("__f"), c(cl))
+          .collect()
+          .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3),
+            (4 to 7).map(i => BigInt(r.getString(i))))))
+          .toMap
+      }
+  }
+
+  /** Per-file HLL registers of a column's string form at precision `p`
+    * under the pinned hash tagged `tag` ([[graft.operators.Sketch
+    * .hllDistinct]]'s arithmetic); only entries of precision `p` carry,
+    * and an all-null file has no register set. */
+  private final class NdvStat(p: Int, tag: String)
+      extends LineStat[(Int, Map[Int, Int])]("ndv", true, """"p":(\d+),"regs":"([^"]*)"""".r) {
+    def encode(x: (Int, Map[Int, Int])): String =
+      s""""p":${x._1},"regs":"${x._2.toSeq.sorted.map { case (i, r) => s"$i:$r" }.mkString(",")}""""
+    def decode(g: List[String]): (Int, Map[Int, Int]) =
+      (g(0).toInt, g(1).split(",").iterator.filter(_.nonEmpty).map { kv =>
+        val Array(i, r) = kv.split(":")
+        i.toInt -> r.toInt
+      }.toMap)
+    val empty: Option[(Int, Map[Int, Int])] = Some((p, Map.empty[Int, Int]))
+    override def carries(x: (Int, Map[Int, Int])): Boolean = x._1 == p
+    def measure(scan: DataFrame, cols: Seq[String]): Seq[Map[String, (Int, Map[Int, Int])]] =
+      cols.map { cl =>
+        import org.apache.spark.sql.functions.{bin, length, lit, max, pmod, shiftright,
+          when, col => c}
+        import graft.operators.Sketch
+        val W = Sketch.HllW
+        val h = Sketch.pinnedHash(c("__s"), tag)
+        val y = shiftright(h, p).bitwiseAND(lit((1L << W) - 1L))
+        val rho = when(y === 0L, lit(W + 1)).otherwise(lit(W + 1) - length(bin(y)))
+        scan.filter(c(cl).isNotNull)
+          .select(c("__f"), c(cl).cast("string").as("__s"))
+          .select(c("__f"), pmod(h, lit((1 << p).toLong)).cast("int").as("__idx"),
+            rho.cast("int").as("__rho"))
+          .groupBy("__f", "__idx").agg(max(c("__rho")).as("__mx"))
+          .collect()
+          .groupBy(_.getString(0))
+          .map { case (f, rs) => f -> ((p, rs.map(r => r.getInt(1) -> r.getInt(2)).toMap)) }
+      }
+  }
+
+  /** The NDV family as its readers parse it (the parse takes no parameter). */
+  private val Ndv = new NdvStat(6, "vtndv")
+
+  /** Write version `v`'s sidecar of `stat` for each of `cols`. Every entry
+    * an earlier sidecar (of any version up to `v`) holds carries
+    * verbatim, and ONE scan ([[scanFiles]]) measures the files that some
+    * column's sidecars do not cover — O(commit), not O(table). The scan
+    * keys its rows by lineage rel, which [[relsByLineage]]'s rule maps
+    * back to the manifest rels, borrowed files included. */
+  private def writeSidecar[V](spark: SparkSession, path: String, v: Long,
+      stat: FileStat[V], cols: Seq[String]): Unit = {
+    import org.apache.spark.sql.functions.{col => c}
+    val files = filesAt(path, v)
+    val prior = cols.map(cl => versions(path).filter(_ <= v).reverse
+      .flatMap(stat.read(path, _, cl))
+      .foldLeft(Map.empty[String, V])((acc, e) => e.filter(x => stat.carries(x._2)) ++ acc))
+    val fresh = files.filterNot(a => prior.forall(_.contains(relOf(path, a))))
+    val measured =
+      if (fresh.isEmpty) cols.map(_ => Map.empty[String, V])
+      else {
+        val relByLineage = fresh.map(a => lineageRel(a) -> relOf(path, a)).toMap
+        stat.measure(scanFiles(spark, path, fresh)
+            .withColumn("__f", DvExpressions.lineageRelOf(c("_metadata.file_path"))), cols)
+          .map(_.map { case (l, x) => relByLineage(l) -> x })
+      }
+    val rels = files.map(relOf(path, _)).sorted
+    cols.indices.foreach(i => stat.write(path, v, cols(i), rels.flatMap(r =>
+      prior(i).get(r).orElse(measured(i).get(r)).orElse(stat.empty).map(r -> _))))
+  }
+
+  /** Version `v`'s manifest rels and `stat`'s entries for `col`, when the
+    * sidecar exists and covers every rel — the coverage rule of every
+    * exact metadata face: an answer never silently undercounts. */
+  private def covered[V](path: String, v: Long, stat: FileStat[V],
+      col: String = ""): Option[(Seq[String], Map[String, V])] =
+    stat.read(path, v, col).flatMap { e =>
+      val rels = relsAt(path, v)
+      if (rels.forall(e.contains)) Some((rels, e)) else None
+    }
+
+  private def relsAt(path: String, v: Long): Seq[String] =
+    filesAt(path, v).map(relOf(path, _))
+
+  /** `rels`' entries merged per partition value of `partCol`, sorted by
+    * value; `face` names the caller in the refusal of a rel outside a
+    * `<partCol>=<value>/` directory. */
+  private def byPartition[V, R](rels: Seq[String], e: Map[String, V], partCol: String,
+      face: String)(merge: Seq[V] => R): Seq[(String, R)] =
+    rels.groupBy(partitionKeyOf(_, partCol, face))
+      .map { case (k, fs) => k -> merge(fs.map(e)) }.toSeq.sortBy(_._1)
+
+  /** The LIVE face of a subtractable family: the covered physical
+    * entries merged by `total` per partition value of `partCol` (or over
+    * the whole version, key ""), minus the `deleted` entries — the
+    * family's measure of the rows the version's deletion vectors mark,
+    * per marked file (lineage rel), restricted by their producers to the
+    * manifest's files so dangling marks never subtract. */
+  private def liveFold[V, D](path: String, v: Long, stat: FileStat[V], col: String,
+      partCol: Option[String], face: String)(total: Seq[V] => D)(
+      deleted: => Seq[(String, V)])(minus: (D, V) => D): Option[Seq[(String, D)]] =
+    covered(path, v, stat, col).map { case (rels, e) =>
+      val physical = partCol.fold(Seq("" -> total(rels.map(e))))(
+        byPartition(rels, e, _, face)(total))
+      val del = deleted
+      if (del.isEmpty) physical
+      else {
+        val byLineage = relsByLineage(path, v)
+        val keyOf = (rel: String) => partCol.fold("")(partitionKeyOf(rel, _, face))
+        val d = del.groupBy { case (l, _) => keyOf(byLineage(l)) }
+        physical.map { case (k, x) => k -> d.getOrElse(k, Nil).map(_._2).foldLeft(x)(minus) }
+      }
+    }
+
   // ---- manifest-level data skipping ----
 
-  /** Per-file [min,max] of a LONG column, computed in ONE distributed
-    * pass via input_file_name — the stats a manifest needs for
-    * file-skipping reads. Keys are data-relative paths. */
-  private[graft] def fileStats(spark: SparkSession, path: String,
-      files: Seq[String], col: String): Map[String, (Long, Long)] = {
-    import org.apache.spark.sql.functions.{col => c, input_file_name, max, min}
-    scanParquet(spark, files)
-      .groupBy(input_file_name().as("__f"))
-      .agg(min(c(col)).cast("long").as("__lo"), max(c(col)).cast("long").as("__hi"))
-      .collect()
-      // a file whose stats column is entirely null (or absent after a
-      // mergeSchema evolution commit) has null min/max: leave it OUT of
-      // the stats map — filesForRange treats a missing entry as "keep",
-      // so the file stays readable instead of NPE-ing the sidecar write
-      .filter(r => !r.isNullAt(1) && !r.isNullAt(2))
-      .map(r => relPathOf(path, r.getString(0)) -> (r.getLong(1), r.getLong(2)))
-      .toMap
-  }
+  /** Per-file [min, max] of an integral column:
+    * `_versions/vN.stats.<col>.json`, one line per file — the stats
+    * [[filesForRange]] skips by. */
+  def writeStats(spark: SparkSession, path: String, v: Long, col: String): Unit =
+    writeSidecar(spark, path, v, Stats, Seq(col))
 
-  /** Sidecar stats for a version: `_versions/vN.stats.<col>.json`, one
-    * line per file. Written once, after commit — stats are derivable
-    * metadata, so they live OUTSIDE the atomic manifest (a version
-    * without stats still reads; readWhere just can't skip). */
-  def writeStats(spark: SparkSession, path: String, v: Long, col: String): Unit = {
-    val stats = fileStats(spark, path, filesAt(path, v), col)
-    writeStatsSidecar(path, v, col, stats)
-  }
-
-  private def writeStatsSidecar(path: String, v: Long, col: String,
-      stats: Map[String, (Long, Long)]): Unit = {
-    val body = stats.toSeq.sortBy(_._1).map { case (f, (lo, hi)) =>
-      s"""{"file":"${esc(f)}","min":$lo,"max":$hi}"""
-    }.mkString("\n")
-    writeReplace(path, new HPath(versionsDir(path), f"v$v%08d.stats.${col}.json"),
-      body.getBytes("UTF-8"))
-  }
-
-  /** One-pass MULTI-COLUMN skip stats: ONE scan of the version computes
-    * per-file [min,max] for every named column and writes each column's
-    * standard sidecar — at 100 TB the nightly stats job pays one table
-    * scan instead of |cols| scans. Per-column output is byte-identical
-    * to [[writeStats]] (spec'd), so every consumer ([[filesForRange]],
-    * [[readComposed]], the CDC carry) is untouched. */
+  /** [[writeStats]] for several columns in ONE scan of the uncovered
+    * files — at 100 TB the nightly stats job pays one table scan instead
+    * of |cols| scans. Each column's sidecar is byte-identical to
+    * [[writeStats]]'s (spec'd). */
   def writeStatsAll(spark: SparkSession, path: String, v: Long,
       cols: Seq[String]): Unit = {
-    import org.apache.spark.sql.functions.{col => c, input_file_name, max, min}
     require(cols.nonEmpty, "VersionedTable.writeStatsAll: at least one column")
-    val aggs = cols.flatMap(cl => Seq(
-      min(c(cl)).cast("long").as(s"__lo_$cl"),
-      max(c(cl)).cast("long").as(s"__hi_$cl")))
-    val rows = readParquet(spark, path, filesAt(path, v))
-      .groupBy(input_file_name().as("__f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-    cols.zipWithIndex.foreach { case (cl, i) =>
-      val stats = rows.iterator
-        // all-null / schema-absent columns: leave the file out, same
-        // keep-on-missing contract as fileStats
-        .filter(r => !r.isNullAt(1 + 2 * i) && !r.isNullAt(2 + 2 * i))
-        .map(r => relPathOf(path, r.getString(0)) ->
-          (r.getLong(1 + 2 * i), r.getLong(2 + 2 * i)))
-        .toMap
-      writeStatsSidecar(path, v, cl, stats)
-    }
+    writeSidecar(spark, path, v, Stats, cols)
   }
 
   /** Metadata-only MAINTENANCE report for the latest version — the
@@ -1963,15 +2132,6 @@ object VersionedTable extends Logging {
     } else Nil
   }
 
-  private def statsFile(path: String, v: Long, col: String): HPath =
-    new HPath(versionsDir(path), f"v$v%08d.stats.${col}.json")
-
-  private def parseStats(p: HPath): Map[String, (Long, Long)] = {
-    val entry = """\{"file":"([^"]+)","min":(-?\d+),"max":(-?\d+)\}""".r
-    readUtf8(p).split("\n")
-      .collect { case entry(f, mn, mx) => f -> (mn.toLong, mx.toLong) }.toMap
-  }
-
   /** The version's files whose [min,max] on `col` intersects [lo,hi] —
     * the skip decision is manifest-side arithmetic, no file is opened.
     * Files absent from the stats sidecar (or a missing sidecar) are
@@ -1979,15 +2139,12 @@ object VersionedTable extends Logging {
   def filesForRange(path: String, v: Long, col: String,
       lo: Long, hi: Long): Seq[String] = {
     val all = filesAt(path, v)
-    val sidecar = statsFile(path, v, col)
-    if (!exists(sidecar)) return all
-    val stats = parseStats(sidecar)
-    all.filter { abs =>
+    Stats.read(path, v, col).fold(all)(stats => all.filter { abs =>
       stats.get(relOf(path, abs)) match {
         case Some((mn, mx)) => mx >= lo && mn <= hi
         case None => true // unknown file: keep
       }
-    }
+    })
   }
 
   /** Range read with manifest-level file skipping: prune the file list
@@ -2018,25 +2175,22 @@ object VersionedTable extends Logging {
     * version (write one post-commit via [[writeStats]]); without it the
     * commit falls back to a full copy-on-write rewrite — skipping must
     * never lose a change. Added rows (ids inside no file's range) land
-    * in the rewrite batch's new files. The new version gets a fresh
-    * stats sidecar (carried files keep their entries; rewritten files
-    * are re-measured). */
+    * in the rewrite batch's new files, the only ones the new version's
+    * stats sidecar measures. */
   def commitCdcCow(spark: SparkSession, path: String, changes: DataFrame,
       idCol: String, valueCols: Seq[String]): Long = {
     import org.apache.spark.sql.functions.{col => c, broadcast, lit}
     val cur = latestVersion(path).getOrElse(
       throw new IllegalArgumentException(s"VersionedTable: $path does not exist"))
     val all = filesAt(path, cur)
-    val sidecar = statsFile(path, cur, idCol)
-    val (touchedAbs, carriedRel) =
-      if (!exists(sidecar)) (all, Seq.empty[String]) // no stats: full COW
-      else {
-        val stats = parseStats(sidecar).toSeq.map { case (f, (mn, mx)) => (f, mn, mx) }
-        val statMap = stats.map(s => s._1 -> (s._2, s._3)).toMap
+    val stats = Stats.read(path, cur, idCol)
+    val (touchedAbs, carriedRel) = stats match {
+      case None => (all, Seq.empty[String]) // no stats: full COW
+      case Some(statMap) =>
         // which file ranges does the churn hit? churn-sized join against
         // the (tiny, broadcast) interval list — ids never collect
-        val intervals = spark.createDataFrame(
-          stats.map(s => (s._1, s._2, s._3))).toDF("__file", "__lo", "__hi")
+        val intervals = spark.createDataFrame(statMap.toSeq.map { case (f, (mn, mx)) =>
+          (f, mn, mx) }).toDF("__file", "__lo", "__hi")
         val touched = changes.select(c(idCol).as("__id")).distinct()
           .join(broadcast(intervals),
             c("__id") >= c("__lo") && c("__id") <= c("__hi"))
@@ -2044,7 +2198,7 @@ object VersionedTable extends Logging {
         val (t, carry) = all.partition(a => statMap.get(relOf(path, a)).isEmpty ||
           touched.contains(relOf(path, a)))
         (t, carry.map(relOf(path, _)))
-      }
+    }
     // rewrite = merge the changes into ONLY the touched files' rows;
     // added ids live in no file, so they always join the rewrite batch
     val oldSubset =
@@ -2058,34 +2212,10 @@ object VersionedTable extends Logging {
     val v = cur + 1
     publish(path, v, cur, "cdc-cow", carriedRel ++ newFiles,
       dvRelsAt(path, cur))
-    // refresh the skip stats O(churn): carried files KEEP their old
-    // sidecar entries verbatim (their bytes didn't move), only the new
-    // files are measured — re-running writeStats over the whole version
-    // would full-scan a 100 TB table per nightly commit
-    refreshStatsSidecar(spark, path, cur, v, idCol, carriedRel, newFiles)
+    // refresh the skip stats O(churn) when the parent had them: carried
+    // files keep their entries, only the new files are measured
+    if (stats.isDefined) writeStats(spark, path, v, idCol)
     v
-  }
-
-  /** O(churn) stats-sidecar carry-forward: if version `fromV` has a
-    * sidecar for `statCol`, write `toV`'s as carried files' entries
-    * verbatim (their bytes didn't move) + fresh measurements of ONLY
-    * the new files. No-op when `fromV` had no sidecar. */
-  private def refreshStatsSidecar(spark: SparkSession, path: String,
-      fromV: Long, toV: Long, statCol: String,
-      carriedRel: Seq[String], newFiles: Seq[String]): Unit = {
-    val sidecar = statsFile(path, fromV, statCol)
-    if (!exists(sidecar)) return
-    val entry = """\{"file":"([^"]+)","min":(-?\d+),"max":(-?\d+)\}""".r
-    val old = readUtf8(sidecar).split("\n")
-      .collect { case e @ entry(f, _, _) => f -> e }.toMap
-    val carried = carriedRel.flatMap(f => old.get(f))
-    val fresh = fileStats(spark, path,
-        newFiles.map(f => new HPath(rootPath(path), f).toString), statCol)
-      .toSeq.sortBy(_._1).map { case (f, (lo, hi)) =>
-        s"""{"file":"${esc(f)}","min":$lo,"max":$hi}"""
-      }
-    writeReplace(path, statsFile(path, toV, statCol),
-      (carried ++ fresh).mkString("\n").getBytes("UTF-8"))
   }
 
   /** Manifest action label of a version (empty if unparseable). */
@@ -2298,7 +2428,7 @@ object VersionedTable extends Logging {
     val v = cur + 1
     publish(path, v, cur, s"optimize-partitioned:$partCol",
       carriedRel ++ newFiles, dvRelsAt(path, cur))
-    refreshStatsSidecar(spark, path, cur, v, sortCol, carriedRel, newFiles)
+    if (exists(Stats.file(path, cur, sortCol))) writeStats(spark, path, v, sortCol)
     v
   }
 
@@ -2426,95 +2556,28 @@ object VersionedTable extends Logging {
 
   /** Partition-pruned read: only the named partitions' files are ever
     * listed or opened; the partition column is recovered from the
-    * paths (basePath). */
+    * paths (basePath) ([[readComposed]]). */
   def readWherePartitions(spark: SparkSession, path: String, v: Long,
-      partCol: String, values: Seq[String]): DataFrame = {
-    val files = filesForPartitions(path, v, partCol, values)
-    if (files.isEmpty)
-      readVersion(spark, path, v).where(org.apache.spark.sql.functions.lit(false))
-    else applyDv(spark, path, v,
-      readParquet(spark, path, files.sorted),
-      Some(files))
-  }
+      partCol: String, values: Seq[String]): DataFrame =
+    readComposed(spark, path, v, partitions = Some((partCol, values)))
 
   /** The composed 100 TB read: partition pruning FIRST (exact, from
     * manifest paths), then per-file stats skipping WITHIN the surviving
-    * partitions, then the residual range filters. */
+    * partitions, then the residual range filters ([[readComposed]]). */
   def readWherePartitionsAnd(spark: SparkSession, path: String, v: Long,
       partCol: String, values: Seq[String],
-      preds: Seq[(String, Long, Long)]): DataFrame = {
-    import org.apache.spark.sql.functions.{col => c, lit}
-    val byPart = filesForPartitions(path, v, partCol, values).toSet
-    val files = preds.map { case (cl, lo, hi) =>
-      filesForRange(path, v, cl, lo, hi).toSet }
-      .foldLeft(byPart)(_ intersect _)
-    if (files.isEmpty)
-      readVersion(spark, path, v).where(lit(false))
-    else {
-      val residual = preds.map { case (cl, lo, hi) => c(cl) >= lo && c(cl) <= hi }
-        .foldLeft(lit(true))(_ && _)
-      applyDv(spark, path, v,
-        readParquet(spark, path, files.toSeq.sorted),
-        Some(files.toSeq)).where(residual)
-    }
-  }
+      preds: Seq[(String, Long, Long)]): DataFrame =
+    readComposed(spark, path, v, partitions = Some((partCol, values)), ranges = preds)
 
   // ---- row-count sidecar: metadata-only aggregates ----
 
-  /** Table-relative form of an `input_file_name()` URI; URI decode
-    * first (the scan reports percent-encoded URIs), then the same
-    * prefix strip as [[relOf]] against the QUALIFIED root (the scan's
-    * URIs are always absolute, the root may be relative). */
-  private def relPathOf(path: String, fileUri: String): String = {
-    val a = new java.net.URI(fileUri).getPath
-    val p = new HPath(path)
-    val root = fsOf(p).makeQualified(p).toUri.getPath
-    if (a != null && a.startsWith(root + "/")) a.substring(root.length + 1)
-    else s"data/${a.substring(a.lastIndexOf('/') + 1)}"
-  }
-
-  private def relsAt(path: String, v: Long): Seq[String] =
-    filesAt(path, v).map(relOf(path, _))
-
-  private def countsFile(path: String, v: Long): HPath =
-    new HPath(versionsDir(path), f"v$v%08d.counts.json")
-
-  private def parseCounts(p: HPath): Map[String, Long] = {
-    val entry = """\{"file":"([^"]+)","rows":(\d+)\}""".r
-    readUtf8(p).split("\n")
-      .collect { case entry(f, n) => f -> n.toLong }.toMap
-  }
-
-  /** Per-file row counts: `_versions/vN.counts.json`. Data files are
-    * immutable, so a rel-path's count can never change — entries
-    * already measured by any prior version's sidecar carry verbatim
-    * and only the new files are counted, one distributed pass over
-    * O(commit), not O(table). (A file counted as 0 rows is a genuine
-    * empty parquet file: it groups to no row, so it defaults to 0.) */
-  def writeCounts(spark: SparkSession, path: String, v: Long): Unit = {
-    // counts entries are PHYSICAL per-file rows — a per-file truth that
-    // holds with or without deletion vectors (files are immutable), so
-    // writing is allowed on DV versions; only the summing faces must
-    // distinguish physical from live ([[countAt]] vs [[countAtLive]])
-    val rels = relsAt(path, v)
-    val prior: Map[String, Long] = versions(path).filter(_ <= v).reverse
-      .map(pv => countsFile(path, pv)).filter(exists)
-      .foldLeft(Map.empty[String, Long])((acc, p) => parseCounts(p) ++ acc)
-    val fresh = rels.filterNot(prior.contains)
-    val measured: Map[String, Long] =
-      if (fresh.isEmpty) Map.empty
-      else {
-        import org.apache.spark.sql.functions.{count, input_file_name, lit}
-        scanRels(spark, path, fresh)
-          .groupBy(input_file_name().as("__f")).agg(count(lit(1)).as("__n"))
-          .collect()
-          .map(r => relPathOf(path, r.getString(0)) -> r.getLong(1)).toMap
-      }
-    val body = rels.map(f => f -> prior.getOrElse(f, measured.getOrElse(f, 0L)))
-      .sortBy(_._1)
-      .map { case (f, n) => s"""{"file":"${esc(f)}","rows":$n}""" }.mkString("\n")
-    writeReplace(path, countsFile(path, v), body.getBytes("UTF-8"))
-  }
+  /** Per-file row counts: `_versions/vN.counts.json`, measured O(commit)
+    * ([[writeSidecar]]). A genuine empty parquet file counts 0. Counts are
+    * PHYSICAL per-file rows — a truth deletion vectors do not alter, so
+    * writing is allowed on DV versions; only the summing faces tell
+    * physical from live ([[countAt]] vs [[countAtLive]]). */
+  def writeCounts(spark: SparkSession, path: String, v: Long): Unit =
+    writeSidecar(spark, path, v, Counts, Seq(""))
 
   /** Exact row count of a version from the manifest + counts sidecar
     * alone — no data file is opened, no cluster is touched. None when
@@ -2522,38 +2585,27 @@ object VersionedTable extends Logging {
     * a metadata answer must never silently undercount. */
   def countAt(path: String, v: Long): Option[Long] = {
     requireNoDv(path, v, "countAt")
-    val p = countsFile(path, v)
-    if (!exists(p)) return None
-    val counts = parseCounts(p)
-    val rels = relsAt(path, v)
-    if (rels.forall(counts.contains)) Some(rels.map(counts).sum) else None
+    rowCountEstimateAt(path, v)
   }
 
-  /** Per-partition exact row counts, metadata-only: GROUP BY partition
-    * answered by path arithmetic over the manifest joined with the
-    * counts sidecar — "count 100 TB by partition" at zero data I/O,
-    * the query every ingest dashboard runs hourly. Coverage rule as
-    * [[countAt]]; requires a partitioned layout on `partCol`. */
   /** Exact LIVE row count of a version that carries deletion vectors:
     * the physical counts sidecar minus the version's DV cardinality —
     * manifest + sidecar + O(deleted)-row I/O, no data file opened.
-    * Dangling DV marks (files a later rewrite dropped) are excluded by
-    * restricting to the manifest's own lineage rels. Coverage contract
-    * as [[countAt]]: None unless the sidecar covers every file. */
-  def countAtLive(spark: SparkSession, path: String, v: Long): Option[Long] = {
-    val p = countsFile(path, v)
-    if (!exists(p)) return None
-    val counts = parseCounts(p)
-    val rels = relsAt(path, v)
-    if (!rels.forall(counts.contains)) return None
-    val physical = rels.map(counts).sum
+    * Dangling marks never subtract; coverage rule as [[countAt]]. */
+  def countAtLive(spark: SparkSession, path: String, v: Long): Option[Long] =
+    liveFold(path, v, Counts, "", None, "countAtLive")(_.sum)(
+      dvMarkCounts(spark, path, v))(_ - _).map(_.head._2)
+
+  /** Marks per marked file (lineage rel) of version `v`'s deletion
+    * vectors, restricted to the manifest's files; empty without DVs. */
+  private def dvMarkCounts(spark: SparkSession, path: String,
+      v: Long): Seq[(String, Long)] = {
     val dvs = dvsAt(path, v)
-    if (dvs.isEmpty) Some(physical)
-    else {
-      val liveRels = filesAt(path, v).map(lineageRel)
-      val deleted = restrictToRels(spark, scanDv(spark, dvs), "file", liveRels).count()
-      Some(physical - deleted)
-    }
+    if (dvs.isEmpty) Nil
+    else restrictToRels(spark, scanDv(spark, dvs), "file", filesAt(path, v).map(lineageRel))
+      .groupBy("file").count()
+      .collect() // O(files) rows: per-FILE mark totals, not marks
+      .map(r => r.getString(0) -> r.getLong(1)).toSeq
   }
 
   /** The partition VALUE of a manifest rel (`data/<partCol>=v/...`),
@@ -2570,130 +2622,64 @@ object VersionedTable extends Logging {
     partitionValue(parent, pre)
   }
 
-/** Per-partition exact LIVE row counts under deletion vectors — the
-    * per-partition analogue of [[countAtLive]]: physical per-partition
-    * counts minus the DV marks grouped by the partition segment of
-    * their lineage rel (`data/<partCol>=v/...`), restricted to the
-    * manifest's own rels so dangling marks never subtract. The
-    * "count 100 TB by partition" dashboard stays metadata-priced
-    * while a delete backlog is outstanding.
-    *
-    * A partition whose rows are ALL deleted (or all-empty files) is
-    * reported as `(key, 0)` by default — this is a metadata face over
-    * the MANIFEST's partition list, and the zero row says "partition
-    * exists physically, zero live rows". A `GROUP BY` over the live
-    * rows OMITS such a partition; pass `dropEmpty = true` to match
-    * that grouped-read semantics exactly. */
+  /** Per-partition [[countAtLive]]: the "count 100 TB by partition"
+    * dashboard stays metadata-priced while a delete backlog is
+    * outstanding. A partition whose rows are ALL deleted (or all-empty
+    * files) is reported as `(key, 0)` by default — a metadata face over
+    * the MANIFEST's partition list: "partition exists physically, zero
+    * live rows". A `GROUP BY` over the live rows OMITS such a partition;
+    * pass `dropEmpty = true` to match that grouped-read semantics. */
   def partitionRowCountsLive(spark: SparkSession, path: String, v: Long,
-      partCol: String, dropEmpty: Boolean = false): Option[Seq[(String, Long)]] = {
-    val p = countsFile(path, v)
-    if (!exists(p)) return None
-    val counts = parseCounts(p)
-    val rels = relsAt(path, v)
-    if (!rels.forall(counts.contains)) return None
-    def partOf(rel: String): String =
-      partitionKeyOf(rel, partCol, "partitionRowCountsLive")
-    val physical = rels.groupBy(partOf)
-      .map { case (k, fs) => k -> fs.map(counts).sum }
-    val dvs = dvsAt(path, v)
-    val deleted: Map[String, Long] =
-      if (dvs.isEmpty) Map.empty
-      else {
-        import org.apache.spark.sql.functions.col
-        val byLineage = relsByLineage(path, v)
-        restrictToRels(spark, scanDv(spark, dvs), "file", byLineage.keys.toSeq)
-          .groupBy(col("file")).count()
-          .collect() // O(files) rows: per-FILE mark totals, not marks
-          .groupBy(r => partOf(byLineage(r.getString(0))))
-          .map { case (k, rs) => k -> rs.map(_.getLong(1)).sum }
-      }
-    val liveByPart = physical
-      .map { case (k, n) => k -> (n - deleted.getOrElse(k, 0L)) }
-      .toSeq.sortBy(_._1)
-    Some(if (dropEmpty) liveByPart.filter(_._2 > 0L) else liveByPart)
-  }
+      partCol: String, dropEmpty: Boolean = false): Option[Seq[(String, Long)]] =
+    liveFold(path, v, Counts, "", Some(partCol), "partitionRowCountsLive")(_.sum)(
+      dvMarkCounts(spark, path, v))(_ - _)
+      .map(live => if (dropEmpty) live.filter(_._2 > 0L) else live)
 
+  /** Per-partition exact row counts, metadata-only: GROUP BY partition
+    * answered by path arithmetic over the manifest joined with the
+    * counts sidecar — "count 100 TB by partition" at zero data I/O,
+    * the query every ingest dashboard runs hourly. Coverage rule as
+    * [[countAt]]; requires a partitioned layout on `partCol`. */
   def partitionRowCounts(path: String, v: Long,
       partCol: String): Option[Seq[(String, Long)]] = {
     requireNoDv(path, v, "partitionRowCounts")
-    val p = countsFile(path, v)
-    if (!exists(p)) return None
-    val counts = parseCounts(p)
-    val rels = relsAt(path, v)
-    if (!rels.forall(counts.contains)) return None
-    Some(rels.groupBy(partitionKeyOf(_, partCol, "partitionRowCounts"))
-      .map { case (k, fs) => k -> fs.map(counts).sum }
-      .toSeq.sortBy(_._1))
+    covered(path, v, Counts).map { case (rels, n) =>
+      byPartition(rels, n, partCol, "partitionRowCounts")(_.sum) }
   }
+
+  /** `live` keeping only the partitions with live rows, decided by the
+    * LIVE COUNT ([[partitionRowCountsLive]]); None without counts
+    * coverage — the coverage rule, not a silent best-effort. */
+  private def nonEmptyPartitions[D](spark: SparkSession, path: String, v: Long,
+      partCol: String, live: Seq[(String, D)]): Option[Seq[(String, D)]] =
+    partitionRowCountsLive(spark, path, v, partCol, dropEmpty = true).map { nonEmpty =>
+      val keep = nonEmpty.map(_._1).toSet
+      live.filter { case (k, _) => keep(k) }
+    }
 
   // ---- sum sidecar: metadata-only SUM aggregates ----
 
-  private def sumFile(path: String, v: Long, col: String): HPath =
-    new HPath(versionsDir(path), f"v$v%08d.sum.${col}.json")
-
-  private def parseSums(p: HPath): Map[String, Long] = {
-    val entry = """\{"file":"([^"]+)","sum":(-?\d+)\}""".r
-    readUtf8(p).split("\n")
-      .collect { case entry(f, n) => f -> n.toLong }.toMap
-  }
-
   /** Per-file exact sums of an integral column:
-    * `_versions/vN.sum.<col>.json` — with [[writeCounts]] (COUNT),
-    * [[writeStats]] (MIN/MAX) and [[writeNdv]] (approx NDV) this
-    * completes the manifest-statistics family: the budget queries a
+    * `_versions/vN.sum.<col>.json`, measured O(commit) ([[writeSidecar]]);
+    * an all-null file stores 0, the fold identity. The budget queries a
     * mixing/packing pipeline runs hourly ("token mass per source
-    * partition") answer from metadata at zero data I/O. Same refresh
-    * contract as the others: immutable files carry verbatim, only the
-    * commit's new files are measured. A file whose column is entirely
-    * null stores 0 — the fold identity, so merged sums stay exact. */
-  def writeSums(spark: SparkSession, path: String, v: Long, col: String): Unit = {
-    // DV-safe: the sidecar records per-IMMUTABLE-FILE physical truth,
-    // which deletion vectors do not alter — only the exact-physical
-    // READ faces refuse under DVs ([[sumAt]]); the live faces fold the
-    // DV deltas ([[sumAtLive]]) and need this sidecar at the DV version
-    val rels = relsAt(path, v)
-    val prior: Map[String, Long] = versions(path).filter(_ <= v).reverse
-      .map(pv => sumFile(path, pv, col)).filter(exists)
-      .foldLeft(Map.empty[String, Long])((acc, p) => parseSums(p) ++ acc)
-    val fresh = rels.filterNot(prior.contains)
-    val measured: Map[String, Long] =
-      if (fresh.isEmpty) Map.empty
-      else {
-        import org.apache.spark.sql.functions.{input_file_name, sum, col => c}
-        scanRels(spark, path, fresh)
-          .groupBy(input_file_name().as("__f"))
-          .agg(sum(c(col).cast("long")).as("__s"))
-          .collect()
-          .map(r => relPathOf(path, r.getString(0)) ->
-            (if (r.isNullAt(1)) 0L else r.getLong(1))).toMap
-      }
-    val body = rels.map(f => f -> prior.getOrElse(f, measured.getOrElse(f, 0L)))
-      .sortBy(_._1)
-      .map { case (f, n) => s"""{"file":"${esc(f)}","sum":$n}""" }.mkString("\n")
-    writeReplace(path, sumFile(path, v, col), body.getBytes("UTF-8"))
-  }
+    * partition") answer from it at zero data I/O. */
+  def writeSums(spark: SparkSession, path: String, v: Long, col: String): Unit =
+    writeSidecar(spark, path, v, Sums, Seq(col))
 
   /** Exact SUM of `col` at version `v` from metadata alone; coverage
     * rule as [[countAt]]. */
   def sumAt(path: String, v: Long, col: String): Option[Long] = {
     requireNoDv(path, v, "sumAt")
-    val p = sumFile(path, v, col)
-    if (!exists(p)) return None
-    val sums = parseSums(p)
-    val rels = relsAt(path, v)
-    if (rels.forall(sums.contains)) Some(rels.map(sums).sum) else None
+    covered(path, v, Sums, col).map { case (rels, s) => rels.map(s).sum }
   }
 
-  /** The version's DV-DELETED rows, lineage-tagged and restricted to
-    * the marked files only — the shared O(churn) value scan behind
-    * [[deletedValueSums]] / [[deletedValueMoments]]: counts subtract
-    * from the DV shards alone (cardinality), but sums and moments need
-    * the deleted VALUES, which live in the data files — scanning ONLY
-    * the marked files is the honest price of live-exactness, O(churn)
-    * column I/O, never O(table). Dangling marks (files a later rewrite
-    * dropped) are excluded by the manifest-lineage restriction, as in
-    * [[countAtLive]]. None when the version carries no effective
-    * marks. */
+  /** The version's DV-DELETED rows, lineage-tagged, read from the
+    * marked files only: counts subtract from the DV shards alone, but
+    * sums and moments need the deleted VALUES, which live in the data
+    * files — O(churn) column I/O, never O(table). Dangling marks (files
+    * a later rewrite dropped) are excluded by the manifest-lineage
+    * restriction. None when the version carries no effective marks. */
   private def dvMarkedRows(spark: SparkSession, path: String,
       v: Long): Option[DataFrame] = {
     import org.apache.spark.sql.functions.{broadcast, col => c}
@@ -2720,183 +2706,61 @@ object VersionedTable extends Logging {
         c("__vt_pos") === c("__dv_pos"), "inner"))
   }
 
-  private def deletedValueSums(spark: SparkSession, path: String, v: Long,
-      valueCol: String): Seq[(String, Long)] = {
-    import org.apache.spark.sql.functions.{col => c, sum}
-    dvMarkedRows(spark, path, v).map { rows =>
-      rows.groupBy(c("__vt_file"))
-        .agg(sum(c(valueCol).cast("long")).as("__s"))
-        .collect()
-        .map(r => r.getString(0) -> (if (r.isNullAt(1)) 0L else r.getLong(1)))
-        .toSeq
-    }.getOrElse(Nil)
-  }
-
-  /** Moments-sketch state of the DELETED rows per marked file — (n of
-    * non-null deleted values, Σx..Σx⁴ exact): what [[momentsAtLive]]
-    * subtracts from the physical moments sidecar. Same O(churn) scan
-    * contract as [[deletedValueSums]]. */
-  private def deletedValueMoments(spark: SparkSession, path: String, v: Long,
-      valueCol: String): Seq[(String, (Long, Seq[BigInt]))] = {
-    import org.apache.spark.sql.functions.{col => c}
-    dvMarkedRows(spark, path, v).map { rows =>
-      graft.operators.Sketch.momentsSketch(
-          rows.select(c("__vt_file"), c(valueCol)), Seq("__vt_file"), c(valueCol))
-        .collect()
-        .map(r => r.getString(0) ->
-          ((r.getLong(1), (4 to 7).map(i => BigInt(r.getString(i))).toSeq)))
-        .toSeq
-    }.getOrElse(Nil)
-  }
+  /** `stat`'s measure of `col` over the rows version `v`'s deletion
+    * vectors mark, per marked file (lineage rel): what a live face
+    * subtracts from the physical sidecar. Empty without effective marks. */
+  private def deletedOf[V](spark: SparkSession, path: String, v: Long,
+      stat: FileStat[V], col: String): Seq[(String, V)] =
+    dvMarkedRows(spark, path, v).fold(Seq.empty[(String, V)])(rows =>
+      stat.measure(rows.withColumnRenamed("__vt_file", "__f"), Seq(col)).head.toSeq)
 
   /** Exact LIVE SUM of `col` under outstanding deletion vectors: the
-    * physical sum sidecar minus the deleted rows' values, read from
-    * the DV-marked files only ([[deletedValueSums]] — O(churn) column
-    * I/O, no full-table scan). Coverage rule as [[sumAt]]; identical
-    * to it when the version carries no DVs. The live-exact face of
-    * the metadata-face matrix: counts → [[countAtLive]] /
-    * [[partitionRowCountsLive]], sums → this / [[partitionSumsLive]];
-    * moments and NDV refuse under DVs (an HLL register max cannot be
-    * subtracted; purge via optimize/compact re-enables them). */
+    * physical sum sidecar minus the deleted rows' values, read from the
+    * DV-marked files only ([[dvMarkedRows]]). Coverage rule as
+    * [[sumAt]]; identical to it when the version carries no DVs. */
   def sumAtLive(spark: SparkSession, path: String, v: Long,
-      col: String): Option[Long] = {
-    val p = sumFile(path, v, col)
-    if (!exists(p)) return None
-    val sums = parseSums(p)
-    val rels = relsAt(path, v)
-    if (!rels.forall(sums.contains)) return None
-    val physical = rels.map(sums).sum
-    Some(physical - deletedValueSums(spark, path, v, col).map(_._2).sum)
-  }
+      col: String): Option[Long] =
+    liveFold(path, v, Sums, col, None, "sumAtLive")(_.sum)(
+      deletedOf(spark, path, v, Sums, col))(_ - _).map(_.head._2)
 
-  /** Per-partition exact LIVE SUMs under deletion vectors — the
-    * per-partition analogue of [[sumAtLive]], partition derived from
-    * the `k=v` path segment as in [[partitionRowCountsLive]].
-    *
-    * Zero-live-partition semantics as [[partitionRowCountsLive]]: a
-    * fully-deleted partition is reported as `(key, 0)` by default
-    * (which a live-row `GROUP BY` would omit). `dropEmpty = true`
-    * matches the grouped read exactly; emptiness is decided by the
-    * LIVE COUNT (a zero SUM with live rows is kept), so that mode
-    * additionally needs the counts sidecar ([[writeCounts]]) and
-    * returns None without it — the coverage rule, not a silent
-    * best-effort. */
+  /** Per-partition [[sumAtLive]]. Zero-live-partition semantics as
+    * [[partitionRowCountsLive]]; with `dropEmpty` emptiness is decided
+    * by the LIVE COUNT (a zero SUM with live rows is kept), so that mode
+    * also needs the counts sidecar ([[writeCounts]]) and returns None
+    * without it. */
   def partitionSumsLive(spark: SparkSession, path: String, v: Long,
       partCol: String, col: String,
-      dropEmpty: Boolean = false): Option[Seq[(String, Long)]] = {
-    val p = sumFile(path, v, col)
-    if (!exists(p)) return None
-    val sums = parseSums(p)
-    val rels = relsAt(path, v)
-    if (!rels.forall(sums.contains)) return None
-    def partOf(rel: String): String =
-      partitionKeyOf(rel, partCol, "partitionSumsLive")
-    val physical = rels.groupBy(partOf)
-      .map { case (k, fs) => k -> fs.map(sums).sum }
-    val byLineage = relsByLineage(path, v)
-    val deleted = deletedValueSums(spark, path, v, col)
-      .groupBy { case (rel, _) => partOf(byLineage(rel)) }
-      .map { case (k, xs) => k -> xs.map(_._2).sum }
-    val liveByPart = physical
-      .map { case (k, s) => k -> (s - deleted.getOrElse(k, 0L)) }
-      .toSeq.sortBy(_._1)
-    if (!dropEmpty) Some(liveByPart)
-    else partitionRowCountsLive(spark, path, v, partCol, dropEmpty = true)
-      .map { nonEmpty =>
-        val keep = nonEmpty.map(_._1).toSet
-        liveByPart.filter { case (k, _) => keep(k) }
-      }
-  }
+      dropEmpty: Boolean = false): Option[Seq[(String, Long)]] =
+    liveFold(path, v, Sums, col, Some(partCol), "partitionSumsLive")(_.sum)(
+      deletedOf(spark, path, v, Sums, col))(_ - _)
+      .flatMap(live => if (dropEmpty) nonEmptyPartitions(spark, path, v, partCol, live)
+        else Some(live))
 
   /** Per-partition exact SUMs, metadata-only; rules as
     * [[partitionRowCounts]]. */
   def partitionSums(path: String, v: Long, partCol: String,
       col: String): Option[Seq[(String, Long)]] = {
     requireNoDv(path, v, "partitionSums")
-    val p = sumFile(path, v, col)
-    if (!exists(p)) return None
-    val sums = parseSums(p)
-    val rels = relsAt(path, v)
-    if (!rels.forall(sums.contains)) return None
-    Some(rels.groupBy(partitionKeyOf(_, partCol, "partitionSums"))
-      .map { case (k, fs) => k -> fs.map(sums).sum }
-      .toSeq.sortBy(_._1))
+    covered(path, v, Sums, col).map { case (rels, s) =>
+      byPartition(rels, s, partCol, "partitionSums")(_.sum) }
   }
 
   // ---- moments sidecar: metadata-only quantile summaries ----
 
-  private def momentsFile(path: String, v: Long, col: String): HPath =
-    new HPath(versionsDir(path), f"v$v%08d.moments.${col}.json")
-
-  /** (n, lo, hi, s1..s4) — sums as exact decimal digit strings (they
-    * overflow long long before DECIMAL(38,0) does). lo/hi meaningful
-    * only when n > 0. */
-  private def parseMoments(p: HPath)
-      : Map[String, (Long, Long, Long, Seq[BigInt])] = {
-    val entry = ("""\{"file":"([^"]+)","n":(\d+),"lo":(-?\d+),"hi":(-?\d+),""" +
-      """"s1":"(-?\d+)","s2":"(-?\d+)","s3":"(-?\d+)","s4":"(-?\d+)"\}""").r
-    readUtf8(p).split("\n")
-      .collect { case entry(f, n, lo, hi, s1, s2, s3, s4) =>
-        f -> ((n.toLong, lo.toLong, hi.toLong,
-          Seq(s1, s2, s3, s4).map(BigInt(_))))
-      }.toMap
-  }
-
-  /** Per-file moments sketch of an integral column ([[graft.operators
-    * .Sketch.momentsSketch]] state: n, min, max, Σx..Σx⁴ exact):
-    * `_versions/vN.moments.<col>.json` — the manifest-side QUANTILE
-    * summary completing the statistics family (COUNT/SUM answer
-    * totals; this answers "p95 doc length per source partition" from
-    * metadata at zero data I/O via [[graft.operators.Sketch
-    * .momentsQuantile]]). The sketch merges by component-wise addition
-    * (min/max fold), so any file subset's summary is driver-side
-    * arithmetic. Refresh contract as the siblings: a file's entry
-    * depends only on its immutable content — prior entries carry
-    * verbatim, only the commit's new files are measured, O(commit).
-    * A file whose column is all null stores the fold identity
-    * (n=0, sums 0). Swept by vacuum with its version like every
-    * sidecar (version-prefix rule). */
+  /** Per-file moments sketch of an integral column:
+    * `_versions/vN.moments.<col>.json`, measured O(commit)
+    * ([[writeSidecar]]) — the manifest-side QUANTILE summary: "p95 doc
+    * length per source partition" from metadata at zero data I/O via
+    * [[graft.operators.Sketch.momentsQuantile]]. The sketch merges by
+    * component-wise addition (min/max fold), so any file subset's
+    * summary is driver-side arithmetic. */
   def writeMoments(spark: SparkSession, path: String, v: Long,
-      col: String): Unit = {
-    // DV-safe like every sidecar write: per-immutable-file physical
-    // truth; the read faces ([[momentsAt]]/[[partitionMoments]]) refuse
-    // under DVs since moment sums cannot cheaply subtract deleted rows
-    val rels = relsAt(path, v)
-    val prior = versions(path).filter(_ <= v).reverse
-      .map(pv => momentsFile(path, pv, col)).filter(exists)
-      .foldLeft(Map.empty[String, (Long, Long, Long, Seq[BigInt])])(
-        (acc, p) => parseMoments(p) ++ acc)
-    val fresh = rels.filterNot(prior.contains)
-    val measured: Map[String, (Long, Long, Long, Seq[BigInt])] =
-      if (fresh.isEmpty) Map.empty
-      else {
-        import org.apache.spark.sql.functions.input_file_name
-        graft.operators.Sketch.momentsSketch(
-            scanRels(spark, path, fresh)
-              .select(input_file_name().as("__f"),
-                org.apache.spark.sql.functions.col(col)),
-            Seq("__f"), org.apache.spark.sql.functions.col(col))
-          .collect()
-          .map(r => relPathOf(path, r.getString(0)) ->
-            ((r.getLong(1), r.getLong(2), r.getLong(3),
-              (4 to 7).map(i => BigInt(r.getString(i))))))
-          .toMap
-      }
-    val zero = (0L, 0L, 0L, Seq.fill(4)(BigInt(0)))
-    val body = rels.map(f =>
-        f -> prior.getOrElse(f, measured.getOrElse(f, zero)))
-      .sortBy(_._1)
-      .map { case (f, (n, lo, hi, ss)) =>
-        s"""{"file":"${esc(f)}","n":$n,"lo":$lo,"hi":$hi,""" +
-          s""""s1":"${ss(0)}","s2":"${ss(1)}","s3":"${ss(2)}","s4":"${ss(3)}"}"""
-      }.mkString("\n")
-    writeReplace(path, momentsFile(path, v, col), body.getBytes("UTF-8"))
-  }
+      col: String): Unit =
+    writeSidecar(spark, path, v, Moments, Seq(col))
 
   /** Merge a set of per-file moment entries: sums add, min/max fold
     * over the n>0 files. */
-  private def mergeMoments(entries: Seq[(Long, Long, Long, Seq[BigInt])])
-      : (Long, Long, Long, Seq[BigInt]) = {
+  private def mergeMoments(entries: Seq[Moment]): Moment = {
     val nonEmpty = entries.filter(_._1 > 0)
     val n = entries.map(_._1).sum
     val lo = if (nonEmpty.isEmpty) 0L else nonEmpty.map(_._2).min
@@ -2905,6 +2769,16 @@ object VersionedTable extends Logging {
     (n, lo, hi, ss)
   }
 
+  /** The subtractable half of merged moment entries: (n, Σx..Σx⁴). */
+  private def momentSums(entries: Seq[Moment]): (Long, Seq[BigInt]) = {
+    val (n, _, _, ss) = mergeMoments(entries)
+    (n, ss)
+  }
+
+  /** Live moment sums minus a deleted file's moments. */
+  private def minusMoments(a: (Long, Seq[BigInt]), b: Moment): (Long, Seq[BigInt]) =
+    (a._1 - b._1, a._2.zip(b._4).map { case (x, y) => x - y })
+
   /** Moments sketch of `col` at version `v` from metadata alone —
     * (n, min, max, Σx..Σx⁴); feed [[graft.operators.Sketch
     * .momentsQuantile]] for the quantile estimate. Coverage rule as
@@ -2912,11 +2786,7 @@ object VersionedTable extends Logging {
   def momentsAt(path: String, v: Long, col: String)
       : Option[(Long, Long, Long, Seq[BigInt])] = {
     requireNoDv(path, v, "momentsAt")
-    val p = momentsFile(path, v, col)
-    if (!exists(p)) return None
-    val m = parseMoments(p)
-    val rels = relsAt(path, v)
-    if (rels.forall(m.contains)) Some(mergeMoments(rels.map(m))) else None
+    covered(path, v, Moments, col).map { case (rels, m) => mergeMoments(rels.map(m)) }
   }
 
   /** Per-partition moments sketches, metadata-only; rules as
@@ -2924,40 +2794,21 @@ object VersionedTable extends Logging {
   def partitionMoments(path: String, v: Long, partCol: String, col: String)
       : Option[Seq[(String, (Long, Long, Long, Seq[BigInt]))]] = {
     requireNoDv(path, v, "partitionMoments")
-    val p = momentsFile(path, v, col)
-    if (!exists(p)) return None
-    val m = parseMoments(p)
-    val rels = relsAt(path, v)
-    if (!rels.forall(m.contains)) return None
-    Some(rels.groupBy(partitionKeyOf(_, partCol, "partitionMoments"))
-      .map { case (k, fs) => k -> mergeMoments(fs.map(m)) }
-      .toSeq.sortBy(_._1))
+    covered(path, v, Moments, col).map { case (rels, m) =>
+      byPartition(rels, m, partCol, "partitionMoments")(mergeMoments) }
   }
 
-  /** Live-exact MOMENT SUMS under outstanding deletion vectors — the
-    * subtractable half of the moments family: (n of non-null live
-    * values, Σx..Σx⁴ live) = the physical moments sidecar minus the
-    * deleted rows' contributions, read from the marked files only
-    * ([[deletedValueMoments]], O(churn) column I/O). All four power
-    * sums subtract exactly (integer arithmetic end to end); `lo`/`hi`
-    * do NOT (a deleted extremum can't be un-maxed from metadata), so
-    * range — and with it the Cornish–Fisher quantile ESTIMATE — stays
-    * a refuse-under-DV face ([[momentsAt]]); purge via
-    * optimize/[[coalesceDv]]-to-zero re-enables them. Coverage rule as
-    * the siblings: None unless the sidecar covers every file. */
+  /** Live-exact MOMENT SUMS under outstanding deletion vectors: (n of
+    * non-null live values, Σx..Σx⁴ live) = the physical moments sidecar
+    * minus the deleted rows' contributions, read from the marked files
+    * only ([[dvMarkedRows]]). The power sums subtract exactly; `lo`/`hi`
+    * do NOT (a deleted extremum can't be un-maxed from metadata), so the
+    * quantile ESTIMATE stays a refuse-under-DV face ([[momentsAt]]).
+    * Coverage rule as the siblings. */
   def momentsAtLive(spark: SparkSession, path: String, v: Long,
-      col: String): Option[(Long, Seq[BigInt])] = {
-    val p = momentsFile(path, v, col)
-    if (!exists(p)) return None
-    val m = parseMoments(p)
-    val rels = relsAt(path, v)
-    if (!rels.forall(m.contains)) return None
-    val (n, _, _, ss) = mergeMoments(rels.map(m))
-    val del = deletedValueMoments(spark, path, v, col)
-    val dn = del.map(_._2._1).sum
-    val ds = (0 to 3).map(i => del.map(_._2._2(i)).sum)
-    Some((n - dn, ss.zip(ds).map { case (a, b) => a - b }))
-  }
+      col: String): Option[(Long, Seq[BigInt])] =
+    liveFold(path, v, Moments, col, None, "momentsAtLive")(momentSums)(
+      deletedOf(spark, path, v, Moments, col))(minusMoments).map(_.head._2)
 
   /** Exact live MEAN and POPULATION STD of `col` under deletion
     * vectors, derived from [[momentsAtLive]] on the pinned double path
@@ -2983,10 +2834,8 @@ object VersionedTable extends Logging {
     * as mean/std — central sums in exact BigInt (n-power-cleared, see
     * the derivation below) until the final double conversions, immune
     * to the large-mean cancellation the naive double path suffers.
-    * None without sidecar coverage,
-    * under 2 live values, or at zero variance. The QUANTILE estimate
-    * built on these stays refuse-under-DV: it additionally needs
-    * lo/hi, which cannot be un-maxed from metadata. */
+    * None without sidecar coverage, under 2 live values, or at zero
+    * variance. */
   def skewKurtAtLive(spark: SparkSession, path: String, v: Long,
       col: String): Option[(Double, Double)] =
     momentsAtLive(spark, path, v, col).flatMap { case (n, ss) =>
@@ -3022,54 +2871,26 @@ object VersionedTable extends Logging {
       }
     }
 
-  /** Per-partition [[momentsAtLive]]; partition from the `k=v` path
-    * segment as the siblings. `dropEmpty` drops partitions with ZERO
-    * LIVE ROWS (decided by the counts sidecar, exactly as
-    * [[partitionSumsLive]] — a partition of live rows whose `col` is
-    * all null keeps its (key, n=0) row, matching the GROUP BY that
-    * emits the key with NULL aggregates); needs [[writeCounts]] in
-    * that mode and returns None without it. */
+  /** Per-partition [[momentsAtLive]]; `dropEmpty` as
+    * [[partitionSumsLive]] (a partition of live rows whose `col` is all
+    * null keeps its (key, n=0) row, as the GROUP BY emits the key with
+    * NULL aggregates). */
   def partitionMomentsLive(spark: SparkSession, path: String, v: Long,
       partCol: String, col: String, dropEmpty: Boolean = false)
-      : Option[Seq[(String, (Long, Seq[BigInt]))]] = {
-    val p = momentsFile(path, v, col)
-    if (!exists(p)) return None
-    val m = parseMoments(p)
-    val rels = relsAt(path, v)
-    if (!rels.forall(m.contains)) return None
-    def partOf(rel: String): String =
-      partitionKeyOf(rel, partCol, "partitionMomentsLive")
-    val physical = rels.groupBy(partOf)
-      .map { case (k, fs) => k -> mergeMoments(fs.map(m)) }
-    val byLineage = relsByLineage(path, v)
-    val del = deletedValueMoments(spark, path, v, col)
-      .groupBy { case (rel, _) => partOf(byLineage(rel)) }
-    val liveByPart = physical.map { case (k, (n, _, _, ss)) =>
-      val dels = del.getOrElse(k, Nil).map(_._2)
-      val dn = dels.map(_._1).sum
-      val dss = (0 to 3).map(i => dels.map(_._2(i)).sum)
-      k -> ((n - dn, ss.zip(dss).map { case (a, b) => a - b }))
-    }.toSeq.sortBy(_._1)
-    if (!dropEmpty) Some(liveByPart)
-    else partitionRowCountsLive(spark, path, v, partCol, dropEmpty = true)
-      .map { nonEmpty =>
-        val keep = nonEmpty.map(_._1).toSet
-        liveByPart.filter { case (k, _) => keep(k) }
-      }
-  }
+      : Option[Seq[(String, (Long, Seq[BigInt]))]] =
+    liveFold(path, v, Moments, col, Some(partCol), "partitionMomentsLive")(momentSums)(
+      deletedOf(spark, path, v, Moments, col))(minusMoments)
+      .flatMap(live => if (dropEmpty) nonEmptyPartitions(spark, path, v, partCol, live)
+        else Some(live))
 
-  /** Per-partition statistics PANEL from metadata alone — the dashboard
-    * face of the composed read: one row per partition with exact
-    * n / min / max / sum / mean plus quantile ESTIMATES (default p95)
-    * via [[graft.operators.Sketch.momentsQuantile]] over the moments
-    * sidecar's 7 scalars. Zero data I/O (spec-proven: the panel still
-    * answers after every data file is deleted). The estimates are
-    * REPORTING ONLY: a Cornish–Fisher estimate cannot prune files
-    * soundly, so [[readComposed]] keeps pruning with exact structures
-    * (partitions ∩ range stats ∩ blooms) and this panel rides beside
-    * it. None when the moments sidecar is missing or incomplete —
-    * the [[countAt]] coverage rule. Empty partitions (n = 0) report
-    * null mean/quantiles. */
+  /** Per-partition statistics PANEL from metadata alone: one row per
+    * partition with exact n / min / max / sum / mean plus quantile
+    * ESTIMATES (default p95) via [[graft.operators.Sketch.momentsQuantile]]
+    * over the moments sidecar's 7 scalars — zero data I/O. The estimates
+    * are REPORTING ONLY: a Cornish–Fisher estimate cannot prune files
+    * soundly, so [[readComposed]] keeps pruning with exact structures.
+    * Coverage rule as [[countAt]]; empty partitions (n = 0) report null
+    * mean/quantiles. */
   def partitionStatsPanel(spark: SparkSession, path: String, v: Long,
       partCol: String, col: String,
       qs: Seq[Double] = Seq(0.95)): Option[DataFrame] = {
@@ -3100,87 +2921,37 @@ object VersionedTable extends Logging {
 
   // ---- NDV sketch sidecar: metadata-only distinct estimates ----
 
-  private def ndvFile(path: String, v: Long, col: String): HPath =
-    new HPath(versionsDir(path), f"v$v%08d.ndv.${col}.json")
-
-  private def parseNdv(p: HPath): Map[String, (Int, Map[Int, Int])] = {
-    val entry = """\{"file":"([^"]+)","p":(\d+),"regs":"([^"]*)"\}""".r
-    readUtf8(p).split("\n")
-      .collect { case entry(f, pp, rs) =>
-        val regs = rs.split(",").iterator.filter(_.nonEmpty).map { kv =>
-          val Array(i, r) = kv.split(":")
-          i.toInt -> r.toInt
-        }.toMap
-        f -> ((pp.toInt, regs))
-      }.toMap
-  }
-
   /** Per-file HLL registers over `col`: `_versions/vN.ndv.<col>.json` —
-    * the per-file NDV sketch every lakehouse manifest wants (Iceberg
-    * ships the same idea as puffin sketch files). Registers are maxes,
-    * so (a) a file's entry depends only on its immutable content —
-    * refreshes carry prior entries verbatim and measure ONLY the new
-    * files, O(commit); and (b) any file subset's sketch merges by
-    * register max driver-side, so "approx distinct of version N" (or
-    * of one partition) is manifest arithmetic, zero data I/O. ≤ 2^p
-    * register rows per file ever reach the driver. The estimate
-    * arithmetic is the pinned integral form [[graft.operators.Sketch
-    * .hllDistinct]] uses, so an external engine can replay every
-    * register from the data (the graded property). */
+    * the per-file NDV sketch (Iceberg ships the same idea as puffin
+    * sketch files), measured O(commit) ([[writeSidecar]]); only entries of
+    * precision `p` carry. Any file subset's sketch merges by register
+    * max driver-side, so "approx distinct of version N" (or of one
+    * partition) is manifest arithmetic, zero data I/O. The estimate is
+    * the pinned integral form [[graft.operators.Sketch.hllDistinct]]
+    * uses, so an external engine can replay every register from the
+    * data (the graded property). */
   def writeNdv(spark: SparkSession, path: String, v: Long, col: String,
       p: Int = 6, tag: String = "vtndv"): Unit = {
-    // DV-safe like every sidecar write (per-immutable-file registers);
-    // the read faces ([[ndvAt]]/[[partitionNdv]]) refuse under DVs —
-    // an HLL register max cannot be subtracted
-    import org.apache.spark.sql.functions.{bin, count, input_file_name, length,
-      lit, max, pmod, shiftright, when, col => c}
-    import graft.operators.Sketch
     require(p >= 4 && p <= 14, s"VersionedTable.writeNdv: p out of range: $p")
-    val rels = relsAt(path, v)
-    val prior: Map[String, (Int, Map[Int, Int])] =
-      versions(path).filter(_ <= v).reverse
-        .map(pv => ndvFile(path, pv, col)).filter(exists)
-        .foldLeft(Map.empty[String, (Int, Map[Int, Int])]) { (acc, f) =>
-          parseNdv(f).filter(_._2._1 == p) ++ acc
-        }
-    val fresh = rels.filterNot(prior.contains)
-    val measured: Map[String, Map[Int, Int]] =
-      if (fresh.isEmpty) Map.empty
-      else {
-        val W = Sketch.HllW
-        val h = Sketch.pinnedHash(c("__s"), tag)
-        val y = shiftright(h, p).bitwiseAND(lit((1L << W) - 1L))
-        val rho = when(y === 0L, lit(W + 1))
-          .otherwise(lit(W + 1) - length(bin(y)))
-        scanRels(spark, path, fresh)
-          .filter(c(col).isNotNull)
-          .select(input_file_name().as("__f"), c(col).cast("string").as("__s"))
-          .select(c("__f"), pmod(h, lit((1 << p).toLong)).cast("int").as("__idx"),
-            rho.cast("int").as("__rho"))
-          .groupBy("__f", "__idx").agg(max(c("__rho")).as("__mx"))
-          .collect()
-          .groupBy(r => relPathOf(path, r.getString(0)))
-          .map { case (f, rs) =>
-            f -> rs.map(r => r.getInt(1) -> r.getInt(2)).toMap }
-      }
-    val body = rels.sorted.map { rel =>
-      val regs = prior.get(rel).map(_._2)
-        .orElse(measured.get(rel)).getOrElse(Map.empty[Int, Int])
-      val rs = regs.toSeq.sorted.map { case (i, r) => s"$i:$r" }.mkString(",")
-      s"""{"file":"${esc(rel)}","p":$p,"regs":"$rs"}"""
-    }.mkString("\n")
-    writeReplace(path, ndvFile(path, v, col), body.getBytes("UTF-8"))
+    writeSidecar(spark, path, v, new NdvStat(p, tag), Seq(col))
+  }
+
+  /** The one precision of a file set's sketches; `face` names the
+    * caller in the refusal of a mix. */
+  private def ndvPrecision(sketches: Seq[(Int, Map[Int, Int])], face: String): Int = {
+    val ps = sketches.map(_._1).distinct
+    require(ps.size == 1, s"VersionedTable.$face: mixed sketch precisions $ps")
+    ps.head
   }
 
   /** Merge a file subset's HLL registers by max and return the pinned
     * integral (hll_raw, v_zero) pair — the shared math of [[ndvAt]] /
     * [[partitionNdv]] / [[ndvEstimateAt]]. */
-  private def mergedNdvOf(p: Int, rels: Seq[String],
-      entries: Map[String, (Int, Map[Int, Int])]): (Long, Long) = {
+  private def mergedNdvOf(p: Int, sketches: Seq[(Int, Map[Int, Int])]): (Long, Long) = {
     val m = 1 << p
     val W = graft.operators.Sketch.HllW
     val merged = new Array[Int](m)
-    rels.foreach(f => entries(f)._2.foreach { case (i, r) =>
+    sketches.foreach(_._2.foreach { case (i, r) =>
       if (r > merged(i)) merged(i) = r })
     val touched = merged.count(_ > 0)
     val st = merged.iterator.filter(_ > 0)
@@ -3197,14 +2968,10 @@ object VersionedTable extends Logging {
     * the sidecar is missing or does not cover every manifest file. */
   def ndvAt(path: String, v: Long, col: String): Option[(Long, Long)] = {
     requireNoDv(path, v, "ndvAt")
-    val side = ndvFile(path, v, col)
-    if (!exists(side)) return None
-    val entries = parseNdv(side)
-    val rels = relsAt(path, v)
-    if (!rels.forall(entries.contains)) return None
-    val ps = rels.map(f => entries(f)._1).distinct
-    require(ps.size == 1, s"VersionedTable.ndvAt: mixed sketch precisions $ps")
-    Some(mergedNdvOf(ps.head, rels, entries))
+    covered(path, v, Ndv, col).map { case (rels, e) =>
+      val sketches = rels.map(e)
+      mergedNdvOf(ndvPrecision(sketches, "ndvAt"), sketches)
+    }
   }
 
   /** PLANNING estimate of version `v`'s PHYSICAL row count from the
@@ -3212,38 +2979,23 @@ object VersionedTable extends Logging {
     * [[countAt]] no refusal under deletion vectors: physical bounds
     * live from above, the right direction for sizing (bloom sketches,
     * partition planning). None when the sidecar doesn't cover. */
-  def rowCountEstimateAt(path: String, v: Long): Option[Long] = {
-    val p = countsFile(path, v)
-    if (!exists(p)) return None
-    val counts = parseCounts(p)
-    val rels = relsAt(path, v)
-    if (rels.forall(counts.contains)) Some(rels.map(counts).sum) else None
-  }
+  def rowCountEstimateAt(path: String, v: Long): Option[Long] =
+    covered(path, v, Counts).map { case (rels, n) => rels.map(n).sum }
 
   /** PLANNING estimate of `col`'s distinct count at version `v`, from
-    * metadata alone (no SparkSession, no data I/O, no job): the NDV
-    * sidecar with linear-counting correction, falling back to the
-    * counts sidecar's physical row count (a trivially valid NDV upper
-    * bound). Unlike [[ndvAt]] this does NOT refuse under outstanding
-    * deletion vectors — physical NDV bounds live NDV from above, which
-    * is the right direction for every sizing use (a bloom sketch sized
-    * to it keeps its fpp). None when neither sidecar covers the
-    * version: estimates must still never silently undercount. */
-  def ndvEstimateAt(path: String, v: Long, col: String): Option[Long] = {
-    val side = ndvFile(path, v, col)
-    val rels = relsAt(path, v)
-    if (exists(side)) {
-      val entries = parseNdv(side)
-      if (rels.forall(entries.contains)) {
-        val ps = rels.map(f => entries(f)._1).distinct
-        require(ps.size == 1,
-          s"VersionedTable.ndvEstimateAt: mixed sketch precisions $ps")
-        val (raw, vZero) = mergedNdvOf(ps.head, rels, entries)
-        return Some(graft.operators.Sketch.hllCorrected(ps.head, raw, vZero))
-      }
-    }
-    rowCountEstimateAt(path, v)
-  }
+    * metadata alone (no SparkSession, no job): the NDV sidecar with
+    * linear-counting correction, else the counts sidecar's physical row
+    * count (a trivially valid upper bound). Unlike [[ndvAt]] this does
+    * NOT refuse under deletion vectors — physical NDV bounds live NDV
+    * from above, the right direction for sizing (a bloom sketch sized to
+    * it keeps its fpp). None when neither sidecar covers the version. */
+  def ndvEstimateAt(path: String, v: Long, col: String): Option[Long] =
+    covered(path, v, Ndv, col).map { case (rels, e) =>
+      val sketches = rels.map(e)
+      val p = ndvPrecision(sketches, "ndvEstimateAt")
+      val (raw, vZero) = mergedNdvOf(p, sketches)
+      graft.operators.Sketch.hllCorrected(p, raw, vZero)
+    }.orElse(rowCountEstimateAt(path, v))
 
   /** Per-partition approx distinct, metadata-only: each partition's
     * files' registers merge independently (register max over any file
@@ -3253,16 +3005,10 @@ object VersionedTable extends Logging {
   def partitionNdv(path: String, v: Long, partCol: String,
       col: String): Option[Seq[(String, (Long, Long))]] = {
     requireNoDv(path, v, "partitionNdv")
-    val side = ndvFile(path, v, col)
-    if (!exists(side)) return None
-    val entries = parseNdv(side)
-    val rels = relsAt(path, v)
-    if (!rels.forall(entries.contains)) return None
-    val ps = rels.map(f => entries(f)._1).distinct
-    require(ps.size == 1, s"VersionedTable.partitionNdv: mixed sketch precisions $ps")
-    Some(rels.groupBy(partitionKeyOf(_, partCol, "partitionNdv"))
-      .map { case (k, fs) => k -> mergedNdvOf(ps.head, fs, entries) }
-      .toSeq.sortBy(_._1))
+    covered(path, v, Ndv, col).map { case (rels, e) =>
+      val p = ndvPrecision(rels.map(e), "partitionNdv")
+      byPartition(rels, e, partCol, "partitionNdv")(mergedNdvOf(p, _))
+    }
   }
 
   // ---- bloom sidecar: equality point-lookup file skipping ----
@@ -3272,48 +3018,46 @@ object VersionedTable extends Logging {
 
   /** Bloom sidecars are a DIRECTORY of shard files, one per data
     * subdirectory ("data" on a flat layout, "<col>=<value>" per
-    * partition) — so a partition-scoped probe parses only the
-    * surviving partitions' shards, never the whole table's index.
-    * At 10^11 rows the sidecar totals ~2 B/row; partition alignment
-    * is what keeps the driver-side probe cost proportional to the
-    * data the query can touch, not the data the table holds. */
+    * partition) — so a partition-scoped probe parses only the surviving
+    * partitions' shards: its driver-side cost follows the data the query
+    * can touch, not the data the table holds. */
   private def bloomDir(path: String, v: Long, col: String): HPath =
     new HPath(versionsDir(path), f"v$v%08d.bloom.${col}.d")
 
   private def bloomShardOf(rel: String): String =
     new HPath(rel).getParent.getName
 
-  /** Binary shard codec. A JSON-hex shard costs an O(m) text parse per
-    * probe (regex + per-word hex decode — measured ~6× the binary read
-    * at 5M keys, PLANS.md); the binary layout is a length-prefixed
-    * entry stream of fixed-width longs:
-    * magic "GBLM", then per entry: u16 relLen, rel UTF-8 bytes,
-    * i64 m, i32 k, i32 nWords, nWords × (i64 wordIdx, i64 bits). */
+  /** Binary shard codec (a JSON-hex shard's text parse measured ~6× the
+    * binary read at 5M keys, PLANS.md): magic "GBLM", then per entry:
+    * u16 relLen, rel UTF-8 bytes, i64 m, i32 k, i32 nWords,
+    * nWords × (i64 wordIdx, i64 bits), words ascending. */
   private val BloomMagic = 0x47424C4D // "GBLM"
 
-  private def encodeBloomShard(
-      entries: Seq[(String, Long, Int, Seq[(Long, Long)])]): Array[Byte] = {
+  /** One file's filter: m bits, k probes, the non-zero 64-bit words. */
+  private type Bloom = (Long, Int, Map[Long, Long])
+
+  private def encodeBloomShard(entries: Seq[(String, Bloom)]): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     val out = new java.io.DataOutputStream(bos)
     out.writeInt(BloomMagic)
-    entries.foreach { case (rel, m, k, words) =>
+    entries.foreach { case (rel, (m, k, words)) =>
       val rb = rel.getBytes("UTF-8")
       out.writeShort(rb.length)
       out.write(rb)
       out.writeLong(m)
       out.writeInt(k)
-      out.writeInt(words.length)
-      words.foreach { case (w, bits) => out.writeLong(w); out.writeLong(bits) }
+      out.writeInt(words.size)
+      words.toSeq.sortBy(_._1).foreach { case (w, bits) =>
+        out.writeLong(w); out.writeLong(bits) }
     }
     out.flush()
     bos.toByteArray
   }
 
-  private def decodeBloomShard(bytes: Array[Byte])
-      : Seq[(String, Long, Int, Map[Long, Long])] = {
+  private def decodeBloomShard(bytes: Array[Byte]): Seq[(String, Bloom)] = {
     val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
     require(in.readInt() == BloomMagic, "bloom shard: bad magic")
-    val out = Seq.newBuilder[(String, Long, Int, Map[Long, Long])]
+    val out = Seq.newBuilder[(String, Bloom)]
     while (in.available() > 0) {
       val rb = new Array[Byte](in.readUnsignedShort())
       in.readFully(rb)
@@ -3323,7 +3067,7 @@ object VersionedTable extends Logging {
       val words = Map.newBuilder[Long, Long]
       var i = 0
       while (i < n) { words += (in.readLong() -> in.readLong()); i += 1 }
-      out += ((new String(rb, "UTF-8"), m, k, words.result()))
+      out += (new String(rb, "UTF-8") -> ((m, k, words.result())))
     }
     out.result()
   }
@@ -3332,7 +3076,7 @@ object VersionedTable extends Logging {
     * named shards. Reads the binary `.bin` shards this writer emits AND
     * legacy `.json` shards (pre-binary tables carry forward). */
   private def readBloomEntries(dir: HPath, shards: Option[Set[String]])
-      : Map[String, (Long, Int, Map[Long, Long])] = {
+      : Map[String, Bloom] = {
     val jsonEntry =
       """\{"file":"([^"]+)","m":(\d+),"k":(\d+),"words":"([^"]*)"\}""".r
     listNames(dir)
@@ -3356,16 +3100,15 @@ object VersionedTable extends Logging {
               val Array(i, h) = kv.split(":")
               i.toLong -> java.lang.Long.parseUnsignedLong(h, 16)
             }.toMap
-            (rel, m.toLong, k.toInt, wordMap)
+            rel -> ((m.toLong, k.toInt, wordMap))
           }
-      }
-      .map { case (rel, m, k, words) => rel -> ((m, k, words)) }.toMap
+      }.toMap
   }
 
   private def bloomTagA(col: String) = s"vtbloom-a:$col"
   private def bloomTagB(col: String) = s"vtbloom-b:$col"
 
-  /** The k bit positions for one key — MUST mirror [[writeBloom]]'s
+  /** The k bit positions for one key — MUST mirror [[BloomStat]]'s
     * column arithmetic exactly (both sides spec-asserted): base =
     * pmod(h1, m), step = pmod(h2, 2^31−1)+1, pos_i = (base+i·step)%m.
     * h1,h2 ∈ [0,2^63) so i·step ≤ 6·2^31 never overflows the sum. */
@@ -3375,86 +3118,65 @@ object VersionedTable extends Logging {
     Array.tabulate(k)(i => (base + i * step) % m)
   }
 
-  /** Per-file Bloom filter over `col` (canonicalized as its string
-    * form): `_versions/vN.bloom.<col>.d/<subdir>.bin` — one BINARY shard
-    * file per data subdirectory ("data" flat, "<col>=<value>" per
-    * partition). The point-lookup complement of the min/max stats
-    * sidecar: range stats prune nothing when the column interleaves
-    * across files (any hash-clustered or ingest-ordered layout), while
-    * a bloom answers "which of 100k files can contain THIS doc_id"
-    * driver-side in microseconds. Each file's filter is sized at
-    * `bitsPerKey` bits per non-null row (k=7 probes → ~0.05% false
-    * positives at the default 16, ~0.8% at 10), so small and huge
-    * files prune with the same fidelity. Cost honesty: the sidecar
-    * totals bitsPerKey/8 bytes per row (2 B/key at default) — at
-    * 10^11 rows that is a couple hundred GB; the partition-aligned
-    * shard layout is what keeps a composed probe's parse cost
-    * proportional to the partitions the query can touch
-    * ([[filesForKeysAmong]]), and the fixed-width binary shard codec
-    * keeps the probe a bulk long read, not an O(m) text parse. Bits build
-    * distributedly: k positions explode per row, `bit_or` folds words
-    * map-side, ≤ m/64 rows per file ever reach the driver. A file
-    * whose `col` is entirely null gets an explicit empty filter
-    * (prunes every probe — correctly). */
-  def writeBloom(spark: SparkSession, path: String, v: Long, col: String,
-      bitsPerKey: Int = 16): Unit = {
-    import org.apache.spark.sql.functions.{array, broadcast, ceil, count,
-      explode, expr, greatest, input_file_name, lit, pmod, shiftright, col => c}
-    import graft.operators.Sketch
-    val rels = relsAt(path, v)
-    // same O(commit) refresh contract as counts/sums/ndv: an immutable
-    // file's filter never changes, so entries found in ANY prior
-    // version's sidecar carry verbatim (re-encoded deterministically)
-    // and only the new files hash. (Changing bitsPerKey needs a fresh
-    // table path or a hand-removed sidecar — carried entries keep their
-    // build-time m.)
-    val prior: Map[String, (Long, Int, Map[Long, Long])] =
-      versions(path).filter(_ <= v).reverse
-        .map(pv => bloomDir(path, pv, col))
-        .foldLeft(Map.empty[String, (Long, Int, Map[Long, Long])]) { (acc, d) =>
-          readBloomEntries(d, None) ++ acc
-        }
-    val fresh = rels.filterNot(prior.contains)
-    val freshEntries: Map[String, (Long, Int, Map[Long, Long])] =
-      if (fresh.isEmpty) Map.empty
-      else {
-        val rows = scanRels(spark, path, fresh)
-          .filter(c(col).isNotNull)
-          .select(input_file_name().as("__f"), c(col).cast("string").as("__s"))
+  /** Per-file Bloom filters sized `bitsPerKey` bits per non-null row.
+    * Bits build distributedly: k positions explode per row, `bit_or`
+    * folds words map-side, ≤ m/64 rows per file reach the driver. An
+    * all-null file gets an explicit empty filter (it prunes every probe
+    * — correctly). Every earlier entry carries, whatever its m. */
+  private final class BloomStat(bitsPerKey: Int) extends FileStat[Bloom] {
+    def read(path: String, v: Long, col: String): Option[Map[String, Bloom]] =
+      Some(bloomDir(path, v, col)).filter(exists).map(readBloomEntries(_, None))
+    def write(path: String, v: Long, col: String, entries: Seq[(String, Bloom)]): Unit = {
+      val dir = bloomDir(path, v, col)
+      fsOf(dir).mkdirs(dir)
+      entries.groupBy { case (rel, _) => bloomShardOf(rel) }.foreach { case (shard, es) =>
+        writeReplace(path, new HPath(dir, s"$shard.bin"), encodeBloomShard(es)) }
+    }
+    val empty: Option[Bloom] = Some((64L, BloomK, Map.empty[Long, Long]))
+    def measure(scan: DataFrame, cols: Seq[String]): Seq[Map[String, Bloom]] =
+      cols.map { cl =>
+        import org.apache.spark.sql.functions.{array, broadcast, ceil, count,
+          explode, expr, greatest, lit, pmod, shiftright, col => c}
+        import graft.operators.Sketch
+        val rows = scan.filter(c(cl).isNotNull)
+          .select(c("__f"), c(cl).cast("string").as("__s"))
         val sizes = rows.groupBy("__f").agg(count(lit(1)).as("__n"))
           .withColumn("__m", greatest(lit(64L),
             ceil(c("__n") * bitsPerKey / 64.0).cast("long") * 64L))
         val words = rows.join(broadcast(sizes.select("__f", "__m")), "__f")
           .withColumn("__h1m",
-            pmod(Sketch.pinnedHash(c("__s"), bloomTagA(col)), c("__m")))
+            pmod(Sketch.pinnedHash(c("__s"), bloomTagA(cl)), c("__m")))
           .withColumn("__step",
-            pmod(Sketch.pinnedHash(c("__s"), bloomTagB(col)), lit(2147483647L)) + 1L)
+            pmod(Sketch.pinnedHash(c("__s"), bloomTagB(cl)), lit(2147483647L)) + 1L)
           .select(c("__f"), explode(array((0 until BloomK).map(i =>
             pmod(c("__h1m") + lit(i.toLong) * c("__step"), c("__m"))): _*)).as("__pos"))
           .select(c("__f"), shiftright(c("__pos"), 6).as("__w"),
             expr("shiftleft(1L, cast(__pos % 64 as int))").as("__b"))
           .groupBy("__f", "__w").agg(expr("bit_or(__b)").as("__v"))
           .collect()
-        val mByFile = sizes.collect()
-          .map(r => relPathOf(path, r.getString(0)) -> r.getLong(2)).toMap
-        val wordsByFile = words.groupBy(r => relPathOf(path, r.getString(0)))
-        fresh.map { rel =>
-          val m = mByFile.getOrElse(rel, 64L)
-          val ws = wordsByFile.getOrElse(rel, Array.empty[Row])
-            .map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
-          rel -> ((m, BloomK, ws.toMap))
+          .groupBy(_.getString(0))
+        sizes.collect().map { r =>
+          val f = r.getString(0)
+          f -> ((r.getLong(2), BloomK, words.getOrElse(f, Array.empty[Row])
+            .map(w => w.getLong(1) -> w.getLong(2)).toMap))
         }.toMap
       }
-    val dir = bloomDir(path, v, col)
-    fsOf(dir).mkdirs(dir)
-    rels.groupBy(bloomShardOf).foreach { case (shard, shardRels) =>
-      val entries = shardRels.sorted.map { rel =>
-        val (m, k, wordMap) = prior.getOrElse(rel, freshEntries(rel))
-        (rel, m, k, wordMap.toSeq.sortBy(_._1))
-      }
-      writeReplace(path, new HPath(dir, s"$shard.bin"), encodeBloomShard(entries))
-    }
   }
+
+  /** Per-file Bloom filter over `col` (canonicalized as its string
+    * form): `_versions/vN.bloom.<col>.d/<subdir>.bin`, measured
+    * O(commit) ([[writeSidecar]]). The point-lookup complement of the
+    * min/max stats: range stats prune nothing when the column
+    * interleaves across files, while a bloom answers "which of 100k
+    * files can contain THIS doc_id" driver-side in microseconds.
+    * `bitsPerKey` bits per non-null row (k=7 probes → ~0.05% false
+    * positives at the default 16, ~0.8% at 10); the sidecar totals
+    * bitsPerKey/8 bytes per row. Carried entries keep their build-time
+    * m: changing `bitsPerKey` needs a fresh table path or a
+    * hand-removed sidecar. */
+  def writeBloom(spark: SparkSession, path: String, v: Long, col: String,
+      bitsPerKey: Int = 16): Unit =
+    writeSidecar(spark, path, v, new BloomStat(bitsPerKey), Seq(col))
 
   /** The version's files that may contain ANY of `keys` on `col`, per
     * the bloom sidecar: probe keys hash on the DRIVER and test k bits
@@ -3492,17 +3214,10 @@ object VersionedTable extends Logging {
   /** Point-lookup read: bloom-prune the file list driver-side, read
     * only the survivors, apply the residual IN filter. The "find these
     * 5 documents in 100 TB" read — file count touched is
-    * |hits| + fpp·|files|, not |files|. */
+    * |hits| + fpp·|files|, not |files| ([[readComposed]]). */
   def readWhereKeys(spark: SparkSession, path: String, v: Long,
-      col: String, keys: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{col => c, lit}
-    val files = filesForKeys(path, v, col, keys)
-    if (files.isEmpty) readVersion(spark, path, v).where(lit(false))
-    else applyDv(spark, path, v,
-      readParquet(spark, path, files.sorted),
-      Some(files))
-      .where(c(col).cast("string").isin(keys: _*))
-  }
+      col: String, keys: Seq[String]): DataFrame =
+    readComposed(spark, path, v, keys = Some((col, keys)))
 
   /** The fully-composed manifest-side read: partition pruning (exact
     * path arithmetic) ∩ per-file [min,max] range stats ∩ bloom key
